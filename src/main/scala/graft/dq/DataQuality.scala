@@ -1,7 +1,8 @@
 package graft.dq
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, TimestampNTZType, TimestampType}
 
 import graft.io.Tables
 
@@ -18,10 +19,16 @@ import graft.io.Tables
   * exception, and NULLs violate uniqueness iff a NULL group has count > 1
   * (GROUP BY keeps one NULL group — pinned, documented, oracle-matched).
   *
-  * Scale notes: `required_columns` is pure schema metadata (zero scan);
-  * `min_row_count` and `unique_column` each compile to one aggregate over a
-  * pruned scan — on 100 TB these are a count-star (metadata-assisted for
-  * parquet) and one shuffle on the checked column.
+  * Scale notes: `required_columns`, `source_exists`, unknown types and
+  * checks on absent or ill-typed columns need no scan (zero jobs). Every
+  * other check of a suite — `min_row_count`, `null_ratio`, `value_range`,
+  * `freshness` and the first `unique_column` — compiles into ONE aggregate
+  * action over one pruned scan: a global `agg` of decomposable partials, or,
+  * with a unique check, the same partials per key (one shuffle on that
+  * column) merged by an outer aggregate that also counts duplicate keys. A
+  * suite therefore costs one pass at any size, not one pass per check;
+  * only `fk_integrity` (an anti-join) and any further `unique_column` (a
+  * second key) run queries of their own.
   */
 sealed trait Check
 final case class MinRowCount(threshold: Long) extends Check
@@ -57,89 +64,159 @@ final case class CheckResult(checkName: String, passed: Boolean, detail: String)
 
 object DataQuality {
 
-  /** Compile one check against a DataFrame into a (passed, detail) pair.
-    * Aggregations execute distributed; only the scalar verdict is collected.
+  /** One scalar of the shared scan: its aggregate over rows, and how the
+    * per-key partials merge when a unique check groups the scan. Checks
+    * that need the same scalar share it through `key`.
     */
-  def evaluate(df: DataFrame, check: Check): Option[CheckResult] = check match {
-    case MinRowCount(threshold) =>
-      val n = df.count()
-      Some(CheckResult("min_row_count", n >= threshold,
-        s"observed=$n threshold=$threshold"))
-    case RequiredColumns(columns) =>
-      val missing = columns.filterNot(df.columns.toSet)
-      Some(CheckResult("required_columns", missing.isEmpty,
-        if (missing.isEmpty) "all present" else s"missing=${missing.mkString(",")}"))
-    case UniqueColumn(column) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("unique_column", passed = false, s"column $column absent"))
-      else {
-        // project the checked column to a fresh name FIRST: whatever the
-        // user's column is called ("count", "__cnt", ...), the grouped frame
-        // has exactly one column before the aggregate, so no name the data
-        // brings can collide with the count alias and throw mid-suite.
-        val dups = df.select(col(column).as("__dq_key"))
-          .groupBy(col("__dq_key")).agg(count(lit(1)).as("__dq_cnt"))
-          .filter(col("__dq_cnt") > 1).count()
-        Some(CheckResult("unique_column", dups == 0, s"dup_keys=$dups"))
-      }
-    case SourceExists(path) =>
-      val exists = pathExists(df.sparkSession, path)
-      Some(CheckResult("source_exists", exists,
-        if (exists) s"$path present" else s"$path missing"))
-    case NullRatio(column, num, den) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("null_ratio", passed = false, s"column $column absent"))
-      else {
-        val row = df.agg(count(lit(1)).as("n"), count(col(column)).as("nn")).head()
-        val (n, nulls) = (row.getLong(0), row.getLong(0) - row.getLong(1))
-        Some(CheckResult("null_ratio", nulls * den <= num * n,
-          s"nulls=$nulls rows=$n max=$num/$den"))
-      }
-    case ValueRange(column, lo, hi) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("value_range", passed = false, s"column $column absent"))
-      else if (!df.schema(column).dataType
-          .isInstanceOf[org.apache.spark.sql.types.NumericType])
+  private final case class Partial(key: String, agg: Column, merge: Column => Column)
+
+  private def summed(key: String, agg: Column) =
+    Partial(key, agg, c => coalesce(sum(c), lit(0L)))
+
+  private val Rows = summed("rows", count(lit(1)))
+  /** Duplicate-key groups: an outer aggregate of the grouped scan only. */
+  private val DupKeys = "dup_keys"
+
+  /** How a check is answered: from the schema or spec alone (no job), from
+    * the shared aggregate, or by a query of its own.
+    */
+  private sealed trait Plan
+  private final case class Static(result: Option[CheckResult]) extends Plan
+  /** Reads its scalars, by key, from the shared aggregate's one row. */
+  private final case class Fused(parts: Seq[Partial], verdict: Row => CheckResult) extends Plan
+  private final case class Own(run: () => CheckResult) extends Plan
+
+  /** A column reference by exact name: dots or backticks in a user's column
+    * name must not be parsed as struct access.
+    */
+  private def column(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
+  private def plan(df: DataFrame, check: Check, groupKey: Option[String]): Plan = {
+    def failed(name: String, detail: String) = Static(Some(CheckResult(name, passed = false, detail)))
+    def absent(name: String, c: String) = failed(name, s"column $c absent")
+    val present = df.columns.toSet
+    check match {
+      case MinRowCount(threshold) =>
+        Fused(Seq(Rows), v => {
+          val n = v.getAs[Long](Rows.key)
+          CheckResult("min_row_count", n >= threshold, s"observed=$n threshold=$threshold")
+        })
+      case RequiredColumns(columns) =>
+        val missing = columns.filterNot(present)
+        Static(Some(CheckResult("required_columns", missing.isEmpty,
+          if (missing.isEmpty) "all present" else s"missing=${missing.mkString(",")}")))
+      case UniqueColumn(c) if !present(c) => absent("unique_column", c)
+      case UniqueColumn(c) =>
+        def result(dups: Long) = CheckResult("unique_column", dups == 0, s"dup_keys=$dups")
+        if (groupKey.contains(c)) Fused(Nil, v => result(v.getAs[Long](DupKeys)))
+        else Own(() => result(aggregate(df, Nil, Some(c)).getAs[Long](DupKeys)))
+      case SourceExists(path) =>
+        val exists = pathExists(df.sparkSession, path)
+        Static(Some(CheckResult("source_exists", exists,
+          if (exists) s"$path present" else s"$path missing")))
+      case NullRatio(c, _, _) if !present(c) => absent("null_ratio", c)
+      case NullRatio(c, num, den) =>
+        val nonNull = summed(s"non_null:$c", count(column(c)))
+        Fused(Seq(Rows, nonNull), v => {
+          val n = v.getAs[Long](Rows.key)
+          val nulls = n - v.getAs[Long](nonNull.key)
+          CheckResult("null_ratio", nulls * den <= num * n, s"nulls=$nulls rows=$n max=$num/$den")
+        })
+      case ValueRange(c, _, _) if !present(c) => absent("value_range", c)
+      case ValueRange(c, _, _) if !df.schema(c).dataType.isInstanceOf[NumericType] =>
         // guard the type up front: under ANSI mode a numeric comparison on a
         // string column throws at the first non-numeric value, which would
         // abort the whole no-throw check suite mid-run.
-        Some(CheckResult("value_range", passed = false,
-          s"column $column not numeric (${df.schema(column).dataType.simpleString})"))
-      else {
-        val bad = df.filter(col(column) < lo || col(column) > hi).count()
-        Some(CheckResult("value_range", bad == 0, s"violations=$bad range=[$lo,$hi]"))
-      }
-    case FkIntegrity(column, parent, parentColumn) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("fk_integrity", passed = false, s"column $column absent"))
-      else if (!parent.columns.contains(parentColumn))
+        failed("value_range", s"column $c not numeric (${df.schema(c).dataType.simpleString})")
+      case ValueRange(c, lo, hi) =>
+        val bad = summed(s"out_of_range:$c:$lo:$hi", count_if(column(c) < lo || column(c) > hi))
+        Fused(Seq(bad), v => {
+          val n = v.getAs[Long](bad.key)
+          CheckResult("value_range", n == 0, s"violations=$n range=[$lo,$hi]")
+        })
+      case FkIntegrity(c, _, _) if !present(c) => absent("fk_integrity", c)
+      case FkIntegrity(_, parent, parentColumn) if !parent.columns.contains(parentColumn) =>
         // same no-throw contract as the child side: a misspelled parent
         // column is a failed check, not an AnalysisException that aborts
         // the whole suite mid-run.
-        Some(CheckResult("fk_integrity", passed = false,
-          s"parent column $parentColumn absent"))
-      else {
-        val orphans = df.filter(col(column).isNotNull).select(col(column))
-          .join(parent.select(parent(parentColumn).as(column)), Seq(column), "left_anti")
-          .count()
-        Some(CheckResult("fk_integrity", orphans == 0, s"orphans=$orphans"))
-      }
-    case Freshness(column, asOf, maxAgeDays) =>
-      if (!df.columns.contains(column))
-        Some(CheckResult("freshness", passed = false, s"column $column absent"))
-      else {
-        // one pruned max() — the newest watermark is the only scalar needed
-        val newest = df.agg(max(to_date(col(column))).as("newest")).head().getDate(0)
-        val cutoff = java.sql.Date.valueOf(asOf.toLocalDate.minusDays(maxAgeDays.toLong))
-        val passed = newest != null && !newest.before(cutoff)
-        Some(CheckResult("freshness", passed,
-          s"newest=$newest cutoff=$cutoff as_of=$asOf max_age_days=$maxAgeDays"))
-      }
-    case UnknownCheck(t) =>
-      // Reference behavior: warn + skip, never fail (data_quality_operator.py:116-117).
-      System.err.println(s"[dq] unknown check type '$t' — skipped")
-      None
+        failed("fk_integrity", s"parent column $parentColumn absent")
+      case FkIntegrity(c, parent, parentColumn) =>
+        Own(() => {
+          val orphans = df.filter(column(c).isNotNull).select(column(c))
+            .join(parent.select(parent(parentColumn).as(c)), Seq(c), "left_anti")
+            .count()
+          CheckResult("fk_integrity", orphans == 0, s"orphans=$orphans")
+        })
+      case Freshness(c, _, _) if !present(c) => absent("freshness", c)
+      case Freshness(c, _, _) if !dateLike(df.schema(c).dataType) =>
+        failed("freshness", s"column $c not a date or timestamp (${df.schema(c).dataType.simpleString})")
+      case Freshness(c, asOf, maxAgeDays) =>
+        // the newest watermark is the only scalar needed; an unparseable
+        // string is no date, not a throw that aborts the fused scan
+        val newest = Partial(s"newest:$c", max(try_to_date(column(c))), max(_))
+        Fused(Seq(newest), v => {
+          val day = v.getAs[java.sql.Date](newest.key)
+          val cutoff = java.sql.Date.valueOf(asOf.toLocalDate.minusDays(maxAgeDays.toLong))
+          CheckResult("freshness", day != null && !day.before(cutoff),
+            s"newest=$day cutoff=$cutoff as_of=$asOf max_age_days=$maxAgeDays")
+        })
+      case UnknownCheck(t) =>
+        // Reference behavior: warn + skip, never fail (data_quality_operator.py:116-117).
+        System.err.println(s"[dq] unknown check type '$t' — skipped")
+        Static(None)
+    }
   }
+
+  private def dateLike(t: DataType): Boolean = t match {
+    case DateType | TimestampType | TimestampNTZType | StringType => true
+    case _ => false
+  }
+
+  /** The one aggregate behind every fused check. Without a grouping key it
+    * is a plain global `agg`; with one (the unique check's column) the
+    * partials are computed per key and merged by an outer aggregate that
+    * also counts the keys seen more than once — GROUP BY keeps one NULL
+    * group, so repeated NULLs are a duplicate key.
+    */
+  private def aggregate(df: DataFrame, parts: Seq[Partial], groupKey: Option[String]): Row = {
+    val named = parts.map(p => p.agg.as(p.key))
+    groupKey match {
+      case None => df.agg(named.head, named.tail: _*).head()
+      case Some(k) =>
+        val groups = df.groupBy(column(k).as("__dq_key"))
+          .agg(count(lit(1)).as("__dq_cnt"), named: _*)
+        groups.agg(count_if(col("__dq_cnt") > 1).as(DupKeys),
+          parts.map(p => p.merge(column(p.key)).as(p.key)): _*).head()
+    }
+  }
+
+  /** Compile the checks: every scan-needing check (`min_row_count`,
+    * `null_ratio`, `value_range`, `freshness`, and the first `unique_column`
+    * on a present column) becomes part of ONE aggregate action, run at most
+    * once; `fk_integrity` and any further `unique_column` keep their own
+    * queries. Results come back in spec order, nothing short-circuits, and
+    * `withRows` adds the row count to the same aggregate.
+    */
+  private def run(df: DataFrame, checks: Seq[Check], withRows: Boolean): (Seq[CheckResult], Option[Long]) = {
+    val groupKey = checks.collectFirst { case UniqueColumn(c) if df.columns.contains(c) => c }
+    val plans = checks.map(plan(df, _, groupKey))
+    val parts = ((if (withRows) Seq(Rows) else Nil) ++
+      plans.collect { case Fused(ps, _) => ps }.flatten).distinctBy(_.key)
+    lazy val row = aggregate(df, parts, groupKey)
+    val results = plans.flatMap {
+      case Static(r) => r
+      case Fused(_, verdict) => Some(verdict(row))
+      case Own(query) => Some(query())
+    }
+    (results, if (withRows) Some(row.getAs[Long](Rows.key)) else None)
+  }
+
+  /** Compile one check against a DataFrame into a (passed, detail) pair —
+    * the one-check case of [[runAll]]. Aggregations execute distributed;
+    * only the scalar verdict is collected.
+    */
+  def evaluate(df: DataFrame, check: Check): Option[CheckResult] =
+    runAll(df, Seq(check)).headOption
 
   /** Path existence via the Hadoop FS API (works for any supported scheme —
     * the direct analogue of the reference's `check_for_key`).
@@ -151,7 +228,13 @@ object DataQuality {
 
   /** Run all checks; failures accumulate in spec order, nothing short-circuits. */
   def runAll(df: DataFrame, checks: Seq[Check]): Seq[CheckResult] =
-    checks.flatMap(evaluate(df, _))
+    run(df, checks, withRows = false)._1
+
+  /** [[runAll]] plus the frame's row count, read from the same aggregate. */
+  def runAllCounted(df: DataFrame, checks: Seq[Check]): (Seq[CheckResult], Long) = {
+    val (results, rows) = run(df, checks, withRows = true)
+    (results, rows.get)
+  }
 
   /** Overall verdict — a value, not an exception (SURVEY.md §7.4 decision 6). */
   def verdict(results: Seq[CheckResult]): Boolean = results.forall(_.passed)

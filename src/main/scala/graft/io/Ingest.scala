@@ -1,7 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Ingestion operators — the engine-side analogues of the reference's
   * HTTP→S3 raw-zone path (ref /root/reference/operators/api_to_s3.py:50-77)
@@ -40,6 +41,21 @@ object Ingest {
     */
   def writeRawZone(df: DataFrame, root: String, ds: String): Unit =
     Writers.writeParquet(df.withColumn("ds", lit(ds)), root, Seq("ds"))
+
+  /** Read back one raw-zone date partition written by [[writeRawZone]]:
+    * its directory alone, with the schema the frame was written with (any
+    * ingested `ds` column is the partition key, so it is dropped) — no
+    * schema-inference job and no listing of the other dates' partitions.
+    * A zero-row write creates no partition directory; that reads as an
+    * empty frame of the same schema, so checks fail as verdicts instead of
+    * the read throwing.
+    */
+  def readRawZone(spark: SparkSession, root: String, ds: String, written: StructType): DataFrame = {
+    val schema = StructType(written.filterNot(_.name.equalsIgnoreCase("ds")))
+    val partition = s"$root/ds=$ds"
+    if (graft.dq.DataQuality.pathExists(spark, partition)) spark.read.schema(schema).parquet(partition)
+    else spark.createDataFrame(java.util.List.of[Row](), schema)
+  }
 
   /** ingest_json_raw — JSON scalar extraction from the events `props` payload:
     * the declared, oracle-checkable face of the JSON parse path.

@@ -3,7 +3,6 @@ package graft.pipeline
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.dq.{CheckResult, DataQuality}
 import graft.io.Ingest
@@ -20,20 +19,22 @@ trait Fetcher {
   * Bounded and status-checked: a 4xx/5xx error body must NOT flow onward as
   * if it were data — run() writes the payload over the previous good raw
   * partition before checks see it, so the fetch throws instead. Timeouts
-  * keep a hung endpoint from blocking a whole backfill window.
+  * keep a hung endpoint from blocking a whole backfill window. One client
+  * (and its selector thread) serves every fetch.
   */
 object HttpFetcher extends Fetcher {
+  private lazy val client = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(10))
+    // follow routine redirects (http→https upgrades); the >=300 guard
+    // below then only fires on real errors, not on 301/302 hops
+    .followRedirects(java.net.http.HttpClient.Redirect.NORMAL).build()
+
   def fetch(endpoint: String, params: Map[String, String]): String = {
     val qs =
       if (params.isEmpty) ""
       else params.map { case (k, v) =>
         java.net.URLEncoder.encode(k, "UTF-8") + "=" + java.net.URLEncoder.encode(v, "UTF-8")
       }.mkString("?", "&", "")
-    val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10))
-      // follow routine redirects (http→https upgrades); the >=300 guard
-      // below then only fires on real errors, not on 301/302 hops
-      .followRedirects(java.net.http.HttpClient.Redirect.NORMAL).build()
     val req = java.net.http.HttpRequest.newBuilder()
       .uri(java.net.URI.create(endpoint + qs))
       .timeout(java.time.Duration.ofSeconds(60)).GET().build()
@@ -69,6 +70,10 @@ object LogAlertSink extends AlertSink {
   * the message carries the actual failure details.
   */
 final class WebhookAlertSink(endpoint: String) extends AlertSink {
+  /** One client (and its selector thread) per sink, built on first alert. */
+  private lazy val client = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(5)).build()
+
   private def jsonEscape(s: String): String = s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
@@ -90,8 +95,6 @@ final class WebhookAlertSink(endpoint: String) extends AlertSink {
       s"Errors: ${failures.mkString("; ")}"
     val body = s"""{"text":"${jsonEscape(msg)}"}"""
     try {
-      val client = java.net.http.HttpClient.newBuilder()
-        .connectTimeout(java.time.Duration.ofSeconds(5)).build()
       val req = java.net.http.HttpRequest.newBuilder()
         .uri(java.net.URI.create(endpoint))
         .timeout(java.time.Duration.ofSeconds(10))
@@ -165,19 +168,20 @@ object Pipeline {
       else {
         Ingest.writeRawZone(ingested, root, ds)
         // 3. Read back the written partition (the DQ operator re-reads from
-        //    the raw zone, data_quality_operator.py:63-69) — partition
-        //    pruning makes this a single-partition scan.
-        (spark.read.parquet(root).filter(col("ds") === ds).drop("ds"), true)
+        //    the raw zone, data_quality_operator.py:63-69) with the ingested
+        //    schema: no schema-inference job, no listing of earlier dates.
+        (Ingest.readRawZone(spark, root, ds, ingested.schema), true)
       }
 
-    // 4–5. Checks + verdict (run ALL, spec order; verdict is a value).
+    // 4–5. Checks + verdict (run ALL, spec order; verdict is a value) and
+    //    the row count, all from one aggregate over the read-back.
     //    source_exists paths are {{ ds }}-templated like the reference's
     //    check_for_key key.
     val renderedChecks = spec.checks.map {
       case graft.dq.SourceExists(p) => graft.dq.SourceExists(PipelineSpec.renderDs(p, ds))
       case c => c
     }
-    val results = DataQuality.runAll(readBack, renderedChecks)
+    val (results, rows) = DataQuality.runAllCounted(readBack, renderedChecks)
     val passed = DataQuality.verdict(results)
 
     // 6. Branch: alert on failure, no-op on success (O9–O11).
@@ -185,7 +189,7 @@ object Pipeline {
       alertSink.alert(spec.info.name, results.filterNot(_.passed).map(r =>
         s"${r.checkName}: ${r.detail}"))
 
-    PipelineResult(passed, results, if (written) root else "", readBack.count())
+    PipelineResult(passed, results, if (written) root else "", rows)
   }
 
   /** Backfill — the Airflow operation the reference's users actually run:

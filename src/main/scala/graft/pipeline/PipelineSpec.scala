@@ -54,9 +54,10 @@ object PipelineSpec {
     * Null-safe throughout: a key present with an EMPTY value (`description:`
     * on its own line — routine in hand-edited YAML) parses like an absent
     * key, and an empty document parses like an empty spec, instead of
-    * NPE-ing. Config ERRORS (e.g. min_row_count without a threshold) throw
-    * IllegalArgumentException at parse time — a silently-defaulted
-    * threshold of 0 would make the check always pass.
+    * NPE-ing. Config ERRORS (e.g. min_row_count without a threshold, a
+    * null_ratio max_ratio outside [0, 1], a value_range with min > max or a
+    * NaN bound) throw IllegalArgumentException at parse time — a
+    * silently-defaulted threshold of 0 would make the check always pass.
     */
   def fromYaml(yaml: String): PipelineSpec = {
     val root: Map[String, Object] =
@@ -127,12 +128,19 @@ object PipelineSpec {
               // YAML carries a decimal max_ratio; the check compares in
               // exact integer arithmetic at parts-per-million resolution.
               val ratio = required("max_ratio", "null_ratio").toDouble
+              if (!(ratio >= 0 && ratio <= 1)) throw new IllegalArgumentException(
+                s"null_ratio max_ratio must lie in [0, 1], got $ratio")
               NullRatio(required("column", "null_ratio"),
                 math.round(ratio * 1000000L), 1000000L)
             case Some("value_range") =>
-              ValueRange(required("column", "value_range"),
-                required("min", "value_range").toDouble,
+              val column = required("column", "value_range")
+              val (lo, hi) = (required("min", "value_range").toDouble,
                 required("max", "value_range").toDouble)
+              // an empty range or a NaN bound makes a check that always
+              // fails or always passes: a config error, like a missing bound
+              if (!(lo <= hi)) throw new IllegalArgumentException(
+                s"value_range needs min <= max and no NaN bound, got [$lo, $hi]")
+              ValueRange(column, lo, hi)
             case Some("freshness") =>
               // as_of comes from the spec's scheduling context ({{ ds }}
               // templating upstream), never the wall clock. snakeyaml

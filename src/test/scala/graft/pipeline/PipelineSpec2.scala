@@ -96,4 +96,46 @@ class PipelineRunSpec extends SparkSpec {
       fetcher, new RecordingAlerts)
     assert(spark.read.parquet(root).count() == 9)
   }
+
+  test("an empty ingest on a fresh raw root fails min_row_count, not the run") {
+    import graft.dq._
+    // header-only CSV: a non-empty schema and zero rows. The partitioned
+    // write of zero rows creates no ds= directory to read back.
+    val dir = tmp()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.csv"), "id,name\n")
+    val alerts = new RecordingAlerts
+    val s = PipelineSpec(PipelineInfo("empty", "o", "@daily", Nil, ""),
+      FileSource("csv", s"$dir/in.csv", Map("header" -> "true")),
+      RawZoneDest(s"$dir/raw", "users"),
+      Seq(MinRowCount(1), RequiredColumns(Seq("id", "name")), UniqueColumn("id")))
+    val r = Pipeline.run(spark, s, LocalDate.parse("2024-05-01"), new StubFetcher(""), alerts)
+    assert(!r.passed && r.rows == 0)
+    assert(r.results == Seq(
+      CheckResult("min_row_count", passed = false, "observed=0 threshold=1"),
+      CheckResult("required_columns", passed = true, "all present"),
+      CheckResult("unique_column", passed = true, "dup_keys=0")))
+    assert(alerts.alerts.map(_._2) == Seq(Seq("min_row_count: observed=0 threshold=1")))
+  }
+
+  test("the run takes its row count from the check aggregate, not a count()") {
+    import graft.dq._
+    var r: PipelineResult = null
+    val runs = graft.SqlExecutions.during(spark) {
+      r = Pipeline.run(spark, spec(Seq(MinRowCount(3), UniqueColumn("id"),
+        RequiredColumns(Seq("id"))), tmp()),
+        LocalDate.parse("2024-05-01"), new StubFetcher(usersPayload), new RecordingAlerts)
+    }
+    assert(r.passed && r.rows == 3)
+    assert(!runs.contains("count"), runs)
+    assert(runs.last == "head", runs) // the one DQ aggregate ends the run
+  }
+
+  test("an ingested ds column is dropped on read-back") {
+    import graft.dq._
+    val payload = """[{"id": 1, "ds": "stale"}, {"id": 2, "ds": "stale"}]"""
+    val r = Pipeline.run(spark, spec(Seq(RequiredColumns(Seq("ds")), MinRowCount(2)), tmp()),
+      LocalDate.parse("2024-05-01"), new StubFetcher(payload), new RecordingAlerts)
+    assert(r.rows == 2)
+    assert(r.results.head == CheckResult("required_columns", passed = false, "missing=ds"))
+  }
 }

@@ -101,6 +101,36 @@ class PipelineSpecSpec extends AnyFunSuite {
       graft.dq.ValueRange("age", 0.0, 130.0)))
   }
 
+  private def check(body: String) = PipelineSpec.fromYaml("data_quality_checks:\n" + body)
+
+  test("null_ratio max_ratio outside [0, 1] is a config ERROR at parse time") {
+    for (bad <- Seq("-0.1", "1.5", ".nan")) {
+      val e = intercept[IllegalArgumentException] {
+        check(s"  - check_type: null_ratio\n    column: email\n    max_ratio: $bad\n")
+      }
+      assert(e.getMessage.contains("max_ratio"), bad)
+    }
+    // both closed ends are valid ratios
+    assert(check("  - check_type: null_ratio\n    column: e\n    max_ratio: 0\n").checks ==
+      Seq(graft.dq.NullRatio("e", 0L, 1000000L)))
+    assert(check("  - check_type: null_ratio\n    column: e\n    max_ratio: 1\n").checks ==
+      Seq(graft.dq.NullRatio("e", 1000000L, 1000000L)))
+  }
+
+  test("value_range with min > max or a NaN bound is a config ERROR at parse time") {
+    for ((lo, hi) <- Seq("10" -> "1", ".nan" -> "5", "0" -> ".nan")) {
+      val e = intercept[IllegalArgumentException] {
+        check(s"  - check_type: value_range\n    column: age\n    min: $lo\n    max: $hi\n")
+      }
+      assert(e.getMessage.contains("value_range"), s"[$lo, $hi]")
+    }
+    // a one-point range and infinite bounds are legitimate
+    assert(check("  - check_type: value_range\n    column: a\n    min: 3\n    max: 3\n").checks ==
+      Seq(graft.dq.ValueRange("a", 3.0, 3.0)))
+    assert(check("  - check_type: value_range\n    column: a\n    min: -.inf\n    max: .inf\n")
+      .checks == Seq(graft.dq.ValueRange("a", Double.NegativeInfinity, Double.PositiveInfinity)))
+  }
+
   test("freshness check parses with explicit as_of (no wall clock)") {
     val spec = PipelineSpec.fromYaml(
       """data_quality_checks:
