@@ -431,14 +431,15 @@ object DataQuality {
     * a landed file: the actual parquet schema against the pinned contract,
     * one row per column with status `ok` / `type_changed` / `missing`
     * (contracted but absent) / `unexpected` (landed but uncontracted).
-    * Spark reads the footer (a metadata op — no data scan at any size);
+    * Spark reads the footer on the driver (a metadata op — no job, no data
+    * scan at any size);
     * the oracle derives the same actual schema via DuckDB's DESCRIBE, both
     * normalized to DuckDB's type vocabulary. Pure metadata → identical at
     * every SF, and O(columns) whether the file is 1 MB or 100 TB.
     */
   def schemaDriftQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val actual = spark.read.parquet(s"$dir/lineitem.parquet").schema.fields
+    val actual = Tables.lineitem(spark, dir).schema.fields
       .map(f => (f.name, SparkToDuck.getOrElse(f.dataType.toString,
         f.dataType.sql))).toSeq
     val a = actual.toDF("column_name", "actual_type")

@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -39,8 +40,13 @@ object Ingest {
     * expressed as a partitioned parquet overwrite so partition pruning works
     * downstream.
     */
-  def writeRawZone(df: DataFrame, root: String, ds: String): Unit =
+  def writeRawZone(df: DataFrame, root: String, ds: String): Unit = {
+    // Dynamic overwrite replaces only the partitions that receive rows, so
+    // an empty rerun would leave the earlier run's ds= directory in place.
+    val partition = new Path(s"$root/ds=$ds")
+    partition.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).delete(partition, true)
     Writers.writeParquet(df.withColumn("ds", lit(ds)), root, Seq("ds"))
+  }
 
   /** Read back one raw-zone date partition written by [[writeRawZone]]:
     * its directory alone, with the schema the frame was written with (any

@@ -91,14 +91,15 @@ object Similarity {
   /** Random-hyperplane signbit bucket key: `bits` dims' sign pattern
     * starting at `offset` — ONE definition of the oracle-sensitive bucket
     * derivation, shared by simBucketed (offset 0) and dedupEmbed's
-    * multi-table variant. (With driver-fixed "hyperplanes" = coordinate
-    * axes, which is deterministic and oracle-expressible; a production
-    * deployment would use seeded Gaussian hyperplanes via the same
-    * expression shape.)
+    * multi-table variant. A vector shorter than `offset + bits` reads its
+    * missing dims as NULL → '0', like DuckDB's out-of-range `v[i]`. (With
+    * driver-fixed "hyperplanes" = coordinate axes, which is deterministic
+    * and oracle-expressible; a production deployment would use seeded
+    * Gaussian hyperplanes via the same expression shape.)
     */
   def signBucket(v: Column, bits: Int, offset: Int = 0): Column =
     concat((0 until bits).map(i =>
-      when(element_at(v, offset + i + 1) >= 0.0, lit("1")).otherwise(lit("0"))): _*)
+      when(try_element_at(v, lit(offset + i + 1)) >= 0.0, lit("1")).otherwise(lit("0"))): _*)
 
   /** x_sim_bucketed — LSH-bucketed approximate neighbor candidates: pairs in
     * the same signbit bucket with cosine ≥ 0.2. Equi-join on the bucket key.

@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.Tables
+
 /** Multimodal columns for training-data pipelines: image/audio/video as
   * opaque `binary` columns with typed metadata, plus decode / feature-extract
   * / resize / frame-sample operators.
@@ -365,7 +367,7 @@ object Multimodal {
     require(new java.io.File(FixturePath).exists(),
       s"asset fixture not found at $FixturePath — run from the repo root or " +
         "set -Dgraft.assets.fixture=/abs/path/to/assets.parquet")
-    assetCatalog(spark.read.parquet(FixturePath).as[Asset]).orderBy(col("asset_id"))
+    assetCatalog(Tables.parquet(spark, FixturePath).as[Asset]).orderBy(col("asset_id"))
   }
 
   val mmCatalogSql: String =
@@ -387,7 +389,7 @@ object Multimodal {
     import spark.implicits._
     require(new java.io.File(FixturePath).exists(),
       s"asset fixture not found at $FixturePath")
-    spark.read.parquet(FixturePath).as[Asset]
+    Tables.parquet(spark, FixturePath).as[Asset]
       .select(col("asset_id"), col("kind"),
         length(col("data")).as("payload_bytes"),
         hex(col("data")).as("payload_hex"))

@@ -39,6 +39,15 @@ class SimilaritySpec extends SparkSpec {
     assert(b == "1011") // 0.0 counts as non-negative
   }
 
+  test("signBucket reads the missing dims of a short vector as '0' under ANSI") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val df = vecs(1L -> Seq(1.0, -1.0), 2L -> Seq(2.0, 3.0, 4.0, 5.0), 3L -> Seq.empty)
+    val b = df.orderBy($"vec_id").select(
+      Similarity.signBucket($"v", 4).as("b"),
+      Similarity.signBucket($"v", 2, offset = 3).as("tail")).as[(String, String)].collect()
+    assert(b.toSeq == Seq("1000" -> "00", "1111" -> "10", "0000" -> "00"))
+  }
+
   test("simTopK on a real fixture dir ranks self-similar vectors first") {
     val dir = java.nio.file.Files.createTempDirectory("sim").toString
     // 3 probe-eligible vectors + clones: nearest neighbor of 0 must be 10 (its clone)

@@ -117,6 +117,26 @@ class PipelineRunSpec extends SparkSpec {
     assert(alerts.alerts.map(_._2) == Seq(Seq("min_row_count: observed=0 threshold=1")))
   }
 
+  test("an empty rerun of a ds replaces the earlier run's partition") {
+    import graft.dq._
+    val dir = tmp()
+    val csv = java.nio.file.Paths.get(s"$dir/in.csv")
+    val s = PipelineSpec(PipelineInfo("rerun", "o", "@daily", Nil, ""),
+      FileSource("csv", csv.toString, Map("header" -> "true")),
+      RawZoneDest(s"$dir/raw", "users"),
+      Seq(MinRowCount(1)))
+    val ds = LocalDate.parse("2024-05-01")
+    java.nio.file.Files.writeString(csv, "id,name\n1,Ada\n2,Bob\n")
+    val first = Pipeline.run(spark, s, ds, new StubFetcher(""), new RecordingAlerts)
+    assert(first.passed && first.rows == 2)
+    java.nio.file.Files.writeString(csv, "id,name\n")
+    val rerun = Pipeline.run(spark, s, ds, new StubFetcher(""), new RecordingAlerts)
+    assert(!rerun.passed && rerun.rows == 0)
+    assert(rerun.results == Seq(
+      CheckResult("min_row_count", passed = false, "observed=0 threshold=1")))
+    assert(!DataQuality.pathExists(spark, s"${rerun.rawPath}/ds=2024-05-01"))
+  }
+
   test("the run takes its row count from the check aggregate, not a count()") {
     import graft.dq._
     var r: PipelineResult = null
