@@ -1,11 +1,10 @@
 package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.util.Det
+import graft.util.{Det, Select}
 
 /** Experimentation primitives: deterministic traffic splitting and the
   * weighted rank statistic — the two operators an A/B platform runs on
@@ -24,13 +23,11 @@ import graft.util.Det
   * price — the "typical traded price" where the unweighted median
   * ([[Sketch]]'s percentile tier) answers "typical line item". The
   * crossing point (first value where 2·cumWeight ≥ totalWeight) is found
-  * by WEIGHTED distributed selection ([[Sketch.selectQuantile]]'s 3-pass
-  * shape with weight sums in place of row counts): min/max/totalWeight,
-  * a 256-bucket weight histogram walked on the driver, then a per-price
-  * cumulative over ONLY the crossing bucket's aggregated prices. Round
-  * 14 replaced the [[PrefixSum.globalRunningSum]] form: a running sum
-  * materializes the whole fact table through a range exchange + disk
-  * checkpoint pin to read ONE crossing point off it — selection moves
+  * by WEIGHTED distributed selection ([[graft.util.Select]] with weight
+  * sums in place of row counts). Round 14 replaced the
+  * [[PrefixSum.globalRunningSum]] form: a running sum materializes the
+  * whole fact table through a range exchange + disk checkpoint pin to
+  * read ONE crossing point off it — selection moves
   * three aggregates and one bucket instead (the crossing VALUE is
   * tie-order independent, so the weight histogram loses nothing). The
   * oracle states the identical crossing rule over a plain running-sum
@@ -91,54 +88,24 @@ object Experiment {
       .select(Det.cents(col("l_extendedprice")).as("c"),
         col("l_quantity").cast("long").as("w")))
 
-  /** Weighted selection over any non-empty (c: long, w: long ≥ 1) frame.
+  /** Weighted selection over any (c: long, w: long ≥ 1) frame.
     *
     * The crossing row in (c, tiebreak…) order satisfies 2·cum ≥ total ⟺
     * cum ≥ (total+1) div 2 =: kw, and its VALUE c* = min c whose
     * through-price cumulative weight reaches kw — independent of any
-    * tiebreak order, so selection needs no row identity at all. Pass 1:
-    * min/max/totalWeight. Pass 2: [[Sketch.SelBuckets]]-bucket WEIGHT
-    * histogram (map-side combined; the collect is bucket-bounded). The
-    * driver walks it to the bucket holding weight-rank kw. Pass 3: only
-    * that bucket's rows, pre-aggregated per distinct price, cumulated in
-    * one domain-bounded window (≤ span/SelBuckets distinct cents values —
-    * value-domain bounded like [[CorpusFilter.paretoFrontOver]]'s frontier
-    * window, never corpus-bounded). Zero full shuffles of the fact frame.
+    * tiebreak order, so one unkeyed weighted rank of [[Select]] finds it
+    * with a window over the crossing bucket's price domain only.
     */
   def weightedMedianOver(li: DataFrame): DataFrame = {
     import li.sparkSession.implicits._
-    val st = li.agg(min($"c"), max($"c"), sum($"w")).head()
-    if (st.isNullAt(2))
-      // empty frame: the pre-selection globalRunningSum form aggregated
-      // over an empty filtered frame and returned one (NULL, NULL) row —
-      // reproduce that instead of walking a histogram of nothing (the
-      // seam is public to tests/stress; lineitem itself is never empty)
-      return li.agg(min($"c").as("weighted_median_cents"),
+    val sel = Select(li, "c", weight = Some("w"))(total => Seq((total + 1) / 2))
+    sel.groups.headOption match {
+      // empty frame: the pre-selection aggregate form's one (NULL, NULL) row
+      case None => li.agg(min($"c").as("weighted_median_cents"),
         sum($"w").as("total_w"))
-    val Array(mn, mx, totalW) =
-      st.toSeq.map(_.asInstanceOf[Long]).toArray
-    val kw = (totalW + 1) / 2
-    val span = mx - mn + 1
-    val bucket = expr(s"(c - $mn) * ${Sketch.SelBuckets} div $span")
-    val hist = li
-      .select(bucket.as("b"), $"w")
-      .groupBy($"b").agg(sum($"w").as("wsum"))
-      .orderBy($"b")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    // Walk the ≤256-entry weight histogram to the bucket holding rank kw.
-    var cum = 0L; var bStar = 0L; var cumBefore = 0L
-    hist.foreach { case (b, wsum) =>
-      if (cum < kw && kw <= cum + wsum) { bStar = b; cumBefore = cum }
-      cum += wsum
+      case Some(g) => sel.picks.select($"c".as("weighted_median_cents"),
+        lit(g.total).as("total_w"))
     }
-    val wCum = Window.orderBy($"c")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    li.filter(bucket === bStar)
-      .groupBy($"c").agg(sum($"w").as("pw"))
-      .withColumn("cum_w", sum($"pw").over(wCum) + lit(cumBefore))
-      .filter($"cum_w" >= kw)
-      .agg(min($"c").as("weighted_median_cents"))
-      .select($"weighted_median_cents", lit(totalW).as("total_w"))
   }
 
   val weightedMedianSql: String =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.util.Det
+import graft.util.{Det, Select}
 
 /** Relational core: the query family SURVEY.md §2.3–§2.4 derives from the
   * reference's (absent) session-analysis Spark job plus the TPC-H-ish fixture
@@ -583,21 +583,16 @@ object Relational {
     * n_orders IS the extent width, and because cents = round(price·100)
     * is monotone non-decreasing along the (price, orderkey) tile order,
     * min/max cents of tile i are the cents order statistics at the tile's
-    * first/last rank. Those come from the [[Sketch.selectQuantile]]
-    * selection shape, fused across groups like [[Rfm.rfmScoresOver]]:
-    * one per-priority stats pass, one [[Sketch.SelBuckets]]-bounded
-    * histogram (≤ 5×256-row collect), a driver walk, and one in-bucket
-    * residual-rank job whose cumulative window is partitioned per
-    * (priority, bucket) and DOMAIN-bounded (≤ span/256 distinct cents
-    * values, never row-bounded). Zero full-frame sorts; the only
-    * full-frame work left is three map-side-combined aggregates over the
-    * narrow (priority, cents) projection. Measured A/B: re-scanning the
-    * 2-column parquet projection per pass beats a ckptDisk pin here
-    * (warm build 0.93–1.09 s vs 1.25–1.48 s at sf0.1 — the pin write is
-    * a 4th sequential job), and unlike [[Rfm.rfmScoresOver]]'s base the
-    * frame is a raw table projection, not a derived aggregate, so each
-    * pass keeps parquet column pruning instead of paying a pin write of
-    * the whole projection.
+    * first/last rank. [[Select]] finds them per priority, unkeyed: an
+    * order statistic's VALUE needs no row identity, so its in-bucket
+    * window moves the picked buckets' cents domain, never rows. Zero
+    * full-frame sorts. Measured A/B: re-scanning the 2-column parquet
+    * projection per pass beats a ckptDisk pin here (warm build
+    * 0.93–1.09 s vs 1.25–1.48 s at sf0.1 — the pin write is a 4th
+    * sequential job), and unlike [[Rfm.rfmScoresOver]]'s base the frame
+    * is a raw table projection, not a derived aggregate, so each pass
+    * keeps parquet column pruning instead of paying a pin write of the
+    * whole projection.
     */
   def ntileDeciles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -607,85 +602,34 @@ object Relational {
 
   /** Boundary-key decile bounds over any (pri: string, c: long) frame —
     * the seam the ntile-edge model-equivalence spec drives with tie-heavy
-    * and sub-10-row groups. `base` is evaluated three times (stats,
-    * histogram, in-bucket selection); pass a cheap-to-recompute or
-    * materialized frame.
+    * and sub-10-row groups. [[Select]] evaluates `base` three times; pass
+    * a cheap-to-recompute or materialized frame.
     */
   def ntileDecilesOver(base: DataFrame): DataFrame = {
     import base.sparkSession.implicits._
-    // pass 1: per-priority n/min/max — the histogram bucketing inputs
-    // (collect is bounded by the priority-domain cardinality)
-    val st = base.groupBy($"pri")
-      .agg(count(lit(1)).as("n"), min($"c").as("mn"), max($"c").as("mx"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      .sortBy(_._1)
-    if (st.isEmpty)
-      return base.select($"pri".as("o_orderpriority"), lit(0L).as("decile"),
-        lit(0L).as("n_orders"), lit(0L).as("min_cents"),
-        lit(0L).as("max_cents")).where(lit(false))
-    val bucket = st.foldLeft(lit(0L)) { case (acc, (p, _, mn, mx)) =>
-      when($"pri" === p,
-        expr(s"(c - (${mn}L)) * ${Sketch.SelBuckets} div ${mx - mn + 1}L"))
-        .otherwise(acc)
-    }
-    // pass 2: fused per-priority cents histogram (≤ 5×SelBuckets rows)
-    val hist = base.select($"pri", bucket.as("b"))
-      .groupBy($"pri", $"b").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._1).map { case (p, xs) =>
-        (p, xs.map(t => (t._2, t._3)).sortBy(_._1))
-      }
-    // closed-form tile extents (ntile's extra-row rule, verbatim)
-    case class Tile(pri: String, d: Long, lo: Long, hi: Long)
-    val tiles = st.toSeq.flatMap { case (p, n, _, _) =>
+    // closed-form (decile, first rank, last rank) of a group of n rows —
+    // ntile's extra-row rule, verbatim
+    def tiles(n: Long): Seq[(Long, Long, Long)] = {
       val q = n / 10; val r = n % 10
       (1L to 10L).flatMap { i =>
         val size = q + (if (i <= r) 1L else 0L)
-        if (size == 0L) None
-        else {
-          val start = (i - 1) * q + math.min(i - 1, r)
-          Some(Tile(p, i, start + 1, start + size))
-        }
+        val start = (i - 1) * q + math.min(i - 1, r)
+        if (size == 0L) None else Some((i, start + 1, start + size))
       }
     }
-    // driver walk per wanted rank: bucket + residual in-bucket rank
-    def pick(p: String, k: Long): (Long, Long) = {
-      val h = hist(p)
-      var cum = 0L; var b = 0L; var res = 0L
-      h.foreach { case (bk, cnt) =>
-        if (cum < k && k <= cum + cnt) { b = bk; res = k - cum }
-        cum += cnt
-      }
-      (b, res)
-    }
-    val picks = tiles.flatMap(t => Seq((t.pri, t.lo), (t.pri, t.hi)))
-      .distinct.map { case (p, k) => val (b, res) = pick(p, k); (p, k, b, res) }
-    // pass 3: one in-bucket job — cumulative counts over the picked
-    // buckets' cents DOMAIN; the k-th order statistic is the smallest
-    // cents whose through-value cumulative reaches the residual rank
-    val pickDf = broadcast(picks.toDF("pri", "k", "b", "res"))
-    val wanted = picks.map(p => (p._1, p._3)).distinct
-      .groupBy(_._1).map { case (p, xs) => (p, xs.map(_._2)) }
-    val inWanted = wanted.map { case (p, bs) =>
-      $"pri" === p && $"b".isin(bs: _*)
-    }.reduce(_ || _)
-    val wCum = Window.partitionBy($"pri", $"b").orderBy($"c")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val stats = base.select($"pri", bucket.as("b"), $"c")
-      .filter(inWanted)
-      .groupBy($"pri", $"b", $"c").agg(count(lit(1)).as("pc"))
-      .withColumn("cum", sum($"pc").over(wCum))
-      .join(pickDf, Seq("pri", "b"))
-      .filter($"cum" >= $"res")
-      .groupBy($"pri", $"k").agg(min($"c").as("v"))
-      .collect().map(r => ((r.getString(0), r.getLong(1)), r.getLong(2)))
-      .toMap
+    val sel = Select(base, "c", group = Some("pri"))(n =>
+      tiles(n).flatMap(t => Seq(t._2, t._3)))
+    val stats = sel.picks.select($"pri", $"rank", $"c")
+      .as[(String, Long, Long)].collect()
+      .map(t => (t._1, t._2) -> t._3).toMap
     // assemble: counts are closed-form, bounds are the selected order
     // statistics — the output is tile-bounded (≤ 10 rows per priority)
-    tiles.map(t =>
-        (t.pri, t.d, t.hi - t.lo + 1, stats((t.pri, t.lo)), stats((t.pri, t.hi))))
-      .toDF("o_orderpriority", "decile", "n_orders", "min_cents", "max_cents")
+    sel.groups.flatMap { g =>
+      val p = g.key.asInstanceOf[String]
+      tiles(g.n).map { case (d, lo, hi) =>
+        (p, d, hi - lo + 1, stats((p, lo)), stats((p, hi)))
+      }
+    }.toDF("o_orderpriority", "decile", "n_orders", "min_cents", "max_cents")
       .orderBy($"o_orderpriority", $"decile")
   }
 

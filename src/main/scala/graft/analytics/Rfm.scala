@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.util.Ckpt._
-import graft.util.Det
+import graft.util.{Det, Select}
 
 /** RFM segmentation — recency / frequency / monetary quintile scoring over
   * the order history, the classic CRM rollup of the reference's warehouse
@@ -24,10 +24,9 @@ import graft.util.Det
   * only reads which side of four boundary ranks a customer falls, and the
   * key (metric, custkey) is unique, so the twelve boundary KEYS (4 per
   * metric) determine every score: score = 1 + #boundaries strictly below
-  * the customer's key. They are order statistics, found by the
-  * [[Sketch.selectQuantile]] selection shape (one fused 3-metric
-  * histogram, a driver walk, one in-bucket residual-rank job), after
-  * which scoring is MAP-ONLY over the customer frame. The previous form
+  * the customer's key. They are order statistics, found by one keyed
+  * [[Select]] over the three metrics as groups, after which scoring is
+  * MAP-ONLY over the customer frame. The previous form
   * chained three [[PrefixSum.globalRunningSum]] passes — three range
   * exchanges and three checkpoint pins of the whole frame to read ranks
   * that were immediately collapsed to quintile ids.
@@ -64,73 +63,28 @@ object Rfm {
   /** Quintile scoring over any (o_custkey, f, m_cents, r_days) frame whose
     * key column is unique. Boundary rank of quintile i: score > i ⟺
     * (rank-1)·5 ≥ i·n ⟺ rank > ⌈i·n/5⌉ =: Bᵢ, so with Tᵢ = the unique
-    * (metric, custkey) key at rank Bᵢ, score = 1 + #{i : key > Tᵢ}.
+    * (metric, custkey) key at rank Bᵢ, score = 1 + #{i : key > Tᵢ}. The
+    * metrics are groups of one exploded (m, v, o_custkey) frame, so all
+    * twelve boundary keys come from one selection.
     */
   def rfmScoresOver(base: DataFrame): DataFrame = {
     import base.sparkSession.implicits._
     val mcols = Seq("r_days", "f", "m_cents")
-    // one pass: per-metric min/max + n (the histogram bucketing inputs)
-    val st = base.agg(
-      min($"r_days"), max($"r_days"), min($"f"), max($"f"),
-      min($"m_cents"), max($"m_cents"), count(lit(1))).head()
-    val n = st.getLong(6)
-    if (n == 0L)
-      // empty frame: min/max are NULL, so the histogram bucketing has no
-      // inputs; return the declared-schema empty frame the pre-selection
-      // rank form produced (grouped aggregate over an empty input)
-      return base.select(lit(1L).as("r_score"), lit(1L).as("f_score"),
-        lit(1L).as("m_score"), lit(0L).as("n_customers"),
-        lit(0L).as("m_cents_total")).where(lit(false))
-    val mets = mcols.zipWithIndex.map { case (c, i) =>
-      (c, st.getLong(2 * i), st.getLong(2 * i + 1))
-    }
-    def bexpr(c: String, mn: Long, mx: Long) =
-      expr(s"($c - (${mn}L)) * ${Sketch.SelBuckets} div ${mx - mn + 1}L")
-    // one fused job: all three metrics' SelBuckets-bounded histograms
-    val hist = base.select(explode(array(mets.zipWithIndex.map {
-        case ((c, mn, mx), i) =>
-          struct(lit(i).as("m"), bexpr(c, mn, mx).as("b"))
-      }: _*)).as("mb"))
-      .groupBy($"mb.m".as("m"), $"mb.b".as("b"))
-      .agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
-    val targets = (1 to 4).map(i => (i.toLong * n + 4) / 5) // Bᵢ = ⌈i·n/5⌉
-    // walk each metric's histogram: (metric, bucket, residual in-bucket rank)
-    val picks = mets.indices.flatMap { mi =>
-      val h = hist.filter(_._1 == mi).map(t => (t._2, t._3)).sortBy(_._1)
-      targets.zipWithIndex.map { case (k, ti) =>
-        var cum = 0L; var b = 0L; var res = 0L
-        h.foreach { case (bk, cnt) =>
-          if (cum < k && k <= cum + cnt) { b = bk; res = k - cum }
-          cum += cnt
-        }
-        (mi, ti, b, res)
-      }
-    }
-    // one in-bucket job: residual ranks inside the ≤12 picked buckets give
-    // the boundary keys (value, custkey); collect is 12-row bounded
-    val pickDf = broadcast(picks.toDF("m", "ti", "b", "res"))
-    val wanted = picks.map { case (m, _, b, _) => (m, b) }.distinct.toSet
-    val exploded = base.select($"o_custkey", explode(array(mets.zipWithIndex.map {
-        case ((c, mn, mx), i) =>
-          struct(lit(i).as("m"), bexpr(c, mn, mx).as("b"), col(c).as("v"))
+    val byMetric = base.select($"o_custkey", explode(array(mcols.zipWithIndex.map {
+        case (c, i) => struct(lit(i).as("m"), col(c).as("v"))
       }: _*)).as("x"))
-      .select($"x.m", $"x.b", $"x.v", $"o_custkey")
-      .filter(wanted.map { case (m, b) => $"m" === m && $"b" === b }
-        .reduce(_ || _))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy($"m", $"b").orderBy($"v", $"o_custkey")
-    val bounds = exploded
-      .withColumn("rn", row_number().over(wRank))
-      .join(pickDf, Seq("m", "b"))
-      .filter($"rn" === $"res")
-      .select($"m", $"ti", $"v", $"o_custkey".as("ck"))
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), (r.getLong(2), r.getLong(3))))
-      .toMap
+      .select($"x.m".as("m"), $"x.v".as("v"), $"o_custkey")
+    def targets(n: Long) = (1 to 4).map(i => (i.toLong * n + 4) / 5) // Bᵢ = ⌈i·n/5⌉
+    val sel = Select(byMetric, "v", group = Some("m"), keys = Seq("o_custkey"))(targets)
+    val bounds = sel.picks.select($"m", $"rank", $"v", $"o_custkey")
+      .as[(Int, Long, Long, Long)].collect()
+      .map(t => (t._1, t._2) -> (t._3, t._4)).toMap
+    // every metric counts all n rows; an empty frame has no boundaries
+    val ks = sel.groups.headOption.fold(Seq.empty[Long])(g => targets(g.n))
     // map-only scoring: 1 + #boundary keys strictly below this row's key
-    def score(mi: Int, c: String) = (0 until 4)
-      .foldLeft(lit(1L)) { case (acc, ti0) =>
-        val (tv, tc) = bounds((mi, ti0))
+    def score(mi: Int, c: String) = ks
+      .foldLeft(lit(1L)) { case (acc, k) =>
+        val (tv, tc) = bounds((mi, k))
         acc + when(col(c) > tv || (col(c) === tv && $"o_custkey" > tc), 1L)
           .otherwise(0L)
       }

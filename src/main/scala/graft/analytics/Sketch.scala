@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.util.Ckpt._
+import graft.util.Select
 
 /** Cardinality sketching that survives a cross-engine hash gate.
   *
@@ -478,49 +479,22 @@ object Sketch {
       | p99_exact, p99_samp, p99_samp - p99_exact AS err_p99
       |FROM ex, sa""".stripMargin
 
-  /** Histogram resolution for [[selectQuantile]]'s first pass. */
-  val SelBuckets = 256L
-
   /** x_select_quantile — the EXACT median without a global sort, by
     * distributed selection: [[quantileSample]] documents the two textbook
     * answers (full sort = anti-pattern, sampling = approximate); this is
-    * the third, production answer — exact AND sort-free. Pass 1: min/max/
-    * count. Pass 2: a [[SelBuckets]]-bucket integer histogram (one
-    * map-side-combining aggregate; the collect is bucket-bounded like
-    * Ivf's centroid seeds, never data-bounded). The driver walks 256
-    * counts to find the bucket holding rank k = (n+1) div 2. Pass 3:
-    * sorts ONLY that bucket's rows (~n/256 of the data, pushed-filter
-    * scan) and takes the residual offset. Three passes, zero full
-    * shuffles of the fact table — at 100 TB the full sort moves the
-    * corpus, this moves three aggregates and one bucket.
+    * the third, production answer — exact AND sort-free. One rank,
+    * k = (n+1) div 2, through [[Select]]: two collected aggregates and one
+    * in-bucket pass over ~n/256 of the data, zero full shuffles of the
+    * fact table — at 100 TB the full sort moves the corpus, this moves
+    * three aggregates and one bucket.
     */
   def selectQuantile(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val cents = Tables.orders(spark, dir)
       .select(round($"o_totalprice" * 100).cast("long").as("c"))
-    val Array(mn, mx, n) = cents
-      .agg(min($"c"), max($"c"), count(lit(1))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    val k = (n + 1) / 2
-    val span = mx - mn + 1
-    val hist = cents
-      .select(expr(s"(c - $mn) * $SelBuckets div $span").as("b"))
-      .groupBy($"b").agg(count(lit(1)).as("cnt"))
-      .orderBy($"b")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    // Walk the 256-entry histogram to the bucket containing rank k.
-    var cum = 0L; var bStar = 0L; var cumBefore = 0L; var bRows = 0L
-    hist.foreach { case (b, cnt) =>
-      if (cum < k && k <= cum + cnt) { bStar = b; cumBefore = cum; bRows = cnt }
-      cum += cnt
-    }
-    val off = k - cumBefore
-    val med = cents
-      .filter(expr(s"(c - $mn) * $SelBuckets div $span") === bStar)
-      .orderBy($"c").limit(off.toInt)
-      .agg(max($"c").as("median_cents"))
-    med.select(lit(n).as("n"), lit(k).as("k"), lit(bStar).as("bucket"),
-      lit(bRows).as("bucket_rows"), $"median_cents")
+    val sel = Select(cents, "c")(n => Seq((n + 1) / 2))
+    sel.picks.select(lit(sel.groups.map(_.n).sum).as("n"), $"rank".as("k"),
+      $"bucket", $"bucket_rows", $"c".as("median_cents"))
   }
 
   val selectQuantileSql: String =
@@ -528,7 +502,7 @@ object Sketch {
        | SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders),
        |mm AS (SELECT min(c) AS mn, max(c) AS mx, count(*) AS n FROM c),
        |hist AS (
-       | SELECT (c.c - mm.mn) * $SelBuckets // (mm.mx - mm.mn + 1) AS b,
+       | SELECT (c.c - mm.mn) * ${Select.Buckets} // (mm.mx - mm.mn + 1) AS b,
        |  count(*) AS cnt
        | FROM c, mm GROUP BY 1),
        |cum AS (
@@ -547,7 +521,7 @@ object Sketch {
        | SELECT max(v) AS median_cents FROM (
        |  SELECT c.c AS v
        |  FROM c, mm, pick
-       |  WHERE (c.c - mm.mn) * $SelBuckets // (mm.mx - mm.mn + 1) = pick.bucket
+       |  WHERE (c.c - mm.mn) * ${Select.Buckets} // (mm.mx - mm.mn + 1) = pick.bucket
        |  ORDER BY c.c LIMIT (SELECT k - cum_before FROM pick)))
        |SELECT pick.n, pick.k, pick.bucket, pick.bucket_rows, med.median_cents
        |FROM pick, med""".stripMargin
@@ -574,7 +548,7 @@ object Sketch {
       .withColumn("k", expr("(n + 1) div 2"))
     val withB = cents.join(broadcast(stats), "grp")
       .select($"grp", $"c",
-        expr(s"(c - mn) * $SelBuckets div (mx - mn + 1)").as("b"))
+        expr(s"(c - mn) * ${Select.Buckets} div (mx - mn + 1)").as("b"))
     val hist = withB.groupBy($"grp", $"b").agg(count(lit(1)).as("cnt"))
     val wCum = Window.partitionBy($"grp").orderBy($"b")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -607,7 +581,7 @@ object Sketch {
        | FROM c GROUP BY 1),
        |wb AS (
        | SELECT c.grp, c.c,
-       |  (c.c - s.mn) * $SelBuckets // (s.mx - s.mn + 1) AS b
+       |  (c.c - s.mn) * ${Select.Buckets} // (s.mx - s.mn + 1) AS b
        | FROM c JOIN stats s ON c.grp = s.grp),
        |hist AS (SELECT grp, b, count(*) AS cnt FROM wb GROUP BY 1, 2),
        |pick AS (

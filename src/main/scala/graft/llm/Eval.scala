@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.analytics.PrefixSum
 import graft.io.Tables
+import graft.util.Select
 
 /** Ranking-model evaluation at scale: exact AUC (Mann–Whitney form) and a
   * calibration/lift table for a declared scorer — the eval tier of the
@@ -190,58 +191,26 @@ object Eval {
     * only reads which side of nine boundary ranks a row falls — decile >
     * i ⟺ (rnk-1)·10 ≥ i·n ⟺ rnk > ⌈i·n/10⌉ =: Bᵢ — and (score, vec_id)
     * is unique, so the nine boundary KEYS at ranks Bᵢ determine every
-    * decile: 1 + #{i : key > Tᵢ}. They come from the
-    * [[graft.analytics.Sketch.selectQuantile]] selection shape (256-bucket
-    * score histogram, driver walk, one in-bucket residual-rank job — both
-    * collects bucket/9-row bounded) over ONE pin of the scored frame;
-    * tagging is then map-only. The previous form paid
-    * [[PrefixSum.globalRunningSum]] — a full range exchange plus its own
-    * checkpoint pin — for per-row ranks that collapsed to ten ids, the
-    * same waste [[graft.analytics.Rfm]] dropped this round.
+    * decile: 1 + #{i : key > Tᵢ}. They come from one keyed
+    * [[graft.util.Select]] over ONE pin of the scored frame; tagging is
+    * then map-only. The previous form paid [[PrefixSum.globalRunningSum]]
+    * — a full range exchange plus its own checkpoint pin — for per-row
+    * ranks that collapsed to ten ids.
     */
   def calibrationBinsOver(sc: DataFrame): DataFrame = {
     import sc.sparkSession.implicits._
     import graft.util.Ckpt._
-    import graft.analytics.Sketch.SelBuckets
     val base = sc.select($"vec_id", $"label", $"score").ckptDisk()
-    val st = base.agg(min($"score"), max($"score"), count(lit(1))).head()
-    val n = st.getLong(2)
-    if (n == 0L)
-      // Empty scored frame — a case [[scored]] itself produces on a corpus
-      // with no positive class. The histogram passes need min/max, which
-      // are NULL here; return the declared-schema empty frame the previous
-      // PrefixSum formulation produced (its grouped aggregate over an
-      // empty input) instead of NPE-ing on getLong.
-      return base.select(lit(0L).as("decile"), lit(0L).as("n_vecs"),
-        lit(0L).as("n_pos"), lit(0L).as("pos_permille")).where(lit(false))
-    val (mn, mx) = (st.getLong(0), st.getLong(1))
-    val bucket = expr(s"(score - (${mn}L)) * $SelBuckets div ${mx - mn + 1}L")
-    val hist = base.select(bucket.as("b"))
-      .groupBy($"b").agg(count(lit(1)).as("cnt"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    val targets = (1 to 9).map(i => (i.toLong * n + 9) / 10) // Bᵢ = ⌈i·n/10⌉
-    val picks = targets.zipWithIndex.map { case (k, ti) =>
-      var cum = 0L; var b = 0L; var res = 0L
-      hist.foreach { case (bk, cnt) =>
-        if (cum < k && k <= cum + cnt) { b = bk; res = k - cum }
-        cum += cnt
-      }
-      (ti, b, res)
-    }
-    val pickDf = broadcast(picks.toDF("ti", "b", "res"))
-    val wRank = org.apache.spark.sql.expressions.Window
-      .partitionBy($"b").orderBy($"score", $"vec_id")
-    val bounds = base
-      .select($"vec_id", $"score", bucket.as("b"))
-      .filter($"b".isin(picks.map(_._2).distinct: _*))
-      .withColumn("rn", row_number().over(wRank))
-      .join(pickDf, Seq("b"))
-      .filter($"rn" === $"res")
-      .select($"ti", $"score", $"vec_id")
-      .collect().map(r => (r.getInt(0), (r.getLong(1), r.getLong(2))))
-      .toMap
-    val decile = (0 until 9).foldLeft(lit(1L)) { case (acc, ti) =>
-      val (tv, tc) = bounds(ti)
+    def targets(n: Long) = (1 to 9).map(i => (i.toLong * n + 9) / 10) // Bᵢ = ⌈i·n/10⌉
+    val sel = Select(base, "score", keys = Seq("vec_id"))(targets)
+    val bounds = sel.picks.select($"rank", $"score", $"vec_id")
+      .as[(Long, Long, Long)].collect()
+      .map(t => t._1 -> (t._2, t._3)).toMap
+    // an empty scored frame — [[scored]] yields one on a corpus with no
+    // positive class — has no boundaries and aggregates to no rows
+    val ks = sel.groups.headOption.fold(Seq.empty[Long])(g => targets(g.n))
+    val decile = ks.foldLeft(lit(1L)) { case (acc, k) =>
+      val (tv, tc) = bounds(k)
       acc + when($"score" > tv || ($"score" === tv && $"vec_id" > tc), 1L)
         .otherwise(0L)
     }

@@ -82,7 +82,11 @@ class ExperimentSpec extends SparkSpec {
       "span smaller than the bucket count" ->
         Seq.tabulate(10)(i => ((i % 3).toLong, (i + 1).toLong)),
       "wide span, weight in the last bucket" ->
-        (Seq((0L, 1L), (1000000L, 1L)) ++ Seq.fill(40)((999999L, 5L))))
+        (Seq((0L, 1L), (1000000L, 1L)) ++ Seq.fill(40)((999999L, 5L))),
+      "span past 2^55 (bucket multiply overflows a long)" ->
+        Seq((0L, 1L), (5L, 2L), (1L << 60, 1L)),
+      "full long range" ->
+        Seq((Long.MinValue, 1L), (0L, 1L), (Long.MaxValue, 2L)))
     shapes.foreach { case (label, rows) =>
       assert(viaSelection(rows) == crossingModel(rows), s"shape: $label")
     }

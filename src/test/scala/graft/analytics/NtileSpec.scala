@@ -54,6 +54,10 @@ class NtileSpec extends SparkSpec {
       "wide-span outliers (histogram buckets mostly empty)" ->
         (Seq.tabulate(80)(i => ("A", (i % 9).toLong)) :+ ("A", 2000000000L)),
       "single row" -> Seq(("A", 5L)),
+      "span past 2^55 (bucket multiply overflows a long)" ->
+        Seq(("A", 0L), ("A", 5L), ("A", 1L << 60)),
+      "full long range" ->
+        Seq(("A", Long.MinValue), ("A", 0L), ("A", Long.MaxValue)),
       "several groups, mixed sizes" ->
         (Seq.tabulate(95)(i => ("P1", (i * 7 % 13).toLong)) ++
           Seq.tabulate(4)(i => ("P2", (100 - i).toLong)) ++

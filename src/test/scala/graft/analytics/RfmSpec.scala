@@ -63,7 +63,12 @@ class RfmSpec extends SparkSpec {
         (i.toLong, (i / 25).toLong, (i / 20).toLong, (i / 10).toLong)),
       "wide-span outliers" -> (Seq.tabulate(40)(i =>
         (i.toLong, (i % 5).toLong, (i % 7).toLong, (i % 3).toLong)) :+
-        (99L, 1000000L, 2000000000L, 500000L)))
+        (99L, 1000000L, 2000000000L, 500000L)),
+      "span past 2^55 (bucket multiply overflows a long)" -> Seq(
+        (0L, 0L, 1L << 60, 5L), (1L, 5L, 0L, 1L << 60), (2L, 1L << 60, 5L, 0L)),
+      "full long range" -> Seq(
+        (0L, Long.MinValue, Long.MaxValue, 0L), (1L, 0L, Long.MinValue, Long.MaxValue),
+        (2L, Long.MaxValue, 0L, Long.MinValue)))
     shapes.foreach { case (label, rows) =>
       val base = rows.toDF("o_custkey", "f", "m_cents", "r_days")
       val got = Rfm.rfmScoresOver(base)

@@ -5,11 +5,12 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.window.WindowExec
 
 import graft.SparkSpec
+import graft.util.Select
 
 /** Pins the domain-bounded-window invariant of the round-14/15 selection
   * rewrites (round-14 verdict #3/#5): each rewrite runs a cumulative or
   * rank window whose input must be the bucket/domain frame — bounded by
-  * the value domain or by [[Sketch.SelBuckets]]-derived bucket extents —
+  * the value domain or by [[Select.Buckets]]-derived bucket extents —
   * NEVER by the input row count. The single-partition windows among them
   * are safe only BY that construction; these tests execute each seam on
   * an adversarial input (row count ≫ domain) and read every WindowExec's
@@ -94,7 +95,7 @@ class SelectionWindowSpec extends SparkSpec {
     "picked buckets (5120 rows -> <=9 bucket extents)") {
     val n = 5120
     val rows = Seq.tabulate(n)(i => (i.toLong, (i % 2).toLong, (i * 997).toLong))
-    val bound = 9L * (n / Sketch.SelBuckets + 2)
+    val bound = 9L * (n / Select.Buckets + 2)
     val wins = windowInputRows {
       llmCalibration(rows); ()
     }
@@ -113,7 +114,7 @@ class SelectionWindowSpec extends SparkSpec {
     val n = 5120
     val rows = Seq.tabulate(n)(i =>
       (i.toLong, (i * 31 % 4099).toLong, (i * 997).toLong, (i * 13 % 2503).toLong))
-    val bound = 12L * (n / Sketch.SelBuckets + 2)
+    val bound = 12L * (n / Select.Buckets + 2)
     val wins = windowInputRows {
       Rfm.rfmScoresOver(rows.toDF("o_custkey", "f", "m_cents", "r_days"))
         .collect(); ()

@@ -87,7 +87,11 @@ class EvalSpec extends SparkSpec {
         Seq.tabulate(200)(i => (i.toLong, (i % 2).toLong, (i / 30).toLong)),
       "negative scores with outliers" ->
         (Seq.tabulate(80)(i => (i.toLong, (i % 2).toLong, (-40 + i).toLong)) :+
-          (999L, 0L, 1000000L)))
+          (999L, 0L, 1000000L)),
+      "span past 2^55 (bucket multiply overflows a long)" ->
+        Seq((0L, 1L, 0L), (1L, 0L, 5L), (2L, 1L, 1L << 60)),
+      "full long range" ->
+        Seq((0L, 1L, Long.MinValue), (1L, 0L, 0L), (2L, 1L, Long.MaxValue)))
     shapes.foreach { case (label, rows) =>
       val got = Eval.calibrationBinsOver(rows.toDF("vec_id", "label", "score"))
         .as[(Long, Long, Long, Long)].collect().toSeq
