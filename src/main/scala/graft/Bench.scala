@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line of per-query wall times at the env SF,
   * plus a machine-readable per-query artifact (`bench.json`) so the numbers
   * survive stdout truncation and are cross-checkable round-over-round.
@@ -160,7 +158,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     // SPARK_GRAFT_BENCH_REPEAT=N (default 1): run the WHOLE suite N times in
     // one JVM and write a per-query pass-over-pass delta artifact
@@ -215,30 +212,7 @@ object Bench {
         val re = """"([A-Za-z0-9_]+)":\s*\{"secs":(-?[0-9.]+)""".r
         re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
       }.getOrElse(Map.empty)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Even with the UI off, SQLAppStatusListener retains up to 1000
-      // executions' full plan graphs + metric maps; across a 150-query
-      // suite that is real old-gen pressure inside later queries' measured
-      // windows (observed: x_pagerank 4.6 s isolated vs 8.2 s mid-suite).
-      .config("spark.sql.ui.retainedExecutions", "1")
-      // The CodeGenerator class cache defaults to 100 entries against a
-      // 250-query suite x 2-3 runs each (~750 plan executions, far more
-      // distinct codegen units): every run past the first hundred evicts
-      // and Janino-recompiles inside the measured window, and the churned
-      // generated classes pile into the old gen until a full GC can unload
-      // them — the accumulation regime BENCH_NOTES #31 measured (pass-2
-      // x_pagerank 4.0 -> 13.1 s on IDENTICAL code) and the round-7 driver
-      // run hit as steady state. 5000 entries holds every generated class
-      // for the whole suite: compile once on the warmup/first run, hit
-      // cache forever after. Static conf — must be set before the session
-      // exists, which is why it lives here and not per-query.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Harness.session()
 
     def exec(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -260,42 +234,10 @@ object Bench {
     def jitMs(): Long =
       if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
         jitBean.getTotalCompilationTime else 0L
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // Task count + summed task time alongside the max: the ratio
-    // max_task / (total_task / tasks) distinguishes ONE straggler (high)
-    // from a fleet-wide uniform stretch (≈1) — the round-12 driver burst's
-    // signature was "all 32 intersection tasks uniformly ~7.7 s", which no
-    // single-channel max can tell apart from a genuinely heavier plan.
-    val taskCount = new java.util.concurrent.atomic.AtomicLong(0L)
-    val totalTaskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null) {
-            // count LAST: the settle below polls the count, and a
-            // sub-millisecond task (common in local mode) moves the sum by
-            // 0 — settling on the sum could return with max/count updates
-            // still in flight (round-13 ADVICE). Every event moves the
-            // count by exactly 1, and by the time it does, its own
-            // max/sum updates are already published.
-            maxTaskMs.getAndAccumulate(t.taskInfo.duration, math.max)
-            totalTaskMs.addAndGet(t.taskInfo.duration)
-            taskCount.incrementAndGet()
-          }
-      })
-    // The listener bus is asynchronous: the straggler task this channel
-    // exists to catch is often the LAST event delivered, after the action
-    // has already returned — read-once would miss it or leak it into the
-    // next run's window. Settle-poll (graft.util.Poll, shared with the
-    // stress harness's listener), OUTSIDE the measured window; short
-    // cadence because this runs once per measured run. Settling on the
-    // COUNT settles the max and sum too (each event publishes those
-    // before its count increment — see the listener comment).
-    def settleTasks(): Unit = {
-      graft.util.Poll.settled(() => taskCount.get(), 20, 50); ()
-    }
-
+    // Task count + summed task time alongside the max (uniform-slowdown
+    // channel, see graft.util.TaskStats), reset before each measured run
+    // and settled after it, OUTSIDE the measured window.
+    val stats = graft.util.TaskStats.attach(spark)
 
     // Warmup: shuffle + agg + parquet scan machinery, not a declared query.
     exec(spark.range(1000000).selectExpr("id % 97 AS k", "id AS v")
@@ -408,12 +350,12 @@ object Bench {
             graft.util.CpuProbe.memMs(graft.util.CpuProbe.RefThreads)
             else -1L
           val (gc0, jit0) = (gcMs(), jitMs())
-          maxTaskMs.set(0L); taskCount.set(0L); totalTaskMs.set(0L)
+          stats.reset()
           val t0 = System.nanoTime()
           try {
             exec(fn(spark, sfDir))
             val wall = (System.nanoTime() - t0) / 1e9
-            settleTasks()
+            stats.settled()
             val slow = baseline.get(name).filter(_ > 0.0)
               .map(b => wall >= 2.0 * b).getOrElse(wall >= 2.0)
             val pa = if (measured && (probeRun || slow))
@@ -421,8 +363,8 @@ object Bench {
             val ma = if (measured && (probeRun || slow))
               graft.util.CpuProbe.memMs(graft.util.CpuProbe.RefThreads)
               else -1L
-            Some(Run(wall, gcMs() - gc0, jitMs() - jit0, maxTaskMs.get(),
-              taskCount.get(), totalTaskMs.get(), pb, pa, mb, ma))
+            Some(Run(wall, gcMs() - gc0, jitMs() - jit0, stats.maxTaskMs,
+              stats.tasks, stats.taskSumMs, pb, pa, mb, ma))
           } catch {
             case e: Throwable =>
               System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")

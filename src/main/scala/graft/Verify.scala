@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -13,20 +12,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: cap retained SQL execution infos — across 150+ queries
-      // the status store's plan graphs are real heap pressure
-      .config("spark.sql.ui.retainedExecutions", "1")
-      // see Bench: default 100-entry codegen class cache thrashes across a
-      // 250-query dump; hold every generated class instead (static conf)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Harness.session()
     new java.io.File(outDir).mkdirs()
     // A failed query must be VISIBLE to the gate, not just a stderr line: a
     // missing result dir could read as "not declared" downstream. Record

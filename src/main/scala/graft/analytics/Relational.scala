@@ -516,21 +516,27 @@ object Relational {
       |GROUP BY o_orderkey
       |ORDER BY o_orderkey""".stripMargin
 
+  /** [[rangeAuto]]'s bucket width: well below the 7-day window, as the
+    * rule advises for a small interval side (2.4k calendar windows), which
+    * buys an almost-lossless bucket join.
+    */
+  val RangeAutoBucketWidth = 2L
+
   /** q_range_auto — a PURE range join (no equi key), written naively and
     * upgraded by the [[graft.plans.RangeJoinRewrite]] optimizer rule. Each
     * calendar ship-day d defines the window [d, d+6]; the join counts every
     * shipment landing in each window. Without the rule Spark must plan a
     * nested-loop product (2.4k intervals × every lineitem row); the rule
     * turns it into a bucketed equi join — both sides hash-partitioned on
-    * `day div 8`, the exact BETWEEN kept as refinement — which is the plan
-    * that survives when both sides are 100 TB facts. The oracle runs the
-    * same naive BETWEEN join in DuckDB.
+    * `day div` [[RangeAutoBucketWidth]], the exact BETWEEN kept as
+    * refinement — which is the plan that survives when both sides are
+    * 100 TB facts. The oracle runs the same naive BETWEEN join in DuckDB.
     */
   def rangeAuto(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     graft.plans.RangeJoinRewrite.install(spark)
     spark.conf.set(graft.plans.RangeJoinRewrite.BucketWidthConf,
-      sys.env.getOrElse("GRAFT_RANGE_W", "2"))
+      RangeAutoBucketWidth)
     // Aggregation pushdown below the range join: the final aggregate is
     // keyed on the point value itself (d_day ranges over exactly the ship
     // days), and count/sum are distributive — so pre-aggregate the fact to

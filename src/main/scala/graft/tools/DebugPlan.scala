@@ -1,12 +1,13 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
+import graft.util.{Harness, TaskStats}
 
-/** Scratch inspector: run a declared query N times and print the AQE-FINAL
-  * executed plan + per-run wall, to chase runtime plan shapes Explain's
-  * compile-time view can't show.
+/** Query inspector: print a declared query's formatted compile-time plan,
+  * then run it N times (noop sink, all columns computed) and print each
+  * run's wall with a per-stage task table, plus the AQE-FINAL executed plan
+  * of the first and last run — the runtime plan shapes the compile-time
+  * view can't show.
   *
   * Usage: runMain graft.tools.DebugPlan <queryName> [sfDir] [runs]
   */
@@ -23,34 +24,14 @@ object DebugPlan {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    // Per-stage max-task + task-count + total-task-time, so a straggler is
-    // attributable to a STAGE (and through numTasks to a plan region).
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, Long)]()
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (t.taskInfo != null) {
-            maxTaskMs.getAndAccumulate(t.taskInfo.duration, math.max)
-            stages.merge(t.stageId, (t.taskInfo.duration, 1, t.taskInfo.duration),
-              (a, b) => (math.max(a._1, b._1), a._2 + b._2, a._3 + b._3))
-          }
-      })
+    val spark = Harness.session()
+    val stats = TaskStats.attach(spark)
     val fn = SparkEntry.queries(name)
+    fn(spark, sfDir).explain("formatted")
     (1 to runs).foreach { i =>
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      maxTaskMs.set(0L)
-      stages.clear()
+      stats.reset()
       // Frame CONSTRUCTION is timed separately: some queries run real
       // driver-side jobs while building the frame (IVF centroid collects,
       // oovRate's vocab top-k) — Bench times fn() inside its window, so a
@@ -63,12 +44,12 @@ object DebugPlan {
       val t0 = System.nanoTime()
       df.write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300)
+      stats.settled()
       val buildNote = if (build >= 0.1) f" (+ build $build%.3f s)" else ""
-      println(f"run $i: $wall%.3f s$buildNote  maxtask=${maxTaskMs.get()} ms")
-      import scala.jdk.CollectionConverters._
-      stages.asScala.toSeq.sortBy(_._1).foreach { case (sid, (mx, n, tot)) =>
-        println(f"  stage $sid%3d: tasks=$n%3d maxtask=$mx%6d ms total=$tot%7d ms")
+      println(f"run $i: $wall%.3f s$buildNote  maxtask=${stats.maxTaskMs} ms")
+      stats.stages.foreach { case (sid, s) =>
+        println(f"  stage $sid%3d: tasks=${s.tasks}%3d maxtask=${s.maxMs}%6d ms " +
+          f"total=${s.totalMs}%7d ms")
       }
       if (i == 1 || i == runs) {
         println(df.queryExecution.executedPlan.toString

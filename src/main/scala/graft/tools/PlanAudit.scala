@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
@@ -39,16 +38,10 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val out = if (args.length > 1) args(1) else "docs/PLANS.md"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // static planning view: AQE's final plans hide codegen stages and
-      // runtime-convert joins; the audit reports the compile-time shape
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // static planning view: AQE's final plans hide codegen stages and
+    // runtime-convert joins; the audit reports the compile-time shape
+    val spark = graft.util.Harness.session(
+      conf = Map("spark.sql.adaptive.enabled" -> "false"))
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Scratch auditor: execute every declared query and flag FINAL adaptive
@@ -36,14 +34,7 @@ object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).headOption.map(_.split(',').toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ui.retainedExecutions", "1")
-      .getOrCreate()
+    val spark = graft.util.Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0
     SparkEntry.queries.toSeq.sortBy(_._1)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.analytics.{RandWalk, Scd, Sessions, Skew, Upsert}
 import graft.llm.{Cluster, Dedup, Eval, Pack, Semantic}
 import graft.util.Ckpt._
+import graft.util.{Harness, TaskStats}
 
 /** Scale-stress harness for the dedup pipeline: generates an N-doc corpus
   * with PLANTED near-duplicate groups (deterministically, from murmur3 of
@@ -799,28 +800,6 @@ object Stress {
     }
   }
 
-  /** Max shuffle-read records observed on any single task while attached —
-    * the STRAGGLER metric. A skewed shuffle join concentrates a hot key's
-    * rows in one reducer task; no local[32] wall-clock number shows it as
-    * crisply as "the biggest task read X of the shuffled rows". Listener
-    * delivery is asynchronous, so [[settled]] polls until the max stops
-    * moving instead of assuming the bus drained with the job.
-    */
-  private final class MaxShuffleTaskListener
-      extends org.apache.spark.scheduler.SparkListener {
-    private val max = new java.util.concurrent.atomic.AtomicLong(0L)
-    def reset(): Unit = max.set(0L)
-    def settled(): Long = graft.util.Poll.settled(() => max.get, 50, 100)
-    override def onTaskEnd(
-        te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        val r = m.shuffleReadMetrics.recordsRead
-        max.updateAndGet(v => Math.max(v, r))
-      }
-    }
-  }
-
   /** Skew-mitigation stress — the 100 TB requirement ("skewed keys →
     * salting or AQE skew-join", SURVEY §7.4-5) measured instead of
     * asserted. An n-row fact table with ONE key holding ~25% of all rows
@@ -892,19 +871,18 @@ object Stress {
         .select($"grp", $"n", $"c").as[(Long, Long, Long)]
         .collect().sortBy(_._1).toSeq
 
-    val listener = new MaxShuffleTaskListener
-    spark.sparkContext.addSparkListener(listener)
+    val taskStats = TaskStats.attach(spark)
     try {
       // a. straggler baseline: forced sort-merge, no AQE skew rescue
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
       val (resPlain, tPlain) = timedS("plain SMJ join+agg (AQE skew OFF)") {
         groupAgg(fact.hint("merge").join(dim, $"key" === $"dkey"))
       }
-      val maxPlain = listener.settled()
+      val maxPlain = taskStats.settled().maxShuffleReadRecords
 
       // b. Spark's runtime rescue: AQE skew-split, thresholds scaled to
       // fixture bytes (defaults are sized for real 100 TB partitions)
-      listener.reset()
+      taskStats.reset()
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
       spark.conf.set(
@@ -913,7 +891,7 @@ object Stress {
       val (resAqe, tAqe) = timedS("plain SMJ join+agg (AQE skew ON)") {
         groupAgg(fact.hint("merge").join(dim, $"key" === $"dkey"))
       }
-      val maxAqe = listener.settled()
+      val maxAqe = taskStats.settled().maxShuffleReadRecords
       spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
       spark.conf.unset(
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
@@ -927,13 +905,13 @@ object Stress {
       // replication stays cheap — the sizing rule: enough slices that a
       // collision doesn't re-concentrate, no more than the replication is
       // worth.
-      listener.reset()
+      taskStats.reset()
       val buckets = Skew.saltBucketsFor(spark)
       val (resSalt, tSalt) = timedS(s"salted join+agg (saltBuckets=$buckets)") {
         groupAgg(Skew.saltedJoin(fact.hint("merge"), dim,
           "key", "dkey", buckets, $"distr"))
       }
-      val maxSalt = listener.settled()
+      val maxSalt = taskStats.settled().maxShuffleReadRecords
 
       println(f"[stress] max task shuffle-read records: plain=$maxPlain%,d " +
         f"aqe-split=$maxAqe%,d salted=$maxSalt%,d (hot key=$hotRows%,d rows)")
@@ -967,7 +945,7 @@ object Stress {
       ok
     } finally {
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.sparkContext.removeSparkListener(listener)
+      spark.sparkContext.removeSparkListener(taskStats)
     }
   }
 
@@ -1193,24 +1171,23 @@ object Stress {
     // by construction, not by parallel derivation (round-11 self-review).
     val wide = 4 * spark.sparkContext.defaultParallelism
     val capBound = 4L * (n + B) / wide
-    val listener = new MaxShuffleTaskListener
-    spark.sparkContext.addSparkListener(listener)
+    val taskStats = TaskStats.attach(spark)
     val (maxBot, maxCap, capDrift) = try {
-      listener.reset()
+      taskStats.reset()
       val (_, tBot) = timedS(s"SCD2 history, one bot user (+$B events), atomic") {
         Scd.historyOver(ev2).agg(sum($"n_events")).collect()
       }
-      val mBot = listener.settled()
+      val mBot = taskStats.settled().maxShuffleReadRecords
       val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
       val coal0 = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
       spark.conf.set("spark.sql.shuffle.partitions", wide.toString)
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       try {
-        listener.reset()
+        taskStats.reset()
         val (_, tCap) = timedS("SCD2 history, bot corpus, CAPPED plan") {
           Scd.historyCappedOver(ev2, wide).agg(sum($"n_events")).collect()
         }
-        val mCap = listener.settled()
+        val mCap = taskStats.settled().maxShuffleReadRecords
         val cols = Seq("event_type", "valid_from_us", "valid_to_us",
           "n_events", "is_current")
         val drift = Scd.historyOver(ev2)
@@ -1229,7 +1206,7 @@ object Stress {
         spark.conf.set("spark.sql.shuffle.partitions", parts0)
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coal0)
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally spark.sparkContext.removeSparkListener(taskStats)
 
     val ok = histRows == expRows && badIntervals == 0 &&
       nCurrent == users && tileBad == 0 && pitOk &&
@@ -1319,19 +1296,18 @@ object Stress {
         timestamp_micros(lit(t0) + 864000000000L + $"id" * 10L).as("ts"),
         lit(0.25).as("value"))
     val ev2 = ev.unionByName(bot).ckptDisk()
-    val listener = new MaxShuffleTaskListener
-    spark.sparkContext.addSparkListener(listener)
+    val taskStats = TaskStats.attach(spark)
     try {
-      listener.reset()
+      taskStats.reset()
       val (_, tBase) = timedS("sessionize, uniform users") {
         Sessions.sessionizedOver(ev).agg(sum($"session_id")).collect()
       }
-      val maxBase = listener.settled()
-      listener.reset()
+      val maxBase = taskStats.settled().maxShuffleReadRecords
+      taskStats.reset()
       val (_, tBot) = timedS(s"sessionize, one bot user (+$B events)") {
         Sessions.sessionizedOver(ev2).agg(sum($"session_id")).collect()
       }
-      val maxBot = listener.settled()
+      val maxBot = taskStats.settled().maxShuffleReadRecords
       println(f"[stress] max task shuffle-read records: uniform=$maxBase%,d " +
         f"bot=$maxBot%,d (burst=$B%,d rows in ONE window partition); " +
         f"wall ${tBase}%.1f -> ${tBot}%.1f s")
@@ -1380,12 +1356,12 @@ object Stress {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       val (maxCap, capDrift, cappedSum, tCap) =
         try {
-          listener.reset()
+          taskStats.reset()
           val (s, t) = timedS("sessionize, bot corpus, CAPPED plan") {
             Sessions.sessionizedCappedOver(ev2, wide)
               .agg(sum($"session_id")).as[Long].collect().head
           }
-          val mc = listener.settled()
+          val mc = taskStats.settled().maxShuffleReadRecords
           val drift = Sessions.sessionizedOver(ev2)
             .select($"event_id", $"session_id".as("want"))
             .join(Sessions.sessionizedCappedOver(ev2, wide)
@@ -1407,7 +1383,7 @@ object Stress {
         capDrift == 0 && maxCap <= capBound && maxCap <= B / 2
       println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
       ok
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally spark.sparkContext.removeSparkListener(taskStats)
   }
 
   /** Streaming LSH near-dup suppression stress — the streaming tier's
@@ -1756,100 +1732,12 @@ object Stress {
     okCount && okSum && okMb
   }
 
-  def main(args: Array[String]): Unit = {
-    val n = if (args.nonEmpty) args(0).toLong else 200000L
-    val scenario = if (args.length > 1) args(1) else "dedup"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  /** The dedup scenario this harness is named for (see the object doc):
+    * signatures → LSH pairs → exact-Jaccard verify → connected components
+    * over the planted-group [[corpus]], timed end to end.
+    */
+  def runDedup(spark: SparkSession, n: Long): Boolean = {
     import spark.implicits._
-
-    if (scenario == "graph") {
-      val ok = runGraph(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "randwalk") {
-      val ok = runRandWalk(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "graphboundary") {
-      val ok = runGraphBoundary(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "ckptlayout") {
-      val ok = runCkptLayout(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "incrfold") {
-      val ok = runIncrFold(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "retention") {
-      val ok = runRetention(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "hh") {
-      val ok = runHeavyHitters(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "sem") {
-      val ok = runSemantic(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "ivfpq") {
-      val ok = runIvfPq(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "multiprobe") {
-      val ok = runMultiprobe(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "ppjoin") {
-      val ok = runPpjoin(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "sketches") {
-      val ok = runSketches(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "lshstream") {
-      val ok = runLshStream(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "skew") {
-      val ok = runSkew(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "asof") {
-      val ok = runAsOfStress(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "scd") {
-      val ok = runScd(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "sessions") {
-      val ok = runSessions(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "evalstress") {
-      val ok = runEval(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "quota") {
-      val ok = runQuota(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-    if (scenario == "pg") {
-      val ok = runPg(spark, n)
-      spark.stop(); if (!ok) sys.exit(1); return
-    }
-
     val docs = corpus(spark, n).ckptDisk() // generation cost excluded
     println(s"[stress] corpus: $n docs in groups of $GroupSize, $DocTokens tokens each")
 
@@ -1901,7 +1789,36 @@ object Stress {
       nClusters * 10 >= expectedGroups * 9 && nClusters * 10 <= expectedGroups * 11 &&
       nVerified > 0 && intra * 100 >= nVerified * 99
     println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
-    spark.stop()
+    ok
+  }
+
+  /** Every scenario by its command-line name. */
+  val Scenarios: Map[String, (SparkSession, Long) => Boolean] = Map(
+    "dedup" -> runDedup, "graph" -> runGraph, "randwalk" -> runRandWalk,
+    "graphboundary" -> runGraphBoundary, "ckptlayout" -> runCkptLayout,
+    "incrfold" -> runIncrFold, "retention" -> runRetention,
+    "hh" -> runHeavyHitters, "sem" -> runSemantic, "ivfpq" -> runIvfPq,
+    "multiprobe" -> runMultiprobe, "ppjoin" -> runPpjoin,
+    "sketches" -> runSketches, "lshstream" -> runLshStream,
+    "skew" -> runSkew, "asof" -> runAsOfStress, "scd" -> runScd,
+    "sessions" -> runSessions, "evalstress" -> runEval, "quota" -> runQuota,
+    "pg" -> runPg)
+
+  /** The named scenario, or the usage line listing every name. */
+  def scenario(name: String): Either[String, (SparkSession, Long) => Boolean] =
+    Scenarios.get(name).toRight(
+      "usage: runMain graft.tools.Stress [n] [scenario]\n" +
+        s"  scenario: one of ${Scenarios.keys.toSeq.sorted.mkString(", ")} " +
+        "(default dedup)")
+
+  def main(args: Array[String]): Unit = {
+    val n = if (args.nonEmpty) args(0).toLong else 200000L
+    val run = scenario(if (args.length > 1) args(1) else "dedup") match {
+      case Right(run) => run
+      case Left(usage) => System.err.println(usage); sys.exit(2)
+    }
+    val spark = Harness.session()
+    val ok = try run(spark, n) finally spark.stop()
     if (!ok) sys.exit(1)
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.multimodal.Multimodal
 
 /** Writes the committed test fixtures that declared queries read — currently
@@ -12,13 +10,7 @@ import graft.multimodal.Multimodal
 object WriteFixtures {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else Multimodal.FixturePath
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Harness.session(cpus = 4)
     Multimodal.syntheticAssets(spark, 24)
       .coalesce(1).write.mode("overwrite").parquet(out)
     println(s"wrote $out")

@@ -30,18 +30,15 @@ import org.apache.spark.storage.StorageLevel
   */
 object Ckpt {
 
-  /** Eager-vs-lazy pin knob for [[CkptOps.ckptDisk]], env-parameterised so
-    * the trade can be measured per environment without a code edit
-    * (round-14 verdict #3 asked for the A/B). Eager (default) blocks the
-    * driver on a dedicated materialization job; lazy materializes inside
+  /** [[CkptOps.ckptDisk]] pins eagerly: it blocks the driver on a
+    * dedicated materialization job, where lazy would materialize inside
     * the first consuming action. Measured at sf0.1/local[32] on the five
     * pairs-build queries (BENCH_NOTES #89): eager and lazy are within
     * noise of each other on every one, and lazy additionally surrenders
     * the layout repair below (UnknownPartitioning until materialized), so
-    * eager stays the default.
+    * eager stays.
     */
-  private val Eager: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_CKPT_EAGER", "true").toBoolean
+  private final val Eager = true
 
   implicit class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {
     /** Eager localCheckpoint with serialized DISK_ONLY block storage,

@@ -4,11 +4,10 @@ package graft.util
   * action can return while its last TaskEnd events are still queued, so a
   * read-once consumer misses exactly the straggler it wants to observe
   * (or leaks it into the next measurement window). Polling until the
-  * value stops moving is the one discipline both consumers — the bench
-  * harness's per-run max-task channel and the stress harness's
-  * max-shuffle-read listener — must share; one definition so a future
-  * change to the heuristic (or a switch to a deterministic bus drain)
-  * happens once (round-11 review).
+  * value stops moving is the one discipline every listener consumer —
+  * [[TaskStats]] and the perfbench tracer — shares; one definition so a
+  * future change to the heuristic (or a switch to a deterministic bus
+  * drain) happens once.
   */
 object Poll {
   def settled(get: () => Long, maxIters: Int, sleepMs: Long): Long = {

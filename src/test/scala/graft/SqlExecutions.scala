@@ -12,11 +12,17 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object SqlExecutions {
 
   /** The action names (`head`, `count`, `save`, ...) of every SQL execution
-    * `body` runs, in completion order. The listener bus is asynchronous but
+    * `body` runs, in completion order.
+    */
+  def during(spark: SparkSession)(body: => Unit): Seq[String] =
+    captured(spark)(body).map(_._1)
+
+  /** The action name and [[QueryExecution]] of every SQL execution `body`
+    * runs, in completion order. The listener bus is asynchronous but
     * ordered, so once a marker action run after `body` has been delivered,
     * every execution of `body` has been too.
     */
-  def during(spark: SparkSession)(body: => Unit): Seq[String] = {
+  def captured(spark: SparkSession)(body: => Unit): Seq[(String, QueryExecution)] = {
     val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = { seen.add(f -> qe); () }
@@ -33,7 +39,7 @@ object SqlExecutions {
         assert(System.nanoTime() < deadline, "marker execution never reached the listener")
         Thread.sleep(10)
       }
-      seen.asScala.toSeq.takeWhile(!isMarker(_)).map(_._1)
+      seen.asScala.toSeq.takeWhile(!isMarker(_))
     } finally spark.listenerManager.unregister(listener)
   }
 }

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.WindowExec
 
@@ -39,22 +39,8 @@ class SelectionWindowSpec extends SparkSpec {
     * descendant node carrying a row-count metric (the window's shuffle
     * read, or the aggregate feeding it in the same stage).
     */
-  private def windowInputRows(body: => Unit): Seq[Long] = {
-    val captured = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
-    val l = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = {
-        captured.add(qe); ()
-      }
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(l)
-    try {
-      body
-      // the listener bus is asynchronous — settle on the captured count
-      graft.util.Poll.settled(() => captured.size().toLong, 20, 50); ()
-    } finally spark.listenerManager.unregister(l)
-    import scala.jdk.CollectionConverters._
-    captured.asScala.toSeq.flatMap { qe =>
+  private def windowInputRows(body: => Unit): Seq[Long] =
+    graft.SqlExecutions.captured(spark)(body).flatMap { case (_, qe) =>
       nodes(qe.executedPlan).collect { case w: WindowExec =>
         nodes(w.children.head).iterator.flatMap { n =>
           n.metrics.get("recordsRead").orElse(n.metrics.get("numOutputRows"))
@@ -63,7 +49,6 @@ class SelectionWindowSpec extends SparkSpec {
           fail(s"no row-count metric under WindowExec:\n$w"))
       }
     }
-  }
 
   test("weightedMedianOver: the cumulative window moves the picked " +
     "bucket's VALUE DOMAIN, not rows (5000 rows, 37 values)") {

@@ -31,4 +31,25 @@ class StressSmokeSpec extends SparkSpec {
   test("sketches scenario: HLL inside 4-sigma, bitmap popcounts exact at smoke size") {
     assert(Stress.runSketches(spark, 20000L))
   }
+
+  test("skew scenario: salting cuts the straggler task's shuffle read, read " +
+    "through TaskStats") {
+    // 32 reducers without coalescing give the two-core test session the
+    // reducer width the scenario's straggler bound assumes; 1.3M rows is the
+    // smallest size at which the salted max task clears 1/3 of the plain
+    // one here (the salt replicates the fixed 100k-key dim, so small n fails)
+    val confs = Seq("spark.sql.shuffle.partitions" -> "32",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try assert(Stress.runSkew(spark, 1300000L))
+    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("an unknown scenario name is rejected with a usage line naming every scenario") {
+    assert(Stress.scenario("skew").isRight)
+    assert(Stress.scenario("dedup").isRight)
+    val usage = Stress.scenario("grpah").swap.getOrElse(fail("grpah was accepted"))
+    Stress.Scenarios.keys.foreach(k => assert(usage.contains(k), s"usage omits $k"))
+  }
 }
