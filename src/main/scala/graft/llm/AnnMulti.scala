@@ -1,12 +1,10 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.io.Tables
-import graft.llm.Similarity.cosineFast
 import graft.util.Ckpt._
 
 /** Multi-probe ANN retrieval with its recall eval — the answer to the
@@ -25,10 +23,9 @@ import graft.util.Ckpt._
   * rises from ≈0.035 to ≥0.5 while scanning ~[[MultiNProbe]]/[[MultiNList]]
   * of the corpus instead of all of it.
   *
-  * Determinism (the [[IvfPq]]/[[Semantic]] recipe): coarse centroids are
-  * stride-seeded — no Lloyd float means — every routing cosine is
-  * 6 dp-rounded before its argmax/rank with ties to the lowest cell id,
-  * and the final ranking key is the exact integer micro-cosine.
+  * Determinism: the coarse quantizer is [[Ivf]]'s (stride seeds,
+  * fixed-point Lloyd, 6 dp-rounded cosines with ties to the lowest cell
+  * id), and the final ranking key is the exact integer micro-cosine.
   *
   * Scale notes: centroids broadcast (nlist rows); cell assignment is one
   * map-side-combined argmax aggregate (never a window over N·nlist scored
@@ -52,54 +49,33 @@ object AnnMulti {
     * sf0.1, docs/ANN_RECALL.md); the nprobe=8 point is already at the
     * fixture's ceiling (~0.79; best-of-5 restarts with Lloyd-5 top out at
     * 0.835 — random 64-dim vectors have no cluster structure to find).
-    *
-    * The refinement is FIXED-POINT so the oracle reproduces it bit-exactly:
-    * per (cell, dim) the mean accumulates `round(x·10⁶)` BIGINTs (exact,
-    * order-independent — a float mean's partial sums are neither) and the
-    * centroid component is the single division `Σ/(10⁶·n)`; both factors
-    * are exactly representable doubles, so Spark and DuckDB round
-    * identically. Cells that lose all members keep their previous centroid.
+    * The passes are [[Ivf.train]]'s fixed-point Lloyd, which the oracle
+    * unrolls in [[coarseSqlCtes]].
     */
   val LloydIters = 2
 
-  /** Stride seeds + [[LloydIters]] fixed-point Lloyd passes. Centroids are
-    * driver-local between passes (nlist rows — the k-means shape: centroids
-    * on the driver, data distributed, every use a broadcast); each pass is
-    * one map-side-combined argmax + one exact integer aggregate.
+  /** The multi-probe candidate pairs every query here scores: each probe
+    * (query_id, qv, …) is routed to its `nProbe` nearest of `nlist` cells —
+    * [[Ivf.train]] with [[LloydIters]] passes — and joined to those cells'
+    * inverted lists, the probe itself excluded. One row per (probe,
+    * neighbor): the probe's columns, the cell's routing rank `prn`, the
+    * neighbor as `neighbor_id`, `nv` plus `e`'s other columns, and the
+    * micro-cosine `s` the queries rank by. The routing
+    * table is probes × nProbe rows behind a window the planner can't size,
+    * so it is broadcast explicitly.
     */
-  private[llm] def refinedCentroids(spark: SparkSession, e: DataFrame,
-      nlist: Int): DataFrame = {
+  private def candidates(spark: SparkSession, e: DataFrame, probes: DataFrame,
+      nlist: Int, nProbe: Int): DataFrame = {
     import spark.implicits._
-    val n = e.count()
-    val stride = math.max(1L, n / nlist)
-    val seeds = e.filter(pmod($"vec_id", lit(stride)) === 0)
-      .orderBy($"vec_id").limit(nlist)
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    var cent: Seq[(Long, Seq[Double])] =
-      seeds.zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }.toSeq
-    (1 to LloydIters).foreach { _ =>
-      val cdf = broadcast(cent.toDF("ccid", "cv"))
-      val refined = e.crossJoin(cdf)
-        .withColumn("sim", round(cosineFast(spark, $"v", $"cv"), 6) + lit(0.0))
-        .groupBy($"vec_id")
-        .agg(max_by($"ccid", struct($"sim", -$"ccid")).as("ccid"))
-        .join(e, Seq("vec_id"))
-        .select($"ccid", posexplode($"v").as(Seq("pos", "x")))
-        .groupBy($"ccid", $"pos")
-        .agg(sum(round($"x" * 1000000L).cast("long")).as("sx"),
-          count(lit(1)).as("cnt"))
-        .groupBy($"ccid")
-        .agg(array_sort(collect_list(struct($"pos",
-          ($"sx".cast("double") / ($"cnt" * 1000000L).cast("double")).as("m"))))
-          .as("pm"))
-        .select($"ccid", transform($"pm", p => p.getField("m")).as("cv"))
-        .as[(Long, Seq[Double])].collect().toMap
-      cent = cent.map { case (id, v) => (id, refined.getOrElse(id, v)) }
-    }
-    cent.toDF("ccid", "cv")
+    val coarse = Ivf.train(spark, e, nlist, LloydIters)
+    val lists = Ivf.assign(spark, e, coarse).join(e, "vec_id")
+      .withColumnRenamed("vec_id", "neighbor_id").withColumnRenamed("v", "nv")
+    broadcast(Ivf.route(spark, probes, coarse, nProbe)).join(lists, "cid")
+      .filter($"neighbor_id" =!= $"query_id")
+      .withColumn("s", Similarity.microSim(spark, $"qv", $"nv"))
   }
 
-  /** The oracle-side twin of [[refinedCentroids]]: CTEs `e`, `cst`,
+  /** The oracle-side twin of [[Ivf.train]] at [[LloydIters]]: CTEs `e`, `cst`,
     * `cseeds0` (stride seeds) and [[LloydIters]] unrolled fixed-point
     * passes, ending in a CTE named `cseeds` the downstream query text
     * references exactly as before.
@@ -149,54 +125,18 @@ object AnnMulti {
     */
   def annRecallMulti(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
 
-    // stride-seeded + Lloyd-refined coarse centroids (oracle-expressible)
-    val coarse = broadcast(refinedCentroids(spark, e, MultiNList))
-
-    // every vector → nearest cell, map-side-combined argmax
-    val cass = e.crossJoin(coarse)
-      .withColumn("sim", round(cosineFast(spark, $"v", $"cv"), 6) + lit(0.0))
-      .groupBy($"vec_id")
-      .agg(max_by($"ccid", struct($"sim", -$"ccid")).as("ccid"))
-    val lists = cass.join(e, Seq("vec_id"))
-      .select($"ccid", $"vec_id".as("neighbor_id"), $"v".as("nv"))
-
     val probes = broadcast(e.filter($"vec_id" < Similarity.RecallProbes)
       .select($"vec_id".as("query_id"), $"v".as("qv")))
-
-    // multi-probe routing: nprobe best cells per query (qv rides along —
-    // probes × nprobe rows, broadcast)
-    val wCell = Window.partitionBy($"query_id").orderBy($"csim".desc, $"ccid".asc)
-    val pcell = probes.crossJoin(coarse)
-      .withColumn("csim", round(cosineFast(spark, $"qv", $"cv"), 6) + lit(0.0))
-      .withColumn("prn", row_number().over(wCell))
-      .filter($"prn" <= MultiNProbe)
-      .select($"query_id", $"qv", $"ccid")
-
-    def microSim(a: Column, b: Column): Column =
-      round(cosineFast(spark, a, b) * 1000000L).cast("long")
-    def topIds(scored: DataFrame): DataFrame = scored
-      .groupBy($"query_id")
-      .agg(call_function("top_k_rows", $"s", $"neighbor_id",
-        lit(Similarity.RecallK)).as("top"))
-      .select($"query_id", explode($"top").as("x"))
-      .select($"query_id", $"x.tag".as("neighbor_id"))
-
-    // truth: brute force, UNCHANGED from x_ann_recall
-    val truth = topIds(probes.crossJoin(
-        e.select($"vec_id".as("neighbor_id"), $"v".as("nv")))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id", $"neighbor_id", microSim($"qv", $"nv").as("s")))
-
+    val truth = Similarity.recallTruth(spark, probes, e)
     // approximate: score only the probed cells' candidates
-    val scored = broadcast(pcell).join(lists, Seq("ccid"))
-      .filter($"neighbor_id" =!= $"query_id")
-      .select($"query_id", $"neighbor_id", microSim($"qv", $"nv").as("s"))
+    val scored = candidates(spark, e, probes, MultiNList, MultiNProbe)
+      .select($"query_id", $"neighbor_id", $"s")
       .ckptDisk() // referenced twice (top-k + n_cand): one scan, not two
-    val approx = topIds(scored)
+    val approx = Similarity.topNeighbors(scored, Similarity.RecallK)
+      .select($"query_id", $"neighbor_id")
 
     val tc = truth.groupBy($"query_id").agg(count(lit(1)).as("n_true"))
     val cc = scored.groupBy($"query_id").agg(count(lit(1)).as("n_cand"))
@@ -310,38 +250,8 @@ object AnnMulti {
   def searchOver(spark: SparkSession, e: DataFrame, probesDf: DataFrame,
       nlist: Int, nProbe: Int, topK: Int): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
-
-    val coarse = broadcast(refinedCentroids(spark, e, nlist))
-
-    val cass = e.crossJoin(coarse)
-      .withColumn("sim", round(cosineFast(spark, $"v", $"cv"), 6) + lit(0.0))
-      .groupBy($"vec_id")
-      .agg(max_by($"ccid", struct($"sim", -$"ccid")).as("ccid"))
-    val lists = cass.join(e, Seq("vec_id"))
-      .select($"ccid", $"vec_id".as("neighbor_id"), $"v".as("nv"))
-
-    val probes = broadcast(probesDf)
-    val wCell = Window.partitionBy($"query_id").orderBy($"csim".desc, $"ccid".asc)
-    val pcell = probes.crossJoin(coarse)
-      .withColumn("csim", round(cosineFast(spark, $"qv", $"cv"), 6) + lit(0.0))
-      .withColumn("prn", row_number().over(wCell))
-      .filter($"prn" <= nProbe)
-      .select($"query_id", $"qv", $"ccid")
-
-    val scored = broadcast(pcell).join(lists, Seq("ccid"))
-      .filter($"neighbor_id" =!= $"query_id")
-      .select($"query_id", $"neighbor_id",
-        round(cosineFast(spark, $"qv", $"nv") * 1000000L).cast("long").as("micro_sim"))
-    // bounded native top-k aggregate: the shuffle carries O(probes·k) rows,
-    // never a window over every scored candidate
-    scored.groupBy($"query_id")
-      .agg(call_function("top_k_rows", $"micro_sim", $"neighbor_id",
-        lit(topK)).as("top"))
-      .select($"query_id", posexplode($"top").as(Seq("p", "x")))
-      // top_k_rows returns best-first (ord DESC, ties tag ASC): position IS rank
-      .select($"query_id", $"x.tag".as("neighbor_id"),
-        ($"p" + 1).cast("long").as("rnk"), $"x.ord".as("micro_sim"))
+    Similarity.topNeighbors(candidates(spark, e, broadcast(probesDf), nlist, nProbe), topK)
+      .withColumnRenamed("s", "micro_sim")
       .orderBy($"query_id", $"rnk")
   }
 
@@ -410,47 +320,18 @@ object AnnMulti {
     */
   def filteredTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    GraftFunctions.register(spark)
-    val emb = Tables.embeddings(spark, dir)
-    val e = emb.select($"vec_id",
-      transform($"embedding", x => x.cast("double")).as("v"))
-
-    val coarse = broadcast(refinedCentroids(spark, e, MultiNList))
-
-    val cass = e.crossJoin(coarse)
-      .withColumn("sim", round(cosineFast(spark, $"v", $"cv"), 6) + lit(0.0))
-      .groupBy($"vec_id")
-      .agg(max_by($"ccid", struct($"sim", -$"ccid")).as("ccid"))
-    // label rides the inverted list rows — the filter column lives beside
+    // label rides the inverted-list rows — the filter column lives beside
     // the vectors, so filtered candidate generation is one equi-join
-    val lists = cass.join(e, Seq("vec_id"))
-      .join(emb.select($"vec_id", $"label"), Seq("vec_id"))
-      .select($"ccid", $"vec_id".as("neighbor_id"), $"v".as("nv"), $"label")
-
-    val probes = broadcast(emb.filter($"vec_id" < Similarity.RecallProbes)
-      .select($"vec_id".as("query_id"),
-        transform($"embedding", x => x.cast("double")).as("qv"),
-        $"label".as("qlabel")))
-    val wCell = Window.partitionBy($"query_id").orderBy($"csim".desc, $"ccid".asc)
-    val pcell = probes.crossJoin(coarse)
-      .withColumn("csim", round(cosineFast(spark, $"qv", $"cv"), 6) + lit(0.0))
-      .withColumn("prn", row_number().over(wCell))
-      .filter($"prn" <= FilteredNProbe)
-      .select($"query_id", $"qv", $"qlabel", $"ccid")
-
-    val scored = broadcast(pcell).as("pc")
-      .join(lists.as("ls"),
-        $"pc.ccid" === $"ls.ccid" && $"pc.qlabel" === $"ls.label")
-      .filter($"ls.neighbor_id" =!= $"pc.query_id")
-      .select($"pc.query_id".as("query_id"), $"ls.neighbor_id".as("neighbor_id"),
-        round(cosineFast(spark, $"pc.qv", $"ls.nv") * 1000000L).cast("long")
-          .as("micro_sim"))
-    scored.groupBy($"query_id")
-      .agg(call_function("top_k_rows", $"micro_sim", $"neighbor_id",
-        lit(Similarity.RecallK)).as("top"))
-      .select($"query_id", posexplode($"top").as(Seq("p", "x")))
-      .select($"query_id", $"x.tag".as("neighbor_id"),
-        ($"p" + 1).cast("long").as("rnk"), $"x.ord".as("micro_sim"))
+    val e = Tables.embeddings(spark, dir).select($"vec_id",
+      transform($"embedding", x => x.cast("double")).as("v"), $"label")
+    val probes = broadcast(e.filter($"vec_id" < Similarity.RecallProbes)
+      .select($"vec_id".as("query_id"), $"v".as("qv"), $"label".as("qlabel")))
+    // the label equality joins beside the cell id (the optimizer pushes it
+    // into the candidate join's keys)
+    Similarity.topNeighbors(
+        candidates(spark, e, probes, MultiNList, FilteredNProbe)
+          .filter($"qlabel" === $"label"), Similarity.RecallK)
+      .withColumnRenamed("s", "micro_sim")
       .orderBy($"query_id", $"rnk")
   }
 
@@ -515,43 +396,14 @@ object AnnMulti {
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
 
-    val coarse = broadcast(refinedCentroids(spark, e, MultiNList))
-
-    val cass = e.crossJoin(coarse)
-      .withColumn("sim", round(cosineFast(spark, $"v", $"cv"), 6) + lit(0.0))
-      .groupBy($"vec_id")
-      .agg(max_by($"ccid", struct($"sim", -$"ccid")).as("ccid"))
-    val lists = cass.join(e, Seq("vec_id"))
-      .select($"ccid", $"vec_id".as("neighbor_id"), $"v".as("nv"))
-
     val probes = broadcast(e.filter($"vec_id" < Similarity.RecallProbes)
       .select($"vec_id".as("query_id"), $"v".as("qv")))
-    val wCell = Window.partitionBy($"query_id").orderBy($"csim".desc, $"ccid".asc)
-    // routing ranks for ALL cells up to the deepest operating point
-    val pcell = probes.crossJoin(coarse)
-      .withColumn("csim", round(cosineFast(spark, $"qv", $"cv"), 6) + lit(0.0))
-      .withColumn("prn", row_number().over(wCell))
-      .filter($"prn" <= CurveProbes.max)
-      .select($"query_id", $"qv", $"ccid", $"prn")
-
-    def microSim(a: Column, b: Column): Column =
-      round(cosineFast(spark, a, b) * 1000000L).cast("long")
-    // one scored frame, prn attached (each neighbor sits in exactly one cell)
-    val scored = broadcast(pcell).join(lists, Seq("ccid"))
-      .filter($"neighbor_id" =!= $"query_id")
-      .select($"query_id", $"prn", $"neighbor_id",
-        microSim($"qv", $"nv").as("s"))
+    // one scored frame, routed to the deepest operating point, prn attached
+    // (each neighbor sits in exactly one cell)
+    val scored = candidates(spark, e, probes, MultiNList, CurveProbes.max)
+      .select($"query_id", $"prn", $"neighbor_id", $"s")
       .ckptDisk()
-
-    val truth = probes.crossJoin(
-        e.select($"vec_id".as("neighbor_id"), $"v".as("nv")))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id", $"neighbor_id", microSim($"qv", $"nv").as("s"))
-      .groupBy($"query_id")
-      .agg(call_function("top_k_rows", $"s", $"neighbor_id",
-        lit(Similarity.RecallK)).as("top"))
-      .select($"query_id", explode($"top").as("x"))
-      .select($"query_id", $"x.tag".as("neighbor_id"))
+    val truth = Similarity.recallTruth(spark, probes, e)
 
     val points = CurveProbes.toDF("nprobe")
     val approx = broadcast(points).join(scored, $"prn" <= $"nprobe")

@@ -1,104 +1,130 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
 import graft.llm.Similarity.cosineFast
 
-/** IVF (inverted-file) approximate nearest-neighbor index — the scale path
-  * for similarity search beyond brute force (SURVEY.md north-star ops):
+/** IVF (inverted-file) coarse quantizer — the one place an ANN index is
+  * built and probed. Every ANN query (x_ivf_topk, x_ivfpq_topk,
+  * x_semantic_dedup, the [[AnnMulti]] family) and the PQ codebook seeds of
+  * x_pq_assign go through its four stages:
   *
-  *  1. train: k coarse centroids (deterministic seeding: the first `nlist`
-  *     vectors by id; fixed Lloyd iterations, cosine assignment);
-  *  2. assign: every vector → nearest centroid (broadcast centroids, one
-  *     map-only pass — the inverted lists are just a `cid` column, so they
-  *     partition/bucket naturally at 100 TB);
-  *  3. search: probe only the `nProbe` nearest inverted lists per query —
-  *     an equi-join on `cid` instead of a full cross join, cutting candidate
-  *     generation by ~nlist/nProbe.
+  *  1. [[seeds]]: stride seeds — the rows whose id is a multiple of
+  *     max(1, n/k), the k smallest of them by id;
+  *  2. [[train]]: the seeds refined by `lloyd` fixed-point Lloyd passes
+  *     into (cid, centroid);
+  *  3. [[assign]]: every vector → the cell of highest 6 dp-rounded cosine,
+  *     ties to the lowest cid (the inverted lists are just a `cid` column,
+  *     so they partition and bucket naturally);
+  *  4. [[route]]: every probe → its `nProbe` nearest cells by the same
+  *     rounded cosine and tie-break, so search is an equi-join on `cid`
+  *     instead of a full cross join (candidates cut by ~nlist/nProbe).
   *
-  * The exhaustive-probe configuration (nProbe = nlist) is exact — identical
-  * to brute force whatever the centroids are — which is what lets
-  * `x_ivf_topk` go through the DuckDB hash gate; the approximate path
-  * (nProbe < nlist, where float-mean centroids steer recall) is pinned by
-  * the IvfSpec recall test instead.
+  * Every stage is arithmetic DuckDB reproduces bit for bit (id-picked
+  * seeds, a fixed-point mean, rounded cosines, integer tie-breaks), which
+  * is what lets the oracle gate pin the approximate routes (nProbe < nlist)
+  * end to end, not just the exhaustive probe. A NULL cosine (a zero-norm
+  * vector or centroid) loses to every non-NULL cell in both argmaxes.
   */
 object Ivf {
 
-  /** vectors: (vec_id long, v array<double>). Returns (cid int, centroid),
-    * materialized as a driver-local DataFrame (nlist rows ≪ N — the standard
-    * k-means shape: centroids live on the driver, data stays distributed, and
-    * every downstream use is a cheap broadcast instead of re-running Lloyd).
-    *
-    * Deterministic stride seeding WITHOUT a global sort: candidate seeds are
-    * the rows whose id is a stride multiple (consecutive-id seeding
-    * degenerates when ids correlate with clusters), a distributed top-k
-    * (TakeOrderedAndProject) keeps the nlist smallest, and the tiny result is
-    * indexed on the driver. No single-partition exchange anywhere — the
-    * round-1 `Window.orderBy(vec_id)` seeding forced ALL vectors through one
-    * task and was the repo's one true scale-killer.
+  /** Stage 1 — the seed vectors, in id order: rows whose `vec_id` is a
+    * multiple of max(1, n/k), the k smallest ids among them. Fewer than k
+    * when ids are sparse; none on an empty frame. A distributed top-k
+    * (TakeOrderedAndProject), never a global sort: the round-1
+    * `Window.orderBy(vec_id)` seeding forced every vector through one task.
+    * Two actions: the row count and the seed collect.
     */
-  def train(spark: SparkSession, vectors: DataFrame, nlist: Int, iters: Int = 2): DataFrame = {
+  def seeds(spark: SparkSession, e: DataFrame, k: Int): Seq[Seq[Double]] = {
     import spark.implicits._
-    val n = vectors.count()
-    val stride = math.max(1L, n / nlist)
-    var seeds = vectors
-      .filter(pmod($"vec_id", lit(stride)) === 0)
-      .orderBy($"vec_id").limit(nlist)                 // distributed top-k
+    require(k > 0, s"seed count must be positive, got $k")
+    val stride = math.max(1L, e.count() / k)
+    e.filter(pmod($"vec_id", lit(stride)) === 0)
+      .orderBy($"vec_id").limit(k)
       .select($"vec_id", $"v")
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    if (seeds.length < nlist)                          // sparse-id fallback
-      seeds = (seeds ++ vectors.orderBy($"vec_id").limit(nlist)
-        .select($"vec_id", $"v").as[(Long, Seq[Double])].collect()
-        .filterNot(s => seeds.exists(_._1 == s._1))).sortBy(_._1).take(nlist)
-    var centroids = toLocalCentroids(spark, seeds.zipWithIndex.map { case ((_, v), i) => (i, v) })
-    (1 to iters).foreach { _ =>
-      val updated = assign(spark, vectors, centroids)
-        .join(vectors, "vec_id")
-        .select($"cid", posexplode($"v").as(Seq("pos", "x")))
-        .groupBy($"cid", $"pos").agg(avg($"x").as("m"))
-        .groupBy($"cid")
-        .agg(array_sort(collect_list(struct($"pos", $"m"))).as("pm"))
-        .select($"cid", transform($"pm", p => p.getField("m")).as("centroid"))
-        .as[(Int, Seq[Double])].collect().sortBy(_._1)
-      centroids = toLocalCentroids(spark, updated)
-    }
-    centroids
+      .as[(Long, Seq[Double])].collect().sortBy(_._1).map(_._2).toSeq
   }
 
-  private def toLocalCentroids(spark: SparkSession, rows: Seq[(Int, Seq[Double])]): DataFrame = {
+  /** Stage 2 — (cid int, centroid): the [[seeds]] numbered in id order,
+    * then `lloyd` Lloyd passes. Centroids stay driver-local between passes
+    * (nlist rows — the k-means shape: data distributed, every use a
+    * broadcast); each pass is one [[assign]] plus one exact aggregate.
+    *
+    * The pass is FIXED-POINT so the oracle reproduces it bit-exactly: per
+    * (cell, dim) the mean accumulates `round(x·10⁶)` BIGINTs (exact and
+    * order-independent — a float mean's partial sums are neither) and the
+    * component is the single division `Σ/(10⁶·n)` of two exactly
+    * representable doubles. A cell that loses all members keeps its
+    * previous centroid.
+    */
+  def train(spark: SparkSession, e: DataFrame, nlist: Int, lloyd: Int): DataFrame = {
     import spark.implicits._
-    rows.toDF("cid", "centroid")
+    var cent = seeds(spark, e, nlist).zipWithIndex.map { case (v, i) => (i, v) }
+    (1 to lloyd).foreach { _ =>
+      val refined = assign(spark, e, cent.toDF("cid", "centroid"))
+        .join(e, "vec_id")
+        .select($"cid", posexplode($"v").as(Seq("pos", "x")))
+        .groupBy($"cid", $"pos")
+        .agg(sum(round($"x" * 1000000L).cast("long")).as("sx"),
+          count(lit(1)).as("cnt"))
+        .groupBy($"cid")
+        .agg(array_sort(collect_list(struct($"pos",
+          ($"sx".cast("double") / ($"cnt" * 1000000L).cast("double")).as("m"))))
+          .as("pm"))
+        .select($"cid", transform($"pm", p => p.getField("m")).as("centroid"))
+        .as[(Int, Seq[Double])].collect().toMap
+      cent = cent.map { case (cid, v) => (cid, refined.getOrElse(cid, v)) }
+    }
+    cent.toDF("cid", "centroid")
   }
 
-  /** (vec_id, cid): nearest centroid by cosine, deterministic tie-break
-    * (lowest cid wins at equal similarity — `max_by` over (sim, -cid)).
+  private def roundedCosine(spark: SparkSession, a: Column, b: Column): Column =
+    round(cosineFast(spark, a, b), 6) + lit(0.0)
+
+  /** Stage 3 — (vec_id, cid): each vector of `e` (vec_id, v) to the
+    * centroid of highest rounded cosine, ties to the lowest cid
+    * (`max_by` over (sim, -cid)).
     *
     * Argmax via hash aggregate, NOT a row_number window: a window over the
     * crossJoin output would shuffle all N×nlist scored rows by vec_id —
     * an nlist-fold amplification of the hottest exchange in the index. The
-    * aggregate form reduces map-side (each partition keeps one running best
-    * per vec_id), so the exchange carries one row per vector.
+    * aggregate reduces map-side (each partition keeps one running best per
+    * vec_id), so the exchange carries one row per vector, and none at all
+    * when `e` is already hash-partitioned by vec_id.
     */
-  def assign(spark: SparkSession, vectors: DataFrame, centroids: DataFrame): DataFrame = {
+  def assign(spark: SparkSession, e: DataFrame, centroids: DataFrame): DataFrame = {
     import spark.implicits._
-    vectors.crossJoin(broadcast(centroids))
-      .withColumn("sim", cosineFast(spark, $"v", $"centroid"))
+    e.crossJoin(broadcast(centroids))
+      .withColumn("sim", roundedCosine(spark, $"v", $"centroid"))
       .groupBy($"vec_id")
       .agg(max_by($"cid", struct($"sim", -$"cid")).as("cid"))
   }
 
-  /** Top-k cosine neighbors per query, searching only nProbe inverted lists.
-    * queries: (query_id, qv). Returns (query_id, neighbor_id, rnk, sim).
-    * roundSim ≥ 0 rounds the cosine to that many decimals BEFORE ranking
-    * (with -0.0 canonicalized) so an oracle's float fold ranks identically.
-    *
-    * `excludeSelf` drops neighbors with vec_id == query_id — correct ONLY
-    * when query ids live in the vector id space (as in ivfTopK, whose
-    * probes ARE vectors). Pass false for external query ids, or a vector
-    * that happens to share a number with a query id is silently unfindable.
+  /** Stage 4 — the `nProbe` nearest cells of every probe (query_id, qv, …)
+    * by the rounded cosine, ties to the lowest cid: the probe's columns
+    * plus `cid` and its routing rank `prn` (1 = nearest). A window over
+    * probes × nlist rows, never over the corpus.
+    */
+  def route(spark: SparkSession, probes: DataFrame, centroids: DataFrame,
+      nProbe: Int): DataFrame = {
+    import spark.implicits._
+    val w = Window.partitionBy($"query_id").orderBy($"csim".desc, $"cid".asc)
+    probes.crossJoin(broadcast(centroids))
+      .withColumn("csim", roundedCosine(spark, $"qv", $"centroid"))
+      .withColumn("prn", row_number().over(w))
+      .filter($"prn" <= nProbe)
+      .drop("centroid", "csim")
+  }
+
+  /** Top-k cosine neighbors per query, searching only the nProbe inverted
+    * lists [[route]] picks. queries: (query_id, qv) with ids in the vector
+    * id space — a neighbor with vec_id == query_id is the query itself and
+    * is dropped. Returns (query_id, neighbor_id, rnk, sim). roundSim ≥ 0
+    * rounds the cosine to that many decimals BEFORE ranking (with -0.0
+    * canonicalized) so an oracle's float fold ranks identically.
     */
   def search(
       spark: SparkSession,
@@ -107,25 +133,17 @@ object Ivf {
       queries: DataFrame,
       k: Int,
       nProbe: Int,
-      roundSim: Int = -1,
-      excludeSelf: Boolean = true): DataFrame = {
+      roundSim: Int = -1): DataFrame = {
     import spark.implicits._
     val lists = assign(spark, vectors, centroids)
       .join(vectors, "vec_id")
       .select($"cid", $"vec_id".as("neighbor_id"), $"v".as("nv"))
-
-    val wProbe = Window.partitionBy($"query_id").orderBy($"csim".desc, $"cid".asc)
-    val probed = queries.crossJoin(broadcast(centroids))
-      .withColumn("csim", cosineFast(spark, $"qv", $"centroid"))
-      .withColumn("prn", row_number().over(wProbe))
-      .filter($"prn" <= nProbe)
-      .select($"query_id", $"qv", $"cid")
-
     val rawSim = cosineFast(spark, $"qv", $"nv")
     val simCol = if (roundSim >= 0) round(rawSim, roundSim) + lit(0.0) else rawSim
     val wTop = Window.partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id".asc)
-    val joined = probed.join(lists, "cid") // equi-join on the inverted-list id: the ANN win
-    (if (excludeSelf) joined.filter($"query_id" =!= $"neighbor_id") else joined)
+    route(spark, queries, centroids, nProbe)
+      .join(lists, "cid") // equi-join on the inverted-list id: the ANN win
+      .filter($"query_id" =!= $"neighbor_id")
       .withColumn("sim", simCol)
       .withColumn("rnk", row_number().over(wTop))
       .filter($"rnk" <= k)
@@ -135,19 +153,19 @@ object Ivf {
   val TopKList = 8   // declared-query nlist
   val TopKK = 8      // declared-query k
 
-  /** x_ivf_topk — the declared, oracle-gated face of the ANN index: train 8
-    * coarse lists over `embeddings`, then search 5 probe vectors (ids 5..9)
-    * with nProbe = nlist. Exhaustive probe makes the result EXACTLY the
-    * brute-force top-k (so the DuckDB oracle gates the whole train → assign →
-    * inverted-list-join machinery end to end, independent of float-mean
-    * centroid drift); the nProbe < nlist approximate path rides the same code
-    * and is pinned by IvfSpec's recall test.
+  /** x_ivf_topk — the declared, oracle-gated face of the exhaustive probe:
+    * 8 stride-seeded lists over `embeddings`, then 5 probe vectors (ids
+    * 5..9) searched with nProbe = nlist. Exhaustive probe makes the result
+    * EXACTLY the brute-force top-k whatever the centroids are (so no Lloyd
+    * pass is run), and the DuckDB oracle gates the whole assign → route →
+    * inverted-list-join machinery end to end; the nProbe < nlist routes
+    * are gated through [[AnnMulti]] and [[IvfPq]].
     */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
-    val centroids = train(spark, e, TopKList, iters = 1)
+    val centroids = train(spark, e, TopKList, lloyd = 0)
     val probes = e.filter($"vec_id" >= 5 && $"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     search(spark, e, centroids, probes, k = TopKK, nProbe = TopKList, roundSim = 6)

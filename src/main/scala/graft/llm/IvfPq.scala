@@ -5,11 +5,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.io.Tables
-import graft.llm.Similarity.cosineFast
 import graft.util.Ckpt._
 
 /** IVF-PQ — the billion-scale ANN architecture (Jégou et al. 2011, the
-  * layout behind FAISS's workhorse index): an [[Ivf]]-style coarse
+  * layout behind FAISS's workhorse index): the [[Ivf]] coarse
   * quantizer routes each query to a few inverted lists, and candidates
   * inside them are scored WITHOUT touching their original vectors — each
   * candidate is [[Pq.M]] small codes, and the query precomputes an ADC
@@ -18,12 +17,12 @@ import graft.util.Ckpt._
   * 100 TB this is the difference between scanning 256-byte vectors and
   * scanning 4-byte codes with a broadcast LUT.
   *
-  * Deterministic end to end (the [[Semantic]]/[[Pq]] recipe): both
-  * quantizers are stride-seeded (no Lloyd — this module composes the
-  * DECLARED x_pq_assign codes, Pq.subCodebook, so index and query agree
-  * with the standalone assignment query by construction), every cosine and
-  * every LUT cell is 6 dp-rounded before any argmax/argmin, and the final
-  * ranking key is the exact integer micro-ADC.
+  * Deterministic end to end: the coarse quantizer is [[Ivf]]'s with no
+  * Lloyd pass, the PQ codes are the DECLARED x_pq_assign codes
+  * ([[Pq.subCodebook]], so index and query agree with the standalone
+  * assignment query by construction), every cosine and every LUT cell is
+  * 6 dp-rounded before any argmax/argmin, and the final ranking key is the
+  * exact integer micro-ADC.
   *
   * Scale notes: coarse centroids (16 rows), the PQ codebook (M·K rows) and
   * the per-query LUT (probes × M·K rows) all broadcast; candidate
@@ -76,19 +75,9 @@ object IvfPq {
     val ep = e.repartition(spark.sparkContext.defaultParallelism, $"vec_id")
       .ckptDisk()
 
-    // coarse quantizer: stride-seeded centroids, 6dp-rounded cosine argmax
-    val n = ep.count()
-    val stride = math.max(1L, n / nlist)
-    val seeds = ep.filter(pmod($"vec_id", lit(stride)) === 0)
-      .orderBy($"vec_id").limit(nlist)
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val coarse = broadcast(
-      seeds.zipWithIndex.map { case ((_, v), i) => (i.toLong, v) }
-        .toSeq.toDF("ccid", "cv"))
-    val cass = ep.crossJoin(coarse)
-      .withColumn("sim", round(cosineFast(spark, $"v", $"cv"), 6) + lit(0.0))
-      .groupBy($"vec_id")
-      .agg(max_by($"ccid", struct($"sim", -$"ccid")).as("ccid"))
+    // coarse quantizer: stride seeds, no Lloyd pass (the oracle seeds
+    // without one); cell assignment is partition-local on ep
+    val coarse = Ivf.train(spark, ep, nlist, lloyd = 0)
 
     // inverted lists carry ONLY the PQ codes — the point of the layout.
     // Both sides inherit ep's vec_id partitioning (aggregates were
@@ -97,17 +86,11 @@ object IvfPq {
     // PQ sub-codebook built ONCE, shared by code assignment and the ADC
     // LUT below (each build is a count + seed collect on the driver).
     val subCb = Pq.subCodebook(spark, ep)
-    val lists = cass.hint("shuffle_hash")
+    val lists = Ivf.assign(spark, ep, coarse).hint("shuffle_hash")
       .join(Pq.codesOver(spark, ep, Some(subCb)), Seq("vec_id"))
-      .select($"ccid", $"vec_id".as("neighbor_id"), $"c0", $"c1", $"c2", $"c3")
+      .select($"cid", $"vec_id".as("neighbor_id"), $"c0", $"c1", $"c2", $"c3")
 
-    // cell routing: nProbe best cells per query by the same rounded cosine
-    val wCell = Window.partitionBy($"query_id").orderBy($"csim".desc, $"ccid".asc)
-    val pcell = probes.crossJoin(coarse)
-      .withColumn("csim", round(cosineFast(spark, $"qv", $"cv"), 6) + lit(0.0))
-      .withColumn("prn", row_number().over(wCell))
-      .filter($"prn" <= nProbe)
-      .select($"query_id", $"ccid")
+    val pcell = Ivf.route(spark, probes, coarse, nProbe).select($"query_id", $"cid")
 
     // ADC lookup table: per (query, subspace, code) squared distance
     val lut = probes.crossJoin(subCb)
@@ -123,7 +106,7 @@ object IvfPq {
     // pcell is probes×nProbe rows but sits behind a window, so the planner
     // has no size estimate — broadcast explicitly or it sort-merge-joins
     // the inverted lists (shuffling + sorting the whole index)
-    val cand = broadcast(pcell).join(lists, Seq("ccid"))
+    val cand = broadcast(pcell).join(lists, Seq("cid"))
       .filter($"neighbor_id" =!= $"query_id")
       .join(lutM(0, "c0", "d0"), Seq("query_id", "c0"))
       .join(lutM(1, "c1", "d1"), Seq("query_id", "c1"))

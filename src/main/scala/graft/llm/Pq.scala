@@ -12,11 +12,10 @@ import graft.io.Tables
   * [[M]] small codes (4 bytes) — the compressed representation an IVF-PQ
   * index stores and scans. This module implements the ASSIGNMENT pass
   * (vector → PQ code + reconstruction error); [[Ivf]] owns the coarse
-  * index, [[Semantic]] the stride-seeding rationale.
+  * index and the stride seeds.
   *
-  * Deterministic end to end (same recipe as [[Semantic]]): sub-codebooks
-  * are stride-seeded slices — no Lloyd iterations, whose float means are
-  * order-dependent — and every distance is rounded to 6 dp BEFORE the
+  * Deterministic end to end: sub-codebooks are slices of [[Ivf.seeds]]
+  * with no Lloyd pass, and every distance is rounded to 6 dp BEFORE the
   * argmin, ties broken by lowest code, so both engines assign identically.
   * The reconstruction error sums M=4 rounded doubles in FIXED projection
   * order (never an aggregation order).
@@ -43,13 +42,8 @@ object Pq {
     */
   def subCodebook(spark: SparkSession, e: DataFrame): DataFrame = {
     import spark.implicits._
-    val n = e.count()
-    val stride = math.max(1L, n / K)
-    val seeds = e.filter(pmod($"vec_id", lit(stride)) === 0)
-      .orderBy($"vec_id").limit(K)
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
     broadcast(
-      seeds.zipWithIndex.flatMap { case ((_, v), i) =>
+      Ivf.seeds(spark, e, K).zipWithIndex.flatMap { case (v, i) =>
         (0 until M).map(m => (m.toLong, i.toLong, v.slice(m * SubDim, (m + 1) * SubDim)))
       }.toSeq.toDF("m", "cid", "c"))
   }

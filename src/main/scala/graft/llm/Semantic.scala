@@ -16,20 +16,18 @@ import graft.llm.Similarity.cosineFast
   * operate on surface text) can see.
   *
   * Deterministic end to end, so the DuckDB gate covers the FULL pipeline —
-  * centroids are stride-seeded vectors (no Lloyd iterations: float centroid
-  * means are order-dependent and would never hash-match; [[Ivf.train]] owns
-  * the iterated variant, recall-pinned in its spec), and every cosine is
-  * rounded to 6 dp (with -0.0 canonicalized) BEFORE both the argmax
-  * assignment and the threshold, so both engines rank and cut identically.
+  * the clusters are [[Ivf]]'s cells over its stride seeds with no Lloyd
+  * pass, and every cosine is rounded to 6 dp (with -0.0 canonicalized)
+  * BEFORE both the argmax assignment and the threshold, so both engines
+  * rank and cut identically.
   *
   * Scale notes: the centroid frame is nlist rows — broadcast; assignment is
-  * ONE map-side pass with the argmax as a hash aggregate (max_by reduces
-  * map-side; a row_number window would shuffle all N×nlist scored rows —
-  * [[Ivf.assign]]'s measured trap). The pair join is an equi-join on cid,
-  * so candidate volume is Σ cluster², the paper's own cost model — at
-  * 100 TB, scale nlist ∝ N to keep clusters bounded (√N clusters of √N) and
-  * the shuffle carries only (cid, id, vector). No corpus-wide window, no
-  * cross join past the broadcast centroids.
+  * ONE map-side pass with the argmax as a hash aggregate ([[Ivf.assign]]).
+  * The pair join is an equi-join on cid, so candidate volume is
+  * Σ cluster², the paper's own cost model — at 100 TB, scale nlist ∝ N to
+  * keep clusters bounded (√N clusters of √N) and the shuffle carries only
+  * (cid, id, vector). No corpus-wide window, no cross join past the
+  * broadcast centroids.
   */
 object Semantic {
 
@@ -71,22 +69,10 @@ object Semantic {
   def semanticDedupOver(spark: SparkSession, e: DataFrame,
       nlist: Int = NList, tau: Double = Tau): DataFrame = {
     import spark.implicits._
-    // Stride seeding, collected to the driver (nlist rows — the k-means
-    // centroid shape): same no-global-sort seeding as Ivf.train. cid is the
-    // rank of the seed's vec_id, pinned on both engines.
-    val n = e.count()
-    val stride = math.max(1L, n / nlist)
-    val seeds = e.filter(pmod($"vec_id", lit(stride)) === 0)
-      .orderBy($"vec_id").limit(nlist)
-      .as[(Long, Seq[Double])].collect().sortBy(_._1)
-    val centroids = broadcast(
-      seeds.zipWithIndex.map { case ((_, v), i) => (i, v) }
-        .toSeq.toDF("cid", "centroid"))
-    val assigned = e.crossJoin(centroids)
-      .withColumn("sim", round(cosineFast(spark, $"v", $"centroid"), 6) + lit(0.0))
-      .groupBy($"vec_id")
-      .agg(max_by($"cid", struct($"sim", -$"cid")).as("cid"))
-      .join(e, "vec_id")
+    // Stride seeds, no Lloyd pass (the oracle seeds without one); cid is
+    // the rank of the seed's vec_id, pinned on both engines.
+    val centroids = Ivf.train(spark, e, nlist, lloyd = 0)
+    val assigned = Ivf.assign(spark, e, centroids).join(e, "vec_id")
     val a = assigned.select($"cid", $"vec_id".as("ka"), $"v".as("va"))
     val b = assigned.select($"cid", $"vec_id".as("kb"), $"v".as("vb"))
     a.join(b, Seq("cid"))

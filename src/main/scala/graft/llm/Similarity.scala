@@ -575,6 +575,41 @@ object Similarity {
   val RecallProbes = 20L
   val RecallK = 10
 
+  /** Integer micro-cosine round(cos·10⁶): the exact ranking key of the
+    * recall evals and the ANN top-k queries — monotone in the 6 dp
+    * rounding every similarity query here pins.
+    */
+  def microSim(spark: SparkSession, a: Column, b: Column): Column =
+    round(cosineFast(spark, a, b) * 1000000L).cast("long")
+
+  /** Per query_id, the `k` rows of `scored` (query_id, neighbor_id, s: long)
+    * with the highest s, ties to the lowest neighbor_id, through the native
+    * bounded `top_k_rows` aggregate — the shuffle carries O(queries·k)
+    * rows, never a window over every scored pair. Returns (query_id,
+    * neighbor_id, rnk, s), rnk from 1.
+    */
+  def topNeighbors(scored: DataFrame, k: Int): DataFrame = {
+    GraftFunctions.register(scored.sparkSession)
+    scored.groupBy(col("query_id"))
+      .agg(call_function("top_k_rows", col("s"), col("neighbor_id"), lit(k)).as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("p", "x")))
+      // top_k_rows returns best-first (ord DESC, ties tag ASC): position IS rank
+      .select(col("query_id"), col("x.tag").as("neighbor_id"),
+        (col("p") + 1).cast("long").as("rnk"), col("x.ord").as("s"))
+  }
+
+  /** The recall evals' brute-force truth: per probe (query_id, qv), the ids
+    * of its [[RecallK]] nearest vectors of `e` (vec_id, v) by micro-cosine,
+    * the probe itself excluded — (query_id, neighbor_id).
+    */
+  def recallTruth(spark: SparkSession, probes: DataFrame, e: DataFrame): DataFrame =
+    topNeighbors(probes
+      .crossJoin(e.select(col("vec_id").as("neighbor_id"), col("v").as("nv")))
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        microSim(spark, col("qv"), col("nv")).as("s")), RecallK)
+      .select(col("query_id"), col("neighbor_id"))
+
   /** x_ann_recall — the eval harness as a query: recall@[[RecallK]] of the
     * signbit-bucketed ANN route ([[simBucketed]]'s buckets) against exact
     * brute force, per probe. THE number an ANN index is judged by — run it
@@ -603,20 +638,11 @@ object Similarity {
       .withColumn("bucket", signBucket($"v", 8))
     val probes = broadcast(e.filter($"vec_id" < RecallProbes)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"bucket".as("qbucket")))
-    def microSim(a: Column, b: Column): Column =
-      round(cosineFast(spark, a, b) * 1000000L).cast("long")
-    def topIds(scored: DataFrame): DataFrame = scored
-      .groupBy($"query_id")
-      .agg(call_function("top_k_rows", $"s", $"neighbor_id", lit(RecallK)).as("top"))
-      .select($"query_id", explode($"top").as("x"))
-      .select($"query_id", $"x.tag".as("neighbor_id"))
-    val truth = topIds(probes.crossJoin(
-        e.select($"vec_id".as("neighbor_id"), $"v".as("nv")))
-      .filter($"query_id" =!= $"neighbor_id")
-      .select($"query_id", $"neighbor_id", microSim($"qv", $"nv").as("s")))
-    val approx = topIds(e.select($"vec_id".as("neighbor_id"), $"v".as("nv"), $"bucket")
+    val truth = recallTruth(spark, probes, e)
+    val approx = topNeighbors(e.select($"vec_id".as("neighbor_id"), $"v".as("nv"), $"bucket")
       .join(probes, $"bucket" === $"qbucket" && $"neighbor_id" =!= $"query_id")
-      .select($"query_id", $"neighbor_id", microSim($"qv", $"nv").as("s")))
+      .select($"query_id", $"neighbor_id", microSim(spark, $"qv", $"nv").as("s")), RecallK)
+      .select($"query_id", $"neighbor_id")
     val tc = truth.groupBy($"query_id").agg(count(lit(1)).as("n_true"))
     val ac = approx.groupBy($"query_id").agg(count(lit(1)).as("n_approx"))
     // every frame below is ≤ probes·k rows, but they sit behind aggregates

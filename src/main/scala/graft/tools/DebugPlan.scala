@@ -1,13 +1,19 @@
 package graft.tools
 
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
 import graft.SparkEntry
 import graft.util.{Harness, TaskStats}
 
 /** Query inspector: print a declared query's formatted compile-time plan,
   * then run it N times (noop sink, all columns computed) and print each
   * run's wall with a per-stage task table, plus the AQE-FINAL executed plan
-  * of the first and last run — the runtime plan shapes the compile-time
-  * view can't show.
+  * of the first and last run's write — the runtime plan shapes the
+  * compile-time view can't show.
   *
   * Usage: runMain graft.tools.DebugPlan <queryName> [sfDir] [runs]
   */
@@ -26,12 +32,22 @@ object DebugPlan {
     val runs = if (args.length > 2) args(2).toInt else 3
     val spark = Harness.session()
     val stats = TaskStats.attach(spark)
+    // The noop write runs its own QueryExecution (`df`'s adaptive plan
+    // never executes), so the plan that ran is the write's, delivered
+    // through the listener bus.
+    val written = new AtomicReference[QueryExecution]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        if (qe.logical.isInstanceOf[V2WriteCommand]) written.set(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     val fn = SparkEntry.queries(name)
     fn(spark, sfDir).explain("formatted")
     (1 to runs).foreach { i =>
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       stats.reset()
+      written.set(null)
       // Frame CONSTRUCTION is timed separately: some queries run real
       // driver-side jobs while building the frame (IVF centroid collects,
       // oovRate's vocab top-k) — Bench times fn() inside its window, so a
@@ -45,6 +61,8 @@ object DebugPlan {
       df.write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
       stats.settled()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (written.get == null && System.nanoTime() < deadline) Thread.sleep(10)
       val buildNote = if (build >= 0.1) f" (+ build $build%.3f s)" else ""
       println(f"run $i: $wall%.3f s$buildNote  maxtask=${stats.maxTaskMs} ms")
       stats.stages.foreach { case (sid, s) =>
@@ -52,8 +70,8 @@ object DebugPlan {
           f"total=${s.totalMs}%7d ms")
       }
       if (i == 1 || i == runs) {
-        println(df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==").head)
+        println(Option(written.get).fold("(the write's plan never reached the listener)")(
+          _.executedPlan.toString.split("== Initial Plan ==").head))
       }
     }
     spark.stop()

@@ -102,8 +102,23 @@ object Stress {
     }
     println(s"[stress] heavy hitters: sketch=${viaSketch.size} plain=${viaPlain.size}")
     val ok = viaSketch == viaPlain && viaSketch.size == 10
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
+  }
+
+  /** (vec_id, v): `n` 64-dim vectors in [-0.5, 0.5) from murmur3 of the
+    * id, with an EXACT twin planted at every id ≡ 1 (mod 100) — it copies
+    * id−1's coordinates. Checkpointed, so generation is excluded from the
+    * timed phases. The corpus of the `sem`, `ivfpq` and `multiprobe`
+    * scenarios.
+    */
+  private def twinVectors(spark: SparkSession, n: Long): DataFrame = {
+    import spark.implicits._
+    val base = when(pmod($"id", lit(100)) === 1, $"id" - 1).otherwise($"id")
+    spark.range(n).select($"id".as("vec_id"),
+        transform(sequence(lit(0), lit(63)), j =>
+          (pmod(hash(base * 31 + j, lit(11)), lit(1000)).cast("double") / 1000.0)
+            - 0.5).as("v"))
+      .ckptDisk()
   }
 
   /** Semantic-dedup stress: `n` 64-dim vectors, 1% planted identical pairs
@@ -126,12 +141,7 @@ object Stress {
     */
   def runSemantic(spark: SparkSession, n: Long): Boolean = {
     import spark.implicits._
-    val base = when(pmod($"id", lit(100)) === 1, $"id" - 1).otherwise($"id")
-    val vecs = spark.range(n).select($"id".as("vec_id"),
-        transform(sequence(lit(0), lit(63)), j =>
-          (pmod(hash(base * 31 + j, lit(11)), lit(1000)).cast("double") / 1000.0)
-            - 0.5).as("v"))
-      .ckptDisk()
+    val vecs = twinVectors(spark, n)
     val nlist = 1024
     val losers = timed(s"semantic dedup (nlist=$nlist, tau=0.6) over $n vectors") {
       Semantic.semanticDedupOver(spark, vecs, nlist = nlist, tau = 0.6)
@@ -145,7 +155,6 @@ object Stress {
     // all planted recovered; noise (4.8σ exceedances + hash artifacts)
     // bounded well below the planted signal
     val ok = missed.isEmpty && noise.size * 10 < planted.size
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -161,12 +170,7 @@ object Stress {
     */
   def runIvfPq(spark: SparkSession, n: Long): Boolean = {
     import spark.implicits._
-    val base = when(pmod($"id", lit(100)) === 1, $"id" - 1).otherwise($"id")
-    val vecs = spark.range(n).select($"id".as("vec_id"),
-        transform(sequence(lit(0), lit(63)), j =>
-          (pmod(hash(base * 31 + j, lit(11)), lit(1000)).cast("double") / 1000.0)
-            - 0.5).as("v"))
-      .ckptDisk()
+    val vecs = twinVectors(spark, n)
     val probes = vecs.filter(pmod($"vec_id", lit(100)) === 1)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     val nlist = math.max(16, math.sqrt(n.toDouble).toInt)
@@ -192,7 +196,6 @@ object Stress {
     // ids ≡ 1 (mod 100) below n number ceil((n-1)/100) — equal to n/100
     // only when 100 divides n, so the literal n/100 spuriously failed odd n.
     val ok = bad == 0 && nProbes == (n + 98) / 100
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -210,12 +213,7 @@ object Stress {
     */
   def runMultiprobe(spark: SparkSession, n: Long): Boolean = {
     import spark.implicits._
-    val base = when(pmod($"id", lit(100)) === 1, $"id" - 1).otherwise($"id")
-    val vecs = spark.range(n).select($"id".as("vec_id"),
-        transform(sequence(lit(0), lit(63)), j =>
-          (pmod(hash(base * 31 + j, lit(11)), lit(1000)).cast("double") / 1000.0)
-            - 0.5).as("v"))
-      .ckptDisk()
+    val vecs = twinVectors(spark, n)
     val probes = vecs.filter(pmod($"vec_id", lit(100)) === 1)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     val nlist = math.max(16, math.sqrt(n.toDouble).toInt)
@@ -232,7 +230,6 @@ object Stress {
     // ids ≡ 1 (mod 100) below n number ceil((n-1)/100) — equal to n/100
     // only when 100 divides n, so the literal n/100 spuriously failed odd n.
     val ok = bad == 0 && nProbes == (n + 98) / 100
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -259,7 +256,6 @@ object Stress {
     println(s"[stress] pairs=${pairs.length} intra=${intra.length} " +
       s"expected-intra=$expected cross=${pairs.length - intra.length}")
     val ok = intra.length == expected
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -402,8 +398,18 @@ object Stress {
       f"wall A $tA%.1f s, B $tB%.1f s")
     val ok = rows == startsExp * RandWalk.Walks && nullHops == 0 &&
       badHops == 0 && cA.compareTo(cB) == 0
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
+  }
+
+  /** (src, dst): the directed edges of disjoint 4-cliques over nodes
+    * [0, n) — each node to its 3 siblings, by a map-side explode.
+    */
+  private def cliqueEdges(spark: SparkSession, n: Long): DataFrame = {
+    import spark.implicits._
+    spark.range(n)
+      .select($"id".as("src"), explode(expr("sequence(0, 3)")).as("j"))
+      .select($"src", (($"src" - ($"src" % 4)) + $"j").as("dst"))
+      .where($"src" =!= $"dst")
   }
 
   def runGraph(spark: SparkSession, n: Long): Boolean = {
@@ -411,11 +417,7 @@ object Stress {
     require(n % 4 == 0, "clique-node count must be a multiple of 4")
     val hubBase = n
     val leafBase = n + GraphHubs
-    // directed clique edges: each node to its 3 siblings (map-side explode)
-    val clique = spark.range(n)
-      .select($"id".as("src"), explode(expr("sequence(0, 3)")).as("j"))
-      .select($"src", (($"src" - ($"src" % 4)) + $"j").as("dst"))
-      .where($"src" =!= $"dst")
+    val clique = cliqueEdges(spark, n)
     // star edges: hub h ↔ its dedicated leaves, both directions
     val hubLeaf = spark.range(GraphHubs * GraphLeaves)
       .select((lit(hubBase) + ($"id" / GraphLeaves).cast("long")).as("hub"),
@@ -474,7 +476,6 @@ object Stress {
       s"(expect {4 -> ${n / 4}, ${GraphLeaves + 1} -> $GraphHubs})")
 
     val ok = symOk && hubsOk && massOk && compOk
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -496,10 +497,7 @@ object Stress {
     import spark.implicits._
     val limit = graft.analytics.PageRank.BroadcastNodeLimit
     def cliqueGraph(m: Long): DataFrame =
-      spark.range(m)
-        .select($"id".as("src"), explode(expr("sequence(0, 3)")).as("j"))
-        .select($"src", (($"src" - ($"src" % 4)) + $"j").as("dst"))
-        .where($"src" =!= $"dst")
+      cliqueEdges(spark, m)
         .repartition(spark.sparkContext.defaultParallelism, $"src")
         .ckptDisk()
     // ±4% around the gate, multiples of 4 (whole cliques)
@@ -538,7 +536,6 @@ object Stress {
       s"distinct clique ranks below/above=$symBelow/$symAbove")
     val ok = diff == 0 && symBelow == 1 && symAbove == 1 &&
       nAboveRows == nAbove && perNodeAbove < perNodeHint * 3
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -565,17 +562,14 @@ object Stress {
     */
   def runCkptLayout(spark: SparkSession, n: Long): Boolean = {
     import spark.implicits._
-    def cliqueEdges(): DataFrame =
-      spark.range(n / 4 * 4)
-        .select($"id".as("src"), explode(expr("sequence(0, 3)")).as("j"))
-        .select($"src", (($"src" - ($"src" % 4)) + $"j").as("dst"))
-        .where($"src" =!= $"dst")
+    def partitioned(): DataFrame =
+      cliqueEdges(spark, n / 4 * 4)
         .repartition(spark.sparkContext.defaultParallelism, $"src")
     val eRepaired = timed("edge build + repaired ckptDisk") {
-      cliqueEdges().ckptDisk()
+      partitioned().ckptDisk()
     }
     val eRaw = timed("edge build + raw localCheckpoint") {
-      cliqueEdges().localCheckpoint(true,
+      partitioned().localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.DISK_ONLY)
     }
     val pRep = eRepaired.queryExecution.executedPlan.outputPartitioning
@@ -610,7 +604,6 @@ object Stress {
     val layoutOk = pRep.toString.startsWith("hashpartitioning(src") &&
       pRaw.toString.startsWith("UnknownPartitioning")
     val ok = layoutOk && exRep < exRaw && diff == 0 && sym == 1
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -690,7 +683,6 @@ object Stress {
       s"all-NULL-value user: ${row(U + 1)}")
 
     val ok = drift == 0 && rows == U + 2 && crossOk && nullSumOk
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -792,7 +784,6 @@ object Stress {
         stats.rewrittenDays.toSet == wantRewrite &&
         keepUntouched && cohortLeft == 0L && survivors == wantSurvivors &&
         again.droppedDays.isEmpty && again.rewrittenDays.isEmpty
-      println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
       ok
     } finally {
       walkPaths(root).sorted(Ordering[String].on[java.nio.file.Path](_.toString).reverse)
@@ -941,7 +932,6 @@ object Stress {
         maxPlain >= hotRows &&
         maxSalt <= maxPlain / 3 &&
         aggDiff == 0
-      println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
       ok
     } finally {
       spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -1015,7 +1005,6 @@ object Stress {
     println(f"[stress] per-Mrow cost: native ${tNative / n * 1e6}%.2f s, " +
       f"composed ${tComposed / n * 1e6}%.2f s")
     val ok = badNative == 0 && badComposed == 0 && diff == 0 && rows == n
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -1213,7 +1202,6 @@ object Stress {
       mergedRows == n && mergeBad == 0 && updWinners == expUpd &&
       maxBot >= B && capDrift == 0 &&
       maxCap <= capBound && maxCap <= B / 2
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -1381,7 +1369,6 @@ object Stress {
       val ok = badSess == 0 && statRows == users * S && badStats == 0 &&
         botOk && othersBad == 0 && maxBot >= B &&
         capDrift == 0 && maxCap <= capBound && maxCap <= B / 2
-      println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
       ok
     } finally spark.sparkContext.removeSparkListener(taskStats)
   }
@@ -1500,7 +1487,6 @@ object Stress {
         verCross == 0 &&
         verInGroup >= laters.size * 9 / 10 &&
         stateRows == buckets
-      println(s"[stress] structure recovered: ${if (pass) "YES" else "NO"}")
       pass
     } finally q.stop()
     ok
@@ -1594,7 +1580,6 @@ object Stress {
 
     val ok = aucRowA == expAucA && ksRowA == expKsA &&
       aucRowB == expAucB && ksRowB == expKsB && calRows == expCal
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -1657,7 +1642,6 @@ object Stress {
     println(s"[stress] repartition drift rows=$drift (expect 0)")
 
     val ok = total == K && quotaBad == 0 && drift == 0
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -1788,7 +1772,6 @@ object Stress {
     val ok = nClustered * 100 >= n * 95 &&
       nClusters * 10 >= expectedGroups * 9 && nClusters * 10 <= expectedGroups * 11 &&
       nVerified > 0 && intra * 100 >= nVerified * 99
-    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     ok
   }
 
@@ -1819,6 +1802,7 @@ object Stress {
     }
     val spark = Harness.session()
     val ok = try run(spark, n) finally spark.stop()
+    println(s"[stress] structure recovered: ${if (ok) "YES" else "NO"}")
     if (!ok) sys.exit(1)
   }
 }

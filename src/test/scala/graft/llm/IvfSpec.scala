@@ -19,7 +19,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("train produces nlist centroids, each dominated by its cluster axis") {
-    val cents = Ivf.train(spark, clustered, nlist = 3)
+    val cents = Ivf.train(spark, clustered, nlist = 3, lloyd = AnnMulti.LloydIters)
       .as[(Int, Seq[Double])].collect().sortBy(_._1)
     assert(cents.length == 3)
     // centroid 0 seeded from vec 0 (cluster 0) must stay strongest on axis 0
@@ -29,7 +29,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("assign maps every vector to exactly one list; clusters stay together") {
-    val cents = Ivf.train(spark, clustered, nlist = 3)
+    val cents = Ivf.train(spark, clustered, nlist = 3, lloyd = AnnMulti.LloydIters)
     val a = Ivf.assign(spark, clustered, cents)
       .as[(Long, Int)].collect().toMap
     assert(a.size == 24)
@@ -49,7 +49,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("exhaustive probe (nProbe = nlist) is exactly brute-force top-k") {
-    val cents = Ivf.train(spark, clustered, nlist = 3)
+    val cents = Ivf.train(spark, clustered, nlist = 3, lloyd = AnnMulti.LloydIters)
     val queries = clustered.filter($"vec_id" === 5L)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     val ivf = Ivf.search(spark, clustered, cents, queries, k = 5, nProbe = 3)
@@ -66,7 +66,7 @@ class IvfSpec extends SparkSpec {
   }
 
   test("search with nProbe=1 achieves perfect recall@3 on separated clusters") {
-    val cents = Ivf.train(spark, clustered, nlist = 3)
+    val cents = Ivf.train(spark, clustered, nlist = 3, lloyd = AnnMulti.LloydIters)
     val queries = clustered.filter($"vec_id" === 0L)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
     val got = Ivf.search(spark, clustered, cents, queries, k = 3, nProbe = 1)

@@ -16,6 +16,13 @@ class StressSmokeSpec extends SparkSpec {
     assert(Stress.runHeavyHitters(spark, 5000L))
   }
 
+  test("sem scenario drops every planted twin with noise under a tenth at smoke size") {
+    // 2000 is the smallest size that outnumbers the scenario's 1024 cells,
+    // so vectors share cells and the noise bound is live (below it every
+    // vector is its own seed)
+    assert(Stress.runSemantic(spark, 2000L))
+  }
+
   test("ivfpq scenario holds the reconstruction-floor invariant at smoke size") {
     assert(Stress.runIvfPq(spark, 4000L))
   }
