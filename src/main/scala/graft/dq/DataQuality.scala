@@ -1,10 +1,10 @@
 package graft.dq
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, TimestampNTZType, TimestampType}
 
-import graft.io.Tables
+import graft.io.{Observed, Tables}
 
 /** Declarative data-quality checks — the reference's check language
   * (ref /root/reference/operators/data_quality_operator.py:77-129) re-expressed
@@ -22,10 +22,12 @@ import graft.io.Tables
   * Scale notes: `required_columns`, `source_exists`, unknown types and
   * checks on absent or ill-typed columns need no scan (zero jobs). Every
   * other check of a suite — `min_row_count`, `null_ratio`, `value_range`,
-  * `freshness` and the first `unique_column` — compiles into ONE aggregate
-  * action over one pruned scan: a global `agg` of decomposable partials, or,
-  * with a unique check, the same partials per key (one shuffle on that
-  * column) merged by an outer aggregate that also counts duplicate keys. A
+  * `freshness` and the first `unique_column` — compiles into ONE observed
+  * pass over one pruned scan: decomposable partials observed on the scan
+  * itself (one Spark job), or, with a unique check, the same partials per
+  * key (one shuffle on that column) observed on the per-key frame together
+  * with the duplicate-key count (two jobs). The observed metrics merge as
+  * each task finishes, so no final single-partition stage runs. A
   * suite therefore costs one pass at any size, not one pass per check;
   * only `fk_integrity` (an anti-join) and any further `unique_column` (a
   * second key) run queries of their own.
@@ -172,27 +174,33 @@ object DataQuality {
     case _ => false
   }
 
-  /** The one aggregate behind every fused check. Without a grouping key it
-    * is a plain global `agg`; with one (the unique check's column) the
-    * partials are computed per key and merged by an outer aggregate that
-    * also counts the keys seen more than once — GROUP BY keeps one NULL
-    * group, so repeated NULLs are a duplicate key.
+  /** The one aggregate behind every fused check, run as ONE `noop` write
+    * whose metrics are an [[Observation]]: Spark merges each task's
+    * metrics as it finishes, so no single-partition merge stage runs.
+    * Without a grouping key the partials observe the scan itself, projected
+    * away behind them (a bare observed frame written to `noop` would read
+    * every column). With one (the unique check's column) the partials are
+    * computed per key, and the observed metrics merge them and count the
+    * keys seen more than once — GROUP BY keeps one NULL group, so repeated
+    * NULLs are a duplicate key.
     */
   private def aggregate(df: DataFrame, parts: Seq[Partial], groupKey: Option[String]): Row = {
     val named = parts.map(p => p.agg.as(p.key))
-    groupKey match {
-      case None => df.agg(named.head, named.tail: _*).head()
+    val (frame, metrics) = groupKey match {
+      case None => (df, named)
       case Some(k) =>
-        val groups = df.groupBy(column(k).as("__dq_key"))
-          .agg(count(lit(1)).as("__dq_cnt"), named: _*)
-        groups.agg(count_if(col("__dq_cnt") > 1).as(DupKeys),
-          parts.map(p => p.merge(column(p.key)).as(p.key)): _*).head()
+        (df.groupBy(column(k).as("__dq_key")).agg(count(lit(1)).as("__dq_cnt"), named: _*),
+          count_if(col("__dq_cnt") > 1).as(DupKeys) +: parts.map(p => p.merge(column(p.key)).as(p.key)))
     }
+    val obs = Observation()
+    frame.observe(obs, metrics.head, metrics.tail: _*).select(lit(1))
+      .write.format("noop").mode("overwrite").save()
+    Observed.metrics(obs)
   }
 
   /** Compile the checks: every scan-needing check (`min_row_count`,
     * `null_ratio`, `value_range`, `freshness`, and the first `unique_column`
-    * on a present column) becomes part of ONE aggregate action, run at most
+    * on a present column) becomes part of ONE observed pass, run at most
     * once; `fk_integrity` and any further `unique_column` keep their own
     * queries. Results come back in spec order, nothing short-circuits, and
     * `withRows` adds the row count to the same aggregate.

@@ -36,30 +36,36 @@ object Ingest {
   }
 
   /** Write a raw-zone date partition, overwrite-on-conflict — the reference's
-    * `load_string(replace=True)` + keyed-path semantics (api_to_s3.py:68-73),
-    * expressed as a partitioned parquet overwrite so partition pruning works
-    * downstream.
+    * `load_string(replace=True)` + keyed-path semantics (api_to_s3.py:68-73):
+    * the frame, minus any ingested `ds` column, overwrites `root/ds=<ds>`
+    * directly, so the layout is the partitioned one that pruning reads
+    * downstream and the overwrite replaces that date alone. A zero-row
+    * frame still writes one empty file; [[dropRawZone]] removes the date
+    * when a run finds it empty.
     */
-  def writeRawZone(df: DataFrame, root: String, ds: String): Unit = {
-    // Dynamic overwrite replaces only the partitions that receive rows, so
-    // an empty rerun would leave the earlier run's ds= directory in place.
-    val partition = new Path(s"$root/ds=$ds")
-    partition.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).delete(partition, true)
-    Writers.writeParquet(df.withColumn("ds", lit(ds)), root, Seq("ds"))
+  def writeRawZone(df: DataFrame, root: String, ds: String): Unit =
+    df.drop("ds").write.mode("overwrite").parquet(partition(root, ds))
+
+  /** Delete one raw-zone date partition, if it exists. */
+  def dropRawZone(spark: SparkSession, root: String, ds: String): Unit = {
+    val p = new Path(partition(root, ds))
+    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
   }
+
+  private def partition(root: String, ds: String) = s"$root/ds=$ds"
 
   /** Read back one raw-zone date partition written by [[writeRawZone]]:
     * its directory alone, with the schema the frame was written with (any
     * ingested `ds` column is the partition key, so it is dropped) — no
     * schema-inference job and no listing of the other dates' partitions.
-    * A zero-row write creates no partition directory; that reads as an
-    * empty frame of the same schema, so checks fail as verdicts instead of
-    * the read throwing.
+    * A date with no partition directory (never written, or dropped as
+    * empty) reads as an empty frame of the same schema, so checks fail as
+    * verdicts instead of the read throwing.
     */
   def readRawZone(spark: SparkSession, root: String, ds: String, written: StructType): DataFrame = {
     val schema = StructType(written.filterNot(_.name.equalsIgnoreCase("ds")))
-    val partition = s"$root/ds=$ds"
-    if (graft.dq.DataQuality.pathExists(spark, partition)) spark.read.schema(schema).parquet(partition)
+    val dir = partition(root, ds)
+    if (graft.dq.DataQuality.pathExists(spark, dir)) spark.read.schema(schema).parquet(dir)
     else spark.createDataFrame(java.util.List.of[Row](), schema)
   }
 

@@ -1,11 +1,10 @@
 package graft.io
 
-import scala.collection.mutable
+import scala.concurrent.{Await, TimeoutException}
+import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.{DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Pipeline observability via `Dataset.observe`: named metrics computed
   * DURING a job's existing pass over the data — no second scan, no extra
@@ -16,7 +15,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *
   *   val (df, m) = Observed.rowStats(frame, "ingest")
   *   df.write.parquet(out)
-  *   val rows = m("n_rows")   // filled by the listener after the action
+  *   val rows = m("n_rows")   // filled once the action has finished
   */
 object Observed {
 
@@ -26,49 +25,26 @@ object Observed {
     */
   def rowStats(df: DataFrame, name: String, nullCols: Seq[String] = Nil)
       : (DataFrame, MetricsHandle) = {
-    val metrics = count(lit(1)).as("n_rows") +:
+    val exprs = count(lit(1)).as("n_rows") +:
       nullCols.map(c => sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"n_null_$c"))
-    val handle = new MetricsHandle(name, df.sparkSession)
-    (df.observe(name, metrics.head, metrics.tail: _*), handle)
+    val obs = Observation(name)
+    (df.observe(obs, exprs.head, exprs.tail: _*), new MetricsHandle(obs))
   }
 
-  /** Collects observed-metrics rows by observation name as actions finish.
-    * Reading a metric unregisters the listener; if the action FAILS and no
-    * metric will ever be read, call [[close]] (or use try/finally) so the
-    * listener does not stay registered on the shared session for life.
+  /** The metrics row of `obs`, which Spark fills when an action on the
+    * observed frame succeeds; waits up to `timeoutMs` for it. Throws if it
+    * never arrives — a missing metric must not read as zero.
     */
-  final class MetricsHandle(name: String, spark: org.apache.spark.sql.SparkSession)
-      extends AutoCloseable {
-    private val seen = mutable.Map.empty[String, Any]
-    private val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.observedMetrics.get(name).foreach { row: Row =>
-          row.schema.fieldNames.zip(row.toSeq).foreach { case (k, v) =>
-            seen.synchronized { seen(k) = v }
-          }
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-
-    /** Metric value (listener delivery is asynchronous post-action; waits
-      * briefly). Throws if the metric never arrives — a missing metric must
-      * not read as zero.
-      */
-    def apply(metric: String, timeoutMs: Long = 10000): Any = {
-      val deadline = System.currentTimeMillis() + timeoutMs
-      try {
-        while (System.currentTimeMillis() < deadline) {
-          seen.synchronized { seen.get(metric) } match {
-            case Some(v) => return v
-            case None => Thread.sleep(50)
-          }
-        }
-        throw new IllegalStateException(
-          s"observed metric '$metric' for '$name' not delivered within ${timeoutMs}ms — did an action run?")
-      } finally close()
+  def metrics(obs: Observation, timeoutMs: Long = 10000): Row =
+    try Await.result(obs.future, timeoutMs.millis)
+    catch {
+      case _: TimeoutException => throw new IllegalStateException(
+        s"observed metrics '${obs.name}' not delivered within ${timeoutMs}ms — did an action run?")
     }
 
-    override def close(): Unit = spark.listenerManager.unregister(listener)
+  /** One observation's metrics, read by name. */
+  final class MetricsHandle(obs: Observation) {
+    def apply(metric: String, timeoutMs: Long = 10000): Any =
+      metrics(obs, timeoutMs).getAs[Any](metric)
   }
 }

@@ -4,9 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Batch sink/source surface beyond the parquet tables: ORC, CSV, and
-  * JSON-lines, all with the same partitioned-dynamic-overwrite discipline as
-  * `Ingest.writeRawZone` so re-running a partition replaces it instead of
-  * appending duplicates.
+  * JSON-lines, all partitioned overwrites in dynamic mode, so re-running a
+  * partition replaces it instead of appending duplicates.
   *
   * Scale notes: every writer takes explicit partition columns — at 100 TB an
   * unpartitioned sink is unprunable for every downstream reader. CSV/JSON

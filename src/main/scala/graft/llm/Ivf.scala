@@ -36,12 +36,13 @@ object Ivf {
     * when ids are sparse; none on an empty frame. A distributed top-k
     * (TakeOrderedAndProject), never a global sort: the round-1
     * `Window.orderBy(vec_id)` seeding forced every vector through one task.
-    * Two actions: the row count and the seed collect.
+    * Two actions: the row count and the seed collect; one when the caller
+    * passes `rows`, the row count of `e` it already has.
     */
-  def seeds(spark: SparkSession, e: DataFrame, k: Int): Seq[Seq[Double]] = {
+  def seeds(spark: SparkSession, e: DataFrame, k: Int, rows: Option[Long] = None): Seq[Seq[Double]] = {
     import spark.implicits._
     require(k > 0, s"seed count must be positive, got $k")
-    val stride = math.max(1L, e.count() / k)
+    val stride = math.max(1L, rows.getOrElse(e.count()) / k)
     e.filter(pmod($"vec_id", lit(stride)) === 0)
       .orderBy($"vec_id").limit(k)
       .select($"vec_id", $"v")
@@ -58,11 +59,13 @@ object Ivf {
     * order-independent — a float mean's partial sums are neither) and the
     * component is the single division `Σ/(10⁶·n)` of two exactly
     * representable doubles. A cell that loses all members keeps its
-    * previous centroid.
+    * previous centroid. `rows` is [[seeds]]'s: the row count of `e`, when
+    * the caller already has it.
     */
-  def train(spark: SparkSession, e: DataFrame, nlist: Int, lloyd: Int): DataFrame = {
+  def train(spark: SparkSession, e: DataFrame, nlist: Int, lloyd: Int,
+      rows: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    var cent = seeds(spark, e, nlist).zipWithIndex.map { case (v, i) => (i, v) }
+    var cent = seeds(spark, e, nlist, rows).zipWithIndex.map { case (v, i) => (i, v) }
     (1 to lloyd).foreach { _ =>
       val refined = assign(spark, e, cent.toDF("cid", "centroid"))
         .join(e, "vec_id")

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,23 +69,28 @@ object IvfPq {
     // own aggregates and the join (two frames behind aggregates — no size
     // estimates, BENCH_NOTES #25) fell back to a SortMergeJoin over the
     // whole index: 6 exchanges where the index build needs 1.
-    // Materialized: the seeds collect, two counts, and both index
-    // aggregates all sit on ep — without the checkpoint each action
-    // re-executes the scan + exchange (measured 3.6 s vs 2.0 s at sf0.1).
-    val ep = e.repartition(spark.sparkContext.defaultParallelism, $"vec_id")
+    // Materialized: both seed collects and both index aggregates sit on
+    // ep — without the checkpoint each action re-executes the scan +
+    // exchange (measured 3.6 s vs 2.0 s at sf0.1). The row count both seed
+    // strides need is observed on the checkpoint's own job, not counted
+    // once per seeding.
+    val counted = Observation()
+    val ep = e.observe(counted, count(lit(1)).as("n"))
+      .repartition(spark.sparkContext.defaultParallelism, $"vec_id")
       .ckptDisk()
+    val rows = Some(counted.get("n").asInstanceOf[Long])
 
     // coarse quantizer: stride seeds, no Lloyd pass (the oracle seeds
     // without one); cell assignment is partition-local on ep
-    val coarse = Ivf.train(spark, ep, nlist, lloyd = 0)
+    val coarse = Ivf.train(spark, ep, nlist, lloyd = 0, rows)
 
     // inverted lists carry ONLY the PQ codes — the point of the layout.
     // Both sides inherit ep's vec_id partitioning (aggregates were
     // partition-local), so this is exchange-free; the shuffle_hash hint
     // swaps the planner's sort-merge fallback for a no-sort hash join.
     // PQ sub-codebook built ONCE, shared by code assignment and the ADC
-    // LUT below (each build is a count + seed collect on the driver).
-    val subCb = Pq.subCodebook(spark, ep)
+    // LUT below (each build is one seed collect).
+    val subCb = Pq.subCodebook(spark, ep, rows)
     val lists = Ivf.assign(spark, ep, coarse).hint("shuffle_hash")
       .join(Pq.codesOver(spark, ep, Some(subCb)), Seq("vec_id"))
       .select($"cid", $"vec_id".as("neighbor_id"), $"c0", $"c1", $"c2", $"c3")

@@ -39,11 +39,12 @@ object Pq {
   /** Stride-seeded sub-codebooks over any (vec_id, v) frame: (m, cid, c) —
     * M·K rows, broadcastable. Shared with [[IvfPq]] so the PQ codes an
     * IVF-PQ index scans are EXACTLY the ones x_pq_assign declares.
+    * `rows` is [[Ivf.seeds]]'s: the row count of `e`, when known.
     */
-  def subCodebook(spark: SparkSession, e: DataFrame): DataFrame = {
+  def subCodebook(spark: SparkSession, e: DataFrame, rows: Option[Long] = None): DataFrame = {
     import spark.implicits._
     broadcast(
-      Ivf.seeds(spark, e, K).zipWithIndex.flatMap { case (v, i) =>
+      Ivf.seeds(spark, e, K, rows).zipWithIndex.flatMap { case (v, i) =>
         (0 until M).map(m => (m.toLong, i.toLong, v.slice(m * SubDim, (m + 1) * SubDim)))
       }.toSeq.toDF("m", "cid", "c"))
   }

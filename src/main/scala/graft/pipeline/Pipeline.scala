@@ -174,7 +174,7 @@ object Pipeline {
       }
 
     // 4–5. Checks + verdict (run ALL, spec order; verdict is a value) and
-    //    the row count, all from one aggregate over the read-back.
+    //    the row count, all from one observed pass over the read-back.
     //    source_exists paths are {{ ds }}-templated like the reference's
     //    check_for_key key.
     val renderedChecks = spec.checks.map {
@@ -183,6 +183,8 @@ object Pipeline {
     }
     val (results, rows) = DataQuality.runAllCounted(readBack, renderedChecks)
     val passed = DataQuality.verdict(results)
+    // an empty date keeps no partition (the direct write left one empty file)
+    if (written && rows == 0) Ingest.dropRawZone(spark, root, ds)
 
     // 6. Branch: alert on failure, no-op on success (O9–O11).
     if (!passed)
@@ -194,8 +196,8 @@ object Pipeline {
 
   /** Backfill — the Airflow operation the reference's users actually run:
     * execute the pipeline once per date, oldest first. Each run overwrites
-    * only its own `ds` partition (writeRawZone is dynamic-overwrite), so a
-    * backfill is idempotent and safely re-runnable over any date window.
+    * only its own `ds=` directory (and removes it when the date is empty),
+    * so a backfill is idempotent and safely re-runnable over any date window.
     * The loop is over the DATE RANGE (config), never over data; one date's
     * failure — DQ verdict OR thrown error (fetch timeout, bad payload) —
     * never stops later dates, matching the one-DagRun-per-date model; each

@@ -145,4 +145,25 @@ class DataQualityDifferentialSpec extends SparkSpec {
       assert(checks.flatMap(DataQuality.evaluate(df, _)) == DataQuality.runAll(df, checks))
     }
   }
+
+  test("empty and degenerate inputs: results and row count equal the closed form") {
+    val nullKeys = Seq.fill(3)(Rec(None, Some("b"), Some(1.0), Some(Jan25)))
+    val unparseable = Seq(Rec(Some(1L), Some("garbage"), None, None), Rec(Some(2L), Some("a"), None, None))
+    val parquet = java.nio.file.Files.createTempDirectory("dqempty").toString
+    frame(Nil).write.mode("overwrite").parquet(parquet)
+    val inputs: Seq[(String, Seq[Rec], () => org.apache.spark.sql.DataFrame)] = Seq(
+      ("limit(0)", Nil, () => frame(nullKeys ++ unparseable).limit(0)),
+      ("empty LocalRelation", Nil, () => frame(Nil)),
+      ("zero-row parquet file", Nil, () => spark.read.parquet(parquet)),
+      ("all-NULL key", nullKeys, () => frame(nullKeys)),
+      ("unparseable freshness strings", unparseable, () => frame(unparseable)))
+    val global = Seq(MinRowCount(1), NullRatio("k", 0, 1), NullRatio("s", 1, 2),
+      ValueRange("d", 0.0, 10.0), ValueRange("k", 1.0, 5.0),
+      Freshness("s", java.sql.Date.valueOf("2024-02-05"), 7),
+      Freshness("t", java.sql.Date.valueOf("2024-02-05"), 7))
+    for ((name, rows, df) <- inputs; suite <- Seq(global, UniqueColumn("k") +: global)) {
+      assert(DataQuality.runAllCounted(df(), suite) == ((model(rows, suite), rows.size.toLong)),
+        s"$name: $suite")
+    }
+  }
 }

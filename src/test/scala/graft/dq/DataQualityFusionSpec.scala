@@ -1,11 +1,14 @@
 package graft.dq
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 import graft.{SparkSpec, SqlExecutions}
 
 /** Pins the fused compilation of a check suite by counting the SQL
-  * executions it runs.
+  * executions and Spark jobs it runs: one observed `noop` write per suite,
+  * whose action name a listener reports as `overwrite`.
   */
-class DataQualityFusionSpec extends SparkSpec {
+class DataQualityFusionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private def events = Seq(
@@ -21,7 +24,7 @@ class DataQualityFusionSpec extends SparkSpec {
       Freshness("ts", java.sql.Date.valueOf("2024-02-05"), 7))
     var results = Seq.empty[CheckResult]
     val runs = SqlExecutions.during(spark) { results = DataQuality.runAll(events, checks) }
-    assert(runs == Seq("head"), runs)
+    assert(runs == Seq("overwrite"), runs)
     assert(results == Seq(
       CheckResult("min_row_count", passed = true, "observed=3 threshold=3"),
       CheckResult("required_columns", passed = true, "all present"),
@@ -62,7 +65,7 @@ class DataQualityFusionSpec extends SparkSpec {
     }
     // the fused aggregate (min_row_count and both id checks), the name
     // uniqueness query and the anti-join
-    assert(runs.sorted == Seq("count", "head", "head"), runs)
+    assert(runs.sorted == Seq("count", "overwrite", "overwrite"), runs)
   }
 
   test("user column names never collide with the aggregate's own names") {
@@ -78,9 +81,35 @@ class DataQualityFusionSpec extends SparkSpec {
     val runs = SqlExecutions.during(spark) {
       counted = DataQuality.runAllCounted(events, Seq(UniqueColumn("id"), RequiredColumns(Seq("id"))))
     }
-    assert(runs == Seq("head"), runs)
+    assert(runs == Seq("overwrite"), runs)
     assert(counted._2 == 3L && counted._1.forall(_.passed))
     // with no scan-needing check the count is the one execution
     assert(DataQuality.runAllCounted(events.limit(0), Seq(RequiredColumns(Seq("id"))))._2 == 0L)
+  }
+
+  test("a global-only suite is one Spark job, a suite with a unique check two") {
+    val global = Seq(MinRowCount(3), NullRatio("name", 1, 2), ValueRange("score", 0.0, 60.0),
+      Freshness("ts", java.sql.Date.valueOf("2024-02-05"), 7))
+    val df = events
+    assert(SqlExecutions.jobs(spark)(DataQuality.runAll(df, global)) == 1)
+    // the per-key aggregate's map stage and the observed pass over its output
+    assert(SqlExecutions.jobs(spark)(DataQuality.runAll(df, UniqueColumn("id") +: global)) <= 2)
+  }
+
+  test("the global path reads only the columns its checks reference") {
+    val dir = java.nio.file.Files.createTempDirectory("dqprune").toString
+    Seq((1L, "2024-02-01", "x" * 40), (2L, "nope", "y" * 40)).toDF("id", "s", "pad")
+      .write.mode("overwrite").parquet(dir)
+    val df = spark.read.parquet(dir)
+    val runs = SqlExecutions.captured(spark) {
+      val r = DataQuality.runAll(df, Seq(NullRatio("s", 0, 1),
+        Freshness("s", java.sql.Date.valueOf("2024-02-05"), 7)))
+      assert(r.map(_.passed) == Seq(true, true))
+    }
+    assert(runs.map(_._1) == Seq("overwrite"), runs.map(_._1))
+    val scans = collectWithSubqueries(runs.head._2.executedPlan) {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.requiredSchema.simpleString
+    }
+    assert(scans == Seq("struct<s:string>"), scans)
   }
 }

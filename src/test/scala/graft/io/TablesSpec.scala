@@ -1,15 +1,13 @@
 package graft.io
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types.StructType
 
-import graft.SparkSpec
+import graft.{SparkSpec, SqlExecutions}
 
 class TablesSpec extends SparkSpec {
   import spark.implicits._
@@ -18,34 +16,6 @@ class TablesSpec extends SparkSpec {
   private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
 
   private def tmp(): String = Files.createTempDirectory("tables").toString
-
-  /** Spark jobs started while `body` runs. The listener bus is ordered, so
-    * once a marker job started after `body` has been delivered, every job
-    * of `body` has been too.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new AtomicInteger
-    @volatile var markerSeen = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("tables.spec.marker") != null)) markerSeen = true
-        else { jobs.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setLocalProperty("tables.spec.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("tables.spec.marker", null)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!markerSeen) {
-        assert(System.nanoTime() < deadline, "marker job never reached the listener")
-        Thread.sleep(10)
-      }
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def withNanosAsLong[T](value: Option[String])(body: => T): T = {
     val saved = spark.conf.getOption(NanosAsLong)
@@ -63,10 +33,10 @@ class TablesSpec extends SparkSpec {
 
   test("loading every harness table starts no Spark job") {
     Tables.names.foreach { n =>
-      assert(jobsDuring(Tables(spark, dir, n)) == 0, n)
+      assert(SqlExecutions.jobs(spark)(Tables(spark, dir, n)) == 0, n)
     }
     // the counter does see the inference job this replaces
-    assert(jobsDuring(spark.read.parquet(s"$dir/region.parquet")) == 1)
+    assert(SqlExecutions.jobs(spark)(spark.read.parquet(s"$dir/region.parquet")) == 1)
   }
 
   test("each table's schema equals spark.read.parquet's") {
@@ -88,7 +58,7 @@ class TablesSpec extends SparkSpec {
     val names = new java.io.File(out).list().toSeq
     assert(names.contains("_SUCCESS") && names.count(_.endsWith(".parquet")) > 1)
     var t: DataFrame = null
-    assert(jobsDuring { t = Tables.parquet(spark, out) } == 0)
+    assert(SqlExecutions.jobs(spark) { t = Tables.parquet(spark, out) } == 0)
     val expected = spark.read.parquet(out)
     assert(t.schema == expected.schema)
     assert(t.as[(Long, String, Double)].collect().sorted.toSeq ==

@@ -147,7 +147,25 @@ class PipelineRunSpec extends SparkSpec {
     }
     assert(r.passed && r.rows == 3)
     assert(!runs.contains("count"), runs)
-    assert(runs.last == "head", runs) // the one DQ aggregate ends the run
+    assert(runs.last == "overwrite", runs) // the one observed DQ pass ends the run
+  }
+
+  test("a JSON-file run with a unique check takes at most four Spark jobs") {
+    import graft.dq._
+    val dir = tmp()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.json"),
+      "{\"id\": 1, \"name\": \"Ada\"}\n{\"id\": 2, \"name\": null}\n{\"id\": 2, \"name\": \"Eve\"}\n")
+    val s = PipelineSpec(PipelineInfo("jobs", "o", "@daily", Nil, ""),
+      FileSource("json", s"$dir/in.json", Map.empty), RawZoneDest(s"$dir/raw", "users"),
+      Seq(MinRowCount(3), UniqueColumn("id"), NullRatio("name", 0, 1)))
+    var r: PipelineResult = null
+    // schema inference, the raw-zone write, and the check pass's two jobs
+    val jobs = graft.SqlExecutions.jobs(spark) {
+      r = Pipeline.run(spark, s, LocalDate.parse("2024-05-01"), new StubFetcher(""), new RecordingAlerts)
+    }
+    assert(jobs <= 4, jobs)
+    assert(r.rows == 3 && r.results.map(_.detail) ==
+      Seq("observed=3 threshold=3", "dup_keys=1", "nulls=1 rows=3 max=0/1"))
   }
 
   test("an ingested ds column is dropped on read-back") {
