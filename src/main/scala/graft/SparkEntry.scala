@@ -7,13 +7,27 @@ import graft.dq.DataQuality
 import graft.io.Ingest
 import graft.llm.{AnnMulti, Bpe, Cluster, Contain, CorpusFilter, DataCard, Dedup, Drift, EditJoin, EmbedStats, Eval, FeatureHash, Ivf, IvfPq, LangId, Pack, Pq, Privacy, Retrieval, Semantic, SimHash, SimJoin, Similarity, SpanDedup, Terms, TextClean, TextOps, WeakLabel}
 import graft.multimodal.Multimodal
+import graft.streaming.IncrMv
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One declared query: its registry name, the builder that returns its
+  * frame for a scale-factor directory, and the DuckDB SQL its result is
+  * hash-compared against. `oracleSql = None` declares a rows-only check;
+  * it is never implied by a missing entry.
+  */
+final case class Declared(
+    name: String,
+    build: (SparkSession, String) => DataFrame,
+    oracleSql: Option[String])
+
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every declared query is registered by the module that implements it and
-  * aggregated here; `oracleSql` carries the DuckDB-equivalent ANSI SQL the
-  * driver hash-compares against at sf0.01. Column names and row order are
-  * pinned identically on both sides (SURVEY.md §7.4 determinism rules).
+  * Every query is declared once, as a [[Declared]] in the module that
+  * implements it; `declared` lists each module once, and `queries` and
+  * `oracleSql` are views of that one list. `oracleSql` carries the
+  * DuckDB-equivalent ANSI SQL each result is hash-compared against at
+  * sf0.01; a query has no oracle only when its entry says `None`. Column
+  * names and row order are pinned identically on both sides (SURVEY.md
+  * §7.4 determinism rules).
   */
 object SparkEntry {
 
@@ -21,153 +35,38 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.pricingSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++
-      BloomJoin.queries ++
-      Upsert.queries ++
-      Warehouse.queries ++
-      Diff.queries ++
-      PageRank.queries ++
-      RandWalk.queries ++
-      Bfs.queries ++
-      ShortestPath.queries ++
-      BottomK.queries ++
-      Intervals.queries ++
-      Incremental.queries ++
-      PrefixSum.queries ++
-      Triangles.queries ++
-      Tpch.queries ++
-      TpchPs.queries ++
-      Journey.queries ++
-      Sketch.queries ++
-      Hll.queries ++
-      Series.queries ++
-      Bitmap.queries ++
-      Sessions.queries ++
-      AsOf.queries ++
-      DataQuality.queries ++
-      Ingest.queries ++
-      TextOps.queries ++
-      WeakLabel.queries ++
-      TextClean.queries ++
-      Terms.queries ++
-      Bpe.queries ++
-      Dedup.queries ++
-      Pack.queries ++
-      Privacy.queries ++
-      Cluster.queries ++
-      CorpusFilter.queries ++
-      SimHash.queries ++
-      SimJoin.queries ++
-      Contain.queries ++
-      Retrieval.queries ++
-      EmbedStats.queries ++
-      Layout.queries ++
-      LangId.queries ++
-      Similarity.queries ++
-      Ivf.queries ++
-      AnnMulti.queries ++
-      Semantic.queries ++
-      Drift.queries ++
-      DataCard.queries ++
-      Pq.queries ++
-      IvfPq.queries ++
-      Skew.queries ++
-      Cohort.queries ++
-      Rfm.queries ++
-      Basket.queries ++
-      Anomaly.queries ++
-      Neighbors.queries ++
-      EditJoin.queries ++
-      SpanDedup.queries ++
-      Attribution.queries ++
-      Scd.queries ++
-      Benford.queries ++
-      Twap.queries ++
-      Paths.queries ++
-      Forecast.queries ++
-      FeatureHash.queries ++
-      Eval.queries ++
-      Stats.queries ++
-      CardEst.queries ++
-      Experiment.queries ++
-      Multimodal.queries ++
-      graft.streaming.IncrMv.queries
-
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check.
+  /** Every declared query, one entry per implemented operator from
+    * SURVEY.md §2, in module order.
     */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++
-      BloomJoin.oracles ++
-      Upsert.oracles ++
-      Warehouse.oracles ++
-      Diff.oracles ++
-      PageRank.oracles ++
-      RandWalk.oracles ++
-      Bfs.oracles ++
-      ShortestPath.oracles ++
-      BottomK.oracles ++
-      Intervals.oracles ++
-      Incremental.oracles ++
-      PrefixSum.oracles ++
-      Triangles.oracles ++
-      Tpch.oracles ++
-      TpchPs.oracles ++
-      Journey.oracles ++
-      Sketch.oracles ++
-      Hll.oracles ++
-      Series.oracles ++
-      Bitmap.oracles ++
-      Sessions.oracles ++
-      AsOf.oracles ++
-      DataQuality.oracles ++
-      Ingest.oracles ++
-      TextOps.oracles ++
-      WeakLabel.oracles ++
-      TextClean.oracles ++
-      Terms.oracles ++
-      Bpe.oracles ++
-      Dedup.oracles ++
-      Pack.oracles ++
-      Privacy.oracles ++
-      Cluster.oracles ++
-      CorpusFilter.oracles ++
-      SimHash.oracles ++
-      SimJoin.oracles ++
-      Contain.oracles ++
-      Retrieval.oracles ++
-      EmbedStats.oracles ++
-      Layout.oracles ++
-      LangId.oracles ++
-      Similarity.oracles ++
-      Ivf.oracles ++
-      AnnMulti.oracles ++
-      Semantic.oracles ++
-      Drift.oracles ++
-      DataCard.oracles ++
-      Pq.oracles ++
-      IvfPq.oracles ++
-      Skew.oracles ++
-      Cohort.oracles ++
-      Rfm.oracles ++
-      Basket.oracles ++
-      Anomaly.oracles ++
-      Neighbors.oracles ++
-      EditJoin.oracles ++
-      SpanDedup.oracles ++
-      Attribution.oracles ++
-      Scd.oracles ++
-      Benford.oracles ++
-      Twap.oracles ++
-      Paths.oracles ++
-      Forecast.oracles ++
-      FeatureHash.oracles ++
-      Eval.oracles ++
-      Stats.oracles ++
-      CardEst.oracles ++
-      Experiment.oracles ++
-      Multimodal.oracles ++
-      graft.streaming.IncrMv.oracles
+  lazy val declared: Seq[Declared] = unique(Seq(
+      Relational.declared, BloomJoin.declared, Upsert.declared, Warehouse.declared, Diff.declared,
+      PageRank.declared, RandWalk.declared, Bfs.declared, ShortestPath.declared, BottomK.declared,
+      Intervals.declared, Incremental.declared, PrefixSum.declared, Triangles.declared,
+      Tpch.declared, TpchPs.declared, Journey.declared, Sketch.declared, Hll.declared,
+      Series.declared, Bitmap.declared, Sessions.declared, AsOf.declared, DataQuality.declared,
+      Ingest.declared, TextOps.declared, WeakLabel.declared, TextClean.declared, Terms.declared,
+      Bpe.declared, Dedup.declared, Pack.declared, Privacy.declared, Cluster.declared,
+      CorpusFilter.declared, SimHash.declared, SimJoin.declared, Contain.declared,
+      Retrieval.declared, EmbedStats.declared, Layout.declared, LangId.declared,
+      Similarity.declared, Ivf.declared, AnnMulti.declared, Semantic.declared, Drift.declared,
+      DataCard.declared, Pq.declared, IvfPq.declared, Skew.declared, Cohort.declared, Rfm.declared,
+      Basket.declared, Anomaly.declared, Neighbors.declared, EditJoin.declared, SpanDedup.declared,
+      Attribution.declared, Scd.declared, Benford.declared, Twap.declared, Paths.declared,
+      Forecast.declared, FeatureHash.declared, Eval.declared, Stats.declared, CardEst.declared,
+      Experiment.declared, Multimodal.declared, IncrMv.declared).flatten)
+
+  /** `ds` itself; throws naming every query name `ds` declares twice. */
+  def unique(ds: Seq[Declared]): Seq[Declared] = {
+    val twice = ds.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
+    require(twice.isEmpty, s"query declared twice: ${twice.toSeq.sorted.mkString(", ")}")
+    ds
+  }
+
+  /** Builder of each declared query, by name. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    declared.map(d => d.name -> d.build).toMap
+
+  /** Oracle SQL of each declared query that has one, by name. */
+  lazy val oracleSql: Map[String, String] =
+    declared.flatMap(d => d.oracleSql.map(d.name -> _)).toMap
 }

@@ -1,6 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each declared query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Optional third arg: comma-separated query-name filter for fast local
@@ -18,15 +18,14 @@ object Verify {
     // missing result dir could read as "not declared" downstream. Record
     // failures in failures.json and in the summary line.
     val failures = scala.collection.mutable.Buffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    val selected = SparkEntry.declared.filter(d => only.forall(_.contains(d.name)))
+    selected.foreach { case Declared(name, build, _) =>
       // Drop the previous query's dead localCheckpoint blocks (see Bench):
       // ~15 queries pin lineage-truncation storage, and at sf0.01×131
       // queries the accumulated blocks otherwise slow the tail of the run.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+      try build(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         failures += name
@@ -54,9 +53,8 @@ object Verify {
     // Only the attempted queries' oracles: the gate treats an oracle key
     // with no result dir as a FAILURE, so a filtered dump must not carry
     // the full map.
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.flatMap(d => d.oracleSql.map(sql => s"${q(d.name)}: ${q(sql)}"))
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     Files.writeString(Paths.get(s"$outDir/failures.json"),
       failures.map(q).mkString("[", ",", "]"))

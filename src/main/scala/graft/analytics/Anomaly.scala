@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Robust anomaly detection over the event stream: per-type median /
@@ -71,9 +72,6 @@ object Anomaly {
       |GROUP BY dev.event_type
       |ORDER BY dev.event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_anomaly_mad" -> (anomalyMad _))
-
-  val oracles: Map[String, String] = Map(
-    "x_anomaly_mad" -> anomalyMadSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_anomaly_mad", anomalyMad, Some(anomalyMadSql)))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Declared
 import graft.io.Tables
 
 /** As-of join — an operator Spark lacks natively (SURVEY.md §2.2 joins row:
@@ -242,17 +243,10 @@ object AsOf {
       |FROM n
       |ORDER BY purchase_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_asof_join" -> (viewBeforePurchase _),
-    "q_asof_native" -> (viewBeforePurchaseNative _),
-    "q_asof_tolerance" -> (viewWithinDay _),
-    "q_asof_forward" -> (nextPurchaseAfterView _),
-    "q_asof_nearest" -> (nearestView _))
-
-  val oracles: Map[String, String] = Map(
-    "q_asof_join" -> viewBeforePurchaseSql,
-    "q_asof_native" -> viewBeforePurchaseSql,
-    "q_asof_tolerance" -> viewWithinDaySql,
-    "q_asof_forward" -> nextPurchaseAfterViewSql,
-    "q_asof_nearest" -> nearestViewSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_asof_join", viewBeforePurchase, Some(viewBeforePurchaseSql)),
+    Declared("q_asof_native", viewBeforePurchaseNative, Some(viewBeforePurchaseSql)),
+    Declared("q_asof_tolerance", viewWithinDay, Some(viewWithinDaySql)),
+    Declared("q_asof_forward", nextPurchaseAfterView, Some(nextPurchaseAfterViewSql)),
+    Declared("q_asof_nearest", nearestView, Some(nearestViewSql)))
 }

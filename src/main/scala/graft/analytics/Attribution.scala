@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Marketing attribution over the event stream — credit each conversion
@@ -87,9 +88,6 @@ object Attribution {
        |SELECT touch_type, n_conv, avg_delay_us FROM no_att
        |ORDER BY touch_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_attribution" -> (attribution _))
-
-  val oracles: Map[String, String] = Map(
-    "x_attribution" -> attributionSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_attribution", attribution, Some(attributionSql)))
 }

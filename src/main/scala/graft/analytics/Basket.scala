@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -96,9 +97,6 @@ object Basket {
        |ORDER BY n_pair DESC, part_a, part_b
        |LIMIT ${TopPairs}""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_basket_pairs" -> (basketPairs _))
-
-  val oracles: Map[String, String] = Map(
-    "x_basket_pairs" -> basketPairsSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_basket_pairs", basketPairs, Some(basketPairsSql)))
 }

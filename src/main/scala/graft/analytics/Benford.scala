@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -68,9 +69,6 @@ object Benford {
        |ORDER BY c.digit""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_benford" -> (benford _))
-
-  val oracles: Map[String, String] = Map(
-    "x_benford" -> benfordSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_benford", benford, Some(benfordSql)))
 }

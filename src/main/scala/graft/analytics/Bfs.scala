@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -82,9 +83,6 @@ object Bfs {
        |FROM walk GROUP BY node
        |ORDER BY node""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_bfs_dist" -> (bfsDist _))
-
-  val oracles: Map[String, String] = Map(
-    "x_bfs_dist" -> bfsDistSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_bfs_dist", bfsDist, Some(bfsDistSql)))
 }

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Bitmap-index audience overlap — every pairwise |A∩B| over N segments
@@ -101,9 +102,6 @@ object Bitmap {
        |LEFT JOIN inter i ON i.seg_a = p.seg_a AND i.seg_b = p.seg_b
        |ORDER BY p.seg_a, p.seg_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_bitmap_overlap" -> (bitmapOverlap _))
-
-  val oracles: Map[String, String] = Map(
-    "x_bitmap_overlap" -> bitmapOverlapSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_bitmap_overlap", bitmapOverlap, Some(bitmapOverlapSql)))
 }

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Semi-join reduction via a Bloom-filter pre-filter — the classic
@@ -99,9 +100,6 @@ object BloomJoin {
        |GROUP BY l_returnflag
        |ORDER BY l_returnflag""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bloom_semi" -> (bloomSemi _))
-
-  val oracles: Map[String, String] = Map(
-    "q_bloom_semi" -> bloomSemiSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_bloom_semi", bloomSemi, Some(bloomSemiSql)))
 }

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.functions.GraftFunctions
 import graft.io.Tables
 import graft.util.Det
@@ -115,9 +116,6 @@ object BottomK {
        | p50_est, p90_est, p99_est
        |FROM est, tot""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_quantile_merge" -> (quantileMerge _))
-
-  val oracles: Map[String, String] = Map(
-    "x_quantile_merge" -> quantileMergeSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_quantile_merge", quantileMerge, Some(quantileMergeSql)))
 }

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Join-cardinality estimation audit — the query-optimizer-internals
@@ -92,9 +93,6 @@ object CardEst {
       |FROM u
       |ORDER BY join_name""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_join_card_est" -> (joinCardEst _))
-
-  val oracles: Map[String, String] = Map(
-    "x_join_card_est" -> joinCardEstSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_join_card_est", joinCardEst, Some(joinCardEstSql)))
 }

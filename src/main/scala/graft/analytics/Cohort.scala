@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Cohort retention CURVES — the normalized week-grain companion of
@@ -66,9 +67,6 @@ object Cohort {
        |FROM act a JOIN base b ON a.cohort_wk = b.cohort_wk
        |ORDER BY a.cohort_wk, a.week_offset""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_cohort_retention" -> (cohortRetention _))
-
-  val oracles: Map[String, String] = Map(
-    "x_cohort_retention" -> cohortRetentionSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_cohort_retention", cohortRetention, Some(cohortRetentionSql)))
 }

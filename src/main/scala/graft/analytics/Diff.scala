@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -97,9 +98,6 @@ object Diff {
       |GROUP BY status
       |ORDER BY status""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_table_diff" -> (tableDiff _))
-
-  val oracles: Map[String, String] = Map(
-    "q_table_diff" -> tableDiffSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_table_diff", tableDiff, Some(tableDiffSql)))
 }

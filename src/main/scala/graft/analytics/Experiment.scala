@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.{Det, Select}
 
@@ -123,11 +124,7 @@ object Experiment {
       | CAST(any_value(total_w) AS BIGINT) AS total_w
       |FROM cum WHERE cum_w * 2 >= total_w""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_abtest" -> (abtest _),
-    "x_weighted_median" -> (weightedMedian _))
-
-  val oracles: Map[String, String] = Map(
-    "x_abtest" -> abtestSql,
-    "x_weighted_median" -> weightedMedianSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_abtest", abtest, Some(abtestSql)),
+    Declared("x_weighted_median", weightedMedian, Some(weightedMedianSql)))
 }

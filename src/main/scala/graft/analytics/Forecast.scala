@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Forecast backtesting — the seasonal-naive baseline (predict this
@@ -58,9 +59,6 @@ object Forecast {
        |FROM sc GROUP BY 1
        |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_forecast_naive" -> (forecastNaive _))
-
-  val oracles: Map[String, String] = Map(
-    "x_forecast_naive" -> forecastNaiveSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_forecast_naive", forecastNaive, Some(forecastNaiveSql)))
 }

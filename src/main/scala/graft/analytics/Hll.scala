@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Deterministic HyperLogLog — the fixed-size mergeable cardinality state.
@@ -228,11 +229,7 @@ object Hll {
        |FROM z JOIN ex ON z.source = ex.source
        |ORDER BY z.source""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_hll_distinct" -> (hllDistinct _),
-    "x_hll_merge" -> (hllMerge _))
-
-  val oracles: Map[String, String] = Map(
-    "x_hll_distinct" -> hllDistinctSql,
-    "x_hll_merge" -> hllMergeSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_hll_distinct", hllDistinct, Some(hllDistinctSql)),
+    Declared("x_hll_merge", hllMerge, Some(hllMergeSql)))
 }

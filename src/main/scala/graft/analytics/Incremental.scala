@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 import graft.util.Det
@@ -127,9 +128,6 @@ object Incremental {
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_incr_agg" -> (incrAgg _))
-
-  val oracles: Map[String, String] = Map(
-    "x_incr_agg" -> incrAggSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_incr_agg", incrAgg, Some(incrAggSql)))
 }

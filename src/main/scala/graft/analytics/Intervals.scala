@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Interval-OVERLAP join — the pairwise shape [[Warehouse.concurrency]]'s
@@ -100,9 +101,6 @@ object Intervals {
        |ORDER BY overlap_s DESC, u_lo, u_hi
        |LIMIT $TopPairs""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_interval_join" -> (intervalJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "x_interval_join" -> intervalJoinSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_interval_join", intervalJoin, Some(intervalJoinSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** User-journey shapes over the event stream, complementing [[Sessions]]'
@@ -108,11 +109,7 @@ object Journey {
       |FROM pairs
       |ORDER BY prev_type, next_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_islands" -> (islands _),
-    "q_transitions" -> (transitions _))
-
-  val oracles: Map[String, String] = Map(
-    "q_islands" -> islandsSql,
-    "q_transitions" -> transitionsSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_islands", islands, Some(islandsSql)),
+    Declared("q_transitions", transitions, Some(transitionsSql)))
 }

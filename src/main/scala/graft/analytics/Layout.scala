@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Data-layout planning: Z-order clustering vs linear (date) clustering,
@@ -639,13 +640,8 @@ object Layout {
       retained.diff(rewriteDays).sortBy(_.getOrElse(Long.MaxValue)))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_zorder_prune" -> (zorderPrune _),
-    "x_compact_plan" -> (compactPlan _),
-    "x_retention_plan" -> (retentionPlan _))
-
-  val oracles: Map[String, String] = Map(
-    "x_zorder_prune" -> zorderPruneSql,
-    "x_compact_plan" -> compactPlanSql,
-    "x_retention_plan" -> retentionPlanSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_zorder_prune", zorderPrune, Some(zorderPruneSql)),
+    Declared("x_compact_plan", compactPlan, Some(compactPlanSql)),
+    Declared("x_retention_plan", retentionPlan, Some(retentionPlanSql)))
 }

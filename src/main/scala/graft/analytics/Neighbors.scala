@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -167,11 +168,7 @@ object Neighbors {
        |ORDER BY node""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_graph_jaccard" -> (graphJaccard _),
-    "x_kcore" -> (kcore _))
-
-  val oracles: Map[String, String] = Map(
-    "x_graph_jaccard" -> graphJaccardSql,
-    "x_kcore" -> kcoreSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_graph_jaccard", graphJaccard, Some(graphJaccardSql)),
+    Declared("x_kcore", kcore, Some(kcoreSql)))
 }

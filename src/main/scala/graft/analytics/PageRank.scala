@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -252,9 +253,6 @@ object PageRank {
        |LIMIT 20""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_pagerank" -> (pagerank _))
-
-  val oracles: Map[String, String] = Map(
-    "x_pagerank" -> pagerankSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_pagerank", pagerank, Some(pagerankSql)))
 }

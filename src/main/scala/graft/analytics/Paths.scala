@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Session path analysis — the top entry paths (first [[PathSteps]] event
@@ -72,9 +73,6 @@ object Paths {
        |ORDER BY n_sessions DESC, path
        |LIMIT ${TopPaths}""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_session_paths" -> (sessionPaths _))
-
-  val oracles: Map[String, String] = Map(
-    "x_session_paths" -> sessionPathsSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_session_paths", sessionPaths, Some(sessionPathsSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 import graft.util.Ckpt._
@@ -120,9 +121,6 @@ object PrefixSum {
       |FROM orders
       |ORDER BY o_orderkey""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_running_global" -> (runningGlobal _))
-
-  val oracles: Map[String, String] = Map(
-    "q_running_global" -> runningGlobalSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_running_global", runningGlobal, Some(runningGlobalSql)))
 }

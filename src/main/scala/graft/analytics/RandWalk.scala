@@ -2,6 +2,7 @@ package graft.analytics
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -193,9 +194,6 @@ object RandWalk {
        |ORDER BY start, walk""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_rand_walk" -> (randWalk _))
-
-  val oracles: Map[String, String] = Map(
-    "x_rand_walk" -> randWalkSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_rand_walk", randWalk, Some(randWalkSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.{Det, Select}
 
@@ -1354,101 +1355,52 @@ object Relational {
   val limitOrderSql: String =
     "SELECT * FROM events ORDER BY event_id LIMIT 100"
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (pricingSummary _),
-    "q_filter_project" -> (filterProject _),
-    "q_join_inner" -> (joinInner _),
-    "q_join_left" -> (joinLeft _),
-    "q_join_semi" -> (joinSemi _),
-    "q_join_anti" -> (joinAnti _),
-    "q_join_full" -> (joinFull _),
-    "q_join_star6" -> (joinStar6 _),
-    "q_agg_group" -> (aggGroup _),
-    "q_agg_distinct" -> (aggDistinct _),
-    "q_topk" -> (topK _),
-    "q_window_rank" -> (windowRank _),
-    "q_window_range" -> (windowRange _),
-    "q_union" -> (unionKeys _),
-    "q_except" -> (exceptKeys _),
-    "q_intersect" -> (intersectKeys _),
-    "q_intersect_all" -> (intersectAllKeys _),
-    "q_except_all" -> (exceptAllKeys _),
-    "q_first_last" -> (firstLast _),
-    "q_scalar_fns" -> (scalarFns _),
-    "q_rollup_daily" -> (rollupDaily _),
-    "q_rollup_ym" -> (rollupYearMonth _),
-    "q_join_range" -> (joinRange _),
-    "q_range_auto" -> (rangeAuto _),
-    "q_ntile" -> (ntileDeciles _),
-    "q_mode" -> (modeSegment _),
-    "q_pivot_status" -> (pivotStatus _),
-    "q_pivot_multi" -> (pivotMulti _),
-    "q_null_safe_join" -> (nullSafeJoin _),
-    "q_unpivot" -> (unpivotStatus _),
-    "q_cube" -> (cubeStatusPriority _),
-    "q_grouping_sets" -> (groupingSetsQ _),
-    "q_lag_lead" -> (lagLead _),
-    "q_quantiles" -> (quantiles _),
-    "q_string_agg" -> (stringAgg _),
-    "q_array_fns" -> (arrayFns _),
-    "q_sample_hash" -> (sampleHash _),
-    "q_histogram" -> (histogram _),
-    "q_histogram_2d" -> (histogram2d _),
-    "x_hist_sketch" -> (histSketch _),
-    "q_gap_fill" -> (gapFill _),
-    "q_locf" -> (locf _),
-    "q_subquery_exists" -> (subqueryExists _),
-    "q_recursive_cte" -> (recursiveCte _),
-    "q_sql_region" -> (sqlRegion _),
-    "q_subquery_corr" -> (subqueryCorr _),
-    "q_limit_order" -> (limitOrder _))
-
-  val oracles: Map[String, String] = Map(
-    "q1_agg" -> pricingSummarySql,
-    "q_filter_project" -> filterProjectSql,
-    "q_join_inner" -> joinInnerSql,
-    "q_join_left" -> joinLeftSql,
-    "q_join_semi" -> joinSemiSql,
-    "q_join_anti" -> joinAntiSql,
-    "q_join_full" -> joinFullSql,
-    "q_join_star6" -> joinStar6Sql,
-    "q_agg_group" -> aggGroupSql,
-    "q_agg_distinct" -> aggDistinctSql,
-    "q_topk" -> topKSql,
-    "q_window_rank" -> windowRankSql,
-    "q_window_range" -> windowRangeSql,
-    "q_union" -> unionKeysSql,
-    "q_except" -> exceptKeysSql,
-    "q_intersect" -> intersectKeysSql,
-    "q_intersect_all" -> intersectAllKeysSql,
-    "q_except_all" -> exceptAllKeysSql,
-    "q_first_last" -> firstLastSql,
-    "q_scalar_fns" -> scalarFnsSql,
-    "q_rollup_daily" -> rollupDailySql,
-    "q_rollup_ym" -> rollupYearMonthSql,
-    "q_join_range" -> joinRangeSql,
-    "q_range_auto" -> rangeAutoSql,
-    "q_ntile" -> ntileDecilesSql,
-    "q_mode" -> modeSegmentSql,
-    "q_pivot_status" -> pivotStatusSql,
-    "q_pivot_multi" -> pivotMultiSql,
-    "q_null_safe_join" -> nullSafeJoinSql,
-    "q_unpivot" -> unpivotStatusSql,
-    "q_cube" -> cubeStatusPrioritySql,
-    "q_grouping_sets" -> groupingSetsSql,
-    "q_lag_lead" -> lagLeadSql,
-    "q_quantiles" -> quantilesSql,
-    "q_string_agg" -> stringAggSql,
-    "q_array_fns" -> arrayFnsSql,
-    "q_sample_hash" -> sampleHashSql,
-    "q_histogram" -> histogramSql,
-    "q_histogram_2d" -> histogram2dSql,
-    "x_hist_sketch" -> histSketchSql,
-    "q_gap_fill" -> gapFillSql,
-    "q_locf" -> locfSql,
-    "q_subquery_exists" -> existsSubqueryText,
-    "q_recursive_cte" -> recursiveCteText,
-    "q_sql_region" -> sqlRegionText,
-    "q_subquery_corr" -> subqueryCorrText,
-    "q_limit_order" -> limitOrderSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q1_agg", pricingSummary, Some(pricingSummarySql)),
+    Declared("q_filter_project", filterProject, Some(filterProjectSql)),
+    Declared("q_join_inner", joinInner, Some(joinInnerSql)),
+    Declared("q_join_left", joinLeft, Some(joinLeftSql)),
+    Declared("q_join_semi", joinSemi, Some(joinSemiSql)),
+    Declared("q_join_anti", joinAnti, Some(joinAntiSql)),
+    Declared("q_join_full", joinFull, Some(joinFullSql)),
+    Declared("q_join_star6", joinStar6, Some(joinStar6Sql)),
+    Declared("q_agg_group", aggGroup, Some(aggGroupSql)),
+    Declared("q_agg_distinct", aggDistinct, Some(aggDistinctSql)),
+    Declared("q_topk", topK, Some(topKSql)),
+    Declared("q_window_rank", windowRank, Some(windowRankSql)),
+    Declared("q_window_range", windowRange, Some(windowRangeSql)),
+    Declared("q_union", unionKeys, Some(unionKeysSql)),
+    Declared("q_except", exceptKeys, Some(exceptKeysSql)),
+    Declared("q_intersect", intersectKeys, Some(intersectKeysSql)),
+    Declared("q_intersect_all", intersectAllKeys, Some(intersectAllKeysSql)),
+    Declared("q_except_all", exceptAllKeys, Some(exceptAllKeysSql)),
+    Declared("q_first_last", firstLast, Some(firstLastSql)),
+    Declared("q_scalar_fns", scalarFns, Some(scalarFnsSql)),
+    Declared("q_rollup_daily", rollupDaily, Some(rollupDailySql)),
+    Declared("q_rollup_ym", rollupYearMonth, Some(rollupYearMonthSql)),
+    Declared("q_join_range", joinRange, Some(joinRangeSql)),
+    Declared("q_range_auto", rangeAuto, Some(rangeAutoSql)),
+    Declared("q_ntile", ntileDeciles, Some(ntileDecilesSql)),
+    Declared("q_mode", modeSegment, Some(modeSegmentSql)),
+    Declared("q_pivot_status", pivotStatus, Some(pivotStatusSql)),
+    Declared("q_pivot_multi", pivotMulti, Some(pivotMultiSql)),
+    Declared("q_null_safe_join", nullSafeJoin, Some(nullSafeJoinSql)),
+    Declared("q_unpivot", unpivotStatus, Some(unpivotStatusSql)),
+    Declared("q_cube", cubeStatusPriority, Some(cubeStatusPrioritySql)),
+    Declared("q_grouping_sets", groupingSetsQ, Some(groupingSetsSql)),
+    Declared("q_lag_lead", lagLead, Some(lagLeadSql)),
+    Declared("q_quantiles", quantiles, Some(quantilesSql)),
+    Declared("q_string_agg", stringAgg, Some(stringAggSql)),
+    Declared("q_array_fns", arrayFns, Some(arrayFnsSql)),
+    Declared("q_sample_hash", sampleHash, Some(sampleHashSql)),
+    Declared("q_histogram", histogram, Some(histogramSql)),
+    Declared("q_histogram_2d", histogram2d, Some(histogram2dSql)),
+    Declared("x_hist_sketch", histSketch, Some(histSketchSql)),
+    Declared("q_gap_fill", gapFill, Some(gapFillSql)),
+    Declared("q_locf", locf, Some(locfSql)),
+    Declared("q_subquery_exists", subqueryExists, Some(existsSubqueryText)),
+    Declared("q_recursive_cte", recursiveCte, Some(recursiveCteText)),
+    Declared("q_sql_region", sqlRegion, Some(sqlRegionText)),
+    Declared("q_subquery_corr", subqueryCorr, Some(subqueryCorrText)),
+    Declared("q_limit_order", limitOrder, Some(limitOrderSql)))
 }

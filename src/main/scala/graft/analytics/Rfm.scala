@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 import graft.util.{Det, Select}
@@ -125,9 +126,6 @@ object Rfm {
       |GROUP BY 1, 2, 3
       |ORDER BY r_score, f_score, m_score""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_rfm" -> (rfm _))
-
-  val oracles: Map[String, String] = Map(
-    "x_rfm" -> rfmSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_rfm", rfm, Some(rfmSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Slowly-changing-dimension (type 2) construction from a change stream —
@@ -292,13 +293,8 @@ object Scd {
       |GROUP BY 1
       |ORDER BY prior_state""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_scd2_build" -> (scd2Build _),
-    "x_scd2_capped" -> (scd2BuildCapped _),
-    "x_pit_join" -> (pitJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "x_scd2_build" -> scd2BuildSql,
-    "x_scd2_capped" -> scd2BuildSql,
-    "x_pit_join" -> pitJoinSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_scd2_build", scd2Build, Some(scd2BuildSql)),
+    Declared("x_scd2_capped", scd2BuildCapped, Some(scd2BuildSql)),
+    Declared("x_pit_join", pitJoin, Some(pitJoinSql)))
 }

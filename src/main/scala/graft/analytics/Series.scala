@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Time-series smoothing and changepoint detection with EXACT arithmetic —
@@ -148,11 +149,7 @@ object Series {
       |ORDER BY abs(s_scaled) DESC, d
       |LIMIT 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_ewma" -> (ewma _),
-    "x_cusum_shift" -> (cusumShift _))
-
-  val oracles: Map[String, String] = Map(
-    "x_ewma" -> ewmaSql,
-    "x_cusum_shift" -> cusumShiftSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_ewma", ewma, Some(ewmaSql)),
+    Declared("x_cusum_shift", cusumShift, Some(cusumShiftSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -575,31 +576,17 @@ object Sessions {
       |GROUP BY 1, 2
       |ORDER BY day, event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ohlc" -> (ohlc _),
-    "q_sliding_distinct" -> (slidingDistinct _),
-    "q_sessionize" -> (sessionize _),
-    "q_sessionize_capped" -> (sessionizeCapped _),
-    "q_session_stats" -> (sessionStats _),
-    "q_funnel" -> (funnel _),
-    "q_funnel_window" -> (funnelWindow _),
-    "q_window_running" -> (windowRunning _),
-    "q_user_stats_salted" -> (userStatsSalted _),
-    "q_event_counts" -> (eventCounts _),
-    "q_latest_event" -> (latestEvent _),
-    "q_cohort_retention" -> (cohortRetention _))
-
-  val oracles: Map[String, String] = Map(
-    "q_ohlc" -> ohlcSql,
-    "q_sliding_distinct" -> slidingDistinctSql,
-    "q_sessionize" -> sessionizeSql,
-    "q_sessionize_capped" -> sessionizeSql,
-    "q_session_stats" -> sessionStatsSql,
-    "q_funnel" -> funnelSql,
-    "q_funnel_window" -> funnelWindowSql,
-    "q_window_running" -> windowRunningSql,
-    "q_user_stats_salted" -> userStatsSaltedSql,
-    "q_event_counts" -> eventCountsSql,
-    "q_latest_event" -> latestEventSql,
-    "q_cohort_retention" -> cohortRetentionSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_ohlc", ohlc, Some(ohlcSql)),
+    Declared("q_sliding_distinct", slidingDistinct, Some(slidingDistinctSql)),
+    Declared("q_sessionize", sessionize, Some(sessionizeSql)),
+    Declared("q_sessionize_capped", sessionizeCapped, Some(sessionizeSql)),
+    Declared("q_session_stats", sessionStats, Some(sessionStatsSql)),
+    Declared("q_funnel", funnel, Some(funnelSql)),
+    Declared("q_funnel_window", funnelWindow, Some(funnelWindowSql)),
+    Declared("q_window_running", windowRunning, Some(windowRunningSql)),
+    Declared("q_user_stats_salted", userStatsSalted, Some(userStatsSaltedSql)),
+    Declared("q_event_counts", eventCounts, Some(eventCountsSql)),
+    Declared("q_latest_event", latestEvent, Some(latestEventSql)),
+    Declared("q_cohort_retention", cohortRetention, Some(cohortRetentionSql)))
 }

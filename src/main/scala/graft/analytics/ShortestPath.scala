@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -133,9 +134,6 @@ object ShortestPath {
        |FROM walk GROUP BY node
        |ORDER BY node""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_shortest_path" -> (shortestPath _))
-
-  val oracles: Map[String, String] = Map(
-    "x_shortest_path" -> shortestPathSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_shortest_path", shortestPath, Some(shortestPathSql)))
 }

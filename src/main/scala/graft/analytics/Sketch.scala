@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 import graft.util.Select
@@ -600,23 +601,13 @@ object Sketch {
        |FROM ranked WHERE rn = k - cum_before
        |ORDER BY grp""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_select_quantile" -> (selectQuantile _),
-    "x_group_median" -> (groupMedian _),
-    "x_quantile_sample" -> (quantileSample _),
-    "x_kmv_distinct" -> (kmvDistinct _),
-    "x_kmv_merge" -> (kmvMerge _),
-    "x_theta_intersect" -> (thetaIntersect _),
-    "x_cms_freq" -> (cmsFreq _),
-    "x_heavy_hitters" -> (heavyHitters _))
-
-  val oracles: Map[String, String] = Map(
-    "x_select_quantile" -> selectQuantileSql,
-    "x_group_median" -> groupMedianSql,
-    "x_quantile_sample" -> quantileSampleSql,
-    "x_kmv_distinct" -> kmvDistinctSql,
-    "x_kmv_merge" -> kmvMergeSql,
-    "x_theta_intersect" -> thetaIntersectSql,
-    "x_cms_freq" -> cmsFreqSql,
-    "x_heavy_hitters" -> heavyHittersSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_select_quantile", selectQuantile, Some(selectQuantileSql)),
+    Declared("x_group_median", groupMedian, Some(groupMedianSql)),
+    Declared("x_quantile_sample", quantileSample, Some(quantileSampleSql)),
+    Declared("x_kmv_distinct", kmvDistinct, Some(kmvDistinctSql)),
+    Declared("x_kmv_merge", kmvMerge, Some(kmvMergeSql)),
+    Declared("x_theta_intersect", thetaIntersect, Some(thetaIntersectSql)),
+    Declared("x_cms_freq", cmsFreq, Some(cmsFreqSql)),
+    Declared("x_heavy_hitters", heavyHitters, Some(heavyHittersSql)))
 }

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -135,9 +136,6 @@ object Skew {
       |GROUP BY p_brand
       |ORDER BY p_brand""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_join_salted" -> (joinSalted _))
-
-  val oracles: Map[String, String] = Map(
-    "q_join_salted" -> joinSaltedSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_join_salted", joinSalted, Some(joinSaltedSql)))
 }

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -143,11 +144,7 @@ object Stats {
        |ORDER BY b""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_trend_fit" -> (trendFit _),
-    "x_poisson_bootstrap" -> (poissonBootstrap _))
-
-  val oracles: Map[String, String] = Map(
-    "x_trend_fit" -> trendFitSql,
-    "x_poisson_bootstrap" -> poissonBootstrapSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_trend_fit", trendFit, Some(trendFitSql)),
+    Declared("x_poisson_bootstrap", poissonBootstrap, Some(poissonBootstrapSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -851,43 +852,23 @@ object Tpch {
        |GROUP BY o_year
        |ORDER BY o_year""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch_q8" -> (tpchQ8 _),
-    "q_tpch_q6" -> (tpchQ6 _),
-    "q_tpch_q10" -> (tpchQ10 _),
-    "q_tpch_q15" -> (tpchQ15 _),
-    "q_tpch_q17" -> (tpchQ17 _),
-    "q_tpch_q22" -> (tpchQ22 _),
-    "q_tpch_q16" -> (tpchQ16 _),
-    "q_tpch_q21" -> (tpchQ21 _),
-    "q_tpch_q4" -> (tpchQ4 _),
-    "q_tpch_q13" -> (tpchQ13 _),
-    "q_tpch_q19" -> (tpchQ19 _),
-    "q_tpch_q7" -> (tpchQ7 _),
-    "q_tpch_q5" -> (tpchQ5 _),
-    "q_tpch_q3" -> (tpchQ3 _),
-    "q_tpch_q14" -> (tpchQ14 _),
-    "q_tpch_q18" -> (tpchQ18 _),
-    "q_percent_rank" -> (percentRank _),
-    "q_moments" -> (moments _))
-
-  val oracles: Map[String, String] = Map(
-    "q_tpch_q8" -> tpchQ8Sql,
-    "q_tpch_q6" -> tpchQ6Sql,
-    "q_tpch_q10" -> tpchQ10Sql,
-    "q_tpch_q15" -> tpchQ15Sql,
-    "q_tpch_q17" -> tpchQ17Sql,
-    "q_tpch_q22" -> tpchQ22Sql,
-    "q_tpch_q16" -> tpchQ16Sql,
-    "q_tpch_q21" -> tpchQ21Sql,
-    "q_tpch_q4" -> tpchQ4Sql,
-    "q_tpch_q13" -> tpchQ13Sql,
-    "q_tpch_q19" -> tpchQ19Sql,
-    "q_tpch_q7" -> tpchQ7Sql,
-    "q_tpch_q5" -> tpchQ5Sql,
-    "q_tpch_q3" -> tpchQ3Sql,
-    "q_tpch_q14" -> tpchQ14Sql,
-    "q_tpch_q18" -> tpchQ18Sql,
-    "q_percent_rank" -> percentRankSql,
-    "q_moments" -> momentsSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_tpch_q8", tpchQ8, Some(tpchQ8Sql)),
+    Declared("q_tpch_q6", tpchQ6, Some(tpchQ6Sql)),
+    Declared("q_tpch_q10", tpchQ10, Some(tpchQ10Sql)),
+    Declared("q_tpch_q15", tpchQ15, Some(tpchQ15Sql)),
+    Declared("q_tpch_q17", tpchQ17, Some(tpchQ17Sql)),
+    Declared("q_tpch_q22", tpchQ22, Some(tpchQ22Sql)),
+    Declared("q_tpch_q16", tpchQ16, Some(tpchQ16Sql)),
+    Declared("q_tpch_q21", tpchQ21, Some(tpchQ21Sql)),
+    Declared("q_tpch_q4", tpchQ4, Some(tpchQ4Sql)),
+    Declared("q_tpch_q13", tpchQ13, Some(tpchQ13Sql)),
+    Declared("q_tpch_q19", tpchQ19, Some(tpchQ19Sql)),
+    Declared("q_tpch_q7", tpchQ7, Some(tpchQ7Sql)),
+    Declared("q_tpch_q5", tpchQ5, Some(tpchQ5Sql)),
+    Declared("q_tpch_q3", tpchQ3, Some(tpchQ3Sql)),
+    Declared("q_tpch_q14", tpchQ14, Some(tpchQ14Sql)),
+    Declared("q_tpch_q18", tpchQ18, Some(tpchQ18Sql)),
+    Declared("q_percent_rank", percentRank, Some(percentRankSql)),
+    Declared("q_moments", moments, Some(momentsSql)))
 }

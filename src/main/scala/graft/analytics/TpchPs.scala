@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -388,17 +389,10 @@ object TpchPs {
          |GROUP BY l_shipmode
          |ORDER BY l_shipmode""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tpch_q2" -> (tpchQ2 _),
-    "q_tpch_q9" -> (tpchQ9 _),
-    "q_tpch_q11" -> (tpchQ11 _),
-    "q_tpch_q12" -> (tpchQ12 _),
-    "q_tpch_q20" -> (tpchQ20 _))
-
-  val oracles: Map[String, String] = Map(
-    "q_tpch_q2" -> tpchQ2Sql,
-    "q_tpch_q9" -> tpchQ9Sql,
-    "q_tpch_q11" -> tpchQ11Sql,
-    "q_tpch_q12" -> tpchQ12Sql,
-    "q_tpch_q20" -> tpchQ20Sql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_tpch_q2", tpchQ2, Some(tpchQ2Sql)),
+    Declared("q_tpch_q9", tpchQ9, Some(tpchQ9Sql)),
+    Declared("q_tpch_q11", tpchQ11, Some(tpchQ11Sql)),
+    Declared("q_tpch_q12", tpchQ12, Some(tpchQ12Sql)),
+    Declared("q_tpch_q20", tpchQ20, Some(tpchQ20Sql)))
 }

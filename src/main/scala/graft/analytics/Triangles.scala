@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -162,9 +163,6 @@ object Triangles {
       |ORDER BY n_tri DESC, part
       |LIMIT 20""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_triangles" -> (triangles _))
-
-  val oracles: Map[String, String] = Map(
-    "x_triangles" -> trianglesSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_triangles", triangles, Some(trianglesSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -68,9 +69,6 @@ object Twap {
       |FROM agg WHERE dur_s > 0
       |ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_twap" -> (twap _))
-
-  val oracles: Map[String, String] = Map(
-    "x_twap" -> twapSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_twap", twap, Some(twapSql)))
 }

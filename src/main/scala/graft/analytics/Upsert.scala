@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -85,9 +86,6 @@ object Upsert {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_merge_upsert" -> (mergeUpsert _))
-
-  val oracles: Map[String, String] = Map(
-    "q_merge_upsert" -> mergeUpsertSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_merge_upsert", mergeUpsert, Some(mergeUpsertSql)))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Det
 
@@ -591,29 +592,16 @@ object Warehouse {
       |WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
       |ORDER BY day""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_quartiles_cont" -> (quartilesCont _),
-    "q_rolling_cov" -> (rollingCov _),
-    "x_winsorize" -> (winsorize _),
-    "q_table_stats" -> (tableStats _),
-    "q_scd2" -> (scd2 _),
-    "q_incr_agg" -> (incrAgg _),
-    "x_incr_join_mv" -> (incrJoinMv _),
-    "q_outliers" -> (outliers _),
-    "q_sample_stratified" -> (sampleStratified _),
-    "q_concurrency" -> (concurrency _),
-    "q_range_count" -> (rangeCount _))
-
-  val oracles: Map[String, String] = Map(
-    "q_quartiles_cont" -> quartilesContSql,
-    "q_rolling_cov" -> rollingCovSql,
-    "x_winsorize" -> winsorizeSql,
-    "q_table_stats" -> tableStatsSql,
-    "q_scd2" -> scd2Sql,
-    "q_incr_agg" -> incrAggSql,
-    "x_incr_join_mv" -> incrJoinMvSql,
-    "q_outliers" -> outliersSql,
-    "q_sample_stratified" -> sampleStratifiedSql,
-    "q_concurrency" -> concurrencySql,
-    "q_range_count" -> rangeCountSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("q_quartiles_cont", quartilesCont, Some(quartilesContSql)),
+    Declared("q_rolling_cov", rollingCov, Some(rollingCovSql)),
+    Declared("x_winsorize", winsorize, Some(winsorizeSql)),
+    Declared("q_table_stats", tableStats, Some(tableStatsSql)),
+    Declared("q_scd2", scd2, Some(scd2Sql)),
+    Declared("q_incr_agg", incrAgg, Some(incrAggSql)),
+    Declared("x_incr_join_mv", incrJoinMv, Some(incrJoinMvSql)),
+    Declared("q_outliers", outliers, Some(outliersSql)),
+    Declared("q_sample_stratified", sampleStratified, Some(sampleStratifiedSql)),
+    Declared("q_concurrency", concurrency, Some(concurrencySql)),
+    Declared("q_range_count", rangeCount, Some(rangeCountSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, TimestampNTZType, TimestampType}
 
+import graft.Declared
 import graft.io.{Observed, Tables}
 
 /** Declarative data-quality checks — the reference's check language
@@ -639,31 +640,17 @@ object DataQuality {
       | n_violating * 1000000 // n_lhs AS violation_ppm
       |FROM audits ORDER BY fd""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dq_erasure_scope" -> (erasureScopeQuery _),
-    "dq_table_checksum" -> (tableChecksumQuery _),
-    "dq_fd_violation" -> (fdViolationQuery _),
-    "dq_schema_drift" -> (schemaDriftQuery _),
-    "dq_freshness" -> (freshnessQuery _),
-    "dq_min_row_count" -> (minRowCountQuery _),
-    "dq_required_columns" -> (requiredColumnsQuery _),
-    "dq_unique_column" -> (uniqueColumnQuery _),
-    "dq_null_ratio" -> (nullRatioQuery _),
-    "dq_value_range" -> (valueRangeQuery _),
-    "dq_fk_integrity" -> (fkIntegrityQuery _),
-    "dq_verdict" -> (verdictQuery _))
-
-  val oracles: Map[String, String] = Map(
-    "dq_erasure_scope" -> erasureScopeSql,
-    "dq_table_checksum" -> tableChecksumSql,
-    "dq_fd_violation" -> fdViolationSql,
-    "dq_schema_drift" -> schemaDriftSql,
-    "dq_freshness" -> freshnessSql,
-    "dq_min_row_count" -> minRowCountSql,
-    "dq_required_columns" -> requiredColumnsSql,
-    "dq_unique_column" -> uniqueColumnSql,
-    "dq_null_ratio" -> nullRatioSql,
-    "dq_value_range" -> valueRangeSql,
-    "dq_fk_integrity" -> fkIntegritySql,
-    "dq_verdict" -> verdictSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("dq_erasure_scope", erasureScopeQuery, Some(erasureScopeSql)),
+    Declared("dq_table_checksum", tableChecksumQuery, Some(tableChecksumSql)),
+    Declared("dq_fd_violation", fdViolationQuery, Some(fdViolationSql)),
+    Declared("dq_schema_drift", schemaDriftQuery, Some(schemaDriftSql)),
+    Declared("dq_freshness", freshnessQuery, Some(freshnessSql)),
+    Declared("dq_min_row_count", minRowCountQuery, Some(minRowCountSql)),
+    Declared("dq_required_columns", requiredColumnsQuery, Some(requiredColumnsSql)),
+    Declared("dq_unique_column", uniqueColumnQuery, Some(uniqueColumnSql)),
+    Declared("dq_null_ratio", nullRatioQuery, Some(nullRatioSql)),
+    Declared("dq_value_range", valueRangeQuery, Some(valueRangeSql)),
+    Declared("dq_fk_integrity", fkIntegrityQuery, Some(fkIntegritySql)),
+    Declared("dq_verdict", verdictQuery, Some(verdictSql)))
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import graft.Declared
+
 /** Ingestion operators — the engine-side analogues of the reference's
   * HTTP→S3 raw-zone path (ref /root/reference/operators/api_to_s3.py:50-77)
   * and JSON payload parsing (ref /root/reference/operators/data_quality_operator.py:69).
@@ -189,15 +191,9 @@ object Ingest {
       |GROUP BY event_type
       |ORDER BY event_type""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "ingest_json_raw" -> (ingestJsonRaw _),
-    "ingest_variant" -> (ingestVariant _),
-    "x_json_props" -> (jsonProps _),
-    "csv_replay_limit" -> (csvReplayLimit _))
-
-  val oracles: Map[String, String] = Map(
-    "ingest_json_raw" -> ingestJsonRawSql,
-    "ingest_variant" -> ingestVariantSql,
-    "x_json_props" -> jsonPropsSql,
-    "csv_replay_limit" -> csvReplayLimitSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("ingest_json_raw", ingestJsonRaw, Some(ingestJsonRawSql)),
+    Declared("ingest_variant", ingestVariant, Some(ingestVariantSql)),
+    Declared("x_json_props", jsonProps, Some(jsonPropsSql)),
+    Declared("csv_replay_limit", csvReplayLimit, Some(csvReplayLimitSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.functions.GraftFunctions
 import graft.io.Tables
 import graft.util.Ckpt._
@@ -502,15 +503,9 @@ object AnnMulti {
        |GROUP BY cc.nprobe
        |ORDER BY cc.nprobe""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_ann_recall_multi" -> (annRecallMulti _),
-    "x_ann_multiprobe_topk" -> (multiprobeTopK _),
-    "x_ann_filtered_topk" -> (filteredTopK _),
-    "x_ann_nprobe_curve" -> (annNprobeCurve _))
-
-  val oracles: Map[String, String] = Map(
-    "x_ann_recall_multi" -> annRecallMultiSql,
-    "x_ann_multiprobe_topk" -> multiprobeTopKSql,
-    "x_ann_filtered_topk" -> filteredTopKSql,
-    "x_ann_nprobe_curve" -> annNprobeCurveSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_ann_recall_multi", annRecallMulti, Some(annRecallMultiSql)),
+    Declared("x_ann_multiprobe_topk", multiprobeTopK, Some(multiprobeTopKSql)),
+    Declared("x_ann_filtered_topk", filteredTopK, Some(filteredTopKSql)),
+    Declared("x_ann_nprobe_curve", annNprobeCurve, Some(annNprobeCurveSql)))
 }

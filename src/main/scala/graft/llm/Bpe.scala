@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -122,9 +123,6 @@ object Bpe {
        |ORDER BY round""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_bpe_train" -> (bpeTrain _))
-
-  val oracles: Map[String, String] = Map(
-    "x_bpe_train" -> bpeTrainSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_bpe_train", bpeTrain, Some(bpeTrainSql)))
 }

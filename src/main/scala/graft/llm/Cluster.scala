@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Declared
 import graft.util.Ckpt._
 
 /** Duplicate-cluster assignment — the step between "candidate pairs" and "a
@@ -283,13 +284,8 @@ object Cluster {
        |ORDER BY cluster_size""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_dedup_cluster" -> (dedupCluster _),
-    "x_dedup_cluster_verified" -> (dedupClusterVerified _),
-    "x_cc_size_dist" -> (clusterSizeDist _))
-
-  val oracles: Map[String, String] = Map(
-    "x_dedup_cluster" -> dedupClusterSql,
-    "x_dedup_cluster_verified" -> dedupClusterVerifiedSql,
-    "x_cc_size_dist" -> clusterSizeDistSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_dedup_cluster", dedupCluster, Some(dedupClusterSql)),
+    Declared("x_dedup_cluster_verified", dedupClusterVerified, Some(dedupClusterVerifiedSql)),
+    Declared("x_cc_size_dist", clusterSizeDist, Some(clusterSizeDistSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -138,9 +139,6 @@ object Contain {
        |WHERE $TauDen * len(list_intersect(a.s, b.s)) >= $TauNum * len(a.s)
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_containment_join" -> (containmentJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "x_containment_join" -> containmentJoinSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_containment_join", containmentJoin, Some(containmentJoinSql)))
 }

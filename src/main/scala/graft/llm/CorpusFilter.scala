@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -415,21 +416,12 @@ object CorpusFilter {
        |FROM rows_
        |ORDER BY rule""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_token_hist" -> (tokenHist _),
-    "x_bigram_stats" -> (bigramStats _),
-    "x_oov_rate" -> (oovRate _),
-    "x_lm_rarity" -> (lmRarity _),
-    "x_quality_filter" -> (qualityFilter _),
-    "x_pareto_front" -> (paretoFront _),
-    "x_gopher_rules" -> (gopherRules _))
-
-  val oracles: Map[String, String] = Map(
-    "x_token_hist" -> tokenHistSql,
-    "x_bigram_stats" -> bigramStatsSql,
-    "x_oov_rate" -> oovRateSql,
-    "x_lm_rarity" -> lmRaritySql,
-    "x_quality_filter" -> qualityFilterSql,
-    "x_pareto_front" -> paretoFrontSql,
-    "x_gopher_rules" -> gopherRulesSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_token_hist", tokenHist, Some(tokenHistSql)),
+    Declared("x_bigram_stats", bigramStats, Some(bigramStatsSql)),
+    Declared("x_oov_rate", oovRate, Some(oovRateSql)),
+    Declared("x_lm_rarity", lmRarity, Some(lmRaritySql)),
+    Declared("x_quality_filter", qualityFilter, Some(qualityFilterSql)),
+    Declared("x_pareto_front", paretoFront, Some(paretoFrontSql)),
+    Declared("x_gopher_rules", gopherRules, Some(gopherRulesSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** The per-source "dataset card" rollup — the one-screen summary a corpus
@@ -145,13 +146,8 @@ object DataCard {
        |GROUP BY 1, 2
        |ORDER BY source_x, source_y""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_dataset_card" -> (datasetCard _),
-    "x_lang_mismatch" -> (langMismatch _),
-    "x_source_overlap" -> (sourceOverlap _))
-
-  val oracles: Map[String, String] = Map(
-    "x_dataset_card" -> datasetCardSql,
-    "x_lang_mismatch" -> langMismatchSql,
-    "x_source_overlap" -> sourceOverlapSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_dataset_card", datasetCard, Some(datasetCardSql)),
+    Declared("x_lang_mismatch", langMismatch, Some(langMismatchSql)),
+    Declared("x_source_overlap", sourceOverlap, Some(sourceOverlapSql)))
 }

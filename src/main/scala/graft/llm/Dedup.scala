@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -566,25 +567,14 @@ object Dedup {
        |FROM r WHERE rk = 1
        |ORDER BY kept_doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_dedup_keep_best" -> (dedupKeepBest _),
-    "x_chunk_dedup" -> (chunkDedup _),
-    "x_dedup_incr" -> (dedupIncr _),
-    "x_dedup_exact" -> (dedupExact _),
-    "x_dedup_minhash" -> (dedupMinhash _),
-    "x_dedup_jaccard" -> (dedupJaccard _),
-    "x_lsh_precision" -> (lshPrecision _),
-    "x_dup_inflation" -> (dupInflation _),
-    "x_cross_dedup" -> (crossDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "x_dedup_keep_best" -> dedupKeepBestSql,
-    "x_chunk_dedup" -> chunkDedupSql,
-    "x_dedup_incr" -> dedupIncrSql,
-    "x_dedup_exact" -> dedupExactSql,
-    "x_dedup_minhash" -> dedupMinhashSql,
-    "x_dedup_jaccard" -> dedupJaccardSql,
-    "x_lsh_precision" -> lshPrecisionSql,
-    "x_dup_inflation" -> dupInflationSql,
-    "x_cross_dedup" -> crossDedupSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_dedup_keep_best", dedupKeepBest, Some(dedupKeepBestSql)),
+    Declared("x_chunk_dedup", chunkDedup, Some(chunkDedupSql)),
+    Declared("x_dedup_incr", dedupIncr, Some(dedupIncrSql)),
+    Declared("x_dedup_exact", dedupExact, Some(dedupExactSql)),
+    Declared("x_dedup_minhash", dedupMinhash, Some(dedupMinhashSql)),
+    Declared("x_dedup_jaccard", dedupJaccard, Some(dedupJaccardSql)),
+    Declared("x_lsh_precision", lshPrecision, Some(lshPrecisionSql)),
+    Declared("x_dup_inflation", dupInflation, Some(dupInflationSql)),
+    Declared("x_cross_dedup", crossDedup, Some(crossDedupSql)))
 }

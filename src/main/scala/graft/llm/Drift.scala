@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Corpus distribution monitoring — the checks a training-data pipeline
@@ -169,13 +170,8 @@ object Drift {
       |WINDOW w AS (ORDER BY n_tokens DESC, source)
       |ORDER BY rk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_drift_tv" -> (driftTv _),
-    "x_vocab_coverage" -> (vocabCoverage _),
-    "x_source_tail" -> (sourceTail _))
-
-  val oracles: Map[String, String] = Map(
-    "x_drift_tv" -> driftTvSql,
-    "x_vocab_coverage" -> vocabCoverageSql,
-    "x_source_tail" -> sourceTailSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_drift_tv", driftTv, Some(driftTvSql)),
+    Declared("x_vocab_coverage", vocabCoverage, Some(vocabCoverageSql)),
+    Declared("x_source_tail", sourceTail, Some(sourceTailSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Edit-distance similarity join (entity resolution / fuzzy linkage) via
@@ -101,9 +102,6 @@ object EditJoin {
        |WHERE levenshtein(v.vname, t.name) <= ${Tau}
        |ORDER BY vid, doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_edit_join" -> (editJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "x_edit_join" -> editJoinSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_edit_join", editJoin, Some(editJoinSql)))
 }

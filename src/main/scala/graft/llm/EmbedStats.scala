@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Per-dimension embedding QA — the health check that runs BEFORE any ANN
@@ -63,9 +64,6 @@ object EmbedStats {
       |GROUP BY dim
       |ORDER BY dim""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_embed_dim_stats" -> (embedDimStats _))
-
-  val oracles: Map[String, String] = Map(
-    "x_embed_dim_stats" -> embedDimStatsSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_embed_dim_stats", embedDimStats, Some(embedDimStatsSql)))
 }

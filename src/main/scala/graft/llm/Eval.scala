@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.analytics.PrefixSum
 import graft.io.Tables
 import graft.util.Select
@@ -302,13 +303,8 @@ object Eval {
        | CAST(max_gap AS BIGINT) * 1000000 // (n_pos * n_neg) AS ks_ppm
        |FROM g""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_auc" -> (auc _),
-    "x_calibration_bins" -> (calibrationBins _),
-    "x_ks_stat" -> (ksStat _))
-
-  val oracles: Map[String, String] = Map(
-    "x_auc" -> aucSql,
-    "x_calibration_bins" -> calibrationBinsSql,
-    "x_ks_stat" -> ksStatSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_auc", auc, Some(aucSql)),
+    Declared("x_calibration_bins", calibrationBins, Some(calibrationBinsSql)),
+    Declared("x_ks_stat", ksStat, Some(ksStatSql)))
 }

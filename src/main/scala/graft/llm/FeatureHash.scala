@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** The hashing trick (signed feature hashing) — project an unbounded
@@ -60,9 +61,6 @@ object FeatureHash {
        |FROM f GROUP BY 1
        |ORDER BY bucket""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_feature_hash" -> (featureHash _))
-
-  val oracles: Map[String, String] = Map(
-    "x_feature_hash" -> featureHashSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_feature_hash", featureHash, Some(featureHashSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.llm.Similarity.cosineFast
 
@@ -198,9 +199,6 @@ object Ivf {
        |FROM ranked WHERE rnk <= $TopKK
        |ORDER BY query_id, rnk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_ivf_topk" -> (ivfTopK _))
-
-  val oracles: Map[String, String] = Map(
-    "x_ivf_topk" -> ivfTopKSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_ivf_topk", ivfTopK, Some(ivfTopKSql)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -197,9 +198,6 @@ object IvfPq {
        |ORDER BY query_id, rnk""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_ivfpq_topk" -> (ivfpqTopK _))
-
-  val oracles: Map[String, String] = Map(
-    "x_ivfpq_topk" -> ivfpqTopKSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_ivfpq_topk", ivfpqTopK, Some(ivfpqTopKSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Heuristic language identification — stopword-profile scoring (the n-gram
@@ -91,9 +92,6 @@ object LangId {
        |ORDER BY doc_id""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_lang_id" -> (langIdQuery _))
-
-  val oracles: Map[String, String] = Map(
-    "x_lang_id" -> langIdSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_lang_id", langIdQuery, Some(langIdSql)))
 }

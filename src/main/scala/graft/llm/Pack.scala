@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Training-batch assembly operators — the last mile of an LLM data
@@ -533,25 +534,14 @@ object Pack {
        |WHERE r.pick_rank <= q.quota
        |ORDER BY r.doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_quota_sample" -> (quotaSample _),
-    "x_token_budget" -> (tokenBudget _),
-    "x_pack_stats" -> (packStats _),
-    "x_split_assign" -> (splitAssign _),
-    "x_repetition_filter" -> (repetitionFilter _),
-    "x_seq_pack" -> (seqPack _),
-    "x_dataset_mix" -> (datasetMix _),
-    "x_contamination" -> (contamination _),
-    "x_doc_split" -> (docSplit _))
-
-  val oracles: Map[String, String] = Map(
-    "x_quota_sample" -> quotaSampleSql,
-    "x_token_budget" -> tokenBudgetSql,
-    "x_pack_stats" -> packStatsSql,
-    "x_split_assign" -> splitAssignSql,
-    "x_repetition_filter" -> repetitionFilterSql,
-    "x_seq_pack" -> seqPackSql,
-    "x_dataset_mix" -> datasetMixSql,
-    "x_contamination" -> contaminationSql,
-    "x_doc_split" -> docSplitSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_quota_sample", quotaSample, Some(quotaSampleSql)),
+    Declared("x_token_budget", tokenBudget, Some(tokenBudgetSql)),
+    Declared("x_pack_stats", packStats, Some(packStatsSql)),
+    Declared("x_split_assign", splitAssign, Some(splitAssignSql)),
+    Declared("x_repetition_filter", repetitionFilter, Some(repetitionFilterSql)),
+    Declared("x_seq_pack", seqPack, Some(seqPackSql)),
+    Declared("x_dataset_mix", datasetMix, Some(datasetMixSql)),
+    Declared("x_contamination", contamination, Some(contaminationSql)),
+    Declared("x_doc_split", docSplit, Some(docSplitSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Product quantization — the memory side of billion-scale ANN (Jégou et
@@ -136,9 +137,6 @@ object Pq {
        |GROUP BY vec_id
        |ORDER BY vec_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_pq_assign" -> (pqAssign _))
-
-  val oracles: Map[String, String] = Map(
-    "x_pq_assign" -> pqAssignSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_pq_assign", pqAssign, Some(pqAssignSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Privacy operators for training-data pipelines: PII redaction (the
@@ -180,13 +181,8 @@ object Privacy {
        |FROM pud GROUP BY day
        |ORDER BY day""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_pii_scrub" -> (piiScrub _),
-    "x_k_anon" -> (kAnon _),
-    "x_dp_clip" -> (dpClip _))
-
-  val oracles: Map[String, String] = Map(
-    "x_pii_scrub" -> piiScrubSql,
-    "x_k_anon" -> kAnonSql,
-    "x_dp_clip" -> dpClipSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_pii_scrub", piiScrub, Some(piiScrubSql)),
+    Declared("x_k_anon", kAnon, Some(kAnonSql)),
+    Declared("x_dp_clip", dpClip, Some(dpClipSql)))
 }

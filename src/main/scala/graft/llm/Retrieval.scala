@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.functions.GraftFunctions
 import graft.io.Tables
 
@@ -276,11 +277,7 @@ object Retrieval {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_bm25_topk" -> (bm25TopK _),
-    "x_rrf_hybrid" -> (rrfHybrid _))
-
-  val oracles: Map[String, String] = Map(
-    "x_bm25_topk" -> bm25TopKSql,
-    "x_rrf_hybrid" -> rrfHybridSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_bm25_topk", bm25TopK, Some(bm25TopKSql)),
+    Declared("x_rrf_hybrid", rrfHybrid, Some(rrfHybridSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.llm.Similarity.cosineFast
 
@@ -124,9 +125,6 @@ object Semantic {
        |GROUP BY kb
        |ORDER BY loser_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_semantic_dedup" -> (semanticDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "x_semantic_dedup" -> semanticDedupSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_semantic_dedup", semanticDedup, Some(semanticDedupSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** SimHash near-duplicate detection over `documents` — the bit-vote companion
@@ -161,11 +162,7 @@ object SimHash {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_simhash" -> (simhashQuery _),
-    "x_dedup_simhash" -> (dedupSimhash _))
-
-  val oracles: Map[String, String] = Map(
-    "x_simhash" -> simhashSql,
-    "x_dedup_simhash" -> dedupSimhashSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_simhash", simhashQuery, Some(simhashSql)),
+    Declared("x_dedup_simhash", dedupSimhash, Some(dedupSimhashSql)))
 }

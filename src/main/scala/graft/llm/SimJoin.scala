@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
@@ -145,9 +146,6 @@ object SimJoin {
        |  >= $TauNum * (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)))
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_jaccard_join" -> (jaccardJoin _))
-
-  val oracles: Map[String, String] = Map(
-    "x_jaccard_join" -> jaccardJoinSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_jaccard_join", jaccardJoin, Some(jaccardJoinSql)))
 }

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.functions.GraftFunctions
 import graft.io.Tables
 import graft.util.Ckpt._
@@ -817,31 +818,17 @@ object Similarity {
        |ORDER BY pts.threshold""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_dedup_rate_curve" -> (dedupRateCurve _),
-    "x_ann_recall" -> (annRecall _),
-    "x_hard_negatives" -> (hardNegatives _),
-    "x_knn_graph" -> (knnGraph _),
-    "x_label_purity" -> (labelPurity _),
-    "x_sql_cosine" -> (sqlCosine _),
-    "x_sim_topk" -> (simTopK _),
-    "x_sim_bucketed" -> (simBucketed _),
-    "x_sim_int8" -> (simInt8 _),
-    "x_dedup_embed" -> (dedupEmbed _),
-    "x_embed_centroid" -> (embedCentroid _),
-    "x_rand_proj" -> (randProj _))
-
-  val oracles: Map[String, String] = Map(
-    "x_dedup_rate_curve" -> dedupRateCurveSql,
-    "x_ann_recall" -> annRecallSql,
-    "x_hard_negatives" -> hardNegativesSql,
-    "x_knn_graph" -> knnGraphSql,
-    "x_label_purity" -> labelPuritySql,
-    "x_sql_cosine" -> sqlCosineSql,
-    "x_sim_topk" -> simTopKSql,
-    "x_sim_bucketed" -> simBucketedSql,
-    "x_sim_int8" -> simInt8Sql,
-    "x_dedup_embed" -> dedupEmbedSql,
-    "x_embed_centroid" -> embedCentroidSql,
-    "x_rand_proj" -> randProjSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_dedup_rate_curve", dedupRateCurve, Some(dedupRateCurveSql)),
+    Declared("x_ann_recall", annRecall, Some(annRecallSql)),
+    Declared("x_hard_negatives", hardNegatives, Some(hardNegativesSql)),
+    Declared("x_knn_graph", knnGraph, Some(knnGraphSql)),
+    Declared("x_label_purity", labelPurity, Some(labelPuritySql)),
+    Declared("x_sql_cosine", sqlCosine, Some(sqlCosineSql)),
+    Declared("x_sim_topk", simTopK, Some(simTopKSql)),
+    Declared("x_sim_bucketed", simBucketed, Some(simBucketedSql)),
+    Declared("x_sim_int8", simInt8, Some(simInt8Sql)),
+    Declared("x_dedup_embed", dedupEmbed, Some(dedupEmbedSql)),
+    Declared("x_embed_centroid", embedCentroid, Some(embedCentroidSql)),
+    Declared("x_rand_proj", randProj, Some(randProjSql)))
 }

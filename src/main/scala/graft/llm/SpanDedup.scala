@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Duplicated-span detection — the exact-substring tier of training-data
@@ -156,11 +157,7 @@ object SpanDedup {
        |FROM pd
        |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_span_dedup" -> (spanDedup _),
-    "x_novelty" -> (novelty _))
-
-  val oracles: Map[String, String] = Map(
-    "x_span_dedup" -> spanDedupSql,
-    "x_novelty" -> noveltySql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_span_dedup", spanDedup, Some(spanDedupSql)),
+    Declared("x_novelty", novelty, Some(noveltySql)))
 }

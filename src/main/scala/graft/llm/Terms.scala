@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Term-weighting and n-gram operators — the vocabulary-analysis tier of a
@@ -247,15 +248,9 @@ object Terms {
       |ORDER BY n DESC, pair
       |LIMIT 30""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_tfidf" -> (tfidf _),
-    "x_ngrams" -> (ngrams _),
-    "x_pmi_pairs" -> (pmiPairs _),
-    "x_bpe_merge" -> (bpeMerge _))
-
-  val oracles: Map[String, String] = Map(
-    "x_tfidf" -> tfidfSql,
-    "x_ngrams" -> ngramsSql,
-    "x_pmi_pairs" -> pmiPairsSql,
-    "x_bpe_merge" -> bpeMergeSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_tfidf", tfidf, Some(tfidfSql)),
+    Declared("x_ngrams", ngrams, Some(ngramsSql)),
+    Declared("x_pmi_pairs", pmiPairs, Some(pmiPairsSql)),
+    Declared("x_bpe_merge", bpeMerge, Some(bpeMergeSql)))
 }

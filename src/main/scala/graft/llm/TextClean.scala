@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Text-cleaning operators for training-data pipelines — the normalize →
@@ -90,9 +91,6 @@ object TextClean {
        |FROM documents
        |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_text_clean" -> (textClean _))
-
-  val oracles: Map[String, String] = Map(
-    "x_text_clean" -> textCleanSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_text_clean", textClean, Some(textCleanSql)))
 }

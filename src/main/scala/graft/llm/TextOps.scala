@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Text-analysis operators for training-data pipelines over `documents`:
@@ -222,21 +223,12 @@ object TextOps {
       |FROM ranked WHERE rk <= 3
       |ORDER BY source, rk""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_text_stats" -> (textStats _),
-    "x_lang_stats" -> (langStats _),
-    "x_quality_score" -> (qualityScore _),
-    "x_token_bpe" -> (tokenBpe _),
-    "x_fertility" -> (fertility _),
-    "x_fingerprint" -> (fingerprint _),
-    "x_topk_agg" -> (topkAgg _))
-
-  val oracles: Map[String, String] = Map(
-    "x_text_stats" -> textStatsSql,
-    "x_lang_stats" -> langStatsSql,
-    "x_quality_score" -> qualityScoreSql,
-    "x_token_bpe" -> tokenBpeSql,
-    "x_fertility" -> fertilitySql,
-    "x_fingerprint" -> fingerprintSql,
-    "x_topk_agg" -> topkAggSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_text_stats", textStats, Some(textStatsSql)),
+    Declared("x_lang_stats", langStats, Some(langStatsSql)),
+    Declared("x_quality_score", qualityScore, Some(qualityScoreSql)),
+    Declared("x_token_bpe", tokenBpe, Some(tokenBpeSql)),
+    Declared("x_fertility", fertility, Some(fertilitySql)),
+    Declared("x_fingerprint", fingerprint, Some(fingerprintSql)),
+    Declared("x_topk_agg", topkAgg, Some(topkAggSql)))
 }

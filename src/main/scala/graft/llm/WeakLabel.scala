@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Weak supervision — programmatic labeling by keyword heuristics with a
@@ -106,9 +107,6 @@ object WeakLabel {
        |ORDER BY label""".stripMargin
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_weak_label" -> (weakLabel _))
-
-  val oracles: Map[String, String] = Map(
-    "x_weak_label" -> weakLabelSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_weak_label", weakLabel, Some(weakLabelSql)))
 }

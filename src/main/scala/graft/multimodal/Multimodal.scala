@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Tables
 
 /** Multimodal columns for training-data pipelines: image/audio/video as
@@ -526,14 +527,10 @@ object Multimodal {
       .orderBy($"min_asset")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x_mm_catalog" -> (mmCatalog _),
-    "x_mm_bytes" -> (mmBytes _),
-    "x_mm_phash_dedup" -> (mmPhashDedup _),
-    "x_mm_audio_stats" -> (mmAudioStats _))
-
-  val oracles: Map[String, String] = Map(
-    "x_mm_catalog" -> mmCatalogSql,
-    "x_mm_bytes" -> mmBytesSql)
-    // x_mm_phash_dedup, x_mm_audio_stats: deliberately no oracle — see scaladocs
+  val declared: Seq[Declared] = Seq(
+    Declared("x_mm_catalog", mmCatalog, Some(mmCatalogSql)),
+    Declared("x_mm_bytes", mmBytes, Some(mmBytesSql)),
+    // deliberately no oracle: see the builders' scaladocs
+    Declared("x_mm_phash_dedup", mmPhashDedup, None),
+    Declared("x_mm_audio_stats", mmAudioStats, None))
 }

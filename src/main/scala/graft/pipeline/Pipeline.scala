@@ -160,9 +160,8 @@ object Pipeline {
     // as parquet and must not crash the run: skip the write and hand the
     // empty frame straight to the checks, so min_row_count FAILS as a
     // verdict instead of the whole run dying on an unreadable raw zone.
-    // `written` tells the result whether rawPath holds THIS run's data —
-    // on the skip path rawPath is empty so a consumer cannot mistake a
-    // stale or nonexistent directory for this run's output.
+    // `written` only decides rawPath: on the skip path it is empty, so a
+    // consumer cannot mistake a nonexistent directory for this run's output.
     val (readBack, written) =
       if (ingested.schema.isEmpty) (ingested, false)
       else {
@@ -183,8 +182,9 @@ object Pipeline {
     }
     val (results, rows) = DataQuality.runAllCounted(readBack, renderedChecks)
     val passed = DataQuality.verdict(results)
-    // an empty date keeps no partition (the direct write left one empty file)
-    if (written && rows == 0) Ingest.dropRawZone(spark, root, ds)
+    // An empty date keeps no partition: neither the one empty file the
+    // direct write leaves nor, on the skip path, an earlier run's data.
+    if (rows == 0) Ingest.dropRawZone(spark, root, ds)
 
     // 6. Branch: alert on failure, no-op on success (O9–O11).
     if (!passed)

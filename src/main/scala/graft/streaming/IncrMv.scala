@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Declared
 import graft.io.Jdbc
 import graft.util.Det
 
@@ -437,8 +438,6 @@ object IncrMv {
       |GROUP BY user_id
       |ORDER BY user_id""".stripMargin
 
-  val queries: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] =
-    Map("x_mv_fold" -> (mvFold _))
-
-  val oracles: Map[String, String] = Map("x_mv_fold" -> mvFoldSql)
+  val declared: Seq[Declared] = Seq(
+    Declared("x_mv_fold", mvFold, Some(mvFoldSql)))
 }

@@ -121,20 +121,31 @@ class PipelineRunSpec extends SparkSpec {
     import graft.dq._
     val dir = tmp()
     val csv = java.nio.file.Paths.get(s"$dir/in.csv")
-    val s = PipelineSpec(PipelineInfo("rerun", "o", "@daily", Nil, ""),
+    val fileSpec = PipelineSpec(PipelineInfo("rerun", "o", "@daily", Nil, ""),
       FileSource("csv", csv.toString, Map("header" -> "true")),
       RawZoneDest(s"$dir/raw", "users"),
       Seq(MinRowCount(1)))
+    val bucket = tmp()
+    // (spec, raw root, fetcher after staging 2 rows or none): a header-only
+    // CSV still has columns; an API '[]' has none, so its write is skipped
+    val inputs = Seq[(PipelineSpec, String, Boolean => Fetcher)](
+      (fileSpec, s"$dir/raw/users", { rows =>
+        java.nio.file.Files.writeString(csv, if (rows) "id,name\n1,Ada\n2,Bob\n" else "id,name\n")
+        new StubFetcher("")
+      }),
+      (spec(Seq(MinRowCount(1)), bucket), s"$bucket/raw/users", { rows =>
+        new StubFetcher(if (rows) """[{"id": 1}, {"id": 2}]""" else "[]")
+      }))
     val ds = LocalDate.parse("2024-05-01")
-    java.nio.file.Files.writeString(csv, "id,name\n1,Ada\n2,Bob\n")
-    val first = Pipeline.run(spark, s, ds, new StubFetcher(""), new RecordingAlerts)
-    assert(first.passed && first.rows == 2)
-    java.nio.file.Files.writeString(csv, "id,name\n")
-    val rerun = Pipeline.run(spark, s, ds, new StubFetcher(""), new RecordingAlerts)
-    assert(!rerun.passed && rerun.rows == 0)
-    assert(rerun.results == Seq(
-      CheckResult("min_row_count", passed = false, "observed=0 threshold=1")))
-    assert(!DataQuality.pathExists(spark, s"${rerun.rawPath}/ds=2024-05-01"))
+    for ((s, root, source) <- inputs) {
+      val first = Pipeline.run(spark, s, ds, source(true), new RecordingAlerts)
+      assert(first.passed && first.rows == 2, root)
+      val rerun = Pipeline.run(spark, s, ds, source(false), new RecordingAlerts)
+      assert(!rerun.passed && rerun.rows == 0, root)
+      assert(rerun.results == Seq(
+        CheckResult("min_row_count", passed = false, "observed=0 threshold=1")), root)
+      assert(!DataQuality.pathExists(spark, s"$root/ds=2024-05-01"), root)
+    }
   }
 
   test("the run takes its row count from the check aggregate, not a count()") {
