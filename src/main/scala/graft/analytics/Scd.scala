@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -14,8 +14,8 @@ import graft.io.Tables
   * (§2.3 warehouse contract; the reference's orders feed is exactly the
   * change-capture input such a build consumes).
   *
-  * Run detection is the gaps-and-islands pattern: lag() flags changes,
-  * a running sum numbers runs, one aggregate per (user, run) keeps
+  * Run detection is the gaps-and-islands pattern ([[Islands]]): a run
+  * opens where the event type changes, one aggregate per (user, run) keeps
   * first/last/extent, and lead() closes each interval with the next run's
   * start — half-open intervals, so consecutive rows tile the timeline
   * exactly. All timestamps integer µs; ties broken by event_id.
@@ -36,29 +36,34 @@ object Scd {
   private def history(spark: SparkSession, dir: String): DataFrame =
     historyOver(Tables.events(spark, dir))
 
+  /** The run rule, written once: an event opens a run when the previous
+    * event's type is NULL (or there is none) or differs from its own. The
+    * three-valued <> reads a NULL current type after a non-null one as
+    * "continues".
+    */
+  private val opensRun: (Column, Column) => Column =
+    (prev, cur) => prev.isNull || prev =!= cur
+
+  private def runOrder: Seq[Column] =
+    Seq(col("tus").asc_nulls_first, col("event_id").asc)
+
+  private def withTus(events: DataFrame): DataFrame =
+    events.select(col("event_id"), col("user_id"), col("event_type"),
+      unix_micros(col("ts").cast("timestamp")).as("tus"))
+
   /** Frame-parametric core over any (event_id, user_id, event_type, ts)
     * frame — the seam the generated-data property suite drives.
     */
-  def historyOver(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    val byUser = Window.partitionBy($"user_id").orderBy($"tus".asc, $"event_id".asc)
-    val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val runLabeled = events
-      .select($"event_id", $"user_id", $"event_type",
-        unix_micros($"ts".cast("timestamp")).as("tus"))
-      .withColumn("chg",
-        when(lag($"event_type", 1).over(byUser).isNull ||
-          lag($"event_type", 1).over(byUser) =!= $"event_type", 1L).otherwise(0L))
-      .withColumn("run", sum($"chg").over(running))
-    runRollup(runLabeled)
-  }
+  def historyOver(events: DataFrame): DataFrame =
+    runRollup(Islands.number(withTus(events), "user_id", runOrder, col("event_type"),
+      opensRun, "run"))
 
   /** The shared rollup tail: run-labeled events → the 7-column interval
     * contract. ONE definition, so the atomic and capped plans can never
     * drift on the output shape their shared oracle pins.
     *
     * min_by on the event order, not first(): a run is opened by its first
-    * event and possibly continued by NULL-typed events (the chg rule's
+    * event and possibly continued by NULL-typed events (the run rule's
     * three-valued <> reads a null current type as "continues"), so first()
     * could nondeterministically surface a continuation NULL where the
     * opener's type is the contract. min_by's struct ordering is
@@ -78,91 +83,19 @@ object Scd {
   }
 
   /** Type-2 history WITHOUT the atomic per-user window partition — the
-    * bot-burst mitigation [[graft.analytics.Sessions.sessionizedCappedOver]]
-    * proved for sessionization, applied to run detection (the round-10
-    * verdict named this family's remaining atomic windows). Exact, not
-    * approximate: same rows as [[historyOver]] on any input, pinned by the
-    * shared `x_scd2_build` oracle and the parity spec (NULL event types and
-    * NULL timestamps included).
-    *
-    * Shape: range-partition on (user_id, tus, event_id) — a hot user's
-    * timeline splits across slices because the timestamp is in the sort
-    * key, so every slice is ~n/slices rows REGARDLESS of key skew — then
-    * number runs per (slice, user) chunk with the ordinary lag+running-sum
-    * window (max window partition = slice size, not user history), and
-    * stitch chunk boundaries over the per-(slice, user) summary frame: a
-    * chunk's first event provisionally opens a run; if the previous chunk's
-    * LAST event type equals it under the row rule's three-valued compare
-    * (`prev IS NULL OR prev <> cur` opens; anything else — including a
-    * NULL current type — continues), the stitch folds it in by shifting
-    * the chunk's run ids down one. A user's stitch window holds at most
-    * `slices` rows. The run rollup then aggregates on (user_id, run) —
-    * hash-partitioned on BOTH keys, so a bot user's events spread across
-    * reducers by run — and only the interval-closing lead() runs on a
-    * per-user partition, over the RUNS frame (one row per state change,
-    * ≪ events; a window partition there grows with how often a user's
-    * state changes, not with event volume).
+    * bot-burst mitigation [[Sessions.sessionizedCappedOver]] applies to
+    * sessionization, through the same [[Islands.numberCapped]] kernel.
+    * Exact, not approximate: same rows as [[historyOver]] on any input,
+    * pinned by the shared `x_scd2_build` oracle and the parity spec (NULL
+    * event types and NULL timestamps included). The run rollup then
+    * aggregates on (user_id, run) — hash-partitioned on BOTH keys, so a
+    * bot user's events spread across reducers by run — and only the
+    * interval-closing lead() runs on a per-user partition, over the RUNS
+    * frame (one row per state change, ≪ events).
     */
-  def historyCappedOver(events: DataFrame, slices: Int = 0): DataFrame = {
-    import events.sparkSession.implicits._
-    import graft.util.Ckpt._
-    val spark = events.sparkSession
-    val n = if (slices > 0) slices else spark.sparkContext.defaultParallelism
-    val sliced = events
-      .select($"event_id", $"user_id", $"event_type",
-        unix_micros($"ts".cast("timestamp")).as("tus"))
-      .repartitionByRange(n, $"user_id", $"tus".asc_nulls_first, $"event_id")
-      .withColumn("__pid", spark_partition_id())
-    val wChunk = Window.partitionBy($"__pid", $"user_id")
-      .orderBy($"tus".asc_nulls_first, $"event_id".asc)
-    // The ONE corpus-sized checkpoint, and it is load-bearing three ways:
-    // `local` feeds both the boundary-summary branch and the final join's
-    // big side, so without it the chunk sort+window — the operator's one
-    // corpus-sized step — would execute once per consumer (exchange reuse
-    // shares the shuffle, not the sort; the round-10 Sessions finding);
-    // the single eager materialization is also what pins the sampled
-    // range bounds and the spark_partition_id slice assignment both
-    // consumers must agree on; and it carries the hash(__pid, user_id)
-    // window layout across the lineage cut. (A second checkpoint on
-    // `sliced` would pin nothing more — round-11 self-review.)
-    val local = sliced
-      .withColumn("prev_type", lag($"event_type", 1).over(wChunk))
-      .withColumn("chg",
-        when($"prev_type".isNull || $"prev_type" =!= $"event_type", 1L)
-          .otherwise(0L))
-      .withColumn("local_run", sum($"chg")
-        .over(wChunk.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("rn", row_number().over(wChunk))
-      .ckptDisk()
-    // Boundary summary: the chunk's FIRST and LAST event types (min_by/
-    // max_by on the never-null row number — a NULL value is a real "that
-    // event's type was NULL", never an ambiguity) and its local run count.
-    val summary = local.groupBy($"__pid", $"user_id")
-      .agg(
-        min_by($"event_type", $"rn").as("first_type"),
-        max_by($"event_type", $"rn").as("last_type"),
-        max($"local_run").as("n_local"))
-    val wUser = Window.partitionBy($"user_id").orderBy($"__pid".asc)
-    val stitched = summary
-      .withColumn("prev_last", lag($"last_type", 1).over(wUser))
-      .withColumn("has_prev", row_number().over(wUser) > 1)
-      // The row-level chg rule evaluated at the chunk head with prev = the
-      // previous chunk's last event: fold (stitch=1) iff chg would be 0.
-      // prev NULL-the-type opens (isNull true); a NULL first_type with a
-      // non-null prev makes <> read NULL, which coalesces to "continues".
-      .withColumn("stitch",
-        when($"has_prev" &&
-          !coalesce($"prev_last".isNull || ($"prev_last" =!= $"first_type"),
-            lit(false)), 1L)
-          .otherwise(0L))
-      .withColumn("run_off",
-        coalesce(sum($"n_local" - $"stitch")
-          .over(wUser.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          - $"stitch")
-      .select($"__pid", $"user_id", $"run_off")
-    runRollup(local.join(stitched, Seq("__pid", "user_id"))
-      .withColumn("run", $"run_off" + $"local_run"))
-  }
+  def historyCappedOver(events: DataFrame, slices: Int = 0): DataFrame =
+    runRollup(Islands.numberCapped(withTus(events), "user_id", runOrder,
+      col("event_type"), opensRun, "run", slices))
 
   /** x_scd2_build — per-user type-2 history rows. */
   def scd2Build(spark: SparkSession, dir: String): DataFrame = {

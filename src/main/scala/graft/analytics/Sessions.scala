@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,122 +34,45 @@ object Sessions {
   def sessionized(spark: SparkSession, dir: String): DataFrame =
     sessionizedOver(Tables.events(spark, dir))
 
+  /** The session rule, written once: an event opens a session when it has
+    * no predecessor (or the predecessor's ts is NULL), or follows it by more
+    * than [[GapMicros]]. A NULL current ts reads "not > gap" and continues.
+    */
+  private val opensSession: (Column, Column) => Column =
+    (prev, cur) => prev.isNull || cur - prev > GapMicros
+
+  /** Per-user event order: derived `ts_us` (nulls first), ties by event_id. */
+  private def eventOrder: Seq[Column] =
+    Seq(col("ts_us").asc_nulls_first, col("event_id").asc)
+
+  private def withTsUs(events: DataFrame): DataFrame =
+    events.withColumn("ts_us", unix_micros(col("ts").cast("timestamp")))
+
   /** Frame-parametric core over any (event_id, user_id, ts, ...) frame —
     * the seam the scale-stress scenario drives (same pattern as
-    * [[Scd.historyOver]]).
+    * [[Scd.historyOver]]). Adds `ts_us` and `session_id`. Orders on the
+    * DERIVED ts_us, not raw ts — the key [[sessionizedCappedOver]]
+    * range-partitions on, so the two plans agree on event order for ANY ts
+    * column (a string ts whose lexical order disagrees with its parsed
+    * order, or values that cast to NULL, would otherwise diverge). For
+    * TimestampType ts, unix_micros is order-isomorphic to ts.
     */
-  def sessionizedOver(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    // Order on the DERIVED ts_us, not raw ts — the same key
-    // [[sessionizedCappedOver]] range-partitions and windows on, so the two
-    // plans agree on event order for ANY ts column (a string ts whose
-    // lexical order disagrees with its parsed order, or values that cast to
-    // NULL, would otherwise diverge — round-10 ADVICE). For TimestampType
-    // ts, unix_micros is order-isomorphic to ts, so the declared queries'
-    // assignment (and hash) is unchanged.
-    val byUser = Window.partitionBy($"user_id")
-      .orderBy($"ts_us".asc_nulls_first, $"event_id".asc)
-    val running = byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .withColumn("ts_us", unix_micros($"ts".cast("timestamp")))
-      .withColumn("prev_us", lag($"ts_us", 1).over(byUser))
-      .withColumn("new_sess",
-        when($"prev_us".isNull || ($"ts_us" - $"prev_us") > GapMicros, 1L).otherwise(0L))
-      .withColumn("session_id", sum($"new_sess").over(running))
-  }
+  def sessionizedOver(events: DataFrame): DataFrame =
+    Islands.number(withTsUs(events), "user_id", eventOrder, col("ts_us"),
+      opensSession, "session_id")
 
   /** Gap-based sessionization WITHOUT the atomic per-user window partition —
-    * the bot-burst mitigation the object scaladoc names. Exact, not
-    * approximate: produces the SAME `session_id` for every event as
-    * [[sessionizedOver]] on any input (null timestamps included), pinned by
-    * the shared `q_sessionize` oracle and the stress-scenario parity count.
-    *
-    * Shape (the [[PrefixSum]] split-and-stitch, specialized to a keyed
-    * running sum): range-partition on (user_id, ts_us, event_id) — the
-    * range sampler splits a hot user's timeline across slices because the
-    * timestamp is part of the sort key, so every slice is ~n/slices rows
-    * REGARDLESS of key skew — then sessionize each (slice, user) chunk
-    * locally with the ordinary lag+running-sum window (max window partition
-    * = slice size, not user history), and stitch chunk boundaries with one
-    * pass over the per-(slice, user) summary frame: a chunk's first event
-    * provisionally opens a session; if the previous chunk's last event is
-    * within the gap (NULL-propagating comparison, replicating the row-level
-    * rule exactly), the stitch folds that session into it by shifting the
-    * chunk's ids down one. The summary frame is one row per (slice, user)
-    * — a user's stitch window holds at most `slices` rows, so no partition
-    * anywhere in the plan depends on a single user's event count. Cost vs
-    * the atomic plan: one range exchange + one (slice, user) hash exchange
-    * instead of one user_id exchange, plus a summary-sized join (AQE
-    * broadcasts it at any realistic user count per slice ratio) — the
-    * price of the bounded straggler.
+    * the bot-burst mitigation the object scaladoc names, through
+    * [[Islands.numberCapped]]. Exact, not approximate: the SAME `session_id`
+    * for every event as [[sessionizedOver]] on any input (null timestamps
+    * included), pinned by the shared `q_sessionize` oracle and the
+    * stress-scenario parity count. The price of the bounded straggler: one
+    * range exchange + one (slice, user) hash exchange instead of one
+    * user_id exchange, plus a summary-sized join.
     */
-  def sessionizedCappedOver(events: DataFrame, slices: Int = 0): DataFrame = {
-    import events.sparkSession.implicits._
-    import graft.util.Ckpt._
-    val spark = events.sparkSession
-    val n = if (slices > 0) slices else spark.sparkContext.defaultParallelism
-    val sliced = events
-      .withColumn("ts_us", unix_micros($"ts".cast("timestamp")))
-      .repartitionByRange(n, $"user_id", $"ts_us".asc_nulls_first, $"event_id")
-      .withColumn("__pid", spark_partition_id())
-    val wChunk = Window.partitionBy($"__pid", $"user_id")
-      .orderBy($"ts_us".asc_nulls_first, $"event_id".asc)
-    // The ONE corpus-sized checkpoint, load-bearing three ways: `local` is
-    // referenced TWICE (the boundary-summary branch and the final join's
-    // big side), and the chunk window above it — the one corpus-sized sort
-    // of the operator — would otherwise execute once per reference
-    // (exchange reuse shares only the shuffle, not the sort+window;
-    // round-10 code-review finding); the single eager materialization is
-    // also what pins the sampled range bounds and the spark_partition_id
-    // slice assignment both consumers must agree on (PrefixSum's
-    // contract); and it carries the window's hash(__pid, user_id) layout
-    // across the lineage cut, so the summary aggregate below runs
-    // partition-local and the final join consumes this side in place —
-    // one range + one hash exchange + a summary-sized join, by plan. (A
-    // second checkpoint on `sliced` pinned nothing more and cost a full
-    // corpus write+read per execution — removed in the round-11
-    // self-review.)
-    val local = sliced
-      .withColumn("prev_us", lag($"ts_us", 1).over(wChunk))
-      .withColumn("new_sess",
-        when($"prev_us".isNull || ($"ts_us" - $"prev_us") > GapMicros, 1L)
-          .otherwise(0L))
-      .withColumn("local_sess", sum($"new_sess")
-        .over(wChunk.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .ckptDisk()
-    // Boundary summary: order-first ts is NULL iff the chunk contains any
-    // null-ts event (nulls sort first); order-last is max(ts_us) — null
-    // only when the whole chunk is null-ts. Both feed the stitch rule
-    // below, which replicates [[sessionizedOver]]'s row-level new_sess
-    // decision verbatim: `lag(ts_us).isNull` there is true when the
-    // PREVIOUS ROW's ts is null (not just at the partition head), so an
-    // event right after a null-ts event always opens a session — hence
-    // `prev_last.isNotNull` in the stitch; and a null CURRENT ts with a
-    // non-null predecessor makes the gap subtraction null, which reads
-    // "not > gap" and CONTINUES — hence the coalesce-to-false.
-    val summary = local.groupBy($"__pid", $"user_id")
-      .agg(
-        when(count($"ts_us") < count(lit(1)), lit(null).cast("long"))
-          .otherwise(min($"ts_us")).as("first_us"),
-        max($"ts_us").as("last_us"),
-        max($"local_sess").as("n_local"))
-    val wUser = Window.partitionBy($"user_id").orderBy($"__pid".asc)
-    val stitched = summary
-      .withColumn("prev_last", lag($"last_us", 1).over(wUser))
-      .withColumn("has_prev", row_number().over(wUser) > 1)
-      .withColumn("stitch",
-        when($"has_prev" && $"prev_last".isNotNull &&
-          !coalesce(($"first_us" - $"prev_last") > GapMicros, lit(false)), 1L)
-          .otherwise(0L))
-      .withColumn("sess_off",
-        coalesce(sum($"n_local" - $"stitch")
-          .over(wUser.rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          - $"stitch")
-      .select($"__pid", $"user_id", $"sess_off")
-    local.join(stitched, Seq("__pid", "user_id"))
-      .withColumn("session_id", $"sess_off" + $"local_sess")
-      .drop("__pid", "local_sess", "sess_off")
-  }
+  def sessionizedCappedOver(events: DataFrame, slices: Int = 0): DataFrame =
+    Islands.numberCapped(withTsUs(events), "user_id", eventOrder, col("ts_us"),
+      opensSession, "session_id", slices)
 
   /** q_sessionize_capped — the SAME assignment as `q_sessionize`, answered
     * by [[sessionizedCappedOver]]'s bounded-partition plan and gated on the
@@ -330,74 +253,16 @@ object Sessions {
   }
 
   /** Frame-parametric core of [[windowRunning]] — ordered on derived
-    * `ts_us` (nulls first) + event_id, the same key
-    * [[windowRunningCappedOver]] range-partitions on, so the two plans
-    * agree on event order for any ts column type (the
-    * [[sessionizedOver]] parity rule).
+    * `ts_us` (nulls first) + event_id, the [[sessionizedOver]] order.
     */
   def windowRunningOverFor(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._
-    val w = Window.partitionBy($"user_id")
-      .orderBy($"ts_us".asc_nulls_first, $"event_id".asc)
+    val w = Window.partitionBy($"user_id").orderBy(eventOrder: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    events
-      .withColumn("ts_us", unix_micros($"ts".cast("timestamp")))
+    withTsUs(events)
       .select($"event_id", $"user_id",
         count(lit(1)).over(w).as("n_so_far"),
         (sum(Det.cents($"value")).over(w).cast("double") / 100.0).as("value_so_far"))
-  }
-
-  /** Per-user running count + exact running cents WITHOUT the atomic
-    * per-user window partition — [[sessionizedCappedOver]]'s bounded-slice
-    * pattern applied to the cumulative-frame family (the third member,
-    * after sessions and SCD runs, of the per-user windows the round-10
-    * verdict named). Simpler than both: a running sum needs no
-    * conditional stitch — a chunk's offset is just the cumulative
-    * (count, cents) of the user's PRECEDING chunks, one summary row per
-    * (slice, user). Exact parity with [[windowRunning]]'s window plan on
-    * any input (null ts/value included: the running count counts every
-    * row; `Det.cents` of a null value contributes null, which a running
-    * SUM skips — the chunk summary must therefore total cents with sum()
-    * too, inheriting identical null-skipping). Returns the same
-    * (event_id, user_id, n_so_far, value_so_far) contract.
-    */
-  def windowRunningCappedOver(events: DataFrame, slices: Int = 0): DataFrame = {
-    import events.sparkSession.implicits._
-    import graft.util.Ckpt._
-    val spark = events.sparkSession
-    val n = if (slices > 0) slices else spark.sparkContext.defaultParallelism
-    val sliced = events
-      .withColumn("ts_us", unix_micros($"ts".cast("timestamp")))
-      .withColumn("cents", Det.cents($"value"))
-      .repartitionByRange(n, $"user_id", $"ts_us".asc_nulls_first, $"event_id")
-      .withColumn("__pid", spark_partition_id())
-    val wChunk = Window.partitionBy($"__pid", $"user_id")
-      .orderBy($"ts_us".asc_nulls_first, $"event_id".asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // The one corpus-sized checkpoint: pins the slice assignment both
-    // consumers read and cuts the chunk window out of the final join's
-    // lineage (the sessionizedCappedOver discipline).
-    val local = sliced
-      .withColumn("n_local", count(lit(1)).over(wChunk))
-      .withColumn("c_local", sum($"cents").over(wChunk))
-      .ckptDisk()
-    val wUser = Window.partitionBy($"user_id").orderBy($"__pid".asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy($"__pid", $"user_id")
-      .agg(count(lit(1)).as("n_chunk"), sum($"cents").as("c_chunk"))
-      .select($"__pid", $"user_id",
-        coalesce(sum($"n_chunk").over(wUser), lit(0L)).as("n_off"),
-        sum($"c_chunk").over(wUser).as("c_off"))
-    local.join(offsets, Seq("__pid", "user_id"))
-      .select($"event_id", $"user_id",
-        ($"n_off" + $"n_local").as("n_so_far"),
-        // null-safe add: c_off is NULL when no prior chunk carries a
-        // non-null cent (matching the running sum's null-skipping), and
-        // c_local is NULL until the chunk sees its first non-null value.
-        (when($"c_off".isNull, $"c_local")
-          .when($"c_local".isNull, $"c_off")
-          .otherwise($"c_off" + $"c_local").cast("double") / 100.0)
-          .as("value_so_far"))
   }
 
   val windowRunningSql: String =

@@ -42,6 +42,85 @@ object Stress {
 
   private def timed[T](what: String)(f: => T): T = timedS(what)(f)._1
 
+  /** Runs `f` with `confs` set, then restores each key exactly: its prior
+    * value when the session had one set, unset otherwise — on every exit
+    * path.
+    */
+  private def withConfs[T](spark: SparkSession, confs: (String, String)*)(f: => T): T = {
+    val prior = spark.conf.getAll
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally confs.foreach { case (k, _) =>
+      prior.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** `width` reducers with AQE coalescing off. Coalescing merges bounded
+    * partitions back up to its advisory BYTE target (measured: 128
+    * reducers re-coalesced to ~19 tasks of ~222k rows at 4M events) —
+    * healthy in production, but it measures AQE's target, not the plan's
+    * own per-task bound, and a width fixed here rather than derived from
+    * the core count makes a straggler bound hold on any host.
+    */
+  private def fixedWidth(width: Int): Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> width.toString,
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+
+  /** Reducer width of the `skew` legs (salt buckets = width/2 = 16). */
+  val SkewWidth = 32
+
+  /** Reducer width of the capped legs: 4 × defaultParallelism at 32
+    * cores, where the bounds were first calibrated.
+    */
+  val CappedWidth = 128
+
+  /** `f`'s result, seconds, and the most shuffle records one of its tasks
+    * read (the straggler metric), in a fresh `stats` window.
+    */
+  private def measured[T](stats: TaskStats, what: String)(f: => T): (T, Double, Long) = {
+    stats.reset()
+    val (r, secs) = timedS(what)(f)
+    (r, secs, stats.settled().maxShuffleReadRecords)
+  }
+
+  /** The bot-user leg `scd` and `sessions` share. On a corpus of `total`
+    * rows whose one bot user holds `burst` of them, at [[CappedWidth]]
+    * reducers (coalescing off), the atomic plan's max task must read MORE
+    * than the bound — a window partition is one task, so it reads the
+    * whole burst — and the capped plan's max task at most the bound, with
+    * zero null-safe full-outer drift between the two outputs on `keys`.
+    * The bound is min(4 × total/[[CappedWidth]], burst/2): the capped
+    * plan's balanced floor total/width with room for chunk hash
+    * collisions, and at most half the burst, so it cannot pass by
+    * splitting the straggler in two.
+    */
+  private def cappedLeg(spark: SparkSession, what: String, total: Long,
+      burst: Long, keys: Seq[String])(atomic: => DataFrame,
+      capped: => DataFrame): Boolean = {
+    val bound = math.min(4L * total / CappedWidth, burst / 2)
+    withConfs(spark, fixedWidth(CappedWidth): _*) {
+      val stats = TaskStats.attach(spark)
+      // Each frame is built inside its window (the capped plan's eager
+      // checkpoint is part of its cost) and reused by the drift count.
+      val ((a, tAtomic, maxAtomic), (c, tCapped, maxCapped)) = try {
+        def run(df: DataFrame): DataFrame = {
+          df.write.format("noop").mode("overwrite").save(); df
+        }
+        (measured(stats, s"$what, one bot user (+$burst rows), atomic")(run(atomic)),
+          measured(stats, s"$what, bot corpus, CAPPED plan")(run(capped)))
+      } finally spark.sparkContext.removeSparkListener(stats)
+      val cols = a.columns.filterNot(keys.contains).toSeq
+      val drift = a.join(c.withColumnsRenamed(cols.map(x => x -> s"c_$x").toMap),
+          keys, "full")
+        .filter(!cols.map(x => col(x) <=> col(s"c_$x")).reduce(_ && _)).count()
+      println(f"[stress] capped $what ($CappedWidth slices/reducers): " +
+        f"drift=$drift (expect 0), max task shuffle-read " +
+        f"$maxAtomic%,d -> $maxCapped%,d (bound $bound%,d = " +
+        f"min(4x total/$CappedWidth, burst/2); burst was $burst%,d); " +
+        f"wall $tAtomic%.1f -> $tCapped%.1f s")
+      maxAtomic > bound && maxCapped <= bound && drift == 0
+    }
+  }
+
   /** Runs `java.nio.file.Files.walk`, CLOSES the stream (its javadoc
     * requires it — an unclosed walk leaks directory handles until GC),
     * and hands back the paths.
@@ -794,10 +873,11 @@ object Stress {
   /** Skew-mitigation stress — the 100 TB requirement ("skewed keys →
     * salting or AQE skew-join", SURVEY §7.4-5) measured instead of
     * asserted. An n-row fact table with ONE key holding ~25% of all rows
-    * joins a 100k-row dimension modeled as too big to broadcast (both
-    * plain routes are hinted sort-merge, because at fixture scale Spark
-    * would broadcast the dim and the skew would vanish — at 100 TB neither
-    * side fits). Three routes must return the SAME per-group aggregate:
+    * joins a dimension of min(n/160 + 5, 100,005) keys modeled as too big
+    * to broadcast (both plain routes are hinted sort-merge, because at
+    * fixture scale Spark would broadcast the dim and the skew would
+    * vanish — at 100 TB neither side fits). Three routes must return the
+    * SAME per-group aggregate:
     *
     *  a. plain shuffle join, AQE skew-split OFF — the straggler baseline:
     *     one reducer task reads every hot-key row;
@@ -821,9 +901,11 @@ object Stress {
     *     re-concentrates what the salt spread — measured: 8 buckets over
     *     32 partitions left a 1.35M-record max task at 16M rows, 32
     *     buckets cut it to ~0.7M);
-    *  3. straggler metric: route a's biggest task reads ≥ the whole hot
-    *     key; route c's biggest task reads ≤ 1/3 of route a's; route b's
-    *     is reported (AQE's split quantum is bytes-advisory, not exact);
+    *  3. straggler metric, at a fixed [[SkewWidth]] reducers with
+    *     coalescing off (so the check holds at any core count): route a's
+    *     biggest task reads ≥ the whole hot key; route c's reads ≤ 1/3 of
+    *     the hot key — a bound route a fails by construction; route b's is
+    *     reported (AQE's split quantum is bytes-advisory, not exact);
     *  4. [[Skew.twoPhaseAgg]] per-key stats == plain groupBy per-key
     *     stats, exact, all ~100k keys (the aggregation-side mitigation
     *     answers the same numbers).
@@ -839,7 +921,10 @@ object Stress {
     */
   def runSkew(spark: SparkSession, n: Long): Boolean = {
     import spark.implicits._
-    val nDim = 100005L
+    // The dim scales with n up to its 100,005-key design size (reached at
+    // 16M rows), so the salt's dim replication stays a fixed share of the
+    // fact at any n instead of swamping it at small n.
+    val nDim = math.min(100005L, n / 160 + 5)
     val sel = pmod(hash($"id", lit(3)), lit(1000))
     val fact = spark.range(n).select(
         when(sel < 250, 0L)
@@ -863,49 +948,46 @@ object Stress {
         .collect().sortBy(_._1).toSeq
 
     val taskStats = TaskStats.attach(spark)
-    try {
+    try withConfs(spark, fixedWidth(SkewWidth): _*) {
       // a. straggler baseline: forced sort-merge, no AQE skew rescue
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-      val (resPlain, tPlain) = timedS("plain SMJ join+agg (AQE skew OFF)") {
-        groupAgg(fact.hint("merge").join(dim, $"key" === $"dkey"))
+      val (resPlain, tPlain, maxPlain) = withConfs(spark,
+          "spark.sql.adaptive.skewJoin.enabled" -> "false") {
+        measured(taskStats, "plain SMJ join+agg (AQE skew OFF)") {
+          groupAgg(fact.hint("merge").join(dim, $"key" === $"dkey"))
+        }
       }
-      val maxPlain = taskStats.settled().maxShuffleReadRecords
 
       // b. Spark's runtime rescue: AQE skew-split, thresholds scaled to
       // fixture bytes (defaults are sized for real 100 TB partitions)
-      taskStats.reset()
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      spark.conf.set(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
-      spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      val (resAqe, tAqe) = timedS("plain SMJ join+agg (AQE skew ON)") {
-        groupAgg(fact.hint("merge").join(dim, $"key" === $"dkey"))
+      val (resAqe, tAqe, maxAqe) = withConfs(spark,
+          "spark.sql.adaptive.skewJoin.enabled" -> "true",
+          "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2",
+          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4m",
+          "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4m") {
+        measured(taskStats, "plain SMJ join+agg (AQE skew ON)") {
+          groupAgg(fact.hint("merge").join(dim, $"key" === $"dkey"))
+        }
       }
-      val maxAqe = taskStats.settled().maxShuffleReadRecords
-      spark.conf.unset("spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-      spark.conf.unset(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes")
-      spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
 
       // c. deterministic salting. Bucket count is the DEPLOYMENT dial and
       // both ends bite (measured at 16M rows): 8 buckets over 32 reducers
       // let two hot slices hash-collide into one task (1.35M-record max);
       // 32 buckets fixed that (0.87M) but 4x'd the dim replication and the
-      // wall. parallelism/2 keeps the worst collision at ~hot/8 while
+      // wall. reducers/2 keeps the worst collision at ~hot/8 while
       // replication stays cheap — the sizing rule: enough slices that a
       // collision doesn't re-concentrate, no more than the replication is
       // worth.
-      taskStats.reset()
       val buckets = Skew.saltBucketsFor(spark)
-      val (resSalt, tSalt) = timedS(s"salted join+agg (saltBuckets=$buckets)") {
-        groupAgg(Skew.saltedJoin(fact.hint("merge"), dim,
-          "key", "dkey", buckets, $"distr"))
-      }
-      val maxSalt = taskStats.settled().maxShuffleReadRecords
+      val (resSalt, tSalt, maxSalt) =
+        measured(taskStats, s"salted join+agg (saltBuckets=$buckets)") {
+          groupAgg(Skew.saltedJoin(fact.hint("merge"), dim,
+            "key", "dkey", buckets, $"distr"))
+        }
 
-      println(f"[stress] max task shuffle-read records: plain=$maxPlain%,d " +
-        f"aqe-split=$maxAqe%,d salted=$maxSalt%,d (hot key=$hotRows%,d rows)")
+      val bound = hotRows / 3
+      println(f"[stress] max task shuffle-read records ($SkewWidth reducers): " +
+        f"plain=$maxPlain%,d aqe-split=$maxAqe%,d salted=$maxSalt%,d " +
+        f"(bound $bound%,d = hot key/3; hot key=$hotRows%,d rows)")
       println(f"[stress] wall: plain ${tPlain}%.1f s, aqe ${tAqe}%.1f s, " +
         f"salted ${tSalt}%.1f s")
 
@@ -930,13 +1012,10 @@ object Stress {
         spread.length == buckets &&
         spread.max <= spread.min * 11 / 10 &&
         maxPlain >= hotRows &&
-        maxSalt <= maxPlain / 3 &&
+        maxSalt <= bound &&
         aggDiff == 0
       ok
-    } finally {
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-      spark.sparkContext.removeSparkListener(taskStats)
-    }
+    } finally spark.sparkContext.removeSparkListener(taskStats)
   }
 
   /** As-of join stress — the custom physical operator
@@ -1036,7 +1115,10 @@ object Stress {
     *     (same version, higher seq — the at-least-once delivery the
     *     tie-break column exists for) lands exactly n rows, every row's
     *     (version, value) matching its closed form, with exactly
-    *     ceil(n/3) change-set winners — redelivery changes nothing.
+    *     ceil(n/3) change-set winners — redelivery changes nothing;
+    *  5. one bot user with n/16 events: [[Scd.historyCappedOver]] builds
+    *     the identical history while its max task stays inside the
+    *     [[cappedLeg]] bound the atomic plan's burst task exceeds.
     */
   def runScd(spark: SparkSession, n0: Long): Boolean = {
     import spark.implicits._
@@ -1136,16 +1218,9 @@ object Stress {
     println(s"[stress] merged rows=$mergedRows (expect $n), " +
       s"bad rows=$mergeBad, change winners=$updWinners (expect $expUpd)")
 
-    // Bot leg + mitigation (the sessions-stress pattern applied to SCD):
-    // one user with n/16 events 10 µs apart, type flipping every 50 events
-    // (so the run structure is non-trivial: B/50 runs). The atomic plan's
-    // event-level window puts the whole burst in ONE task (a window
-    // partition is atomic — AQE splits join partitions, not window
-    // partitions); [[Scd.historyCappedOver]] must produce the IDENTICAL
-    // history (full-outer null-safe compare, zero tolerance) while its max
-    // task shuffle-read drops to range-slice scale. Coalescing off for the
-    // measured run and 4x-wide reducers, for the reasons documented at the
-    // sessions scenario's capped leg.
+    // Bot leg + mitigation: one user with n/16 events 10 µs apart, type
+    // flipping every 50 events (so the run structure is non-trivial: B/50
+    // runs), through the shared capped leg on the (user_id, run) history.
     val B = n / 16
     val bot = spark.range(B).select(
         (lit(n) + $"id").as("event_id"),
@@ -1155,53 +1230,12 @@ object Stress {
         timestamp_micros(lit(t0) + 864000000000L + $"id" * 10L).as("ts"))
     val ev2 = ev.select($"event_id", $"user_id", $"event_type", $"ts")
       .unionByName(bot).ckptDisk()
-    // wide/capBound computed ONCE, outside the measurement block: the
-    // printed bound and the pass/fail gate below must be the same value
-    // by construction, not by parallel derivation (round-11 self-review).
-    val wide = 4 * spark.sparkContext.defaultParallelism
-    val capBound = 4L * (n + B) / wide
-    val taskStats = TaskStats.attach(spark)
-    val (maxBot, maxCap, capDrift) = try {
-      taskStats.reset()
-      val (_, tBot) = timedS(s"SCD2 history, one bot user (+$B events), atomic") {
-        Scd.historyOver(ev2).agg(sum($"n_events")).collect()
-      }
-      val mBot = taskStats.settled().maxShuffleReadRecords
-      val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
-      val coal0 = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-      spark.conf.set("spark.sql.shuffle.partitions", wide.toString)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      try {
-        taskStats.reset()
-        val (_, tCap) = timedS("SCD2 history, bot corpus, CAPPED plan") {
-          Scd.historyCappedOver(ev2, wide).agg(sum($"n_events")).collect()
-        }
-        val mCap = taskStats.settled().maxShuffleReadRecords
-        val cols = Seq("event_type", "valid_from_us", "valid_to_us",
-          "n_events", "is_current")
-        val drift = Scd.historyOver(ev2)
-          .join(Scd.historyCappedOver(ev2, wide)
-            .withColumnsRenamed(cols.map(x => x -> s"c_$x").toMap),
-            Seq("user_id", "run"), "full")
-          .filter(!cols.map(x => col(x) <=> col(s"c_$x")).reduce(_ && _))
-          .count()
-        println(f"[stress] capped SCD2 ($wide slices/reducers): " +
-          f"history drift=$drift (expect 0), " +
-          f"max task shuffle-read $mBot%,d -> $mCap%,d " +
-          f"(bound $capBound%,d = 4x total/$wide; burst was $B%,d); " +
-          f"wall $tBot%.1f -> $tCap%.1f s")
-        (mBot, mCap, drift)
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", parts0)
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coal0)
-      }
-    } finally spark.sparkContext.removeSparkListener(taskStats)
+    val capOk = cappedLeg(spark, "SCD2 history", n + B, B, Seq("user_id", "run"))(
+      Scd.historyOver(ev2), Scd.historyCappedOver(ev2, CappedWidth))
 
     val ok = histRows == expRows && badIntervals == 0 &&
       nCurrent == users && tileBad == 0 && pitOk &&
-      mergedRows == n && mergeBad == 0 && updWinners == expUpd &&
-      maxBot >= B && capDrift == 0 &&
-      maxCap <= capBound && maxCap <= B / 2
+      mergedRows == n && mergeBad == 0 && updWinners == expUpd && capOk
     ok
   }
 
@@ -1221,16 +1255,14 @@ object Stress {
     * The bot leg appends one user with n/16 events 10 µs apart (a crawler
     * burst) and pins: (a) correctness is unaffected — the burst lands as
     * exactly ONE extra session with exact size and span while every other
-    * user's assignment is unchanged; (b) the straggler is REAL and
-    * structural: the max per-task shuffle-read record count jumps from
-    * ~n/32 (uniform hash of users over reducers) to ≳ the burst size,
-    * because a window partition is atomic — AQE's skew machinery splits
-    * JOIN partitions, not window partitions; and (c) the mitigation is
-    * REAL: [[Sessions.sessionizedCappedOver]]'s range-partitioned
-    * split-and-stitch assigns the bit-identical session ids on the same
-    * bot corpus while its max task shuffle-read drops from the burst size
-    * back to range-slice scale — the straggler task is gone, measured by
-    * the same listener, with a zero-tolerance distributed drift count.
+    * user's assignment is unchanged; (b) through [[cappedLeg]], the
+    * straggler is REAL and structural — the atomic plan's max per-task
+    * shuffle read is the whole burst, because a window partition is
+    * atomic (AQE's skew machinery splits JOIN partitions, not window
+    * partitions) — and the mitigation is REAL:
+    * [[Sessions.sessionizedCappedOver]] assigns bit-identical session ids
+    * on the same bot corpus while its max task drops back to range-slice
+    * scale.
     */
   def runSessions(spark: SparkSession, n0: Long): Boolean = {
     import spark.implicits._
@@ -1284,93 +1316,29 @@ object Stress {
         timestamp_micros(lit(t0) + 864000000000L + $"id" * 10L).as("ts"),
         lit(0.25).as("value"))
     val ev2 = ev.unionByName(bot).ckptDisk()
-    val taskStats = TaskStats.attach(spark)
-    try {
-      taskStats.reset()
-      val (_, tBase) = timedS("sessionize, uniform users") {
-        Sessions.sessionizedOver(ev).agg(sum($"session_id")).collect()
-      }
-      val maxBase = taskStats.settled().maxShuffleReadRecords
-      taskStats.reset()
-      val (_, tBot) = timedS(s"sessionize, one bot user (+$B events)") {
-        Sessions.sessionizedOver(ev2).agg(sum($"session_id")).collect()
-      }
-      val maxBot = taskStats.settled().maxShuffleReadRecords
-      println(f"[stress] max task shuffle-read records: uniform=$maxBase%,d " +
-        f"bot=$maxBot%,d (burst=$B%,d rows in ONE window partition); " +
-        f"wall ${tBase}%.1f -> ${tBot}%.1f s")
+    val botStats = Sessions.sessionStatsOver(ev2)
+      .filter($"user_id" === 0L)
+      .select($"session_id", $"n_events", $"span_us")
+      .as[(Long, Long, Long)].collect().sortBy(_._1)
+    val botOk = botStats.length == S.toInt + 1 &&
+      botStats.take(S.toInt).forall { case (_, ne, sp) =>
+        ne == L && sp == (L - 1) * 60000000L } &&
+      botStats.last == ((S + 1, B, (B - 1) * 10L))
+    val othersBad = Sessions.sessionizedOver(ev2)
+      .filter($"user_id" =!= 0L)
+      .filter($"session_id" =!= expr(s"(event_id % $EPU) DIV $L") + 1L)
+      .count()
+    println(s"[stress] bot user sessions: ${botStats.mkString(", ")} " +
+      s"(expect 4 regular + one ($B, ${(B - 1) * 10L})-session); " +
+      s"other-user drift=$othersBad")
+    def assignment(df: DataFrame): DataFrame = df.select($"event_id", $"session_id")
+    val capOk = cappedLeg(spark, "sessionize", n + B, B, Seq("event_id"))(
+      assignment(Sessions.sessionizedOver(ev2)),
+      assignment(Sessions.sessionizedCappedOver(ev2, CappedWidth)))
 
-      val botStats = Sessions.sessionStatsOver(ev2)
-        .filter($"user_id" === 0L)
-        .select($"session_id", $"n_events", $"span_us")
-        .as[(Long, Long, Long)].collect().sortBy(_._1)
-      val botOk = botStats.length == S.toInt + 1 &&
-        botStats.take(S.toInt).forall { case (_, ne, sp) =>
-          ne == L && sp == (L - 1) * 60000000L } &&
-        botStats.last == ((S + 1, B, (B - 1) * 10L))
-      val othersBad = Sessions.sessionizedOver(ev2)
-        .filter($"user_id" =!= 0L)
-        .filter($"session_id" =!= expr(s"(event_id % $EPU) DIV $L") + 1L)
-        .count()
-      println(s"[stress] bot user sessions: ${botStats.mkString(", ")} " +
-        s"(expect 4 regular + one ($B, ${(B - 1) * 10L})-session); " +
-        s"other-user drift=$othersBad")
-
-      // Mitigation leg: the capped split-and-stitch plan on the SAME bot
-      // corpus must (a) assign every event the IDENTICAL session id the
-      // atomic plan does — a distributed null-safe mismatch count, zero
-      // tolerance — and (b) actually dissolve the straggler. The atomic
-      // plan's max task is the BURST SIZE at any reducer count (a window
-      // partition is one task, structurally); the capped plan's max task
-      // is ~total/reducers under a balanced hash of bounded chunks — it
-      // SCALES OUT. Measure at 4x the reducer width (the knob a 100 TB
-      // deployment actually turns) so the two regimes separate clearly:
-      // at equal width the balanced floor total/32 sits near the planted
-      // burst and the comparison would be a coin flip, not a mechanism.
-      // AQE's partition coalescing is disabled for the measured run: it
-      // merges the bounded (slice, user) chunks back up to its advisory
-      // BYTE target (measured: 128 reducers re-coalesced to ~19 tasks of
-      // ~222k rows at 4M events) — healthy in production (merging is
-      // byte-capped; it never rebuilds a key-shaped straggler) but it
-      // measures AQE's target, not this operator's bound. Coalescing off,
-      // the max task is the operator's own guarantee: O(total/reducers)
-      // plus chunk hash collisions, independent of the burst.
-      val parts0 = spark.conf.get("spark.sql.shuffle.partitions")
-      val coal0 = spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled")
-      val wide = 4 * spark.sparkContext.defaultParallelism
-      val total = n + B
-      val capBound = 4L * total / wide
-      spark.conf.set("spark.sql.shuffle.partitions", wide.toString)
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      val (maxCap, capDrift, cappedSum, tCap) =
-        try {
-          taskStats.reset()
-          val (s, t) = timedS("sessionize, bot corpus, CAPPED plan") {
-            Sessions.sessionizedCappedOver(ev2, wide)
-              .agg(sum($"session_id")).as[Long].collect().head
-          }
-          val mc = taskStats.settled().maxShuffleReadRecords
-          val drift = Sessions.sessionizedOver(ev2)
-            .select($"event_id", $"session_id".as("want"))
-            .join(Sessions.sessionizedCappedOver(ev2, wide)
-              .select($"event_id", $"session_id".as("got")), "event_id")
-            .filter(!($"want" <=> $"got")).count()
-          (mc, drift, s, t)
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", parts0)
-          spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coal0)
-        }
-      println(f"[stress] capped plan ($wide slices/reducers): " +
-        f"assignment drift=$capDrift (expect 0), " +
-        f"max task shuffle-read $maxBot%,d -> $maxCap%,d " +
-        f"(bound ${capBound}%,d = 4x total/$wide; burst was $B%,d); " +
-        f"wall ${tBot}%.1f -> ${tCap}%.1f s; checksum=$cappedSum")
-
-      val ok = badSess == 0 && statRows == users * S && badStats == 0 &&
-        botOk && othersBad == 0 && maxBot >= B &&
-        capDrift == 0 && maxCap <= capBound && maxCap <= B / 2
-      ok
-    } finally spark.sparkContext.removeSparkListener(taskStats)
+    val ok = badSess == 0 && statRows == users * S && badStats == 0 &&
+      botOk && othersBad == 0 && capOk
+    ok
   }
 
   /** Streaming LSH near-dup suppression stress — the streaming tier's

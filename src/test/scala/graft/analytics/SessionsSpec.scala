@@ -142,35 +142,6 @@ class SessionsSpec extends SparkSpec {
       s"no checkpoint scan in the final plan:\n$plan")
   }
 
-  private def runningParity(df: DataFrame, slices: Int): Long = {
-    val a = Sessions.windowRunningOverFor(df)
-    val c = Sessions.windowRunningCappedOver(df, slices)
-      .withColumnsRenamed(Map("n_so_far" -> "c_n", "value_so_far" -> "c_v"))
-    a.join(c, Seq("event_id", "user_id"), "full")
-      .filter(!(col("n_so_far") <=> col("c_n")) ||
-        !(col("value_so_far") <=> col("c_v"))).count()
-  }
-
-  test("capped running window is bit-identical to the atomic window plan") {
-    val hot = (0 until 600).map(i => (i.toLong, 1L, ts(i), "view", (i % 7) * 0.25))
-    val cold = Seq((1000L, 2L, ts(0), "view", 1.0), (1001L, 2L, ts(5), "view", 2.0))
-    val df = (hot ++ cold).toDF("event_id", "user_id", "ts", "event_type", "value")
-    (2 to 8).foreach(s => assert(runningParity(df, s) == 0, s"slices=$s"))
-  }
-
-  test("capped running window replicates NULL ts and NULL value semantics") {
-    val df = Seq(
-      (1L, 1L, null.asInstanceOf[Timestamp], "view", null.asInstanceOf[java.lang.Double]),
-      (2L, 1L, null.asInstanceOf[Timestamp], "view", java.lang.Double.valueOf(1.5)),
-      (3L, 1L, ts(0), "view", null.asInstanceOf[java.lang.Double]),
-      (4L, 1L, ts(10), "view", java.lang.Double.valueOf(2.25)),
-      (5L, 2L, null.asInstanceOf[Timestamp], "view", null.asInstanceOf[java.lang.Double]),
-      (6L, 2L, ts(5), "view", null.asInstanceOf[java.lang.Double]),
-      (7L, 3L, ts(5), "view", java.lang.Double.valueOf(0.75))
-    ).toDF("event_id", "user_id", "ts", "event_type", "value")
-    (2 to 6).foreach(s => assert(runningParity(df, s) == 0, s"slices=$s"))
-  }
-
   test("funnel counts users, not events, per stage") {
     val f = events.groupBy($"user_id")
       .agg(

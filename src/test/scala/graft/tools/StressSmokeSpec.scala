@@ -41,16 +41,26 @@ class StressSmokeSpec extends SparkSpec {
 
   test("skew scenario: salting cuts the straggler task's shuffle read, read " +
     "through TaskStats") {
-    // 32 reducers without coalescing give the two-core test session the
-    // reducer width the scenario's straggler bound assumes; 1.3M rows is the
-    // smallest size at which the salted max task clears 1/3 of the plain
-    // one here (the salt replicates the fixed 100k-key dim, so small n fails)
-    val confs = Seq("spark.sql.shuffle.partitions" -> "32",
-      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
-    val saved = confs.map { case (k, _) => k -> spark.conf.get(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try assert(Stress.runSkew(spark, 1300000L))
-    finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    // 50k is the smallest size whose hot-key salt spread stays inside the
+    // 10% band (40k and 45k spread 11.5% and 10.4%); the scenario must
+    // leave the session's confs as it found them
+    val before = spark.conf.getAll
+    assert(Stress.runSkew(spark, 50000L))
+    assert(spark.conf.getAll == before)
+  }
+
+  test("scd scenario: capped history matches the atomic one inside the " +
+    "straggler bound at smoke size") {
+    // 2048 is the smallest size whose capped max task fits the bound
+    // (1024 read 40 against 32)
+    assert(Stress.runScd(spark, 2048L))
+  }
+
+  test("sessions scenario: capped sessionization matches the atomic one " +
+    "inside the straggler bound at smoke size") {
+    // 4096 is the smallest size whose capped max task fits the bound
+    // (3072 read 124 against 96)
+    assert(Stress.runSessions(spark, 4096L))
   }
 
   test("an unknown scenario name is rejected with a usage line naming every scenario") {
