@@ -51,7 +51,7 @@ object AnnMulti {
     * fixture's ceiling (~0.79; best-of-5 restarts with Lloyd-5 top out at
     * 0.835 — random 64-dim vectors have no cluster structure to find).
     * The passes are [[Ivf.train]]'s fixed-point Lloyd, which the oracle
-    * unrolls in [[coarseSqlCtes]].
+    * unrolls in [[Ivf.trainSql]].
     */
   val LloydIters = 2
 
@@ -76,49 +76,26 @@ object AnnMulti {
       .withColumn("s", Similarity.microSim(spark, $"qv", $"nv"))
   }
 
-  /** The oracle-side twin of [[Ivf.train]] at [[LloydIters]]: CTEs `e`, `cst`,
-    * `cseeds0` (stride seeds) and [[LloydIters]] unrolled fixed-point
-    * passes, ending in a CTE named `cseeds` the downstream query text
-    * references exactly as before.
+  /** [[candidates]]' twin for the probes vec_id < [[Similarity.RecallProbes]]:
+    * CTEs `e` (vec_id, label, v), the [[Ivf.trainSql]] index `cent`, its
+    * lists `cass`, the probes `p` (query_id, qv, qlabel), their routing
+    * `pcell` and the scored pairs `cs` (query_id, qlabel, prn, neighbor_id,
+    * label, s).
     */
-  private def coarseSqlCtes(nlist: Int): String = {
-    val head =
-      s"""WITH e AS (
-         | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-         | FROM embeddings),
-         |cst AS (SELECT greatest(CAST(count(*) // $nlist AS BIGINT), 1) AS stride FROM e),
-         |cseeds0 AS (
-         | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ccid, v AS cv
-         | FROM (SELECT vec_id, v FROM e, cst WHERE vec_id % stride = 0
-         |       ORDER BY vec_id LIMIT $nlist))""".stripMargin
-    val iters = (1 to LloydIters).map { k =>
-      s""",
-         |cass$k AS (
-         | SELECT vec_id, ccid FROM (
-         |  SELECT e.vec_id, s.ccid,
-         |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-         |    round(
-         |     list_sum(list_transform(list_zip(e.v, s.cv), p -> p[1] * p[2])) /
-         |     sqrt(list_sum(list_transform(e.v, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-         |     6) + 0.0 DESC, s.ccid) AS rk
-         |  FROM e, cseeds${k - 1} s) WHERE rk = 1),
-         |cm$k AS (
-         | SELECT ccid, pos,
-         |  CAST(sum(CAST(round(x * 1000000) AS BIGINT)) AS DOUBLE)
-         |   / CAST(count(*) * 1000000 AS DOUBLE) AS m
-         | FROM (SELECT ca.ccid, generate_subscripts(e.v, 1) AS pos, unnest(e.v) AS x
-         |       FROM cass$k ca JOIN e ON e.vec_id = ca.vec_id)
-         | GROUP BY ccid, pos),
-         |cref$k AS (SELECT ccid, list(m ORDER BY pos) AS cv FROM cm$k GROUP BY ccid),
-         |cseeds$k AS (
-         | SELECT s.ccid, COALESCE(r.cv, s.cv) AS cv
-         | FROM cseeds${k - 1} s LEFT JOIN cref$k r ON r.ccid = s.ccid)""".stripMargin
-    }.mkString
-    val tail =
-      s""",
-         |cseeds AS (SELECT ccid, cv FROM cseeds$LloydIters)""".stripMargin
-    head + iters + tail
-  }
+  private def candidatesSql(nProbe: Int): String =
+    s"""WITH ${Similarity.vecsSql("label")},
+       |${Ivf.trainSql("cent", MultiNList, LloydIters)},
+       |${Ivf.assignSql("cass", "cent")},
+       |p AS (SELECT vec_id AS query_id, v AS qv, label AS qlabel FROM e
+       |      WHERE vec_id < ${Similarity.RecallProbes}),
+       |${Ivf.routeSql("pcell", "p", "cent", nProbe)},
+       |cs AS (
+       | SELECT p.query_id, p.qlabel, pc.prn, c.vec_id AS neighbor_id, c.label,
+       |  ${Similarity.microSimSql("p.qv", "c.v")} AS s
+       | FROM p
+       | JOIN pcell pc ON pc.query_id = p.query_id
+       | JOIN cass ca ON ca.cid = pc.cid AND ca.vec_id != p.query_id
+       | JOIN e c ON c.vec_id = ca.vec_id)""".stripMargin
 
   /** x_ann_recall_multi — recall@[[Similarity.RecallK]] of the multi-probe
     * IVF route vs exact brute force, per probe: (query_id, n_true, n_cand,
@@ -127,7 +104,7 @@ object AnnMulti {
   def annRecallMulti(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", Similarity.asDouble($"embedding").as("v"))
 
     val probes = broadcast(e.filter($"vec_id" < Similarity.RecallProbes)
       .select($"vec_id".as("query_id"), $"v".as("qv")))
@@ -158,53 +135,9 @@ object AnnMulti {
   }
 
   val annRecallMultiSql: String =
-    coarseSqlCtes(MultiNList) +
-    s""",
-       |cass AS (
-       | SELECT vec_id, ccid FROM (
-       |  SELECT e.vec_id, s.ccid,
-       |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(e.v, s.cv), p -> p[1] * p[2])) /
-       |     sqrt(list_sum(list_transform(e.v, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS rk
-       |  FROM e, cseeds s) WHERE rk = 1),
-       |p AS (SELECT vec_id AS query_id, v AS qv FROM e
-       |      WHERE vec_id < ${Similarity.RecallProbes}),
-       |pcell AS (
-       | SELECT query_id, ccid FROM (
-       |  SELECT p.query_id, s.ccid,
-       |   row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(p.qv, s.cv), x -> x[1] * x[2])) /
-       |     sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS prn
-       |  FROM p, cseeds s) WHERE prn <= $MultiNProbe),
-       |ts AS (
-       | SELECT p.query_id, c.vec_id AS neighbor_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.qv, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT) AS s
-       | FROM p, e c WHERE c.vec_id != p.query_id),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |   row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rk
-       |  FROM ts) WHERE rk <= ${Similarity.RecallK}),
-       |cs AS (
-       | SELECT p.query_id, ca.vec_id AS neighbor_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.qv, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT) AS s
-       | FROM p
-       | JOIN pcell pc ON pc.query_id = p.query_id
-       | JOIN cass ca ON ca.ccid = pc.ccid AND ca.vec_id != p.query_id
-       | JOIN e c ON c.vec_id = ca.vec_id),
-       |approx AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |   row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rk
-       |  FROM cs) WHERE rk <= ${Similarity.RecallK}),
+    s"""${candidatesSql(MultiNProbe)},
+       |${Similarity.recallTruthSql},
+       |approx AS (SELECT query_id, neighbor_id FROM (${Similarity.topNeighborsSql("cs", Similarity.RecallK)})),
        |tc AS (SELECT query_id, count(*) AS n_true FROM truth GROUP BY 1),
        |cc AS (SELECT query_id, count(*) AS n_cand FROM cs GROUP BY 1),
        |ac AS (SELECT query_id, count(*) AS n_approx FROM approx GROUP BY 1),
@@ -236,7 +169,7 @@ object AnnMulti {
   def multiprobeTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", Similarity.asDouble($"embedding").as("v"))
     searchOver(spark, e,
       e.filter($"vec_id" < Similarity.RecallProbes)
         .select($"vec_id".as("query_id"), $"v".as("qv")),
@@ -256,45 +189,17 @@ object AnnMulti {
       .orderBy($"query_id", $"rnk")
   }
 
-  val multiprobeTopKSql: String =
-    coarseSqlCtes(MultiNList) +
-    s""",
-       |cass AS (
-       | SELECT vec_id, ccid FROM (
-       |  SELECT e.vec_id, s.ccid,
-       |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(e.v, s.cv), p -> p[1] * p[2])) /
-       |     sqrt(list_sum(list_transform(e.v, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS rk
-       |  FROM e, cseeds s) WHERE rk = 1),
-       |p AS (SELECT vec_id AS query_id, v AS qv FROM e
-       |      WHERE vec_id < ${Similarity.RecallProbes}),
-       |pcell AS (
-       | SELECT query_id, ccid FROM (
-       |  SELECT p.query_id, s.ccid,
-       |   row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(p.qv, s.cv), x -> x[1] * x[2])) /
-       |     sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS prn
-       |  FROM p, cseeds s) WHERE prn <= $MultiNProbe),
-       |cs AS (
-       | SELECT p.query_id, ca.vec_id AS neighbor_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.qv, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT) AS micro_sim
-       | FROM p
-       | JOIN pcell pc ON pc.query_id = p.query_id
-       | JOIN cass ca ON ca.ccid = pc.ccid AND ca.vec_id != p.query_id
-       | JOIN e c ON c.vec_id = ca.vec_id)
-       |SELECT query_id, neighbor_id,
-       | CAST(row_number() OVER (PARTITION BY query_id
-       |   ORDER BY micro_sim DESC, neighbor_id) AS BIGINT) AS rnk,
-       | micro_sim
-       |FROM cs
-       |QUALIFY rnk <= ${Similarity.RecallK}
+  /** The top-k searches' oracle: per probe, the [[Similarity.RecallK]]
+    * pairs of `from` over [[candidatesSql]] at `nProbe` with the highest
+    * micro-cosine — (query_id, neighbor_id, rnk, micro_sim).
+    */
+  private def topKSql(nProbe: Int, from: String): String =
+    s"""${candidatesSql(nProbe)}
+       |SELECT query_id, neighbor_id, rk AS rnk, s AS micro_sim
+       |FROM (${Similarity.topNeighborsSql(from, Similarity.RecallK)})
        |ORDER BY query_id, rnk""".stripMargin
+
+  val multiprobeTopKSql: String = topKSql(MultiNProbe, "cs")
 
   /** Probe depth for the FILTERED search: the label predicate keeps ~1/10
     * of each cell's list, so the filtered route probes every cell — the
@@ -324,7 +229,7 @@ object AnnMulti {
     // label rides the inverted-list rows — the filter column lives beside
     // the vectors, so filtered candidate generation is one equi-join
     val e = Tables.embeddings(spark, dir).select($"vec_id",
-      transform($"embedding", x => x.cast("double")).as("v"), $"label")
+      Similarity.asDouble($"embedding").as("v"), $"label")
     val probes = broadcast(e.filter($"vec_id" < Similarity.RecallProbes)
       .select($"vec_id".as("query_id"), $"v".as("qv"), $"label".as("qlabel")))
     // the label equality joins beside the cell id (the optimizer pushes it
@@ -336,47 +241,7 @@ object AnnMulti {
       .orderBy($"query_id", $"rnk")
   }
 
-  val filteredTopKSql: String =
-    coarseSqlCtes(MultiNList) +
-    s""",
-       |cass AS (
-       | SELECT vec_id, ccid FROM (
-       |  SELECT e.vec_id, s.ccid,
-       |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(e.v, s.cv), p -> p[1] * p[2])) /
-       |     sqrt(list_sum(list_transform(e.v, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS rk
-       |  FROM e, cseeds s) WHERE rk = 1),
-       |p AS (SELECT e.vec_id AS query_id, e.v AS qv, m.label AS qlabel
-       |      FROM e JOIN embeddings m ON m.vec_id = e.vec_id
-       |      WHERE e.vec_id < ${Similarity.RecallProbes}),
-       |pcell AS (
-       | SELECT query_id, ccid FROM (
-       |  SELECT p.query_id, s.ccid,
-       |   row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(p.qv, s.cv), x -> x[1] * x[2])) /
-       |     sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS prn
-       |  FROM p, cseeds s) WHERE prn <= $FilteredNProbe),
-       |cs AS (
-       | SELECT p.query_id, ca.vec_id AS neighbor_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.qv, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT) AS micro_sim
-       | FROM p
-       | JOIN pcell pc ON pc.query_id = p.query_id
-       | JOIN cass ca ON ca.ccid = pc.ccid AND ca.vec_id != p.query_id
-       | JOIN embeddings m ON m.vec_id = ca.vec_id AND m.label = p.qlabel
-       | JOIN e c ON c.vec_id = ca.vec_id)
-       |SELECT query_id, neighbor_id,
-       | CAST(row_number() OVER (PARTITION BY query_id
-       |   ORDER BY micro_sim DESC, neighbor_id) AS BIGINT) AS rnk,
-       | micro_sim
-       |FROM cs
-       |QUALIFY rnk <= ${Similarity.RecallK}
-       |ORDER BY query_id, rnk""".stripMargin
+  val filteredTopKSql: String = topKSql(FilteredNProbe, "cs WHERE label = qlabel")
 
   /** The nprobe operating points the curve sweeps. */
   val CurveProbes: Seq[Int] = Seq(1, 2, 4, 8)
@@ -395,7 +260,7 @@ object AnnMulti {
     import spark.implicits._
     GraftFunctions.register(spark)
     val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", Similarity.asDouble($"embedding").as("v"))
 
     val probes = broadcast(e.filter($"vec_id" < Similarity.RecallProbes)
       .select($"vec_id".as("query_id"), $"v".as("qv")))
@@ -433,61 +298,18 @@ object AnnMulti {
   }
 
   val annNprobeCurveSql: String =
-    coarseSqlCtes(MultiNList) +
-    s""",
-       |cass AS (
-       | SELECT vec_id, ccid FROM (
-       |  SELECT e.vec_id, s.ccid,
-       |   row_number() OVER (PARTITION BY e.vec_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(e.v, s.cv), p -> p[1] * p[2])) /
-       |     sqrt(list_sum(list_transform(e.v, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS rk
-       |  FROM e, cseeds s) WHERE rk = 1),
-       |p AS (SELECT vec_id AS query_id, v AS qv FROM e
-       |      WHERE vec_id < ${Similarity.RecallProbes}),
-       |pcell AS (
-       | SELECT query_id, ccid, prn FROM (
-       |  SELECT p.query_id, s.ccid,
-       |   row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(p.qv, s.cv), x -> x[1] * x[2])) /
-       |     sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS prn
-       |  FROM p, cseeds s) WHERE prn <= ${CurveProbes.max}),
-       |scored AS (
-       | SELECT p.query_id, pc.prn, ca.vec_id AS neighbor_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.qv, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT) AS s
-       | FROM p
-       | JOIN pcell pc ON pc.query_id = p.query_id
-       | JOIN cass ca ON ca.ccid = pc.ccid AND ca.vec_id != p.query_id
-       | JOIN e c ON c.vec_id = ca.vec_id),
-       |ts AS (
-       | SELECT p.query_id, c.vec_id AS neighbor_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.qv, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT) AS s
-       | FROM p, e c WHERE c.vec_id != p.query_id),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |   row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rk
-       |  FROM ts) WHERE rk <= ${Similarity.RecallK}),
+    s"""${candidatesSql(CurveProbes.max)},
+       |${Similarity.recallTruthSql},
        |pts AS (SELECT unnest([${CurveProbes.mkString(", ")}]) AS nprobe),
        |cand AS (
        | SELECT pts.nprobe, sc.query_id, sc.neighbor_id, sc.s
-       | FROM pts JOIN scored sc ON sc.prn <= pts.nprobe),
+       | FROM pts JOIN cs sc ON sc.prn <= pts.nprobe),
        |ccount AS (
        | SELECT nprobe, query_id, count(*) AS n_cand
        | FROM cand GROUP BY 1, 2),
        |approx AS (
-       | SELECT nprobe, query_id, neighbor_id FROM (
-       |  SELECT nprobe, query_id, neighbor_id,
-       |   row_number() OVER (PARTITION BY nprobe, query_id
-       |    ORDER BY s DESC, neighbor_id) AS rk
-       |  FROM cand) WHERE rk <= ${Similarity.RecallK}),
+       | SELECT nprobe, query_id, neighbor_id
+       | FROM (${Similarity.topNeighborsSql("cand", Similarity.RecallK, "nprobe, query_id")})),
        |hits AS (
        | SELECT a.nprobe, a.query_id, count(*) AS n_overlap
        | FROM approx a JOIN truth t

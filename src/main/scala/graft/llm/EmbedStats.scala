@@ -37,7 +37,7 @@ object EmbedStats {
   def embedDimStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val q = Tables.embeddings(spark, dir)
-      .select(posexplode(transform($"embedding", x => x.cast("double"))))
+      .select(posexplode(Similarity.asDouble($"embedding")))
       .select($"pos".cast("long").as("dim"),
         floor($"col" * lit(1000000.0)).cast("long").as("q"))
     q.groupBy($"dim")

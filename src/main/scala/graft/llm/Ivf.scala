@@ -1,12 +1,12 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Declared
 import graft.io.Tables
-import graft.llm.Similarity.cosineFast
+import graft.llm.Similarity.{asDouble, cosineFast, cosineSql, roundedCosine}
 
 /** IVF (inverted-file) coarse quantizer — the one place an ANN index is
   * built and probed. Every ANN query (x_ivf_topk, x_ivfpq_topk,
@@ -29,6 +29,8 @@ import graft.llm.Similarity.cosineFast
   * is what lets the oracle gate pin the approximate routes (nProbe < nlist)
   * end to end, not just the exhaustive probe. A NULL cosine (a zero-norm
   * vector or centroid) loses to every non-NULL cell in both argmaxes.
+  * Each stage's DuckDB twin ([[seedsSql]], [[trainSql]], [[assignSql]],
+  * [[routeSql]]) sits beside it, and every ANN oracle composes those.
   */
 object Ivf {
 
@@ -49,6 +51,17 @@ object Ivf {
       .select($"vec_id", $"v")
       .as[(Long, Seq[Double])].collect().sortBy(_._1).map(_._2).toSeq
   }
+
+  /** [[seeds]]'s twin: CTE `name` (cid BIGINT, v) — the stride seeds of the
+    * vector CTE `e` (vec_id, v), numbered in id order — after its stride
+    * CTE `<name>st`.
+    */
+  private[llm] def seedsSql(name: String, k: Int): String =
+    s"""${name}st AS (SELECT greatest(CAST(count(*) // $k AS BIGINT), 1) AS stride FROM e),
+       |$name AS (
+       | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, v
+       | FROM (SELECT vec_id, v FROM e, ${name}st WHERE vec_id % stride = 0
+       |       ORDER BY vec_id LIMIT $k))""".stripMargin
 
   /** Stage 2 — (cid int, centroid): the [[seeds]] numbered in id order,
     * then `lloyd` Lloyd passes. Centroids stay driver-local between passes
@@ -85,8 +98,28 @@ object Ivf {
     cent.toDF("cid", "centroid")
   }
 
-  private def roundedCosine(spark: SparkSession, a: Column, b: Column): Column =
-    round(cosineFast(spark, a, b), 6) + lit(0.0)
+  /** [[train]]'s twin: CTE `name` (cid, v) — [[seedsSql]] unrolled through
+    * `lloyd` fixed-point passes over the vector CTE `e`, each an
+    * [[assignSql]] plus the exact per-(cell, dim) micro-unit mean; a cell
+    * that loses all members keeps its previous centroid.
+    */
+  private[llm] def trainSql(name: String, nlist: Int, lloyd: Int): String =
+    seedsSql(s"${name}0", nlist) + (1 to lloyd).map { k =>
+      s""",
+         |${assignSql(s"${name}a$k", s"$name${k - 1}")},
+         |${name}m$k AS (
+         | SELECT cid, pos,
+         |  CAST(sum(CAST(round(x * 1000000) AS BIGINT)) AS DOUBLE)
+         |   / CAST(count(*) * 1000000 AS DOUBLE) AS m
+         | FROM (SELECT a.cid, generate_subscripts(e.v, 1) AS pos, unnest(e.v) AS x
+         |       FROM ${name}a$k a JOIN e ON e.vec_id = a.vec_id)
+         | GROUP BY cid, pos),
+         |${name}r$k AS (SELECT cid, list(m ORDER BY pos) AS v FROM ${name}m$k GROUP BY cid),
+         |$name$k AS (
+         | SELECT s.cid, COALESCE(r.v, s.v) AS v
+         | FROM $name${k - 1} s LEFT JOIN ${name}r$k r ON r.cid = s.cid)""".stripMargin
+    }.mkString + s""",
+       |$name AS (SELECT cid, v FROM $name$lloyd)""".stripMargin
 
   /** Stage 3 — (vec_id, cid): each vector of `e` (vec_id, v) to the
     * centroid of highest rounded cosine, ties to the lowest cid
@@ -107,6 +140,17 @@ object Ivf {
       .agg(max_by($"cid", struct($"sim", -$"cid")).as("cid"))
   }
 
+  /** [[assign]]'s twin: CTE `name` (vec_id, cid) — each vector of `e` to
+    * the centroid of CTE `centroids` (cid, v) of highest rounded cosine,
+    * ties to the lowest cid.
+    */
+  private[llm] def assignSql(name: String, centroids: String): String =
+    s"""$name AS (
+       | SELECT vec_id, cid FROM (
+       |  SELECT e.vec_id, c.cid,
+       |   row_number() OVER (PARTITION BY e.vec_id ORDER BY ${cosineSql("e.v", "c.v")} DESC, c.cid) AS rk
+       |  FROM e, $centroids c) WHERE rk = 1)""".stripMargin
+
   /** Stage 4 — the `nProbe` nearest cells of every probe (query_id, qv, …)
     * by the rounded cosine, ties to the lowest cid: the probe's columns
     * plus `cid` and its routing rank `prn` (1 = nearest). A window over
@@ -122,6 +166,17 @@ object Ivf {
       .filter($"prn" <= nProbe)
       .drop("centroid", "csim")
   }
+
+  /** [[route]]'s twin: CTE `name` (query_id, cid, prn) — the `nProbe`
+    * cells of CTE `centroids` (cid, v) nearest each probe of CTE `probes`
+    * (query_id, qv), ties to the lowest cid.
+    */
+  private[llm] def routeSql(name: String, probes: String, centroids: String, nProbe: Int): String =
+    s"""$name AS (
+       | SELECT query_id, cid, prn FROM (
+       |  SELECT p.query_id, c.cid,
+       |   row_number() OVER (PARTITION BY p.query_id ORDER BY ${cosineSql("p.qv", "c.v")} DESC, c.cid) AS prn
+       |  FROM $probes p, $centroids c) WHERE prn <= $nProbe)""".stripMargin
 
   /** Top-k cosine neighbors per query, searching only the nProbe inverted
     * lists [[route]] picks. queries: (query_id, qv) with ids in the vector
@@ -168,7 +223,7 @@ object Ivf {
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", asDouble($"embedding").as("v"))
     val centroids = train(spark, e, TopKList, lloyd = 0)
     val probes = e.filter($"vec_id" >= 5 && $"vec_id" < 10)
       .select($"vec_id".as("query_id"), $"v".as("qv"))
@@ -180,24 +235,7 @@ object Ivf {
     * exhaustive-probe IVF search above.
     */
   val ivfTopKSql: String =
-    s"""WITH e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
-       |pairs AS (
-       | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-       |  round(
-       |   list_sum(list_transform(list_zip(q.v, c.v), p -> p[1] * p[2])) /
-       |   sqrt(list_sum(list_transform(q.v, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x))),
-       |   6) + 0.0 AS sim
-       | FROM e q, e c
-       | WHERE q.vec_id >= 5 AND q.vec_id < 10 AND q.vec_id != c.vec_id),
-       |ranked AS (
-       | SELECT query_id, neighbor_id, sim,
-       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rnk
-       | FROM pairs)
-       |SELECT query_id, neighbor_id, rnk, sim
-       |FROM ranked WHERE rnk <= $TopKK
-       |ORDER BY query_id, rnk""".stripMargin
+    Similarity.bruteTopKSql("q.vec_id >= 5 AND q.vec_id < 10", TopKK)
 
   val declared: Seq[Declared] = Seq(
     Declared("x_ivf_topk", ivfTopK, Some(ivfTopKSql)))

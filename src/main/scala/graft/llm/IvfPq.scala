@@ -46,7 +46,7 @@ object IvfPq {
   def ivfpqTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", Similarity.asDouble($"embedding").as("v"))
     searchOver(spark, e, e.filter($"vec_id" < Probes)
         .select($"vec_id".as("query_id"), $"v".as("qv")),
       CoarseNList, NProbe, TopK)
@@ -128,56 +128,20 @@ object IvfPq {
       .orderBy($"query_id", $"rnk")
   }
 
-  val ivfpqTopKSql: String = {
-    val sd = Pq.SubDim
-    s"""WITH e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
+  val ivfpqTopKSql: String =
+    s"""WITH ${Similarity.vecsSql()},
        |codes AS (SELECT vec_id, c0, c1, c2, c3 FROM (${Pq.pqAssignSql})),
-       |cst AS (SELECT greatest(CAST(count(*) // $CoarseNList AS BIGINT), 1) AS stride FROM e),
-       |cseeds AS (
-       | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS ccid, v AS cv
-       | FROM (SELECT vec_id, v FROM e, cst WHERE vec_id % stride = 0
-       |       ORDER BY vec_id LIMIT $CoarseNList)),
-       |cscored AS (
-       | SELECT e.vec_id, s.ccid,
-       |  round(
-       |   list_sum(list_transform(list_zip(e.v, s.cv), p -> p[1] * p[2])) /
-       |   sqrt(list_sum(list_transform(e.v, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |   6) + 0.0 AS sim
-       | FROM e, cseeds s),
-       |cass AS (
-       | SELECT vec_id, ccid FROM (
-       |  SELECT vec_id, ccid,
-       |   row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, ccid) AS rk
-       |  FROM cscored) WHERE rk = 1),
+       |${Ivf.trainSql("cent", CoarseNList, lloyd = 0)},
+       |${Ivf.assignSql("cass", "cent")},
        |probes AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < $Probes),
-       |pcell AS (
-       | SELECT query_id, ccid FROM (
-       |  SELECT p.query_id, s.ccid,
-       |   row_number() OVER (PARTITION BY p.query_id ORDER BY
-       |    round(
-       |     list_sum(list_transform(list_zip(p.qv, s.cv), x -> x[1] * x[2])) /
-       |     sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(s.cv, x -> x * x))),
-       |     6) + 0.0 DESC, s.ccid) AS prn
-       |  FROM probes p, cseeds s) WHERE prn <= $NProbe),
-       |pqst AS (SELECT greatest(CAST(count(*) // ${Pq.K} AS BIGINT), 1) AS stride FROM e),
-       |pqseeds AS (
-       | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, v
-       | FROM (SELECT vec_id, v FROM e, pqst WHERE vec_id % stride = 0
-       |       ORDER BY vec_id LIMIT ${Pq.K})),
-       |pqcb AS (
-       | SELECT m, cid, v[CAST(m * $sd + 1 AS BIGINT):CAST((m + 1) * $sd AS BIGINT)] AS c
-       | FROM pqseeds, (SELECT unnest(range(${Pq.M})) AS m)),
+       |${Ivf.routeSql("pcell", "probes", "cent", NProbe)},
+       |${Pq.codebookSql},
        |lut AS (
-       | SELECT p.query_id, cb.m, cb.cid,
-       |  round(list_sum(list_transform(
-       |    list_zip(p.qv[CAST(cb.m * $sd + 1 AS BIGINT):CAST((cb.m + 1) * $sd AS BIGINT)], cb.c),
-       |    x -> (x[1] - x[2]) * (x[1] - x[2]))), 6) AS d
-       | FROM probes p, pqcb cb),
+       | SELECT p.query_id, cb.m, cb.cid, ${Pq.subDistSql("p.qv")} AS d
+       | FROM probes p, cb),
        |cand AS (
        | SELECT pc.query_id, ca.vec_id AS neighbor_id
-       | FROM pcell pc JOIN cass ca ON ca.ccid = pc.ccid
+       | FROM pcell pc JOIN cass ca ON ca.cid = pc.cid
        | WHERE ca.vec_id != pc.query_id),
        |scored AS (
        | SELECT c.query_id, c.neighbor_id,
@@ -196,7 +160,6 @@ object IvfPq {
        |SELECT query_id, neighbor_id, CAST(rk AS BIGINT) AS rnk, adc
        |FROM ranked WHERE rk <= $TopK
        |ORDER BY query_id, rnk""".stripMargin
-  }
 
   val declared: Seq[Declared] = Seq(
     Declared("x_ivfpq_topk", ivfpqTopK, Some(ivfpqTopKSql)))

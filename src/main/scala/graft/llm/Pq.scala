@@ -88,7 +88,7 @@ object Pq {
   def pqAssign(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", Similarity.asDouble($"embedding").as("v"))
     bestCodes(spark, e).groupBy($"vec_id")
       .agg(
         max(when($"m" === 0, $"cid")).as("c0"),
@@ -104,23 +104,28 @@ object Pq {
       .orderBy($"vec_id")
   }
 
-  val pqAssignSql: String =
-    s"""WITH e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
-       |st AS (SELECT greatest(CAST(count(*) // $K AS BIGINT), 1) AS stride FROM e),
-       |seeds AS (
-       | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, v
-       | FROM (SELECT vec_id, v FROM e, st WHERE vec_id % stride = 0
-       |       ORDER BY vec_id LIMIT $K)),
+  /** [[subCodebook]]'s twin: CTE `cb` (m, cid, c) over the vector CTE `e`,
+    * after its [[Ivf.seedsSql]] CTE `cbseeds`.
+    */
+  private[llm] def codebookSql: String =
+    s"""${Ivf.seedsSql("cbseeds", K)},
        |cb AS (
        | SELECT m, cid, v[CAST(m * $SubDim + 1 AS BIGINT):CAST((m + 1) * $SubDim AS BIGINT)] AS c
-       | FROM seeds, (SELECT unnest(range($M)) AS m)),
+       | FROM cbseeds, (SELECT unnest(range($M)) AS m))""".stripMargin
+
+  /** The 6 dp-rounded squared distance of subspace `cb.m` of the DOUBLE[]
+    * expression `v` to code vector `cb.c`: [[bestCodes]]' `dist`.
+    */
+  private[llm] def subDistSql(v: String): String =
+    s"""round(list_sum(list_transform(
+       |    list_zip($v[CAST(cb.m * $SubDim + 1 AS BIGINT):CAST((cb.m + 1) * $SubDim AS BIGINT)], cb.c),
+       |    z -> (z[1] - z[2]) * (z[1] - z[2]))), 6)""".stripMargin
+
+  val pqAssignSql: String =
+    s"""WITH ${Similarity.vecsSql()},
+       |$codebookSql,
        |scored AS (
-       | SELECT e.vec_id, cb.m, cb.cid,
-       |  round(list_sum(list_transform(
-       |    list_zip(e.v[CAST(cb.m * $SubDim + 1 AS BIGINT):CAST((cb.m + 1) * $SubDim AS BIGINT)], cb.c),
-       |    p -> (p[1] - p[2]) * (p[1] - p[2]))), 6) AS dist
+       | SELECT e.vec_id, cb.m, cb.cid, ${subDistSql("e.v")} AS dist
        | FROM e, cb),
        |best AS (
        | SELECT vec_id, m, cid, dist,

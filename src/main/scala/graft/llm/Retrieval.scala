@@ -204,7 +204,7 @@ object Retrieval {
         ($"pos" + 1).cast("long").as("rank"))
     val lex = ranked(bm25Scored(spark, dir), $"score", $"doc_id")
     val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v"))
+      .select($"vec_id", Similarity.asDouble($"embedding").as("v"))
     val probes = QueryDefs.map { case (q, _, p) => (q, p) }
       .toDF("query_id", "probe_id")
     val pv = broadcast(probes.join(e, $"probe_id" === $"vec_id")
@@ -213,8 +213,7 @@ object Retrieval {
       pv.crossJoin(e.select($"vec_id".as("cand_id"), $"v".as("cv")))
         .filter($"cand_id" =!= $"probe_id") // a probe is not its own neighbor
         .select($"query_id", $"cand_id",
-          round(Similarity.cosineFast(spark, $"qv", $"cv") * lit(1000000L))
-            .cast("long").as("micro_sim")),
+          Similarity.microSim(spark, $"qv", $"cv").as("micro_sim")),
       $"micro_sim", $"cand_id")
     val fused = lex.select($"query_id", $"doc_id",
         expr(s"$RrfScale div (${RrfK} + rank)").as("c"))
@@ -240,17 +239,10 @@ object Retrieval {
        |   row_number() OVER (PARTITION BY query_id
        |    ORDER BY score DESC, doc_id) AS rank
        |  FROM scored) WHERE rank <= $RrfListK),
-       |e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
+       |${Similarity.vecsSql()},
        |pr AS (SELECT * FROM (VALUES $probeRows) AS t(query_id, probe_id)),
        |sem0 AS (
-       | SELECT pr.query_id, c.vec_id AS doc_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.v, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.v, x -> x * x))
-       |        * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT)
-       |   AS micro_sim
+       | SELECT pr.query_id, c.vec_id AS doc_id, ${Similarity.microSimSql("p.v", "c.v")} AS micro_sim
        | FROM pr JOIN e p ON p.vec_id = pr.probe_id
        |  JOIN e c ON c.vec_id != pr.probe_id),
        |sem AS (

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Declared
 import graft.io.Tables
-import graft.llm.Similarity.cosineFast
+import graft.llm.Similarity.{asDouble, cosineSql, roundedCosine, vecsSql}
 
 /** Semantic (embedding-space) deduplication — the SemDeDup recipe (Abbas et
   * al., "SemDeDup: Data-efficient learning at web-scale through semantic
@@ -57,7 +57,7 @@ object Semantic {
     import spark.implicits._
     semanticDedupOver(spark,
       Tables.embeddings(spark, dir)
-        .select($"vec_id", transform($"embedding", x => x.cast("double")).as("v")))
+        .select($"vec_id", asDouble($"embedding").as("v")))
   }
 
   /** Same pipeline over any (vec_id, v: array<double>) frame — the seam the
@@ -78,7 +78,7 @@ object Semantic {
     val b = assigned.select($"cid", $"vec_id".as("kb"), $"v".as("vb"))
     a.join(b, Seq("cid"))
       .filter($"ka" < $"kb")
-      .withColumn("sim", round(cosineFast(spark, $"va", $"vb"), 6) + lit(0.0))
+      .withColumn("sim", roundedCosine(spark, $"va", $"vb"))
       .filter($"sim" >= tau)
       .groupBy($"kb".as("loser_id"))
       .agg(first($"cid").as("cid"), min($"ka").as("keeper_id"),
@@ -91,34 +91,13 @@ object Semantic {
     * row_number on (sim DESC, cid), in-cluster pairs, greedy keep-lowest.
     */
   val semanticDedupSql: String =
-    s"""WITH e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
-       |st AS (SELECT greatest(CAST(count(*) // $NList AS BIGINT), 1) AS stride FROM e),
-       |seeds AS (
-       | SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid, v
-       | FROM (SELECT vec_id, v FROM e, st WHERE vec_id % stride = 0
-       |       ORDER BY vec_id LIMIT $NList)),
-       |scored AS (
-       | SELECT e.vec_id, s.cid,
-       |  round(
-       |   list_sum(list_transform(list_zip(e.v, s.v), p -> p[1] * p[2])) /
-       |   sqrt(list_sum(list_transform(e.v, x -> x * x)) * list_sum(list_transform(s.v, x -> x * x))),
-       |   6) + 0.0 AS sim
-       | FROM e, seeds s),
-       |asg AS (
-       | SELECT vec_id, cid FROM (
-       |  SELECT vec_id, cid,
-       |   row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) AS rn
-       |  FROM scored) WHERE rn = 1),
+    s"""WITH ${vecsSql()},
+       |${Ivf.trainSql("seeds", NList, lloyd = 0)},
+       |${Ivf.assignSql("asg", "seeds")},
        |m AS (SELECT a.vec_id, a.cid, e.v FROM asg a JOIN e ON e.vec_id = a.vec_id),
        |pairs AS (
-       | SELECT x.cid, x.vec_id AS ka, y.vec_id AS kb,
-       |  round(
-       |   list_sum(list_transform(list_zip(x.v, y.v), p -> p[1] * p[2])) /
-       |   sqrt(list_sum(list_transform(x.v, q -> q * q)) * list_sum(list_transform(y.v, q -> q * q))),
-       |   6) + 0.0 AS sim
-       | FROM m x JOIN m y ON x.cid = y.cid AND x.vec_id < y.vec_id)
+       | SELECT a.cid, a.vec_id AS ka, b.vec_id AS kb, ${cosineSql("a.v", "b.v")} AS sim
+       | FROM m a JOIN m b ON a.cid = b.cid AND a.vec_id < b.vec_id)
        |SELECT kb AS loser_id, min(ka) AS keeper_id,
        | CAST(min(cid) AS INTEGER) AS cid, count(*) AS n_partners
        |FROM pairs WHERE sim >= $Tau

@@ -47,7 +47,39 @@ object Similarity {
     call_function("cosine_sim", a, b)
   }
 
-  private def asDouble(emb: Column): Column = transform(emb, x => x.cast("double"))
+  /** The cosine rounded to 6 dp, -0.0 canonicalized by `+ 0.0` so both
+    * engines hash identically: the similarity every query here ranks,
+    * routes and thresholds by.
+    */
+  def roundedCosine(spark: SparkSession, a: Column, b: Column): Column =
+    round(cosineFast(spark, a, b), 6) + lit(0.0)
+
+  /** The float → double widening of an `embedding` column. */
+  private[llm] def asDouble(emb: Column): Column = transform(emb, x => x.cast("double"))
+
+  // The oracle's twins of the kernels above, as DuckDB SQL text. Each is
+  // written here once and composed by every vector-search oracle; none is
+  // derived from a Spark plan, so the oracle stays an independent check.
+
+  /** [[asDouble]]'s twin: CTE `e` (vec_id, `cols`…, v) over `embeddings`. */
+  private[llm] def vecsSql(cols: String*): String =
+    s"""e AS (
+       | SELECT ${(("vec_id" +: cols) :+ "list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v").mkString(", ")}
+       | FROM embeddings)""".stripMargin
+
+  private def dotSql(a: String, b: String): String =
+    s"list_sum(list_transform(list_zip($a, $b), z -> z[1] * z[2]))"
+
+  private def normsSql(a: String, b: String): String =
+    s"sqrt(list_sum(list_transform($a, z -> z * z)) * list_sum(list_transform($b, z -> z * z)))"
+
+  /** [[roundedCosine]]'s twin over two DOUBLE[] expressions. */
+  private[llm] def cosineSql(a: String, b: String): String =
+    s"round(${dotSql(a, b)} / ${normsSql(a, b)}, 6) + 0.0"
+
+  /** [[microSim]]'s twin over two DOUBLE[] expressions. */
+  private[llm] def microSimSql(a: String, b: String): String =
+    s"CAST(round(1000000 * ${dotSql(a, b)} / ${normsSql(a, b)}) AS BIGINT)"
 
   /** x_sim_topk — exact brute-force cosine top-10 for probe vectors vec_id<5. */
   def simTopK(spark: SparkSession, dir: String): DataFrame = {
@@ -59,8 +91,7 @@ object Similarity {
     val sims = broadcast(probes).crossJoin(
         e.select($"vec_id".as("neighbor_id"), $"v".as("nv")))
       .filter($"query_id" =!= $"neighbor_id")
-      // + 0.0 canonicalizes -0.0 so both engines hash identically
-      .withColumn("sim", round(cosineFast(spark, $"qv", $"nv"), 6) + lit(0.0))
+      .withColumn("sim", roundedCosine(spark, $"qv", $"nv"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"query_id").orderBy($"sim".desc, $"neighbor_id".asc)
     sims.withColumn("rnk", row_number().over(w))
@@ -69,25 +100,26 @@ object Similarity {
       .orderBy($"query_id", $"rnk")
   }
 
-  val simTopKSql: String =
-    """WITH e AS (
-      | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      | FROM embeddings),
-      |pairs AS (
-      | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-      |  round(
-      |   list_sum(list_transform(list_zip(q.v, c.v), p -> p[1] * p[2])) /
-      |   sqrt(list_sum(list_transform(q.v, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x))),
-      |   6) + 0.0 AS sim
-      | FROM e q, e c
-      | WHERE q.vec_id < 5 AND q.vec_id != c.vec_id),
-      |ranked AS (
-      | SELECT query_id, neighbor_id, sim,
-      |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rnk
-      | FROM pairs)
-      |SELECT query_id, neighbor_id, rnk, sim
-      |FROM ranked WHERE rnk <= 10
-      |ORDER BY query_id, rnk""".stripMargin
+  /** The brute-force oracle of a probe set: per probe `q` of `e` passing
+    * `probeFilter`, its `k` neighbors of highest [[cosineSql]], ties to
+    * the lowest id — (query_id, neighbor_id, rnk INTEGER, sim).
+    */
+  private[llm] def bruteTopKSql(probeFilter: String, k: Int): String =
+    s"""WITH ${vecsSql()},
+       |pairs AS (
+       | SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+       |  ${cosineSql("q.v", "c.v")} AS sim
+       | FROM e q, e c
+       | WHERE $probeFilter AND q.vec_id != c.vec_id),
+       |ranked AS (
+       | SELECT query_id, neighbor_id, sim,
+       |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS INTEGER) AS rnk
+       | FROM pairs)
+       |SELECT query_id, neighbor_id, rnk, sim
+       |FROM ranked WHERE rnk <= $k
+       |ORDER BY query_id, rnk""".stripMargin
+
+  val simTopKSql: String = bruteTopKSql("q.vec_id < 5", 10)
 
   /** Random-hyperplane signbit bucket key: `bits` dims' sign pattern
     * starting at `offset` — ONE definition of the oracle-sensitive bucket
@@ -102,6 +134,13 @@ object Similarity {
     concat((0 until bits).map(i =>
       when(try_element_at(v, lit(offset + i + 1)) >= 0.0, lit("1")).otherwise(lit("0"))): _*)
 
+  /** [[signBucket]]'s twin over a DOUBLE[] expression: DuckDB reads an
+    * out-of-range `v[i]` as NULL, so a missing dim reads '0' here too.
+    */
+  private[llm] def signBucketSql(v: String, bits: Int, offset: Int = 0): String =
+    (0 until bits).map(i => s"CASE WHEN $v[${offset + i + 1}] >= 0.0 THEN '1' ELSE '0' END")
+      .mkString(" || ")
+
   /** x_sim_bucketed — LSH-bucketed approximate neighbor candidates: pairs in
     * the same signbit bucket with cosine ≥ 0.2. Equi-join on the bucket key.
     */
@@ -114,30 +153,21 @@ object Similarity {
     val r = e.select($"bucket", $"vec_id".as("vec_b"), $"v".as("vb"))
     l.join(r, Seq("bucket"))
       .filter($"vec_a" < $"vec_b")
-      .withColumn("sim", round(cosineFast(spark, $"va", $"vb"), 6) + lit(0.0))
+      .withColumn("sim", roundedCosine(spark, $"va", $"vb"))
       .filter($"sim" >= 0.2)
       .select($"vec_a", $"vec_b", $"sim")
       .orderBy($"vec_a", $"vec_b")
   }
 
   val simBucketedSql: String =
-    """WITH e AS (
-      | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      | FROM embeddings),
-      |b AS (
-      | SELECT vec_id, v,
-      |  list_aggregate(list_transform(v[1:8], x -> CASE WHEN x >= 0.0 THEN '1' ELSE '0' END), 'string_agg', '') AS bucket
-      | FROM e),
-      |pairs AS (
-      | SELECT l.vec_id AS vec_a, r.vec_id AS vec_b,
-      |  round(
-      |   list_sum(list_transform(list_zip(l.v, r.v), p -> p[1] * p[2])) /
-      |   sqrt(list_sum(list_transform(l.v, x -> x * x)) * list_sum(list_transform(r.v, x -> x * x))),
-      |   6) + 0.0 AS sim
-      | FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id)
-      |SELECT vec_a, vec_b, sim
-      |FROM pairs WHERE sim >= 0.2
-      |ORDER BY vec_a, vec_b""".stripMargin
+    s"""WITH ${vecsSql()},
+       |b AS (SELECT vec_id, v, ${signBucketSql("v", 8)} AS bucket FROM e),
+       |pairs AS (
+       | SELECT l.vec_id AS vec_a, r.vec_id AS vec_b, ${cosineSql("l.v", "r.v")} AS sim
+       | FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id)
+       |SELECT vec_a, vec_b, sim
+       |FROM pairs WHERE sim >= 0.2
+       |ORDER BY vec_a, vec_b""".stripMargin
 
   /** Fixture-calibrated: the synthetic embeddings are near-random, so
     * bucketed-candidate cosines top out at ~0.47/0.51/0.53 at
@@ -161,50 +191,61 @@ object Similarity {
     */
   def dedupEmbed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val e = Tables.embeddings(spark, dir)
-      .select($"vec_id", asDouble($"embedding").as("v"))
+    embedPairs(spark, Tables.embeddings(spark, dir)
+        .select($"vec_id", asDouble($"embedding").as("v")), EmbedDupThreshold)
+      .orderBy($"vec_a", $"vec_b")
+  }
+
+  /** The [[EmbedTables]] sign-LSH tables of `e` (vec_id, v, …): `e`'s
+    * columns plus `tbl` and its [[EmbedBits]]-bit `bucket` over dims
+    * [tbl·EmbedBits, (tbl+1)·EmbedBits), one row per (vector, table).
+    */
+  private[llm] def embedTables(e: DataFrame): DataFrame = {
     val tables = (0 until EmbedTables).map { t =>
       struct(lit(t).as("tbl"),
-        signBucket($"v", EmbedBits, offset = t * EmbedBits).as("bucket"))
+        signBucket(col("v"), EmbedBits, offset = t * EmbedBits).as("bucket"))
     }
-    val bands = e.select($"vec_id", $"v", explode(array(tables: _*)).as("x"))
-      .select($"vec_id", $"v", $"x.tbl".as("tbl"), $"x.bucket".as("bucket"))
+    e.select(col("*"), explode(array(tables: _*)).as("x"))
+      .select(e.columns.map(col) :+ col("x.tbl").as("tbl") :+ col("x.bucket").as("bucket"): _*)
+  }
+
+  /** [[embedTables]]'s twin: CTE `bands` (vec_id, v, tbl, bucket) over `e`. */
+  private def embedTablesSql: String = (0 until EmbedTables).map { t =>
+    s"SELECT vec_id, v, $t AS tbl, ${signBucketSql("v", EmbedBits, t * EmbedBits)} AS bucket FROM e"
+  }.mkString("bands AS (\n ", "\n UNION ALL ", ")")
+
+  /** The scored near-duplicate pairs of `e` (vec_id, v): (vec_a < vec_b,
+    * sim) sharing a bucket in any of the [[embedTables]], at
+    * [[roundedCosine]] ≥ `threshold`, each pair once.
+    */
+  private def embedPairs(spark: SparkSession, e: DataFrame, threshold: Double): DataFrame = {
+    import spark.implicits._
+    val bands = embedTables(e)
     val l = bands.select($"tbl", $"bucket", $"vec_id".as("vec_a"), $"v".as("va"))
     val r = bands.select($"tbl", $"bucket", $"vec_id".as("vec_b"), $"v".as("vb"))
     l.join(r, Seq("tbl", "bucket"))
       .filter($"vec_a" < $"vec_b")
-      .withColumn("sim", round(cosineFast(spark, $"va", $"vb"), 6) + lit(0.0))
-      .filter($"sim" >= EmbedDupThreshold)
+      .withColumn("sim", roundedCosine(spark, $"va", $"vb"))
+      .filter($"sim" >= threshold)
       .select($"vec_a", $"vec_b", $"sim")
       .distinct()
-      .orderBy($"vec_a", $"vec_b")
   }
 
-  val dedupEmbedSql: String = {
-    val tableRows = (0 until EmbedTables).map { t =>
-      val u = if (t == 0) "" else "UNION ALL "
-      val bits = (0 until EmbedBits)
-        .map(i => s"CASE WHEN v[${t * EmbedBits + i + 1}] >= 0.0 THEN '1' ELSE '0' END")
-        .mkString(" || ")
-      s"${u}SELECT vec_id, v, $t AS tbl, $bits AS bucket FROM e"
-    }.mkString("\n ")
-    s"""WITH e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
-       |bands AS (
-       | $tableRows)
-       |SELECT DISTINCT l.vec_id AS vec_a, r.vec_id AS vec_b,
-       | round(
-       |  list_sum(list_transform(list_zip(l.v, r.v), p -> p[1] * p[2])) /
-       |  sqrt(list_sum(list_transform(l.v, x -> x * x)) * list_sum(list_transform(r.v, x -> x * x))),
-       |  6) + 0.0 AS sim
-       |FROM bands l JOIN bands r ON l.tbl = r.tbl AND l.bucket = r.bucket AND l.vec_id < r.vec_id
-       |WHERE round(
-       |  list_sum(list_transform(list_zip(l.v, r.v), p -> p[1] * p[2])) /
-       |  sqrt(list_sum(list_transform(l.v, x -> x * x)) * list_sum(list_transform(r.v, x -> x * x))),
-       |  6) + 0.0 >= $EmbedDupThreshold
+  /** [[embedPairs]]'s twin: CTEs `e`, `bands` and `pairs` (vec_a, vec_b, sim). */
+  private def embedPairsSql(threshold: Double): String =
+    s"""WITH ${vecsSql()},
+       |$embedTablesSql,
+       |pairs AS (
+       | SELECT DISTINCT vec_a, vec_b, sim FROM (
+       |  SELECT l.vec_id AS vec_a, r.vec_id AS vec_b, ${cosineSql("l.v", "r.v")} AS sim
+       |  FROM bands l JOIN bands r
+       |   ON l.tbl = r.tbl AND l.bucket = r.bucket AND l.vec_id < r.vec_id)
+       | WHERE sim >= $threshold)""".stripMargin
+
+  val dedupEmbedSql: String =
+    s"""${embedPairsSql(EmbedDupThreshold)}
+       |SELECT vec_a, vec_b, sim FROM pairs
        |ORDER BY vec_a, vec_b""".stripMargin
-  }
 
   /** x_embed_centroid — per-label centroid of the embedding space (the
     * class-prototype / IVF-seed computation). Each component is summed as a
@@ -389,18 +430,12 @@ object Similarity {
   }
 
   val sqlCosineSql: String =
-    """SELECT e.vec_id,
-      | round(
-      |  list_sum(list_transform(list_zip(e.v, p.v), t -> t[1] * t[2])) /
-      |  sqrt(list_sum(list_transform(e.v, x -> x * x)) *
-      |       list_sum(list_transform(p.v, x -> x * x))), 6) + 0.0 AS sim
-      |FROM (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |      FROM embeddings) e
-      |CROSS JOIN (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-      |            FROM embeddings WHERE vec_id = 0) p
-      |WHERE e.vec_id != 0
-      |ORDER BY sim DESC, e.vec_id
-      |LIMIT 20""".stripMargin
+    s"""WITH ${vecsSql()}
+       |SELECT e.vec_id, ${cosineSql("e.v", "p.v")} AS sim
+       |FROM e CROSS JOIN (SELECT v FROM e WHERE vec_id = 0) p
+       |WHERE e.vec_id != 0
+       |ORDER BY sim DESC, e.vec_id
+       |LIMIT 20""".stripMargin
 
   /** Neighbors per vector in [[knnGraph]]. */
   val KnnK = 3
@@ -425,12 +460,7 @@ object Similarity {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", asDouble($"embedding").as("v"))
-    val tables = (0 until EmbedTables).map { t =>
-      struct(lit(t).as("tbl"),
-        signBucket($"v", EmbedBits, offset = t * EmbedBits).as("bucket"))
-    }
-    val bands = e.select($"vec_id", explode(array(tables: _*)).as("x"))
-      .select($"vec_id", $"x.tbl".as("tbl"), $"x.bucket".as("bucket"))
+    val bands = embedTables(e).select($"vec_id", $"tbl", $"bucket")
     val cand = bands.select($"tbl", $"bucket", $"vec_id")
       .join(bands.select($"tbl", $"bucket", $"vec_id".as("nbr_id")), Seq("tbl", "bucket"))
       .filter($"vec_id" =!= $"nbr_id")
@@ -438,7 +468,7 @@ object Similarity {
     val scored = cand
       .join(e, Seq("vec_id"))
       .join(e.select($"vec_id".as("nbr_id"), $"v".as("nv")), Seq("nbr_id"))
-      .withColumn("sim", round(cosineFast(spark, $"v", $"nv"), 6) + lit(0.0))
+      .withColumn("sim", roundedCosine(spark, $"v", $"nv"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"vec_id").orderBy($"sim".desc, $"nbr_id".asc)
     scored.withColumn("rnk", row_number().over(w))
@@ -447,29 +477,15 @@ object Similarity {
       .orderBy($"vec_id", $"rnk")
   }
 
-  val knnGraphSql: String = {
-    val tableRows = (0 until EmbedTables).map { t =>
-      val u = if (t == 0) "" else "UNION ALL "
-      val bits = (0 until EmbedBits)
-        .map(i => s"CASE WHEN v[${t * EmbedBits + i + 1}] >= 0.0 THEN '1' ELSE '0' END")
-        .mkString(" || ")
-      s"${u}SELECT vec_id, $t AS tbl, $bits AS bucket FROM e"
-    }.mkString("\n ")
-    s"""WITH e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
-       |bands AS (
-       | $tableRows),
+  val knnGraphSql: String =
+    s"""WITH ${vecsSql()},
+       |$embedTablesSql,
        |cand AS (
        | SELECT DISTINCT l.vec_id AS vec_id, r.vec_id AS nbr_id
        | FROM bands l JOIN bands r
        |   ON l.tbl = r.tbl AND l.bucket = r.bucket AND l.vec_id != r.vec_id),
        |scored AS (
-       | SELECT c.vec_id, c.nbr_id,
-       |  round(
-       |   list_sum(list_transform(list_zip(a.v, b.v), p -> p[1] * p[2])) /
-       |   sqrt(list_sum(list_transform(a.v, x -> x * x)) * list_sum(list_transform(b.v, x -> x * x))),
-       |   6) + 0.0 AS sim
+       | SELECT c.vec_id, c.nbr_id, ${cosineSql("a.v", "b.v")} AS sim
        | FROM cand c JOIN e a ON a.vec_id = c.vec_id JOIN e b ON b.vec_id = c.nbr_id),
        |ranked AS (
        | SELECT vec_id, nbr_id, sim,
@@ -478,7 +494,6 @@ object Similarity {
        |SELECT vec_id, nbr_id, rnk, sim
        |FROM ranked WHERE rnk <= $KnnK
        |ORDER BY vec_id, rnk""".stripMargin
-  }
 
   /** x_label_purity — per-LSH-bucket label histogram quality: for each
     * 8-bit sign bucket, member count, distinct labels, and the majority
@@ -500,15 +515,13 @@ object Similarity {
   }
 
   val labelPuritySql: String =
-    """WITH e AS (
-      | SELECT CAST(label AS BIGINT) AS label,
-      |  list_aggregate(list_transform(list_transform(embedding, x -> CAST(x AS DOUBLE))[1:8],
-      |    x -> CASE WHEN x >= 0.0 THEN '1' ELSE '0' END), 'string_agg', '') AS bucket
-      | FROM embeddings),
-      |bl AS (SELECT bucket, label, count(*) AS c FROM e GROUP BY bucket, label)
-      |SELECT bucket, CAST(sum(c) AS BIGINT) AS n, count(*) AS n_labels, max(c) AS maj
-      |FROM bl GROUP BY bucket
-      |ORDER BY bucket""".stripMargin
+    s"""WITH ${vecsSql("label")},
+       |bl AS (
+       | SELECT ${signBucketSql("v", 8)} AS bucket, CAST(label AS BIGINT) AS label, count(*) AS c
+       | FROM e GROUP BY bucket, label)
+       |SELECT bucket, CAST(sum(c) AS BIGINT) AS n, count(*) AS n_labels, max(c) AS maj
+       |FROM bl GROUP BY bucket
+       |ORDER BY bucket""".stripMargin
 
   /** Anchor label for [[hardNegatives]] (one label's vectors per pass —
     * the per-label mining loop a contrastive pipeline runs).
@@ -539,7 +552,7 @@ object Similarity {
     val sims = broadcast(anchors).crossJoin(
         e.filter($"label" =!= HnLabel)
           .select($"vec_id".as("neg_id"), $"label".as("neg_label"), $"v".as("nv")))
-      .withColumn("sim", round(cosineFast(spark, $"av", $"nv"), 6) + lit(0.0))
+      .withColumn("sim", roundedCosine(spark, $"av", $"nv"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"anchor_id").orderBy($"sim".desc, $"neg_id".asc)
     sims.withColumn("rnk", row_number().over(w))
@@ -550,17 +563,10 @@ object Similarity {
   }
 
   val hardNegativesSql: String =
-    s"""WITH e AS (
-       | SELECT vec_id, label,
-       |  list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
+    s"""WITH ${vecsSql("label")},
        |pairs AS (
        | SELECT a.vec_id AS anchor_id, c.vec_id AS neg_id,
-       |  c.label AS neg_label,
-       |  round(
-       |   list_sum(list_transform(list_zip(a.v, c.v), p -> p[1] * p[2])) /
-       |   sqrt(list_sum(list_transform(a.v, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x))),
-       |   6) + 0.0 AS sim
+       |  c.label AS neg_label, ${cosineSql("a.v", "c.v")} AS sim
        | FROM e a, e c
        | WHERE a.label = $HnLabel AND c.label != $HnLabel),
        |ranked AS (
@@ -599,6 +605,15 @@ object Similarity {
         (col("p") + 1).cast("long").as("rnk"), col("x.ord").as("s"))
   }
 
+  /** [[topNeighbors]]'s twin as a window: the rows of `from` (query_id,
+    * neighbor_id, s, …) ranked `rk` ≤ `k` per `by` by s, ties to the
+    * lowest neighbor_id — `from`'s columns plus `rk`.
+    */
+  private[llm] def topNeighborsSql(from: String, k: Int, by: String = "query_id"): String =
+    s"""SELECT * FROM (
+       |  SELECT *, row_number() OVER (PARTITION BY $by ORDER BY s DESC, neighbor_id) AS rk
+       |  FROM $from) WHERE rk <= $k""".stripMargin
+
   /** The recall evals' brute-force truth: per probe (query_id, qv), the ids
     * of its [[RecallK]] nearest vectors of `e` (vec_id, v) by micro-cosine,
     * the probe itself excluded — (query_id, neighbor_id).
@@ -610,6 +625,16 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"),
         microSim(spark, col("qv"), col("nv")).as("s")), RecallK)
       .select(col("query_id"), col("neighbor_id"))
+
+  /** [[recallTruth]]'s twin: CTEs `ts` and `truth` (query_id, neighbor_id)
+    * over the probe CTE `p` (query_id, qv) and the vector CTE `e`.
+    */
+  private[llm] def recallTruthSql: String =
+    s"""ts AS (
+       | SELECT p.query_id, c.vec_id AS neighbor_id, ${microSimSql("p.qv", "c.v")} AS s
+       | FROM p, e c WHERE c.vec_id != p.query_id),
+       |truth AS (
+       | SELECT query_id, neighbor_id FROM (${topNeighborsSql("ts", RecallK)}))""".stripMargin
 
   /** x_ann_recall — the eval harness as a query: recall@[[RecallK]] of the
     * signbit-bucketed ANN route ([[simBucketed]]'s buckets) against exact
@@ -661,37 +686,15 @@ object Similarity {
   }
 
   val annRecallSql: String =
-    s"""WITH e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
-       |b AS (
-       | SELECT vec_id, v,
-       |  list_aggregate(list_transform(v[1:8], x -> CASE WHEN x >= 0.0 THEN '1' ELSE '0' END), 'string_agg', '') AS bucket
-       | FROM e),
+    s"""WITH ${vecsSql()},
+       |b AS (SELECT vec_id, v, ${signBucketSql("v", 8)} AS bucket FROM e),
        |p AS (SELECT vec_id AS query_id, v AS qv, bucket AS qbucket
        |      FROM b WHERE vec_id < $RecallProbes),
-       |ts AS (
-       | SELECT p.query_id, c.vec_id AS neighbor_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.qv, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT) AS s
-       | FROM p, e c WHERE c.vec_id != p.query_id),
-       |truth AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |   row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rk
-       |  FROM ts) WHERE rk <= $RecallK),
+       |$recallTruthSql,
        |cs AS (
-       | SELECT p.query_id, c.vec_id AS neighbor_id,
-       |  CAST(round(1000000 *
-       |   list_sum(list_transform(list_zip(p.qv, c.v), q -> q[1] * q[2])) /
-       |   sqrt(list_sum(list_transform(p.qv, x -> x * x)) * list_sum(list_transform(c.v, x -> x * x)))) AS BIGINT) AS s
+       | SELECT p.query_id, c.vec_id AS neighbor_id, ${microSimSql("p.qv", "c.v")} AS s
        | FROM p JOIN b c ON c.bucket = p.qbucket AND c.vec_id != p.query_id),
-       |approx AS (
-       | SELECT query_id, neighbor_id FROM (
-       |  SELECT query_id, neighbor_id,
-       |   row_number() OVER (PARTITION BY query_id ORDER BY s DESC, neighbor_id) AS rk
-       |  FROM cs) WHERE rk <= $RecallK),
+       |approx AS (SELECT query_id, neighbor_id FROM (${topNeighborsSql("cs", RecallK)})),
        |tc AS (SELECT query_id, count(*) AS n_true FROM truth GROUP BY 1),
        |ac AS (SELECT query_id, count(*) AS n_approx FROM approx GROUP BY 1),
        |ov AS (
@@ -735,20 +738,7 @@ object Similarity {
     import spark.implicits._
     val e = Tables.embeddings(spark, dir)
       .select($"vec_id", asDouble($"embedding").as("v"))
-    val tables = (0 until EmbedTables).map { t =>
-      struct(lit(t).as("tbl"),
-        signBucket($"v", EmbedBits, offset = t * EmbedBits).as("bucket"))
-    }
-    val bands = e.select($"vec_id", $"v", explode(array(tables: _*)).as("x"))
-      .select($"vec_id", $"v", $"x.tbl".as("tbl"), $"x.bucket".as("bucket"))
-    val l = bands.select($"tbl", $"bucket", $"vec_id".as("vec_a"), $"v".as("va"))
-    val r = bands.select($"tbl", $"bucket", $"vec_id".as("vec_b"), $"v".as("vb"))
-    val pairs = l.join(r, Seq("tbl", "bucket"))
-      .filter($"vec_a" < $"vec_b")
-      .withColumn("sim", round(cosineFast(spark, $"va", $"vb"), 6) + lit(0.0))
-      .filter($"sim" >= RateCurveThresholds.min)
-      .select($"vec_a", $"vec_b", $"sim")
-      .distinct()
+    val pairs = embedPairs(spark, e, RateCurveThresholds.min)
       .ckptDisk() // one scored candidate set serves all four points
     val nTotal = e.agg(count(lit(1)).as("n_total"))
     val points = RateCurveThresholds.toDF("threshold")
@@ -775,31 +765,8 @@ object Similarity {
       .orderBy($"threshold")
   }
 
-  val dedupRateCurveSql: String = {
-    val tableRows = (0 until EmbedTables).map { t =>
-      val u = if (t == 0) "" else "UNION ALL "
-      val bits = (0 until EmbedBits)
-        .map(i => s"CASE WHEN v[${t * EmbedBits + i + 1}] >= 0.0 THEN '1' ELSE '0' END")
-        .mkString(" || ")
-      s"${u}SELECT vec_id, v, $t AS tbl, $bits AS bucket FROM e"
-    }.mkString("\n ")
-    s"""WITH e AS (
-       | SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-       | FROM embeddings),
-       |bands AS (
-       | $tableRows),
-       |pairs AS (
-       | SELECT DISTINCT l.vec_id AS vec_a, r.vec_id AS vec_b,
-       |  round(
-       |   list_sum(list_transform(list_zip(l.v, r.v), p -> p[1] * p[2])) /
-       |   sqrt(list_sum(list_transform(l.v, x -> x * x)) * list_sum(list_transform(r.v, x -> x * x))),
-       |   6) + 0.0 AS sim
-       | FROM bands l JOIN bands r
-       |  ON l.tbl = r.tbl AND l.bucket = r.bucket AND l.vec_id < r.vec_id
-       | WHERE round(
-       |   list_sum(list_transform(list_zip(l.v, r.v), p -> p[1] * p[2])) /
-       |   sqrt(list_sum(list_transform(l.v, x -> x * x)) * list_sum(list_transform(r.v, x -> x * x))),
-       |   6) + 0.0 >= ${RateCurveThresholds.min}),
+  val dedupRateCurveSql: String =
+    s"""${embedPairsSql(RateCurveThresholds.min)},
        |pts AS (SELECT CAST(unnest([${RateCurveThresholds.mkString(", ")}]) AS DOUBLE) AS threshold),
        |perT AS (
        | SELECT pts.threshold, p.vec_a, p.vec_b
@@ -816,7 +783,6 @@ object Similarity {
        |FROM pts LEFT JOIN pc ON pc.threshold = pts.threshold
        | LEFT JOIN dc ON dc.threshold = pts.threshold, tot
        |ORDER BY pts.threshold""".stripMargin
-  }
 
   val declared: Seq[Declared] = Seq(
     Declared("x_dedup_rate_curve", dedupRateCurve, Some(dedupRateCurveSql)),

@@ -48,6 +48,30 @@ class SimilaritySpec extends SparkSpec {
     assert(b.toSeq == Seq("1000" -> "00", "1111" -> "10", "0000" -> "00"))
   }
 
+  test("embedTables gives every vector, ragged or empty, one signBucket row per table under ANSI") {
+    import Similarity.{EmbedBits, EmbedTables}
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val in = Map(
+      1L -> Seq.tabulate(64)(i => if (i % 3 == 0) -1.0 - i else i.toDouble), // 0.0 reads '1'
+      2L -> Seq.tabulate(10)(i => if (i % 4 == 1) -0.5 else 0.5), // tables 1–3 run past its end
+      3L -> Seq.empty[Double])
+    // driver model: dim d of table t is bit d − t·EmbedBits; a missing dim reads '0'
+    def model(v: Seq[Double], t: Int): String = (0 until EmbedBits).map { i =>
+      val d = t * EmbedBits + i
+      if (d < v.size && v(d) >= 0.0) '1' else '0'
+    }.mkString
+    val e = vecs(in.toSeq: _*)
+    val got = Similarity.embedTables(e).select($"vec_id", $"tbl", $"bucket")
+      .as[(Long, Int, String)].collect().toSeq
+    val bySignBucket = e.select($"vec_id" +: (0 until EmbedTables).map(t =>
+        Similarity.signBucket($"v", EmbedBits, t * EmbedBits)): _*).collect()
+      .flatMap(r => (0 until EmbedTables).map(t => (r.getLong(0), t, r.getString(t + 1))))
+    val expected = for ((id, v) <- in.toSeq; t <- 0 until EmbedTables) yield (id, t, model(v, t))
+    assert(got.sorted == expected.sorted)
+    assert(bySignBucket.toSeq.sorted == expected.sorted)
+    assert(Seq((2L, 0, "101110"), (2L, 1, "111000"), (2L, 2, "000000")).forall(expected.contains))
+  }
+
   test("simTopK on a real fixture dir ranks self-similar vectors first") {
     val dir = java.nio.file.Files.createTempDirectory("sim").toString
     // 3 probe-eligible vectors + clones: nearest neighbor of 0 must be 10 (its clone)

@@ -63,6 +63,17 @@ class StressSmokeSpec extends SparkSpec {
     assert(Stress.runSessions(spark, 4096L))
   }
 
+  test("evalstress scenario: AUC, KS and calibration rows equal the closed forms at smoke size") {
+    // 1024 is the scenario's floor: a smaller n is raised to it
+    assert(Stress.runEval(spark, 1024L))
+  }
+
+  test("quota scenario: exact quotas, repartition-invariant picks at smoke size") {
+    // 148,900 docs is the smallest corpus whose largest quota (the
+    // heaviest source's) fits its 1,489 docs; at 148,800 it cannot
+    assert(Stress.runQuota(spark, 148900L))
+  }
+
   test("an unknown scenario name is rejected with a usage line naming every scenario") {
     assert(Stress.scenario("skew").isRight)
     assert(Stress.scenario("dedup").isRight)
