@@ -12,12 +12,8 @@ import graft.util.Ckpt._
   * companion of [[PageRank]]'s co-purchase graph (same §2.3 analytics
   * contract over the reference's order feed).
   *
-  * Pair generation is the basket-aggregate shape (one shuffle of the
-  * narrow (orderkey, partkey) projection into ≤7-item baskets, pairs
-  * exploded map-side AFTER the exchange — see PageRank.edges for the
-  * measured trap in the self-join form). Baskets are sorted before pair
-  * expansion so every pair lands once as (a < b) — the oracle's
-  * `l_partkey <` self-join convention, by construction.
+  * Pairs are the [[CoPurchase]] pairs kept to (a < b), so every pair
+  * lands once — the oracle's `src < dst` convention.
   *
   * All scores are integer ppm: `conf(a→b) = n_pair·10⁶ div n_a`,
   * `lift = n_pair·n_orders·10⁶ div (n_a·n_b)` — exact long arithmetic
@@ -41,26 +37,13 @@ object Basket {
   /** x_basket_pairs — top co-purchased part pairs with confidence + lift. */
   def basketPairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // ONE shuffle of the fact table, straight into baskets: collect_set
-    // already dedups (orderkey, partkey) inside the aggregate, so a
-    // pre-aggregate distinct() pass would shuffle lineitem a second time
-    // for nothing (round-7 finding: 7.2 s driver-side, half of it that
-    // redundant exchange). Every downstream quantity — pair counts,
-    // per-part distinct-order counts, the order total — is a projection
-    // of the basket frame, which is orders-bounded (≤7-item sets), hence
-    // the single DISK_ONLY checkpoint feeding all three consumers.
-    val baskets = Tables.lineitem(spark, dir)
-      .select($"l_orderkey", $"l_partkey")
-      .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-      .ckptDisk()
-    val pairs = baskets
-      .select(explode(expr(
-        """flatten(transform(ps,
-          |  (x, i) -> transform(slice(ps, i + 2, size(ps)),
-          |            y -> struct(x AS a, y AS b))))""".stripMargin)).as("p"))
-      .select($"p.a", $"p.b")
-      .groupBy($"a", $"b").agg(count(lit(1)).as("n_pair"))
+    // Every downstream quantity — pair counts, per-part distinct-order
+    // counts, the order total — is a projection of the basket frame, which
+    // is orders-bounded (≤7-item sets), hence the single DISK_ONLY
+    // checkpoint feeding all three consumers.
+    val baskets = CoPurchase.baskets(Tables.lineitem(spark, dir)).ckptDisk()
+    val pairs = CoPurchase.pairs(baskets).where($"src" < $"dst")
+      .groupBy($"src".as("a"), $"dst".as("b")).agg(count(lit(1)).as("n_pair"))
       .filter($"n_pair" >= MinSupport)
     // ps is a SET per order, so exploding it counts each (order, part)
     // once — identical to distinct-then-count, without the distinct.
@@ -79,11 +62,10 @@ object Basket {
   }
 
   val basketPairsSql: String =
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    s"""WITH ${CoPurchase.pairsSql()},
        |pc AS (
-       | SELECT x.l_partkey AS pa, y.l_partkey AS pb, count(*) AS n_pair
-       | FROM li x JOIN li y
-       |   ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey
+       | SELECT src AS pa, dst AS pb, count(*) AS n_pair
+       | FROM pairs WHERE src < dst
        | GROUP BY 1, 2
        | HAVING count(*) >= ${MinSupport}),
        |ic AS (SELECT l_partkey, count(*) AS c FROM li GROUP BY 1),

@@ -7,8 +7,7 @@ import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
-/** Bounded breadth-first search over the co-purchase graph (parts adjacent
-  * when some order contains both — same graph as [[PageRank]]): minimum hop
+/** Bounded breadth-first search over the [[CoPurchase]] graph: minimum hop
   * distance from a seed part set, capped at [[MaxHops]] hops. The "blast
   * radius" query of recommendation / influence analysis.
   *
@@ -70,10 +69,8 @@ object Bfs {
   }
 
   val bfsDistSql: String =
-    s"""WITH RECURSIVE e AS (
-       | SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       | FROM lineitem a JOIN lineitem b
-       |   ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+    s"""WITH RECURSIVE ${CoPurchase.pairsSql()},
+       |e AS (SELECT DISTINCT src, dst FROM pairs),
        |walk(node, d) AS (
        | SELECT DISTINCT l_partkey, 0 FROM lineitem WHERE l_partkey < $SeedMax
        | UNION

@@ -16,9 +16,7 @@ import graft.util.Ckpt._
   * on parts with `p_partkey % InducedMod = 0` — an induced subgraph dense
   * enough (mean degree ~12–16 at every fixture SF) that cores and shared
   * neighborhoods are non-vacuous, declared in the oracle by the identical
-  * predicate. Pair expansion is the basket-aggregate shape (one narrow
-  * shuffle, map-side explode; see PageRank.edges for the measured
-  * self-join trap).
+  * predicate, applied to lineitem before the [[CoPurchase]] baskets.
   *
   * Scale: the wedge join (common neighbors) is bounded by Σ deg(w)² over
   * the induced graph — the induced-subgraph predicate is exactly the
@@ -40,35 +38,22 @@ object Neighbors {
   val KcoreRounds = 6
 
   /** Undirected induced co-purchase edges, canonical (a < b), distinct. */
-  private[analytics] def inducedEdges(spark: SparkSession, dir: String): DataFrame = {
+  private def inducedEdges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.lineitem(spark, dir)
-      .select($"l_orderkey", $"l_partkey")
+    val li = Tables.lineitem(spark, dir)
       .filter(pmod($"l_partkey", lit(InducedMod)) === 0)
-      .distinct()
-      .groupBy($"l_orderkey")
-      .agg(sort_array(collect_set($"l_partkey")).as("ps"))
-      .select(explode(expr(
-        """flatten(transform(ps,
-          |  (x, i) -> transform(slice(ps, i + 2, size(ps)),
-          |            y -> struct(x AS a, y AS b))))""".stripMargin)).as("p"))
-      .select($"p.a", $"p.b")
-      .distinct()
+    CoPurchase.pairs(CoPurchase.baskets(li)).where($"src" < $"dst")
+      .select($"src".as("a"), $"dst".as("b")).distinct()
   }
 
-  /** The shared edge-substrate CTE; `materialized = true` pins `und` so a
-    * consumer that references it many times (the k-core round chain) never
-    * re-inlines the lineitem self-join — built here from the flag, not by
-    * post-hoc string surgery on the SQL.
+  /** The twin of [[inducedEdges]]: CTE `und`; `materialized = true` pins
+    * it so a consumer that references it many times (the k-core round
+    * chain) never re-inlines the lineitem self-join.
     */
   private def inducedEdgesCte(materialized: Boolean = false): String = {
     val m = if (materialized) "MATERIALIZED " else ""
-    s"""li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
-       |       WHERE l_partkey % ${InducedMod} = 0),
-       |und AS ${m}(
-       | SELECT DISTINCT x.l_partkey AS a, y.l_partkey AS b
-       | FROM li x JOIN li y
-       |   ON x.l_orderkey = y.l_orderkey AND x.l_partkey < y.l_partkey)""".stripMargin
+    s"""${CoPurchase.pairsSql(s"l_partkey % $InducedMod = 0")},
+       |und AS ${m}(SELECT DISTINCT src AS a, dst AS b FROM pairs WHERE src < dst)""".stripMargin
   }
 
   /** x_graph_jaccard — top-50 node pairs by neighborhood Jaccard

@@ -7,101 +7,74 @@ import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
-/** Iterative graph analytics over a DERIVED graph: parts are nodes, and two
-  * parts are adjacent when some order contains both (the co-purchase graph —
-  * the association structure a recommender or basket analysis starts from).
-  * PageRank runs a fixed 4 iterations in INTEGER RANK UNITS (total mass
-  * 10^12, integer division throughout), so every iteration is exact and
-  * order-independent — float PageRank drifts across partition orders and
-  * can never hash-match an oracle. Flooring leaks a little mass per step
+/** Iterative graph analytics over the [[CoPurchase]] graph. PageRank runs
+  * a fixed 4 iterations in INTEGER RANK UNITS (total mass 10^12, integer
+  * division throughout), so every iteration is exact and order-independent
+  * — float PageRank drifts across partition orders and can never
+  * hash-match an oracle. Flooring leaks a little mass per step
   * (standard for integer PR); identical leakage on both engines.
   *
-  * Scale notes: edge derivation is a self-equi-join on l_orderkey — the
-  * blow-up is bounded by per-order basket size (≤7 TPC-H items, so ≤42
-  * directed pairs per order), not by table size. Each iteration is one
-  * equi-join (ranks ⋈ edges on src) + one aggregate on dst: 2 shuffles per
-  * step, both on graph keys — the canonical distributed-PR shape (Spark's
-  * own GraphX Pregel does the same dataflow). Degree rides along in the
-  * rank frame so no per-iteration re-join against a degree table (the
-  * measured per-round-join trap in docs/BENCH_NOTES.md).
+  * Scale notes: the edge blow-up is bounded by per-order basket size (≤7
+  * TPC-H items, so ≤42 directed pairs per order), not by table size. Each
+  * iteration is one equi-join (ranks ⋈ edges on src) + one aggregate on
+  * dst: 2 shuffles per step, both on graph keys — the canonical
+  * distributed-PR shape (Spark's own GraphX Pregel does the same
+  * dataflow). Degree rides along in the rank frame so no per-iteration
+  * re-join against a degree table (the measured per-round-join trap in
+  * docs/BENCH_NOTES.md).
   */
 object PageRank {
 
   val TotalMass = 1000000000000L
   val Iterations = 4
 
-  /** Distinct directed co-purchase edges (both directions of each pair).
-    * Shared with [[Bfs]] — one definition of the co-purchase graph.
-    */
-  private[analytics] def edges(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val li = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_partkey")
-    // Basket-aggregate shape: ONE shuffle of the (narrow) lineitem pairs
-    // into per-order baskets, then the ≤42 directed pairs per basket are
-    // exploded map-side AFTER the exchange — vs the self-join form, which
-    // shuffles lineitem twice (both join inputs) and only then expands.
-    // collect_set is safe exactly because the basket, not the table, bounds
-    // it (≤7 items/order at any SF); for a graph whose adjacency is NOT
-    // group-bounded, keep the self-join form instead.
-    // repartition(n, dst) THEN dedup on (src, dst): HashPartitioning(dst)
-    // satisfies ClusteredDistribution(src, dst) — equal pairs share a dst —
-    // so the dedup aggregate runs partition-local with no second exchange,
-    // and the output lands already dst-partitioned for the checkpoint.
-    // DST, not src: on the broadcast-rank path every iteration's
-    // rank ⋈ edges join streams the edge side (its partitioning is free to
-    // choose), and a dst-partitioned edge frame makes the inflow
-    // groupBy(dst) PARTITION-LOCAL — zero per-iteration exchanges, where
-    // src-partitioning paid one edge-bounded exchange per iteration (the
-    // dominant steady-state cost: x_pagerank 4.2 → 3.1 s isolated at
-    // sf0.1). The one-time deg aggregate moves to the
-    // other side of the trade: it now exchanges once, node-bounded after
-    // partial aggregation. A graph PAST the broadcast gate wants the
-    // opposite layout (src-partitioned, so the per-iteration shuffle join
-    // moves only the node-sized rank frame, and the inflow exchange is the
-    // price) — that is the caller's choice at the [[ranksOver]] seam,
-    // documented there and exercised by the stress harness's src-
-    // partitioned 2M-node graphs; THIS definition serves the declared
-    // fixture queries, whose ~200k-part graph sits on the broadcast path
-    // up to SF≈5 (part count is 200k·SF against the 1M-node gate). The
-    // EXPLICIT partition count opts out of AQE coalescing (which targets
-    // ~64 MB scan-shaped partitions — measured 16, idling half the cores):
-    // the downstream per-iteration joins are CPU-bound, so one partition
-    // per core wins (measured 1.9 s → 0.8 s per inflow aggregate at sf0.1).
-    li.groupBy($"l_orderkey").agg(collect_set($"l_partkey").as("ps"))
-      .select(explode($"ps").as("src"), $"ps")
-      .select($"src", explode($"ps").as("dst"))
-      .where($"src" =!= $"dst")
-      .repartition(spark.sparkContext.defaultParallelism, $"dst")
-      .dropDuplicates(Seq("src", "dst"))
-  }
-
   /** Full (part, deg, rank) frame after [[Iterations]] synchronous steps —
     * the complete result a caller would persist; x_pagerank declares its
     * top-20 cut.
     */
   def ranks(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    // The edge set is the co-purchase pairs deduped: repartition(n, dst)
+    // THEN dedup on (src, dst) — HashPartitioning(dst) satisfies
+    // ClusteredDistribution(src, dst), since equal pairs share a dst, so
+    // the dedup aggregate runs partition-local with no second exchange and
+    // lands already dst-partitioned for the checkpoint. DST, not src: on
+    // the broadcast-rank path every iteration's rank ⋈ edges join streams
+    // the edge side (its partitioning is free to choose), and a
+    // dst-partitioned edge frame makes the inflow groupBy(dst)
+    // PARTITION-LOCAL — zero per-iteration exchanges, where
+    // src-partitioning paid one edge-bounded exchange per iteration (the
+    // dominant steady-state cost: x_pagerank 4.2 → 3.1 s isolated at
+    // sf0.1). The one-time deg aggregate moves to the other side of the
+    // trade: it exchanges once, node-bounded after partial aggregation. A
+    // graph PAST the broadcast gate wants the opposite layout — the
+    // caller's choice at the [[ranksOver]] seam, documented there; THIS
+    // layout serves the declared fixture queries, whose ~200k-part graph
+    // sits on the broadcast path up to SF≈5 (part count is 200k·SF
+    // against the 1M-node gate).
+    val edges = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(spark, dir)))
+      .repartition(spark.sparkContext.defaultParallelism, $"dst")
+      .dropDuplicates(Seq("src", "dst"))
     // The edge set appears once per iteration in the final plan; without
-    // materialization Spark re-runs the self-join + distinct each time
+    // materialization Spark re-runs the pair build + distinct each time
     // (measured 9.4 s -> ~2 s at sf0.1). localCheckpoint truncates lineage
     // and pins the (small, bounded by basket-size²·orders) edge list in
     // executor storage; on a resilient cluster swap for persist(DISK_ONLY)
     // or a reliable checkpoint, as in the Jaccard pipeline.
-    // The dst-repartition in edges() lands BEFORE the checkpoint, and
-    // ckptDisk KEEPS that layout across the lineage cut (under AQE,
+    // ckptDisk KEEPS the dst layout across the lineage cut (under AQE,
     // Spark's own localCheckpoint would report UnknownPartitioning —
     // Bridge.repairCheckpointLayout re-attaches the final plan's
     // partitioning; DiffPageRankSpec pins the effect): every iteration's
     // broadcast-rank join streams the edge side in place and its inflow
     // groupBy(dst) aggregates partition-local — the steady state is ZERO
-    // exchanges per iteration (see edges() for the layout trade and
-    // ranksOver for the big-graph contract).
+    // exchanges per iteration.
     // DISK_ONLY: the default (deserialized MEMORY_AND_DISK) pinned ~|E| rows
     // of java objects in the storage region, and under suite-level heap
     // pressure eviction + GC inflated this query 4-6x run-to-run (round-5
     // driver bench: 20.4/14.6/12.4 s vs 3.6 s isolated). Serialized disk
     // blocks cost one stable re-read per iteration and CANNOT be evicted
     // mid-query, making the cost insensitive to suite position.
-    ranksOver(edges(spark, dir).ckptDisk())
+    ranksOver(edges.ckptDisk())
   }
 
   /** Above this node count the per-iteration broadcast hints switch off:
@@ -118,7 +91,7 @@ object PageRank {
     * for the path the caller's scale selects: DST-partitioned when the
     * node set is broadcast-sized (the per-iteration inflow groupBy(dst)
     * then runs partition-local — zero exchanges per iteration; what
-    * [[edges]] delivers), SRC-partitioned past [[BroadcastNodeLimit]]
+    * [[ranks]] delivers), SRC-partitioned past [[BroadcastNodeLimit]]
     * (the shuffle join then moves only the node-sized rank frame each
     * iteration and the inflow exchange is the price; what the stress
     * harness's multi-million-node graphs use). A mismatched layout is
@@ -236,10 +209,8 @@ object PageRank {
   val pagerankSql: String = {
     val iters = (1 to Iterations)
       .map(i => iterSql(s"r${i - 1}", s"r$i")).mkString(",\n")
-    s"""WITH e AS (
-       | SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       | FROM lineitem a JOIN lineitem b
-       |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+    s"""WITH ${CoPurchase.pairsSql()},
+       |e AS (SELECT DISTINCT src, dst FROM pairs),
        |deg AS (SELECT src, count(*) AS deg FROM e GROUP BY 1),
        |nn AS (SELECT count(*) AS n FROM deg),
        |deg_n AS (SELECT deg.src, deg.deg, nn.n FROM deg, nn),

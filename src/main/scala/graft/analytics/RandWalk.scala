@@ -6,29 +6,20 @@ import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
-/** Deterministic random walks over the co-purchase graph — the walk-corpus
-  * generator a node2vec/DeepWalk-style graph-embedding pipeline starts
-  * from (walks are the "sentences" the skip-gram stage consumes). Each
-  * start node launches [[Walks]] walks of [[Steps]] steps; the next hop is
-  * the out-neighbor minimizing `md5(start:walk:step:dst)` with a `(hash,
-  * dst)` tie-break — hash-driven selection instead of an RNG, so the walk
-  * corpus is REPRODUCIBLE under replay, repartitioning, and engine (the
-  * property that lets an incremental pipeline re-run a partition without
-  * invalidating every downstream embedding, and lets the DuckDB oracle
-  * re-derive the identical corpus).
+/** Deterministic random walks over the [[CoPurchase]] graph — the
+  * walk-corpus generator a node2vec/DeepWalk-style graph-embedding
+  * pipeline starts from (walks are the "sentences" the skip-gram stage
+  * consumes). Each start node launches [[Walks]] walks of [[Steps]] steps;
+  * the next hop is the out-neighbor minimizing `md5(start:walk:step:dst)`
+  * with a `(hash, dst)` tie-break — hash-driven selection instead of an
+  * RNG, so the walk corpus is REPRODUCIBLE under replay, repartitioning,
+  * and engine (the property that lets an incremental pipeline re-run a
+  * partition without invalidating every downstream embedding, and lets
+  * the DuckDB oracle re-derive the identical corpus).
   *
   * Scale shape: one frontier of (sampled starts × walks) rows advances
-  * through [[Steps]] rounds; each round is ONE broadcast equi-join of the
-  * (tiny, never-growing) frontier against the edge frame plus ONE argmin
-  * aggregate keyed by the walk — hash-aggregated via a single decimal
-  * encoding of (hash, dst), with map-side partial mins so the shuffle
-  * carries one row per walk, not the candidate fan-out. Frontier size is
-  * constant across rounds (walks never fork), so cost is Steps × (join +
-  * aggregate) with no blow-up; at 100 TB the edge frame is the big side —
-  * it streams map-side through every round in whatever layout
-  * [[PageRank.edges]] checkpointed (the broadcast join and the walk-keyed
-  * argmin are both indifferent to edge partitioning), and a frontier too
-  * big to broadcast would instead co-partition on the current node.
+  * through [[Steps]] rounds against [[CoPurchase.adjacency]], which streams
+  * map-side in whatever layout it was built in (see [[randWalk]]).
   *
   * Walk-corpus derivations (visit counts, skip-gram pairs) are projections
   * of this output; the paths themselves are the declared contract.
@@ -82,29 +73,12 @@ object RandWalk {
     */
   def randWalk(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // Adjacency build FUSED into the basket aggregate — the same
-    // co-purchase graph as [[PageRank.edges]] (two parts adjacent iff some
-    // order contains both; SAME basket-bounded blow-up contract), but
-    // built array-shaped in one pass instead of materializing the 12×
-    // larger pair-level edge frame and re-aggregating it: one shuffle of
-    // the narrow lineitem pairs into per-order baskets, one src-keyed
-    // exchange of (src, basket) rows, then per-src dedup INSIDE the row
-    // (array_distinct over the concatenated baskets — the pair-level
-    // dropDuplicates done without a pair-level frame). The checkpoint
-    // pins node-count rows (~|V|), not |E| rows. Array order is
-    // irrelevant downstream (array_min is order-independent and the
-    // packed pick is unique per dst), so no sort pass is paid.
-    // size(nbrs) > 0 keeps sink parity with the edge-frame form: a part
-    // only ever ordered alone has NO edges there, so it neither starts
-    // nor continues a walk here either.
-    val li = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_partkey")
-    val adj = li.groupBy($"l_orderkey").agg(collect_set($"l_partkey").as("ps"))
-      .select(explode($"ps").as("src"), $"ps")
-      .repartition(spark.sparkContext.defaultParallelism, $"src")
-      .groupBy($"src")
-      .agg(array_distinct(flatten(collect_list($"ps"))).as("nbrs0"))
-      .select($"src", array_remove($"nbrs0", $"src").as("nbrs"))
-      .filter(size($"nbrs") > 0)
+    // The adjacency frame, not the 12× larger pair-level edge frame: the
+    // checkpoint pins ~|V| rows. Array order is irrelevant downstream (the
+    // packed pick is unique per dst), and a part only ever ordered alone
+    // has no row, so it neither starts nor continues a walk — the sink
+    // rule the oracle's edge join gives.
+    val adj = CoPurchase.adjacency(CoPurchase.baskets(Tables.lineitem(spark, dir)))
       .ckptDisk()
     walksOver(adj).orderBy($"start", $"walk")
   }
@@ -178,10 +152,8 @@ object RandWalk {
     val steps = (1 to Steps)
       .map(k => stepSql(k, if (k == 1) "f0" else s"s${k - 1}"))
       .mkString(",\n")
-    s"""WITH e AS (
-       | SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
-       | FROM lineitem a JOIN lineitem b
-       |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey),
+    s"""WITH ${CoPurchase.pairsSql()},
+       |e AS (SELECT DISTINCT src, dst FROM pairs),
        |starts AS (
        | SELECT DISTINCT src AS start FROM e
        | WHERE substr(md5('ws:' || CAST(src AS VARCHAR)), 1, 1)

@@ -7,7 +7,7 @@ import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
-/** Bounded WEIGHTED shortest paths over the co-purchase graph — the
+/** Bounded WEIGHTED shortest paths over the [[CoPurchase]] graph — the
   * Bellman–Ford relaxation [[Bfs]]'s unweighted hop count cannot express:
   * a strong tie (parts sharing ≥ [[StrongMin]] orders) costs 1, a weak tie
   * costs 2, and the cheapest ≤[[MaxRounds]]-edge route from the seed set is
@@ -19,14 +19,13 @@ import graft.util.Ckpt._
   * which is exactly what the oracle's recursive-CTE walk + final `min(d)`
   * computes — the same equivalence [[Bfs]] pins for hops, lifted to weights.
   *
-  * Scale shape: the weighted edge list is built with ONE shuffle (the
-  * basket aggregate shared with [[PageRank]]; the per-(src,dst) shared-order
-  * count falls out of the same pair explosion partition-locally after the
-  * explicit dst repartition), checkpointed DISK_ONLY like every iterative
-  * substrate in the graph tier. Each relaxation round is one broadcast join
-  * of the node-bounded FRONTIER (only nodes whose distance improved last
-  * round — the textbook Bellman–Ford work cut; round sizes at sf0.1:
-  * 5→1132→1181→2 nodes, so round 3+ is near-free where the naive
+  * Scale shape: the weighted edge list is built from the co-purchase
+  * pairs (the per-(src,dst) shared-order count runs partition-locally
+  * after the explicit dst repartition), checkpointed DISK_ONLY like every
+  * iterative substrate in the graph tier. Each relaxation round is one
+  * broadcast join of the node-bounded FRONTIER (only nodes whose distance
+  * improved last round — the textbook Bellman–Ford work cut; round sizes
+  * at sf0.1: 5→1132→1181→2 nodes, so round 3+ is near-free where the naive
   * all-nodes relaxation re-scans everything) against the dst-partitioned
   * edges, whose candidate fan-out min-aggregates PARTITION-LOCAL in that
   * carried layout, then a node-bounded merge with the old distances.
@@ -44,36 +43,23 @@ object ShortestPath {
   /** Shared-order count at or above which a co-purchase tie is "strong". */
   val StrongMin = 2L
 
-  /** Directed weighted edges: (src, dst, w) with w = 1 for strong ties
-    * (≥ [[StrongMin]] distinct shared orders), 2 for weak ones. Built from
-    * the same basket-aggregate pair explosion as [[PageRank.edges]]; the
-    * count of shared orders per pair replaces the dedup (each order
-    * contributes its basket's pairs exactly once — `collect_set` dedups
-    * within the basket — so `count(*)` per (src,dst) IS the distinct shared
-    * -order count), and runs partition-local after the repartition for the
-    * same exchange-free reason (dst ⊆ (src,dst) clusters the count keys
-    * just as src did). DST, for the same reason as [[PageRank.edges]]: the
-    * relaxation joins stream the edge side against a broadcast frontier,
-    * so the layout is free to choose, and a dst layout lands each round's
-    * candidate frame already keyed by the node it relaxes — the candidate
-    * min-aggregate runs partition-local (see [[shortestPath]]).
-    */
-  private[analytics] def weightedEdges(spark: SparkSession, dir: String): DataFrame = {
+  def shortestPath(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val li = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_partkey")
-    li.groupBy($"l_orderkey").agg(collect_set($"l_partkey").as("ps"))
-      .select(explode($"ps").as("src"), $"ps")
-      .select($"src", explode($"ps").as("dst"))
-      .where($"src" =!= $"dst")
+    // Directed weighted edges (src, dst, w): w = 1 for strong ties (≥
+    // StrongMin shared orders), 2 for weak ones. The kernel's pairs
+    // are one row per shared order, so count(*) per (src, dst) IS the
+    // distinct shared-order count, and it runs partition-local after the
+    // dst repartition (dst ⊆ (src, dst) clusters the count keys). DST, for
+    // the same reason as PageRank's edges: the relaxation joins stream the
+    // edge side against a broadcast frontier, so the layout is free to
+    // choose, and a dst layout lands each round's candidate frame already
+    // keyed by the node it relaxes — the candidate min-aggregate runs
+    // partition-local (see below).
+    val e = CoPurchase.pairs(CoPurchase.baskets(Tables.lineitem(spark, dir)))
       .repartition(spark.sparkContext.defaultParallelism, $"dst")
       .groupBy($"src", $"dst").agg(count(lit(1)).as("c"))
       .select($"src", $"dst",
         when($"c" >= StrongMin, 1L).otherwise(2L).as("w"))
-  }
-
-  def shortestPath(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val e = weightedEdges(spark, dir)
       .ckptDisk()
     val seeds = Tables.lineitem(spark, dir)
       .select($"l_partkey".as("node")).filter($"node" < SeedMax).distinct()
@@ -115,15 +101,10 @@ object ShortestPath {
   }
 
   val shortestPathSql: String =
-    s"""WITH RECURSIVE pc AS (
-       | SELECT a.l_partkey AS src, b.l_partkey AS dst,
-       |        count(DISTINCT a.l_orderkey) AS c
-       | FROM lineitem a JOIN lineitem b
-       |   ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-       | GROUP BY 1, 2),
+    s"""WITH RECURSIVE ${CoPurchase.pairsSql()},
        |e AS (
-       | SELECT src, dst, CASE WHEN c >= $StrongMin THEN 1 ELSE 2 END AS w
-       | FROM pc),
+       | SELECT src, dst, CASE WHEN count(*) >= $StrongMin THEN 1 ELSE 2 END AS w
+       | FROM pairs GROUP BY 1, 2),
        |walk(node, d, h) AS (
        | SELECT DISTINCT l_partkey, 0, 0 FROM lineitem WHERE l_partkey < $SeedMax
        | UNION

@@ -7,9 +7,8 @@ import graft.Declared
 import graft.io.Tables
 import graft.util.Ckpt._
 
-/** Triangle counting over the co-purchase graph (same derived graph as
-  * [[PageRank]]: parts are nodes, edges connect parts sharing an order) —
-  * the clustering/community primitive: a part in many triangles sits in a
+/** Triangle counting over the [[CoPurchase]] graph — the
+  * clustering/community primitive: a part in many triangles sits in a
   * dense substitute/complement neighborhood, and triangle counts are the
   * building block of clustering coefficients.
   *
@@ -28,51 +27,17 @@ import graft.util.Ckpt._
   * match; only the skew profile differs, and the oracle only runs at
   * fixture scale.
   *
-  * Scale notes (round-12 dataflow): 2 shuffles TOTAL before the final
-  * per-node count — the basket aggregate and one explicit repartition on
-  * `src` that simultaneously serves the cross-order dedup, the adjacency
-  * build, and the degree count (one `collect_set` is all three). The
-  * degree projection and the oriented adjacency are broadcast (node-sized;
-  * swap for shuffle joins when nodes outgrow a broadcast — the plan
-  * degrades declaratively). The orientation itself is a partition-local
+  * Scale notes: 2 shuffles TOTAL before the final per-node count — the
+  * basket aggregate and the adjacency's one src-keyed exchange of (src,
+  * basket) rows, whose per-node array is at once the cross-order dedup,
+  * the adjacency and (via `size`) the degree. The degree projection and
+  * the oriented adjacency are broadcast (node-sized; swap for shuffle
+  * joins when nodes outgrow a broadcast — the plan degrades
+  * declaratively). The orientation itself is a partition-local
   * filter+regroup riding the checkpoint's repaired hash layout, so it adds
   * zero exchanges.
   */
 object Triangles {
-
-  /** FULL undirected adjacency — (node, all-neighbors set, degree), one row
-    * per node, hash-partitioned and checkpointed on `src`.
-    *
-    * Round-12 restructure: the previous dataflow built an |E|-row edge
-    * list (repartition + partition-local dedup), then paid a SECOND
-    * |E|-sized exchange to group it into adjacency and a THIRD exchange
-    * for the degree aggregate (union of both endpoints). Building the full
-    * adjacency FIRST folds all three into one: the basket-exploded
-    * directed pairs (both directions) shuffle once on `src`, and
-    * `collect_set` is simultaneously the cross-order dedup, the adjacency,
-    * and (via `size`) the degree — no separate dedup pass, no degree
-    * union, and the checkpoint pins |V| rows instead of |E|. The array
-    * payload totals the same 2m longs either way; rows and exchanges
-    * don't (sf0.1: 3 exchanges + an |E| checkpoint → 1 exchange + a |V|
-    * checkpoint on this substrate).
-    */
-  private def fullAdjacency(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val li = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_partkey")
-    // Basket-aggregate shape (see PageRank.edges): one lineitem shuffle
-    // into per-order baskets (≤7 items at any SF), pairs exploded map-side
-    // after the exchange; explicit repartition count opts out of AQE's
-    // scan-shaped coalescing because everything downstream is CPU-bound,
-    // and lands HashPartitioning(src) so the collect_set aggregate runs
-    // partition-local with no second exchange.
-    li.groupBy($"l_orderkey").agg(collect_set($"l_partkey").as("ps"))
-      .select(explode($"ps").as("src"), $"ps")
-      .select($"src", explode($"ps").as("dst"))
-      .where($"src" =!= $"dst")
-      .repartition(spark.sparkContext.defaultParallelism, $"src")
-      .groupBy($"src").agg(collect_set($"dst").as("all"))
-      .select($"src", $"all", size($"all").as("d"))
-  }
 
   /** x_triangles — top-20 parts by the number of co-purchase triangles they
     * participate in: (part, n_tri), ties broken by part id.
@@ -96,7 +61,12 @@ object Triangles {
     // round-5 driver bench medianed 18.9 s (runs 25.6/4.4/18.9) vs 3.3 s
     // isolated, same commit. Serialized disk blocks have a fixed re-read
     // cost and cannot be evicted mid-query.
-    val full = fullAdjacency(spark, dir).ckptDisk()
+    // The FULL undirected adjacency, one row per node, hash-partitioned and
+    // checkpointed on src: size(nbrs) is the degree, so no separate degree
+    // aggregate, and the checkpoint pins |V| rows, not |E|.
+    val full = CoPurchase.adjacency(CoPurchase.baskets(Tables.lineitem(spark, dir)))
+      .withColumn("d", size($"nbrs"))
+      .ckptDisk()
     // Orient x -> y iff (d(x), x) < (d(y), y). Degree ordering caps
     // out-degrees at O(√m) (Chiba–Nishizeki), bounding every out-list
     // below. With the full adjacency in hand the orientation is a FILTER,
@@ -115,7 +85,7 @@ object Triangles {
     graft.functions.GraftFunctions.register(spark)
     val deg = full.select($"src".as("dst"), $"d".as("dd"))
     val adj = full
-      .select($"src", $"d", explode($"all").as("dst"))
+      .select($"src", $"d", explode($"nbrs").as("dst"))
       .join(broadcast(deg), "dst")
       .where($"dd" > $"d" || ($"dd" === $"d" && $"dst" > $"src"))
       .groupBy($"src")
@@ -149,10 +119,8 @@ object Triangles {
   }
 
   val trianglesSql: String =
-    """WITH e AS (
-      | SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      | FROM lineitem a JOIN lineitem b
-      |  ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey),
+    s"""WITH ${CoPurchase.pairsSql()},
+      |e AS (SELECT DISTINCT src AS u, dst AS v FROM pairs WHERE src < dst),
       |t AS (
       | SELECT e1.u AS a, e1.v AS b, e2.v AS c
       | FROM e e1 JOIN e e2 ON e2.u = e1.v

@@ -891,11 +891,13 @@ object Stress {
     *     downstream plan change).
     *
     * Claims pinned:
-    *  1. routes a/b/c return identical 64-row group aggregates;
+    *  1. routes a/b/c return identical group aggregates, one row per
+    *     group (64, or one per dim key while the dim has fewer);
     *  2. the hot key's rows spread over EXACTLY saltBuckets salt slices,
-    *     max/min ≤ 1.1 (the deterministic hash salt really spreads — no
-    *     rand(), so the spread is replayable). The stress salts at
-    *     saltBuckets = cores, the sizing guidance when one key dominates
+    *     each within 4 binomial standard deviations of hot/saltBuckets,
+    *     a band that holds at any n (the deterministic hash salt really
+    *     spreads — no rand(), so the spread is replayable). The stress
+    *     salts at saltBuckets = cores, the sizing guidance when one key dominates
     *     (the declared query's SaltBuckets=8 suits many-warm-keys skew;
     *     with few buckets, two hot slices hash-colliding into one reducer
     *     re-concentrates what the salt spread — measured: 8 buckets over
@@ -991,11 +993,16 @@ object Stress {
       println(f"[stress] wall: plain ${tPlain}%.1f s, aqe ${tAqe}%.1f s, " +
         f"salted ${tSalt}%.1f s")
 
-      // 2. salt-spread structure on the hot key
+      // 2. salt-spread structure on the hot key: a slice holds each hot
+      // row with probability 1/buckets, so its count is binomial around
+      // `share` and must stay within 4 of its standard deviations
       val spread = fact.filter($"key" === 0L)
         .groupBy(pmod(hash($"distr"), lit(buckets)).as("salt"))
         .count().select($"count").as[Long].collect()
-      println(s"[stress] hot-key salt spread: ${spread.sorted.mkString(",")}")
+      val share = hotRows.toDouble / buckets
+      val tol = 4 * math.sqrt(share * (1 - 1.0 / buckets))
+      println(s"[stress] hot-key salt spread: ${spread.sorted.mkString(",")}" +
+        f" (each within $tol%.1f of $share%.1f)")
 
       // 4. aggregation-side parity: twoPhaseAgg == plain groupBy, exact
       val tp = Skew.twoPhaseAgg(fact, $"key", $"distr", Skew.SaltBuckets,
@@ -1008,9 +1015,9 @@ object Stress {
       println(s"[stress] twoPhaseAgg vs plain groupBy diff rows: $aggDiff")
 
       val ok = resPlain == resAqe && resPlain == resSalt &&
-        resPlain.size == 64 &&
+        resPlain.size == math.min(64L, nDim) &&
         spread.length == buckets &&
-        spread.max <= spread.min * 11 / 10 &&
+        spread.forall(c => math.abs(c - share) <= tol) &&
         maxPlain >= hotRows &&
         maxSalt <= bound &&
         aggDiff == 0
@@ -1556,10 +1563,10 @@ object Stress {
     * against a driver-model apportionment. Planted corpus: 100 sources,
     * docs of source s carry n_chars = s+1, so w_s = ⌊√(m·(s+1))⌋ with m
     * docs per source — mirrored exactly in the driver (the same IEEE
-    * sqrt both engines floor). Claims: (1) the output holds EXACTLY K
-    * rows; (2) every source's pick count equals the largest-remainder
-    * model's quota exactly (base ⌊K·w/W⌋ plus one leftover slot by
-    * (remainder desc, source asc)); (3) the picked SET is invariant
+    * sqrt both engines floor). Claims: (1) the output holds EXACTLY
+    * K = n/2 rows; (2) every source's pick count equals the
+    * largest-remainder model's quota exactly (base ⌊K·w/W⌋ plus one
+    * leftover slot by (remainder desc, source asc)); (3) the picked SET is invariant
     * under input repartitioning (7 vs 13 input partitions → exceptAll
     * both ways empty) — the md5-keyed pick order is data-determined, so
     * the same corpus yields the same sample on any cluster layout, the
@@ -1570,7 +1577,10 @@ object Stress {
     val S = 100L
     val n = math.max(S * S, (n0 / S) * S)
     val m = n / S
-    val K = 100000L
+    // K = n/2 keeps the heaviest source's quota at ~0.75 of its m docs
+    // (its weight share is √S / Σ√(s+1) ≈ 1.49/S) at any n ≥ S², so no
+    // quota outgrows its source
+    val K = n / 2
     def docsWith(parts: Int) = spark.range(n).repartition(parts).select(
       $"id".as("doc_id"),
       concat(lit("src"), lpad(($"id" % S).cast("string"), 3, "0"))

@@ -39,7 +39,7 @@ class DiffPageRankSpec extends SparkSpec {
   }
 
   test("broadcast-path iterations run with ZERO shuffle exchanges") {
-    // The dst-partitioned edge checkpoint is load-bearing (PageRank.edges:
+    // The dst-partitioned edge checkpoint is load-bearing (PageRank.ranks:
     // the broadcast-rank join streams the edge side in place, so the
     // inflow groupBy(dst) aggregates partition-local — x_pagerank 4.2 →
     // 3.1 s isolated at sf0.1). A lost layout still executes, just with

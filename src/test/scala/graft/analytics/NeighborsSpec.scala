@@ -10,8 +10,10 @@ class NeighborsSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
   private def graph(): (Map[Long, Set[Long]], Set[(Long, Long)]) = {
-    val edges = Neighbors.inducedEdges(spark, dir)
-      .as[(Long, Long)].collect().toSet
+    val li = graft.io.Tables.lineitem(spark, dir)
+      .filter(pmod($"l_partkey", lit(Neighbors.InducedMod)) === 0)
+    val edges = CoPurchase.pairs(CoPurchase.baskets(li))
+      .as[(Long, Long)].collect().filter { case (a, b) => a < b }.toSet
     val adj = edges.toSeq.flatMap { case (a, b) => Seq(a -> b, b -> a) }
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     (adj, edges)

@@ -41,11 +41,11 @@ class StressSmokeSpec extends SparkSpec {
 
   test("skew scenario: salting cuts the straggler task's shuffle read, read " +
     "through TaskStats") {
-    // 50k is the smallest size whose hot-key salt spread stays inside the
-    // 10% band (40k and 45k spread 11.5% and 10.4%); the scenario must
-    // leave the session's confs as it found them
+    // at 2000 rows a salt slice's share (~32 rows) still exceeds its
+    // tolerance (~22), so a slice at twice its share fails the spread
+    // check; the scenario must leave the session's confs as it found them
     val before = spark.conf.getAll
-    assert(Stress.runSkew(spark, 50000L))
+    assert(Stress.runSkew(spark, 2000L))
     assert(spark.conf.getAll == before)
   }
 
@@ -69,9 +69,8 @@ class StressSmokeSpec extends SparkSpec {
   }
 
   test("quota scenario: exact quotas, repartition-invariant picks at smoke size") {
-    // 148,900 docs is the smallest corpus whose largest quota (the
-    // heaviest source's) fits its 1,489 docs; at 148,800 it cannot
-    assert(Stress.runQuota(spark, 148900L))
+    // the scenario floor: S² = 10,000 docs, K = n/2
+    assert(Stress.runQuota(spark, 10000L))
   }
 
   test("an unknown scenario name is rejected with a usage line naming every scenario") {
