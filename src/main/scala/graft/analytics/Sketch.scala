@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Declared
 import graft.io.Tables
+import graft.llm.Tokens
 import graft.util.Ckpt._
 import graft.util.Select
 
@@ -285,7 +286,7 @@ object Sketch {
     // the sketch build and the exact top-k consume the same widened frame.
     val tok = graft.util.Widen(
       Tables.documents(spark, dir).select($"doc_id", $"text"), $"doc_id")
-      .select(explode(split(lower($"text"), " ")).as("token"))
+      .select(explode(Tokens.tokens($"text", lower = true)).as("token"))
     def bucket(row: Int, t: org.apache.spark.sql.Column) =
       pmod(conv(substring(md5(concat(lit(s"cms$row:"), t)), 1, 13), 16, 10)
         .cast("long"), lit(CmsWidth.toLong))
@@ -315,7 +316,7 @@ object Sketch {
     val rows = (0 until CmsDepth)
       .map(r => s"SELECT $r AS row, 'cms$r:' AS salt").mkString(" UNION ALL ")
     s"""WITH tok AS (
-       | SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents),
+       | SELECT unnest(${Tokens.tokensSql("text", lower = true)}) AS token FROM documents),
        |rows AS ($rows),
        |hashed AS (
        | SELECT rows.row AS row,
@@ -368,7 +369,7 @@ object Sketch {
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
     val toks = Tables.documents(spark, dir)
-      .select(explode(split(lower($"text"), " ")).as("token"))
+      .select(explode(Tokens.tokens($"text", lower = true)).as("token"))
       .withColumn("h", xxhash64($"token"))
     // ONE sketch pass: the MG candidate aggregate and the total-count ride
     // the same global aggregate, and the SINGLE downstream consumer keeps
@@ -395,7 +396,7 @@ object Sketch {
 
   val heavyHittersSql: String =
     s"""WITH t AS (
-       | SELECT unnest(string_split(lower(text), ' ')) AS token FROM documents),
+       | SELECT unnest(${Tokens.tokensSql("text", lower = true)}) AS token FROM documents),
        |n AS (SELECT count(*) AS n_total FROM t)
        |SELECT token, count(*) AS n, n.n_total
        |FROM t, n

@@ -56,10 +56,7 @@ object Bpe {
       val best = v
         .select(split(trim($"s"), "  ").as("syms"), $"wc")
         .filter(size($"syms") >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, size(syms) - 1), " +
-            "i -> concat(element_at(syms, i), ' ', element_at(syms, i + 1)))"))
-          .as("pair"), $"wc")
+        .select(explode(Tokens.grams($"syms", 2)).as("pair"), $"wc")
         .groupBy($"pair").agg(sum($"wc").as("n"))
         .orderBy($"n".desc, $"pair")
         .limit(1)
@@ -78,7 +75,7 @@ object Bpe {
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vocab = Tables.documents(spark, dir)
-      .select(explode(split(lower($"text"), " ")).as("w"))
+      .select(explode(Tokens.tokens($"text", lower = true)).as("w"))
       .filter(length($"w") >= 2)
       .groupBy($"w").agg(count(lit(1)).as("wc"))
     trainOver(vocab)
@@ -92,8 +89,7 @@ object Bpe {
     */
   private def roundSql(prev: String, r: Int): String =
     s"""p$r AS (
-       | SELECT unnest(list_transform(range(1, len(syms)),
-       |   i -> syms[i] || ' ' || syms[i + 1])) AS pair, wc
+       | SELECT unnest(${Tokens.gramsSql("syms", 2)}) AS pair, wc
        | FROM (SELECT string_split(trim(s), '  ') AS syms, wc FROM $prev)
        | WHERE len(syms) >= 2),
        |b$r AS MATERIALIZED (
@@ -112,7 +108,7 @@ object Bpe {
       .mkString("\nUNION ALL\n")
     s"""WITH vocab AS (
        | SELECT w, count(*) AS wc
-       | FROM (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents)
+       | FROM (SELECT unnest(${Tokens.tokensSql("text", lower = true)}) AS w FROM documents)
        | WHERE len(w) >= 2 GROUP BY w),
        |v0 AS (
        | SELECT ' ' || array_to_string(list_transform(range(1, length(w) + 1),

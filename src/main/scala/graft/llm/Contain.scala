@@ -76,11 +76,7 @@ object Contain {
     */
   def containmentJoinOver(documents: DataFrame): DataFrame = {
     import documents.sparkSession.implicits._
-    val docs = documents
-      .withColumn("toks", split($"text", " "))
-      .filter(size($"toks") >= 3)
-      .select($"doc_id", $"lang",
-        array_distinct(Dedup.shinglesFromToks($"toks")).as("s"))
+    val docs = Dedup.shingleSets(documents)
       .withColumn("sz", size($"s"))
       .ckptDisk()
     val postings = docs.select($"doc_id", $"lang", $"sz", explode($"s").as("tok"))
@@ -123,12 +119,7 @@ object Contain {
     * scale, exactly like the [[SimJoin]] oracle does for Jaccard.
     */
   val containmentJoinSql: String =
-    s"""WITH toks AS (
-       | SELECT doc_id, lang,
-       |  list_distinct(list_transform(range(1, len(t) - 1),
-       |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-       | FROM (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents)
-       | WHERE len(t) >= 3),
+    s"""WITH toks AS (${Dedup.shingleSetsSql}),
        |sn AS (SELECT * FROM toks WHERE len(s) BETWEEN $SnipMin AND $SnipMax)
        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        | CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS n_common,

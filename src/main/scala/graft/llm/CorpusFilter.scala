@@ -27,7 +27,7 @@ object CorpusFilter {
   def tokenHist(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select($"doc_id", explode(split(lower($"text"), " ")).as("token"))
+      .select($"doc_id", explode(Tokens.tokens($"text", lower = true)).as("token"))
       .groupBy($"token")
       .agg(count(lit(1)).as("n"), countDistinct($"doc_id").as("n_docs"))
       .orderBy($"n".desc, $"token")
@@ -35,12 +35,12 @@ object CorpusFilter {
   }
 
   val tokenHistSql: String =
-    """SELECT token, count(*) AS n, count(DISTINCT doc_id) AS n_docs
-      |FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
-      |      FROM documents)
-      |GROUP BY token
-      |ORDER BY n DESC, token
-      |LIMIT 100""".stripMargin
+    s"""SELECT token, count(*) AS n, count(DISTINCT doc_id) AS n_docs
+       |FROM (SELECT doc_id, unnest(${Tokens.tokensSql("text", lower = true)}) AS token
+       |      FROM documents)
+       |GROUP BY token
+       |ORDER BY n DESC, token
+       |LIMIT 100""".stripMargin
 
   /** x_quality_filter — the composed retention pipeline: keep documents that
     * (1) language-ID as English, (2) have ≥5 tokens with stopword ratio
@@ -60,7 +60,7 @@ object CorpusFilter {
     val base = graft.util.Widen(
       Tables.documents(spark, dir).select($"doc_id", $"lang", $"text"),
       $"doc_id")
-      .select($"doc_id", $"lang", split($"text", " ").as("toks"))
+      .select($"doc_id", $"lang", Tokens.tokens($"text").as("toks"))
     LangId.addPredLang(base, $"toks")
       .withColumn("n_tokens", size($"toks").cast("long"))
       .withColumn("n_stopwords", TextOps.stopwordCount($"toks"))
@@ -78,8 +78,8 @@ object CorpusFilter {
        | FROM documents),
        |pred AS (SELECT doc_id, ${LangId.predCaseSql} AS pred_lang FROM scored),
        |q AS (SELECT doc_id,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       |  CAST(len(list_filter(string_split(text, ' '), t -> t IN (${TextOps.Stopwords.map(w => s"'$w'").mkString(", ")}))) AS BIGINT) AS n_stopwords
+       |  CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS n_tokens,
+       |  CAST(len(list_filter(${Tokens.tokensSql("text")}, t -> t IN (${TextOps.stopwordListSql}))) AS BIGINT) AS n_stopwords
        | FROM documents),
        |losers AS (SELECT doc_id FROM (${Cluster.dedupClusterSql}) WHERE NOT is_keeper)
        |SELECT d.doc_id, d.lang, pred.pred_lang, q.n_tokens
@@ -93,8 +93,8 @@ object CorpusFilter {
 
   /** x_bigram_stats — top-50 word bigrams by corpus frequency (collocation
     * mining / the vocab-extension scan past unigrams). Adjacent pairs are
-    * built positionally inside one array expression (`sequence` over the
-    * index space — no self-join on token position, which would shuffle the
+    * built positionally inside one array expression ([[Tokens.grams]] —
+    * no self-join on token position, which would shuffle the
     * exploded token table twice on a synthetic key), then one explode +
     * hash-aggregate with map-side partials and TakeOrderedAndProject for
     * the cut. Ties break alphabetically so the top-50 edge is pinned.
@@ -102,11 +102,9 @@ object CorpusFilter {
   def bigramStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select(split(lower($"text"), " ").as("tk"))
+      .select(Tokens.tokens($"text", lower = true).as("tk"))
       .filter(size($"tk") >= 2)
-      .select(explode(expr(
-        "transform(sequence(1, size(tk) - 1), i -> concat(tk[i-1], ' ', tk[i]))"))
-        .as("bigram"))
+      .select(explode(Tokens.grams($"tk", 2)).as("bigram"))
       .groupBy($"bigram")
       .agg(count(lit(1)).as("n"))
       .orderBy($"n".desc, $"bigram")
@@ -114,14 +112,12 @@ object CorpusFilter {
   }
 
   val bigramStatsSql: String =
-    """WITH t AS (SELECT string_split(lower(text), ' ') AS tk FROM documents),
-      |b AS (SELECT tk[i] || ' ' || tk[i+1] AS bigram
-      |      FROM t, (SELECT unnest(range(1, 128)) AS i) g
-      |      WHERE i + 1 <= len(tk))
-      |SELECT bigram, count(*) AS n
-      |FROM b GROUP BY bigram
-      |ORDER BY n DESC, bigram
-      |LIMIT 50""".stripMargin
+    s"""WITH t AS (SELECT ${Tokens.tokensSql("text", lower = true)} AS tk FROM documents),
+       |b AS (SELECT unnest(${Tokens.gramsSql("tk", 2)}) AS bigram FROM t)
+       |SELECT bigram, count(*) AS n
+       |FROM b GROUP BY bigram
+       |ORDER BY n DESC, bigram
+       |LIMIT 50""".stripMargin
 
   /** Vocabulary size for [[oovRate]]'s char-trigram model. 100 keeps a
     * real out-of-vocab tail on the fixture corpus (the 31-word vocabulary
@@ -219,11 +215,9 @@ object CorpusFilter {
   def lmRarityOver(documents: DataFrame): DataFrame = {
     import documents.sparkSession.implicits._
     val grams = documents
-      .select($"doc_id", split(lower($"text"), " ").as("tk"))
+      .select($"doc_id", Tokens.tokens($"text", lower = true).as("tk"))
       .filter(size($"tk") >= 2)
-      .select($"doc_id", explode(expr(
-        "transform(sequence(1, size(tk) - 1), i -> concat(tk[i-1], ' ', tk[i]))"))
-        .as("bigram"))
+      .select($"doc_id", explode(Tokens.grams($"tk", 2)).as("bigram"))
       .ckptDisk()
     val counts = grams.groupBy($"bigram").agg(count(lit(1)).as("n"))
     grams.join(counts, "bigram")
@@ -235,11 +229,10 @@ object CorpusFilter {
 
   val lmRaritySql: String =
     s"""WITH t AS (
-       | SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
+       | SELECT doc_id, ${Tokens.tokensSql("text", lower = true)} AS tk FROM documents),
        |b AS (
-       | SELECT doc_id, tk[i] || ' ' || tk[i+1] AS bigram
-       | FROM t, (SELECT unnest(range(1, 1024)) AS i) g
-       | WHERE len(tk) >= 2 AND i + 1 <= len(tk)),
+       | SELECT doc_id, unnest(${Tokens.gramsSql("tk", 2)}) AS bigram
+       | FROM t WHERE len(tk) >= 2),
        |c AS (SELECT bigram, count(*) AS n FROM b GROUP BY bigram)
        |SELECT doc_id, count(*) AS n_bigrams,
        | CAST(sum(CASE WHEN c.n <= $RareMax THEN 1 ELSE 0 END) AS BIGINT) AS n_rare
@@ -275,7 +268,7 @@ object CorpusFilter {
     import documents.sparkSession.implicits._
     val d = documents
       .select($"doc_id",
-        size(array_distinct(split($"text", " "))).cast("long").as("vocab"),
+        size(array_distinct(Tokens.tokens($"text"))).cast("long").as("vocab"),
         $"n_chars")
     val byVocab = d.groupBy($"vocab").agg(min($"n_chars").as("mn"))
     // rangeBetween(1, ∞) on an integer key = all rows with vocab STRICTLY
@@ -292,18 +285,18 @@ object CorpusFilter {
   }
 
   val paretoFrontSql: String =
-    """WITH d AS (
-      | SELECT doc_id,
-      |  CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS vocab,
-      |  n_chars
-      | FROM documents)
-      |SELECT doc_id, vocab, n_chars
-      |FROM d
-      |WHERE NOT EXISTS (
-      | SELECT 1 FROM d e
-      | WHERE e.vocab >= d.vocab AND e.n_chars <= d.n_chars
-      |   AND (e.vocab > d.vocab OR e.n_chars < d.n_chars))
-      |ORDER BY doc_id""".stripMargin
+    s"""WITH d AS (
+       | SELECT doc_id,
+       |  CAST(len(list_distinct(${Tokens.tokensSql("text")})) AS BIGINT) AS vocab,
+       |  n_chars
+       | FROM documents)
+       |SELECT doc_id, vocab, n_chars
+       |FROM d
+       |WHERE NOT EXISTS (
+       | SELECT 1 FROM d e
+       | WHERE e.vocab >= d.vocab AND e.n_chars <= d.n_chars
+       |   AND (e.vocab > d.vocab OR e.n_chars < d.n_chars))
+       |ORDER BY doc_id""".stripMargin
 
   /** Gopher-rule thresholds, calibrated to the fixture's distributions so
     * every rule is NON-VACUOUS (rejects some docs, keeps most) at every SF:
@@ -339,7 +332,7 @@ object CorpusFilter {
     */
   def gopherRules(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val toks = split($"text", " ")
+    val toks = Tokens.tokens($"text")
     val n = size(toks).cast("long")
     // Σ word lengths via one fold — no second pass, no split-on-space
     // length identity that would silently break on double spaces.
@@ -387,7 +380,7 @@ object CorpusFilter {
        |   list_sum(list_transform(t, x -> len(x))) AS sum_wlen,
        |   len(list_distinct(t)) AS n_distinct,
        |   len(list_filter(t, x -> x IN (${TextOps.stopwordListSql}))) AS n_stop
-       | FROM (SELECT string_split(text, ' ') AS t FROM documents)),
+       | FROM (SELECT ${Tokens.tokensSql("text")} AS t FROM documents)),
        |f AS (
        | SELECT n < $RuleMinToks AS f_short, n > $RuleMaxToks AS f_long,
        |   sum_wlen*100 < $RuleWlenLo*n OR sum_wlen*100 > $RuleWlenHi*n AS f_wlen,

@@ -34,8 +34,8 @@ object DataCard {
     import spark.implicits._
     val base = Tables.documents(spark, dir)
       .select($"source", $"lang", $"n_chars",
-        md5(TextClean.canonicalize($"text")).as("fp"),
-        size(split($"text", " ")).cast("long").as("ntok"))
+        TextClean.fingerprint($"text").as("fp"),
+        size(Tokens.tokens($"text")).cast("long").as("ntok"))
     val agg = base.groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),
         sum($"ntok").as("n_tokens"),
@@ -56,8 +56,8 @@ object DataCard {
   val datasetCardSql: String =
     s"""WITH base AS (
        | SELECT source, lang, n_chars,
-       |  md5(lower(trim(regexp_replace(text, '${TextClean.WsRe}', ' ', 'g')))) AS fp,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
+       |  ${TextClean.fingerprintSql("text")} AS fp,
+       |  CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS ntok
        | FROM documents),
        |a AS (
        | SELECT source, count(*) AS n_docs,
@@ -87,7 +87,7 @@ object DataCard {
   def langMismatch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = Tables.documents(spark, dir)
-      .select($"source", $"lang", split($"text", " ").as("toks"))
+      .select($"source", $"lang", Tokens.tokens($"text").as("toks"))
     LangId.addPredLang(base, $"toks")
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"),

@@ -17,9 +17,9 @@ import graft.util.Ckpt._
   *    bucket sizes, the standard LSH scale-out argument. All hashing is
   *    md5-over-UTF8 so the DuckDB oracle computes identical signatures.
   *
-  * Built-ins only (SURVEY.md §7.3): no UDF, no custom Expression — shingling
-  * is `transform(sequence(...))`, signatures are an explode + hash-aggregate
-  * of primitive mins, all inside whole-stage codegen.
+  * Built-ins only (SURVEY.md §7.3): no UDF, no custom Expression — shingles
+  * are [[Tokens.grams]] word 3-grams, signatures are an explode +
+  * hash-aggregate of primitive mins, all inside whole-stage codegen.
   */
 object Dedup {
 
@@ -41,19 +41,25 @@ object Dedup {
   val NumHashes = 8   // minhash signature length
   val NumBands = 4    // LSH bands (2 signatures per band)
 
-  /** Word 3-gram shingles over an ALREADY-MATERIALIZED token-array column.
-    *
-    * The lambda must reference a bound column, not an inline `split(...)`:
-    * an inline split would be re-evaluated by every `element_at` call
-    * (3 regex splits per shingle — measured 5s of 5.5s of the sf0.1 pipeline
-    * before the fix). Callers `.withColumn("toks", split(text, " "))` first;
-    * Catalyst keeps the projection un-collapsed because the non-cheap split
-    * is referenced more than once.
+  /** Shingle width: word 3-grams ([[Tokens.grams]]). */
+  val ShingleK = 3
+
+  /** (doc_id, lang, s): the distinct shingle set of each (doc_id, lang,
+    * text) row with at least [[ShingleK]] tokens — the set side of the
+    * SimJoin and Contain joins.
     */
-  def shinglesFromToks(toks: Column): Column =
-    transform(sequence(lit(0), size(toks) - 3),
-      i => concat_ws(" ",
-        element_at(toks, i + 1), element_at(toks, i + 2), element_at(toks, i + 3)))
+  def shingleSets(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.withColumn("toks", Tokens.tokens($"text"))
+      .filter(size($"toks") >= ShingleK)
+      .select($"doc_id", $"lang", array_distinct(Tokens.grams($"toks", ShingleK)).as("s"))
+  }
+
+  /** DuckDB twin of [[shingleSets]] over `documents`. */
+  val shingleSetsSql: String =
+    s"""SELECT doc_id, lang, list_distinct(${Tokens.gramsSql("t", ShingleK)}) AS s
+       | FROM (SELECT doc_id, lang, ${Tokens.tokensSql("text")} AS t FROM documents)
+       | WHERE len(t) >= $ShingleK""".stripMargin
 
   // Hash design: ONE md5 per shingle, parsed as two 60-bit longs (15 hex
   // chars each), bit-split into eight 15-bit components — one digest + two
@@ -96,9 +102,9 @@ object Dedup {
     val sigAggs = (0 until NumHashes).map(j =>
       min(shiftright(half(j), (j % 4) * SliceBits).bitwiseAND(SliceMask)).as(s"sig$j"))
     docs
-      .withColumn("toks", split($"text", " "))
-      .filter(size($"toks") >= 3)
-      .select($"doc_id", explode(shinglesFromToks($"toks")).as("s"))
+      .withColumn("toks", Tokens.tokens($"text"))
+      .filter(size($"toks") >= ShingleK)
+      .select($"doc_id", explode(Tokens.grams($"toks", ShingleK)).as("s"))
       .select($"doc_id", md5(concat(lit("mh:"), $"s")).as("m"))
       .select($"doc_id",
         conv(substring($"m", 1, 15), 16, 10).cast("long").as("h1"),
@@ -183,15 +189,6 @@ object Dedup {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** Oracle-side mirror of `signatures`: same single digest, same 60-bit hex
-    * parses, same shift/mask slicing (the oracle re-parses per component for
-    * SQL simplicity — values are identical).
-    */
-  private def sigDefsSql: String = (0 until NumHashes).map { j =>
-    val off = if (j < 4) 1 else 17
-    s"list_min(list_transform(h, x -> (CAST('0x' || substr(x, $off, 15) AS BIGINT) >> ${(j % 4) * SliceBits}) & $SliceMask)) AS sig$j"
-  }.mkString(",\n  ")
-
   /** Shared oracle fragment: capped in-bucket pair expansion over a `bands`
     * CTE (doc_id, band, bh) — full pairs among the BucketCap smallest ids
     * per bucket plus representative edges first→overflow, mirroring
@@ -212,25 +209,37 @@ object Dedup {
        |  UNION ALL
        |  SELECT f_doc, doc_id FROM ranked WHERE rn > $BucketCap) e)""".stripMargin
 
-  val dedupMinhashSql: String = {
+  /** Oracle-side mirror of `bandsOver` and the capped pair expansion: the
+    * CTEs `sh` (each doc's shingles), `bands` (doc_id, band, bh) and
+    * `pairs` (doc_a, doc_b). Same single digest per shingle, same 60-bit
+    * hex parses, same shift/mask slicing (the oracle re-parses per
+    * component for SQL simplicity — values are identical).
+    */
+  private val candidatePairsSql: String = {
+    val sigDefs = (0 until NumHashes).map { j =>
+      val off = if (j < 4) 1 else 17
+      s"list_min(list_transform(h, x -> (CAST('0x' || substr(x, $off, 15) AS BIGINT) >> ${(j % 4) * SliceBits}) & $SliceMask)) AS sig$j"
+    }.mkString(",\n  ")
     val bandRows = (0 until NumBands).map { b =>
       val u = if (b == 0) "" else "UNION ALL "
       s"${u}SELECT doc_id, $b AS band, md5(CAST(sig${2 * b} AS VARCHAR) || '_' || CAST(sig${2 * b + 1} AS VARCHAR)) AS bh FROM sigs"
     }.mkString("\n ")
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |sh AS (SELECT doc_id,
-       |  list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) AS s
-       |  FROM toks WHERE len(t) >= 3),
+    s"""toks AS (SELECT doc_id, ${Tokens.tokensSql("text")} AS t FROM documents),
+       |sh AS (SELECT doc_id, ${Tokens.gramsSql("t", ShingleK)} AS s
+       |  FROM toks WHERE len(t) >= $ShingleK),
        |hm AS (SELECT doc_id, list_transform(s, x -> md5('mh:' || x)) AS h FROM sh),
        |sigs AS (SELECT doc_id,
-       |  $sigDefsSql
+       |  $sigDefs
        |  FROM hm),
        |bands AS (
        | $bandRows),
-       |$cappedPairsSqlOverBands
+       |$cappedPairsSqlOverBands""".stripMargin
+  }
+
+  val dedupMinhashSql: String =
+    s"""WITH $candidatePairsSql
        |SELECT doc_a, doc_b FROM pairs
        |ORDER BY doc_a, doc_b""".stripMargin
-  }
 
   /** x_dedup_jaccard — exact n-gram Jaccard similarity for candidate pairs
     * (the verify step after LSH blocking): docs sharing a band, scored by
@@ -266,8 +275,8 @@ object Dedup {
       .select(explode(array($"doc_a", $"doc_b")).as("doc_id")).distinct()
     val docs = docFrame
       .join(candidates, "doc_id", "left_semi")
-      .withColumn("toks", split($"text", " "))
-      .select($"doc_id", array_distinct(shinglesFromToks($"toks")).as("sh"))
+      .withColumn("toks", Tokens.tokens($"text"))
+      .select($"doc_id", array_distinct(Tokens.grams($"toks", ShingleK)).as("sh"))
     pairs
       .join(docs.select($"doc_id".as("doc_a"), $"sh".as("sh_a")), "doc_a")
       .join(docs.select($"doc_id".as("doc_b"), $"sh".as("sh_b")), "doc_b")
@@ -279,28 +288,13 @@ object Dedup {
   }
 
   val dedupJaccardSql: String =
-    s"""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-       |sh AS (SELECT doc_id,
-       |  list_distinct(list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-       |  FROM toks WHERE len(t) >= 3),
-       |shfull AS (SELECT doc_id,
-       |  list_transform(range(1, len(t) - 1), i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) AS s
-       |  FROM toks WHERE len(t) >= 3),
-       |hm AS (SELECT doc_id, list_transform(s, x -> md5('mh:' || x)) AS h FROM shfull),
-       |sigs AS (SELECT doc_id,
-       |  $sigDefsSql
-       |  FROM hm),
-       |bands AS (
-       | ${(0 until NumBands).map { b =>
-            val u = if (b == 0) "" else "UNION ALL "
-            s"${u}SELECT doc_id, $b AS band, md5(CAST(sig${2 * b} AS VARCHAR) || '_' || CAST(sig${2 * b + 1} AS VARCHAR)) AS bh FROM sigs"
-          }.mkString("\n ")}),
-       |$cappedPairsSqlOverBands
+    s"""WITH $candidatePairsSql,
+       |sets AS (SELECT doc_id, list_distinct(s) AS s FROM sh)
        |SELECT doc_a, doc_b,
        | CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS n_common,
        | CAST(len(list_distinct(list_concat(a.s, b.s))) AS BIGINT) AS n_union,
        | CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) / len(list_distinct(list_concat(a.s, b.s))) AS jaccard
-       |FROM pairs JOIN sh a ON a.doc_id = doc_a JOIN sh b ON b.doc_id = doc_b
+       |FROM pairs JOIN sets a ON a.doc_id = doc_a JOIN sets b ON b.doc_id = doc_b
        |ORDER BY doc_a, doc_b""".stripMargin
 
   /** x_dup_inflation — the capacity impact of exact dedup, token-weighted:
@@ -315,8 +309,8 @@ object Dedup {
     import spark.implicits._
     val base = Tables.documents(spark, dir)
       .select($"doc_id",
-        md5(TextClean.canonicalize($"text")).as("fp"),
-        size(split($"text", " ")).cast("long").as("ntok"))
+        TextClean.fingerprint($"text").as("fp"),
+        size(Tokens.tokens($"text")).cast("long").as("ntok"))
     base.groupBy($"fp")
       .agg(count(lit(1)).as("n"), sum($"ntok").as("tok"),
         min(struct($"doc_id", $"ntok")).as("kp"))
@@ -334,8 +328,8 @@ object Dedup {
   val dupInflationSql: String =
     s"""WITH base AS (
        | SELECT doc_id,
-       |  md5(lower(trim(regexp_replace(text, '${TextClean.WsRe}', ' ', 'g')))) AS fp,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok
+       |  ${TextClean.fingerprintSql("text")} AS fp,
+       |  CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS ntok
        | FROM documents),
        |g AS (
        | SELECT fp, count(*) AS n, CAST(sum(ntok) AS BIGINT) AS tok,
@@ -406,7 +400,7 @@ object Dedup {
     import spark.implicits._
     Tables.documents(spark, dir)
       .select($"doc_id", $"source",
-        md5(TextClean.canonicalize($"text")).as("fp"),
+        TextClean.fingerprint($"text").as("fp"),
         sourceTier($"source").as("priority"))
       .groupBy($"fp")
       .agg(min(struct($"priority", $"doc_id", $"source")).as("best"),
@@ -420,7 +414,7 @@ object Dedup {
   val crossDedupSql: String =
     s"""WITH d AS (
        | SELECT doc_id, source,
-       |  md5(lower(trim(regexp_replace(text, '${TextClean.WsRe}', ' ', 'g')))) AS fp,
+       |  ${TextClean.fingerprintSql("text")} AS fp,
        |  CAST(coalesce(TRY_CAST(regexp_extract(source, '^src([0-9]{1,9})$$', 1) AS INTEGER), 2) % 3 AS BIGINT) AS priority
        | FROM documents),
        |r AS (
@@ -450,7 +444,7 @@ object Dedup {
   def dedupIncr(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-      .select($"doc_id", md5(TextClean.canonicalize($"text")).as("fp"))
+      .select($"doc_id", TextClean.fingerprint($"text").as("fp"))
     val history = docs.filter($"doc_id" < 250).select($"fp").distinct()
     val batch = docs.filter($"doc_id" >= 250)
     val wFirst = org.apache.spark.sql.expressions.Window.partitionBy($"fp")
@@ -466,7 +460,7 @@ object Dedup {
   val dedupIncrSql: String =
     s"""WITH d AS (
        | SELECT doc_id,
-       |  md5(lower(trim(regexp_replace(text, '${TextClean.WsRe}', ' ', 'g')))) AS fp
+       |  ${TextClean.fingerprintSql("text")} AS fp
        | FROM documents),
        |hist AS (SELECT DISTINCT fp FROM d WHERE doc_id < 250),
        |batch AS (SELECT doc_id, fp FROM d WHERE doc_id >= 250)
@@ -498,7 +492,7 @@ object Dedup {
   def chunkDedup(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val toks = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("tk"))
+      .select($"doc_id", Tokens.tokens($"text").as("tk"))
     val nc = floor((size($"tk") + lit(ChunkW - 1)) / lit(ChunkW)).cast("long")
     val chunks = toks
       .select($"doc_id", $"tk", explode(sequence(lit(0L), nc - 1L)).as("i"))
@@ -514,11 +508,10 @@ object Dedup {
   }
 
   val chunkDedupSql: String =
-    s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+    s"""WITH t AS (SELECT doc_id, ${Tokens.tokensSql("text")} AS tk FROM documents),
        |c AS (SELECT doc_id,
-       |        md5(array_to_string(list_slice(tk, i*$ChunkW + 1, i*$ChunkW + $ChunkW), ' ')) AS h
-       |      FROM t, (SELECT unnest(range(128)) AS i) g
-       |      WHERE i*$ChunkW < len(tk)),
+       |        md5(array_to_string(list_slice(tk, s + 1, s + $ChunkW), ' ')) AS h
+       |      FROM (SELECT doc_id, tk, unnest(range(0, len(tk), $ChunkW)) AS s FROM t)),
        |f AS (SELECT h, count(*) AS n_inst FROM c GROUP BY h)
        |SELECT doc_id, count(*) AS n_chunks,
        | CAST(sum(CASE WHEN n_inst > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_chunks
@@ -539,7 +532,7 @@ object Dedup {
     import spark.implicits._
     Tables.documents(spark, dir)
       .select($"doc_id", $"n_chars",
-        md5(TextClean.canonicalize($"text")).as("fp"))
+        TextClean.fingerprint($"text").as("fp"))
       .groupBy($"fp")
       .agg(count(lit(1)).as("n_copies"),
         max_by(struct($"doc_id".as("id"), $"n_chars".as("nc")),
@@ -553,7 +546,7 @@ object Dedup {
   val dedupKeepBestSql: String =
     s"""WITH f AS (
        | SELECT doc_id, n_chars,
-       |  md5(lower(trim(regexp_replace(text, '${TextClean.WsRe}', ' ', 'g')))) AS fp
+       |  ${TextClean.fingerprintSql("text")} AS fp
        | FROM documents),
        |r AS (
        | SELECT fp, doc_id, n_chars,

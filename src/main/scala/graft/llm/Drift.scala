@@ -47,7 +47,7 @@ object Drift {
     import spark.implicits._
     val toks = Tables.documents(spark, dir)
       .filter($"source".rlike("^src[0-9]+$"))
-      .select(srcParity.as("grp"), explode(split(lower($"text"), " ")).as("token"))
+      .select(srcParity.as("grp"), explode(Tokens.tokens($"text", lower = true)).as("token"))
     val cnt = toks.groupBy($"token")
       .agg(sum(when($"grp" === 0, 1L).otherwise(0L)).as("c_a"),
         sum(when($"grp" === 1, 1L).otherwise(0L)).as("c_b"))
@@ -68,22 +68,22 @@ object Drift {
   }
 
   val driftTvSql: String =
-    """WITH toks AS (
-      | SELECT CAST(regexp_extract(source, '^src([0-9]+)$', 1) AS BIGINT) % 2 AS grp,
-      |  unnest(string_split(lower(text), ' ')) AS token
-      | FROM documents WHERE regexp_matches(source, '^src[0-9]+$')),
-      |cnt AS (
-      | SELECT token,
-      |  CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_a,
-      |  CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_b
-      | FROM toks GROUP BY token),
-      |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
-      |               CAST(sum(c_b) AS BIGINT) AS n_b FROM cnt)
-      |SELECT token, c_a, c_b,
-      | abs(c_a * n_b - c_b * n_a) AS tv_scaled
-      |FROM cnt, tot
-      |ORDER BY tv_scaled DESC, token
-      |LIMIT 20""".stripMargin
+    s"""WITH toks AS (
+       | SELECT CAST(regexp_extract(source, '^src([0-9]+)$$', 1) AS BIGINT) % 2 AS grp,
+       |  unnest(${Tokens.tokensSql("text", lower = true)}) AS token
+       | FROM documents WHERE regexp_matches(source, '^src[0-9]+$$')),
+       |cnt AS (
+       | SELECT token,
+       |  CAST(sum(CASE WHEN grp = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c_a,
+       |  CAST(sum(CASE WHEN grp = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c_b
+       | FROM toks GROUP BY token),
+       |tot AS (SELECT CAST(sum(c_a) AS BIGINT) AS n_a,
+       |               CAST(sum(c_b) AS BIGINT) AS n_b FROM cnt)
+       |SELECT token, c_a, c_b,
+       | abs(c_a * n_b - c_b * n_a) AS tv_scaled
+       |FROM cnt, tot
+       |ORDER BY tv_scaled DESC, token
+       |LIMIT 20""".stripMargin
 
   /** Vocabulary size for the coverage check. */
   val VocabK = 1000
@@ -97,7 +97,7 @@ object Drift {
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val toks = Tables.documents(spark, dir)
-      .select($"lang", explode(split(lower($"text"), " ")).as("token"))
+      .select($"lang", explode(Tokens.tokens($"text", lower = true)).as("token"))
     val vocab = toks.groupBy($"token").agg(count(lit(1)).as("n"))
       .orderBy($"n".desc, $"token").limit(VocabK)
       .select($"token", lit(1L).as("in_vocab"))
@@ -112,7 +112,7 @@ object Drift {
 
   val vocabCoverageSql: String =
     s"""WITH toks AS (
-       | SELECT lang, unnest(string_split(lower(text), ' ')) AS token
+       | SELECT lang, unnest(${Tokens.tokensSql("text", lower = true)}) AS token
        | FROM documents),
        |vocab AS (
        | SELECT token FROM (
@@ -138,7 +138,7 @@ object Drift {
   def sourceTail(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val bySource = Tables.documents(spark, dir)
-      .select($"source", size(split($"text", " ")).cast("long").as("ntok"))
+      .select($"source", size(Tokens.tokens($"text")).cast("long").as("ntok"))
       .groupBy($"source").agg(sum($"ntok").as("n_tokens"))
     val w = org.apache.spark.sql.expressions.Window
       .orderBy($"n_tokens".desc, $"source")
@@ -155,20 +155,20 @@ object Drift {
   }
 
   val sourceTailSql: String =
-    """WITH s AS (
-      | SELECT source,
-      |  CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-      | FROM documents GROUP BY source),
-      |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total FROM s)
-      |SELECT CAST(row_number() OVER w AS BIGINT) AS rk, source, n_tokens,
-      | CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
-      |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
-      | CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
-      |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-      |  / CAST(t.total AS DOUBLE) AS cum_share
-      |FROM s, t
-      |WINDOW w AS (ORDER BY n_tokens DESC, source)
-      |ORDER BY rk""".stripMargin
+    s"""WITH s AS (
+       | SELECT source,
+       |  CAST(sum(len(${Tokens.tokensSql("text")})) AS BIGINT) AS n_tokens
+       | FROM documents GROUP BY source),
+       |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total FROM s)
+       |SELECT CAST(row_number() OVER w AS BIGINT) AS rk, source, n_tokens,
+       | CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
+       |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tokens,
+       | CAST(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source
+       |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+       |  / CAST(t.total AS DOUBLE) AS cum_share
+       |FROM s, t
+       |WINDOW w AS (ORDER BY n_tokens DESC, source)
+       |ORDER BY rk""".stripMargin
 
   val declared: Seq[Declared] = Seq(
     Declared("x_drift_tv", driftTv, Some(driftTvSql)),

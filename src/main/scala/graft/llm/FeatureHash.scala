@@ -32,7 +32,7 @@ object FeatureHash {
   def featureHash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select(explode(split(lower($"text"), " ")).as("tok"))
+      .select(explode(Tokens.tokens($"text", lower = true)).as("tok"))
       .filter($"tok" =!= "")
       .select($"tok",
         conv(substring(md5($"tok"), 1, 15), 16, 10).cast("long").as("h"))
@@ -47,7 +47,7 @@ object FeatureHash {
 
   val featureHashSql: String =
     s"""WITH tok AS (
-       | SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents),
+       | SELECT unnest(${Tokens.tokensSql("text", lower = true)}) AS tok FROM documents),
        |h AS (
        | SELECT tok, CAST('0x' || substr(md5(tok), 1, 15) AS BIGINT) AS h
        | FROM tok WHERE tok <> ''),

@@ -55,7 +55,7 @@ object LangId {
   def langIdQuery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("toks"))
+      .select($"doc_id", Tokens.tokens($"text").as("toks"))
     val best = greatest(Profiles.map { case (l, _) => col(s"__s_$l") }: _*)
     addPredLang(base, $"toks", keepScores = true)
       .select($"doc_id", $"pred_lang", best.cast("long").as("best_score"))
@@ -67,7 +67,7 @@ object LangId {
     */
   private[llm] val scoreDefsSql: String = Profiles.map { case (lang, words) =>
     val list = words.map(w => s"'$w'").mkString(", ")
-    s"len(list_filter(string_split(text, ' '), t -> t IN ($list))) AS s_$lang"
+    s"len(list_filter(${Tokens.tokensSql("text")}, t -> t IN ($list))) AS s_$lang"
   }.mkString(",\n  ")
 
   private[llm] val predCaseSql: String = {

@@ -48,7 +48,7 @@ object Pack {
       .rowsBetween(Window.unboundedPreceding, -1)
     Tables.documents(spark, dir)
       .select($"source", $"doc_id",
-        size(split($"text", " ")).cast("long").as("n_toks"))
+        size(Tokens.tokens($"text")).cast("long").as("n_toks"))
       .withColumn("start_tok", coalesce(sum($"n_toks").over(w), lit(0L)))
       .select($"source", $"doc_id", $"n_toks", $"start_tok",
         expr(s"start_tok div $SeqLen").as("seq_id"),
@@ -61,7 +61,7 @@ object Pack {
   val seqPackSql: String =
     s"""WITH d AS (
        | SELECT source, doc_id,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
+       |  CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS n_toks
        | FROM documents),
        |off AS (
        | SELECT source, doc_id, n_toks,
@@ -127,13 +127,11 @@ object Pack {
       |WHERE g <= n_copies
       |ORDER BY doc_id, copy_id""".stripMargin
 
-  /** Word 8-grams of a token-array column — long enough that on this
-    * corpus (and any natural one) a shared 8-gram means real shared text,
-    * not vocabulary coincidence.
+  /** Gram width for [[contamination]]: word 8-grams are long enough that on
+    * this corpus (and any natural one) a shared 8-gram means real shared
+    * text, not vocabulary coincidence.
     */
-  private def grams8(toks: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    transform(sequence(lit(1), greatest(size(toks) - 7, lit(0))),
-      i => concat_ws(" ", slice(toks, i, lit(8))))
+  val ContaminationK = 8
 
   /** x_contamination — benchmark-contamination screen. A held-out "eval
     * set" (md5(doc_id) prefix '0' — a deterministic 1/16 slice standing in
@@ -152,17 +150,18 @@ object Pack {
   def contamination(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("toks"),
+      .select($"doc_id", Tokens.tokens($"text").as("toks"),
         substring(md5($"doc_id".cast("string")), 1, 1).as("h"))
     val evalGrams = docs.filter($"h" === "0")
-      .select($"doc_id".as("eval_doc_id"), explode(grams8($"toks")).as("g"))
+      .select($"doc_id".as("eval_doc_id"),
+        explode(Tokens.grams($"toks", ContaminationK)).as("g"))
       .distinct()
     // No distinct on the training side: that would shuffle every n-gram of
     // the 100 TB corpus. The broadcast join filters map-side first, so only
     // MATCHED rows reach the aggregate, where countDistinct dedups both the
     // repeated grams within a doc and multi-eval-doc hits of one gram.
     val trainGrams = docs.filter($"h" =!= "0")
-      .select($"doc_id", explode(grams8($"toks")).as("g"))
+      .select($"doc_id", explode(Tokens.grams($"toks", ContaminationK)).as("g"))
     trainGrams.join(broadcast(evalGrams), Seq("g"))
       .groupBy($"doc_id")
       .agg(countDistinct($"g").as("n_shared_ngrams"),
@@ -171,22 +170,21 @@ object Pack {
   }
 
   val contaminationSql: String =
-    """WITH toks AS (
-      | SELECT doc_id, string_split(text, ' ') AS t,
-      |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS h
-      | FROM documents),
-      |grams AS (
-      | SELECT doc_id, h,
-      |  unnest(list_transform(generate_series(1, greatest(len(t) - 7, 0)),
-      |                        i -> array_to_string(t[i:i+7], ' '))) AS g
-      | FROM toks),
-      |ev AS (SELECT DISTINCT doc_id AS eval_doc_id, g FROM grams WHERE h = '0'),
-      |tr AS (SELECT doc_id, g FROM grams WHERE h <> '0')
-      |SELECT tr.doc_id, count(DISTINCT tr.g) AS n_shared_ngrams,
-      | count(DISTINCT ev.eval_doc_id) AS n_eval_docs
-      |FROM tr JOIN ev ON tr.g = ev.g
-      |GROUP BY tr.doc_id
-      |ORDER BY tr.doc_id""".stripMargin
+    s"""WITH toks AS (
+       | SELECT doc_id, ${Tokens.tokensSql("text")} AS t,
+       |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS h
+       | FROM documents),
+       |grams AS (
+       | SELECT doc_id, h,
+       |  unnest(${Tokens.gramsSql("t", ContaminationK)}) AS g
+       | FROM toks),
+       |ev AS (SELECT DISTINCT doc_id AS eval_doc_id, g FROM grams WHERE h = '0'),
+       |tr AS (SELECT doc_id, g FROM grams WHERE h <> '0')
+       |SELECT tr.doc_id, count(DISTINCT tr.g) AS n_shared_ngrams,
+       | count(DISTINCT ev.eval_doc_id) AS n_eval_docs
+       |FROM tr JOIN ev ON tr.g = ev.g
+       |GROUP BY tr.doc_id
+       |ORDER BY tr.doc_id""".stripMargin
 
   /** Chunk geometry for [[docSplit]]: 64-token windows every 48 tokens
     * (16-token overlap) — the RAG/embedding-index chunking shape.
@@ -203,7 +201,7 @@ object Pack {
   def docSplit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .withColumn("toks", split($"text", " "))
+      .withColumn("toks", Tokens.tokens($"text"))
       .withColumn("n_toks", size($"toks").cast("long"))
       .select($"doc_id", $"toks", $"n_toks",
         posexplode(sequence(lit(1L), $"n_toks", lit(ChunkStride.toLong))))
@@ -217,8 +215,8 @@ object Pack {
 
   val docSplitSql: String =
     s"""WITH d AS (
-       | SELECT doc_id, string_split(text, ' ') AS t,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
+       | SELECT doc_id, ${Tokens.tokensSql("text")} AS t,
+       |  CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS n_toks
        | FROM documents),
        |starts AS (
        | SELECT doc_id, t, n_toks,
@@ -279,13 +277,10 @@ object Pack {
   def repetitionFilter(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val bigrams = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("toks"))
+      .select($"doc_id", Tokens.tokens($"text").as("toks"))
       .filter(size($"toks") >= 2)
       .select($"doc_id",
-        explode(zip_with(
-          slice($"toks", lit(1), size($"toks") - 1),
-          slice($"toks", lit(2), size($"toks") - 1),
-          (a, b) => concat(a, lit(" "), b))).as("bigram"))
+        explode(Tokens.grams($"toks", 2)).as("bigram"))
     bigrams.groupBy($"doc_id", $"bigram").agg(count(lit(1)).as("c"))
       .groupBy($"doc_id")
       .agg(max($"c").as("max_bigram_count"), sum($"c").as("n_bigrams"))
@@ -295,24 +290,23 @@ object Pack {
   }
 
   val repetitionFilterSql: String =
-    """WITH toks AS (
-      | SELECT doc_id, string_split(text, ' ') AS t
-      | FROM documents WHERE len(string_split(text, ' ')) >= 2),
-      |bg AS (
-      | SELECT doc_id,
-      |  unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-      |                        p -> p[1] || ' ' || p[2])) AS bigram
-      | FROM toks),
-      |counts AS (
-      | SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY 1, 2),
-      |agg AS (
-      | SELECT doc_id, max(c) AS max_bigram_count,
-      |  CAST(sum(c) AS BIGINT) AS n_bigrams
-      | FROM counts GROUP BY doc_id)
-      |SELECT doc_id, max_bigram_count, n_bigrams,
-      | max_bigram_count * 10 > n_bigrams * 2 AS repeated
-      |FROM agg
-      |ORDER BY doc_id""".stripMargin
+    s"""WITH toks AS (
+       | SELECT doc_id, ${Tokens.tokensSql("text")} AS t
+       | FROM documents WHERE len(${Tokens.tokensSql("text")}) >= 2),
+       |bg AS (
+       | SELECT doc_id,
+       |  unnest(${Tokens.gramsSql("t", 2)}) AS bigram
+       | FROM toks),
+       |counts AS (
+       | SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY 1, 2),
+       |agg AS (
+       | SELECT doc_id, max(c) AS max_bigram_count,
+       |  CAST(sum(c) AS BIGINT) AS n_bigrams
+       | FROM counts GROUP BY doc_id)
+       |SELECT doc_id, max_bigram_count, n_bigrams,
+       | max_bigram_count * 10 > n_bigrams * 2 AS repeated
+       |FROM agg
+       |ORDER BY doc_id""".stripMargin
 
   /** x_pack_stats — the packing-efficiency rollup over [[seqPack]]'s
     * layout: per source, the sequence count, the tokens left unfilled in
@@ -341,7 +335,7 @@ object Pack {
   val packStatsSql: String =
     s"""WITH d AS (
        | SELECT source, doc_id,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
+       |  CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS n_toks
        | FROM documents),
        |off AS (
        | SELECT source, doc_id, n_toks,
@@ -392,7 +386,7 @@ object Pack {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.documents(spark, dir)
       .select($"doc_id", $"source",
-        size(split($"text", " ")).cast("long").as("ntok"),
+        size(Tokens.tokens($"text")).cast("long").as("ntok"),
         md5($"doc_id".cast("string")).as("h"))
       .withColumn("run", sum($"ntok").over(w))
       .withColumn("admitted", ($"run" <= SourceTokenBudget).cast("long"))
@@ -407,7 +401,7 @@ object Pack {
   val tokenBudgetSql: String =
     s"""WITH d AS (
        | SELECT doc_id, source,
-       |  CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok,
+       |  CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS ntok,
        |  md5(CAST(doc_id AS VARCHAR)) AS h
        | FROM documents),
        |r AS (

@@ -96,7 +96,7 @@ object Retrieval {
   private def bm25Scored(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-      .select($"doc_id", split($"text", " ").as("toks"))
+      .select($"doc_id", Tokens.tokens($"text").as("toks"))
     // One postings pass: dl rides the projection into the (doc_id, term)
     // aggregate, so tf and dl come out of a single scan + single exchange
     // (the naive tf ⋈ dl formulation costs a second text scan AND a
@@ -150,7 +150,7 @@ object Retrieval {
       .flatMap { case (q, ts, _) => ts.map(t => s"($q, '$t')") }
       .mkString(", ")
     s"""WITH docs AS (
-       | SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+       | SELECT doc_id, ${Tokens.tokensSql("text")} AS toks FROM documents),
        |dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM docs),
        |tf AS (
        | SELECT doc_id, term, count(*) AS tf FROM (

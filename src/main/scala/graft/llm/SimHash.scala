@@ -57,7 +57,7 @@ object SimHash {
     // [[graft.util.Widen]] — no-op on a production-wide scan).
     graft.util.Widen(
       Tables.documents(spark, dir).select($"doc_id", $"text"), $"doc_id")
-      .select($"doc_id", explode(split($"text", " ")).as("t"))
+      .select($"doc_id", explode(Tokens.tokens($"text")).as("t"))
       .select($"doc_id", conv(substring(md5($"t"), 1, 15), 16, 10).cast("long").as("h"))
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_toks"), packs: _*)
@@ -72,7 +72,7 @@ object SimHash {
       .mkString(" + ")
     s"""th AS (
        | SELECT doc_id, CAST('0x' || substr(md5(t.tok), 1, 15) AS BIGINT) AS h
-       | FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents) t),
+       | FROM (SELECT doc_id, unnest(${Tokens.tokensSql("text")}) AS tok FROM documents) t),
        |votes AS (
        | SELECT doc_id, count(*) AS n_toks,
        |  $bitSums

@@ -50,11 +50,11 @@ object SimJoin {
 
   /** x_jaccard_join — all same-language doc pairs with SHINGLE-set Jaccard
     * ≥ τ: (doc_a, doc_b, n_common, n_union, jaccard), doc_a < doc_b. The
-    * set elements are [[Dedup.shinglesFromToks]] word 3-grams — the same
-    * unit the MinHash family blocks on, so this query is its exact
-    * counterpart (and the shingle vocabulary is combinatorially larger than
-    * the word vocabulary, which is what gives the rarest-first prefix its
-    * pruning power).
+    * set elements are [[Tokens.grams]] word 3-grams — the same unit the
+    * MinHash family blocks on, so this query is its exact counterpart (and
+    * the shingle vocabulary is combinatorially larger than the word
+    * vocabulary, which is what gives the rarest-first prefix its pruning
+    * power).
     */
   def jaccardJoin(spark: SparkSession, dir: String): DataFrame =
     // Deliberately NOT widened (graft.util.Widen): unlike the rest of the
@@ -79,12 +79,7 @@ object SimJoin {
     // Dedup.dedupJaccard's checkpoint: swap for persist(DISK_ONLY) or a
     // reliable checkpoint on a real cluster. (Measured at sf0.1: 17 s ->
     // 4.8 s for the whole query.)
-    val docs = documents
-      .withColumn("toks", split($"text", " "))
-      .filter(size($"toks") >= 3)
-      .select($"doc_id", $"lang",
-        array_distinct(Dedup.shinglesFromToks($"toks")).as("s"))
-      .ckptDisk()
+    val docs = Dedup.shingleSets(documents).ckptDisk()
     val tok = docs.select($"doc_id", $"lang", explode($"s").as("tok"))
     // The vocabulary is tiny next to the token stream (Heaps' law) —
     // broadcast it so the df lookup is map-side and the whole prefix
@@ -129,12 +124,7 @@ object SimJoin {
   }
 
   val jaccardJoinSql: String =
-    s"""WITH toks AS (
-       | SELECT doc_id, lang,
-       |  list_distinct(list_transform(range(1, len(t) - 1),
-       |    i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-       | FROM (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents)
-       | WHERE len(t) >= 3)
+    s"""WITH toks AS (${Dedup.shingleSetsSql})
        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        | CAST(len(list_intersect(a.s, b.s)) AS BIGINT) AS n_common,
        | CAST(len(a.s) + len(b.s) - len(list_intersect(a.s, b.s)) AS BIGINT) AS n_union,

@@ -31,10 +31,10 @@ object SpanDedup {
 
   val SpanK = 5
 
-  /** x_span_dedup — per document: distinct spans, spans shared with ≥1
-    * other document, and the recycled-span permille.
+  /** (doc_id, span): each document's distinct lowercased [[SpanK]]-token
+    * spans ([[Tokens.grams]]), the substrate of both queries.
     */
-  def spanDedup(spark: SparkSession, dir: String): DataFrame = {
+  private def spans(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // Deliberately NOT widened (graft.util.Widen): measured per-stage in
     // DebugPlan, the widened form's doc_id layout makes the span DISTINCT
@@ -46,14 +46,28 @@ object SpanDedup {
     // The un-widened shape splits derivation at the (doc_id, span)
     // exchange into two smaller stages that warm up 4x cheaper (round 11,
     // BENCH_NOTES #68).
-    val sp = Tables.documents(spark, dir)
-      .select($"doc_id", split(lower($"text"), " ").as("toks"))
+    Tables.documents(spark, dir)
+      .select($"doc_id", Tokens.tokens($"text", lower = true).as("toks"))
       .filter(size($"toks") >= SpanK)
-      .select($"doc_id", explode(expr(
-        s"""transform(sequence(1, size(toks) - ${SpanK - 1}),
-           |          i -> array_join(slice(toks, i, $SpanK), ' '))"""
-          .stripMargin)).as("span"))
+      .select($"doc_id", explode(Tokens.grams($"toks", SpanK)).as("span"))
       .distinct()
+  }
+
+  /** Oracle twin of [[spans]]: the CTEs `toks` and `sp` (doc_id, span). */
+  private val spansSql: String =
+    s"""toks AS (
+       | SELECT doc_id, ${Tokens.tokensSql("text", lower = true)} AS t FROM documents),
+       |sp AS (
+       | SELECT DISTINCT doc_id, span FROM (
+       |  SELECT doc_id, unnest(${Tokens.gramsSql("t", SpanK)}) AS span
+       |  FROM toks WHERE len(t) >= $SpanK))""".stripMargin
+
+  /** x_span_dedup — per document: distinct spans, spans shared with ≥1
+    * other document, and the recycled-span permille.
+    */
+  def spanDedup(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val sp = spans(spark, dir)
     val nd = sp.groupBy($"span").agg(count(lit(1)).as("ndocs"))
     sp.join(nd, "span")
       .groupBy($"doc_id")
@@ -65,13 +79,7 @@ object SpanDedup {
   }
 
   val spanDedupSql: String =
-    s"""WITH toks AS (
-       | SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-       | WHERE len(string_split(lower(text), ' ')) >= ${SpanK}),
-       |sp AS (
-       | SELECT DISTINCT doc_id, array_to_string(t[i:i+${SpanK - 1}], ' ') AS span
-       | FROM toks, LATERAL (
-       |   SELECT unnest(generate_series(1, len(t) - ${SpanK - 1})) AS i) g),
+    s"""WITH $spansSql,
        |nd AS (SELECT span, count(*) AS ndocs FROM sp GROUP BY 1),
        |pd AS (
        | SELECT sp.doc_id, count(*) AS n_spans,
@@ -116,14 +124,7 @@ object SpanDedup {
     */
   def novelty(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val sp = Tables.documents(spark, dir)
-      .select($"doc_id", split(lower($"text"), " ").as("toks"))
-      .filter(size($"toks") >= SpanK)
-      .select($"doc_id", explode(expr(
-        s"""transform(sequence(1, size(toks) - ${SpanK - 1}),
-           |          i -> array_join(slice(toks, i, $SpanK), ' '))"""
-          .stripMargin)).as("span"))
-    val distinctSpans = sp.distinct()
+    val distinctSpans = spans(spark, dir)
     val nSpans = distinctSpans.groupBy($"doc_id")
       .agg(count(lit(1)).as("n_spans"))
     val nNovel = distinctSpans.groupBy($"span")
@@ -139,13 +140,7 @@ object SpanDedup {
   }
 
   val noveltySql: String =
-    s"""WITH toks AS (
-       | SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-       | WHERE len(string_split(lower(text), ' ')) >= ${SpanK}),
-       |sp AS (
-       | SELECT DISTINCT doc_id, array_to_string(t[i:i+${SpanK - 1}], ' ') AS span
-       | FROM toks, LATERAL (
-       |   SELECT unnest(generate_series(1, len(t) - ${SpanK - 1})) AS i) g),
+    s"""WITH $spansSql,
        |fs AS (SELECT span, min(doc_id) AS first_doc FROM sp GROUP BY 1),
        |pd AS (
        | SELECT sp.doc_id, count(*) AS n_spans,

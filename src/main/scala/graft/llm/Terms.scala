@@ -22,7 +22,7 @@ import graft.io.Tables
   * combine; the shuffle carries (token, partial counts), never raw text.
   * The per-source top-k window sees one row per (source, token) — the
   * aggregated vocabulary, not the corpus. Bigram extraction is a map-only
-  * array zip before the aggregate.
+  * array expression before the aggregate.
   */
 object Terms {
 
@@ -33,7 +33,7 @@ object Terms {
   def tfidf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val toks = Tables.documents(spark, dir)
-      .select($"source", explode(split(lower($"text"), " ")).as("token"))
+      .select($"source", explode(Tokens.tokens($"text", lower = true)).as("token"))
     val tf = toks.groupBy($"source", $"token").agg(count(lit(1)).as("tf"))
     // df derived from tf's OWN output, not a second pass over the token
     // stream: tf has exactly one row per (source, token) present, so
@@ -60,37 +60,33 @@ object Terms {
   }
 
   val tfidfSql: String =
-    """WITH toks AS (
-      | SELECT source, unnest(string_split(lower(text), ' ')) AS token
-      | FROM documents),
-      |tf AS (SELECT source, token, count(*) AS tf FROM toks GROUP BY 1, 2),
-      |df AS (SELECT token, count(DISTINCT source) AS df FROM toks GROUP BY 1),
-      |n AS (SELECT count(DISTINCT source) AS n_sources FROM documents),
-      |scored AS (
-      | SELECT tf.source, tf.token, tf.tf, df.df,
-      |  CAST(tf.tf * n.n_sources AS DOUBLE) / CAST(df.df AS DOUBLE) AS score
-      | FROM tf JOIN df ON tf.token = df.token, n),
-      |ranked AS (
-      | SELECT *, row_number() OVER (PARTITION BY source ORDER BY score DESC, token) AS rk
-      | FROM scored)
-      |SELECT source, CAST(rk AS BIGINT) AS rk, token, tf, df, score
-      |FROM ranked WHERE rk <= 10
-      |ORDER BY source, rk""".stripMargin
+    s"""WITH toks AS (
+       | SELECT source, unnest(${Tokens.tokensSql("text", lower = true)}) AS token
+       | FROM documents),
+       |tf AS (SELECT source, token, count(*) AS tf FROM toks GROUP BY 1, 2),
+       |df AS (SELECT token, count(DISTINCT source) AS df FROM toks GROUP BY 1),
+       |n AS (SELECT count(DISTINCT source) AS n_sources FROM documents),
+       |scored AS (
+       | SELECT tf.source, tf.token, tf.tf, df.df,
+       |  CAST(tf.tf * n.n_sources AS DOUBLE) / CAST(df.df AS DOUBLE) AS score
+       | FROM tf JOIN df ON tf.token = df.token, n),
+       |ranked AS (
+       | SELECT *, row_number() OVER (PARTITION BY source ORDER BY score DESC, token) AS rk
+       | FROM scored)
+       |SELECT source, CAST(rk AS BIGINT) AS rk, token, tf, df, score
+       |FROM ranked WHERE rk <= 10
+       |ORDER BY source, rk""".stripMargin
 
-  /** x_ngrams — top-50 corpus bigrams with document frequency. Bigrams come
-    * from zipping the token array against its own tail — map-only, no
-    * self-join — and ties break alphabetically so the cut is deterministic.
+  /** x_ngrams — top-50 corpus bigrams with document frequency. Bigrams are
+    * the token array's [[Tokens.grams]] — map-only, no self-join — and ties
+    * break alphabetically so the cut is deterministic.
     */
   def ngrams(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir)
-      .select($"doc_id", split(lower($"text"), " ").as("toks"))
+      .select($"doc_id", Tokens.tokens($"text", lower = true).as("toks"))
       .filter(size($"toks") >= 2)
-    docs.select($"doc_id",
-        explode(zip_with(
-          slice($"toks", lit(1), size($"toks") - 1),
-          slice($"toks", lit(2), size($"toks") - 1),
-          (a, b) => concat(a, lit(" "), b))).as("bigram"))
+    docs.select($"doc_id", explode(Tokens.grams($"toks", 2)).as("bigram"))
       .groupBy($"bigram")
       .agg(count(lit(1)).as("n"), countDistinct($"doc_id").as("n_docs"))
       .orderBy($"n".desc, $"bigram")
@@ -98,19 +94,18 @@ object Terms {
   }
 
   val ngramsSql: String =
-    """WITH toks AS (
-      | SELECT doc_id, string_split(lower(text), ' ') AS t
-      | FROM documents WHERE len(string_split(lower(text), ' ')) >= 2),
-      |bg AS (
-      | SELECT doc_id,
-      |  unnest(list_transform(list_zip(t[1:len(t)-1], t[2:len(t)]),
-      |                        p -> p[1] || ' ' || p[2])) AS bigram
-      | FROM toks)
-      |SELECT bigram, count(*) AS n, count(DISTINCT doc_id) AS n_docs
-      |FROM bg
-      |GROUP BY bigram
-      |ORDER BY n DESC, bigram
-      |LIMIT 50""".stripMargin
+    s"""WITH toks AS (
+       | SELECT doc_id, ${Tokens.tokensSql("text", lower = true)} AS t
+       | FROM documents WHERE len(${Tokens.tokensSql("text", lower = true)}) >= 2),
+       |bg AS (
+       | SELECT doc_id,
+       |  unnest(${Tokens.gramsSql("t", 2)}) AS bigram
+       | FROM toks)
+       |SELECT bigram, count(*) AS n, count(DISTINCT doc_id) AS n_docs
+       |FROM bg
+       |GROUP BY bigram
+       |ORDER BY n DESC, bigram
+       |LIMIT 50""".stripMargin
 
   /** Minimum bigram instances for [[pmiPairs]] — PMI on hapax pairs is
     * pure noise (two rare words co-occurring once max out the score).
@@ -156,7 +151,7 @@ object Terms {
     // size>=2 filter.
     import graft.util.Ckpt.CkptOps
     val tagged = Tables.documents(spark, dir)
-      .select(split(lower($"text"), " ").as("toks"))
+      .select(Tokens.tokens($"text", lower = true).as("toks"))
       .select(explode(concat(
         transform($"toks",
           t => struct(t.as("x"), lit(null).cast("string").as("y"))),
@@ -185,7 +180,7 @@ object Terms {
   }
 
   val pmiPairsSql: String =
-    s"""WITH t AS (SELECT string_split(lower(text), ' ') AS toks FROM documents),
+    s"""WITH t AS (SELECT ${Tokens.tokensSql("text", lower = true)} AS toks FROM documents),
        |uni AS (
        | SELECT w, count(*) AS nw
        | FROM (SELECT unnest(toks) AS w FROM t) GROUP BY w),
@@ -221,7 +216,7 @@ object Terms {
   def bpeMerge(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val vocab = Tables.documents(spark, dir)
-      .select(explode(split(lower($"text"), " ")).as("w"))
+      .select(explode(Tokens.tokens($"text", lower = true)).as("w"))
       .filter(length($"w") >= 2)
       .groupBy($"w").agg(count(lit(1)).as("wc"))
     vocab
@@ -234,19 +229,19 @@ object Terms {
   }
 
   val bpeMergeSql: String =
-    """WITH vocab AS (
-      | SELECT w, count(*) AS wc
-      | FROM (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents)
-      | WHERE len(w) >= 2 GROUP BY w),
-      |pairs AS (
-      | SELECT unnest(list_transform(range(1, length(w)),
-      |                              i -> substr(w, CAST(i AS INT), 2))) AS pair,
-      |        wc
-      | FROM vocab)
-      |SELECT pair, CAST(sum(wc) AS BIGINT) AS n
-      |FROM pairs GROUP BY pair
-      |ORDER BY n DESC, pair
-      |LIMIT 30""".stripMargin
+    s"""WITH vocab AS (
+       | SELECT w, count(*) AS wc
+       | FROM (SELECT unnest(${Tokens.tokensSql("text", lower = true)}) AS w FROM documents)
+       | WHERE len(w) >= 2 GROUP BY w),
+       |pairs AS (
+       | SELECT unnest(list_transform(range(1, length(w)),
+       |                              i -> substr(w, CAST(i AS INT), 2))) AS pair,
+       |        wc
+       | FROM vocab)
+       |SELECT pair, CAST(sum(wc) AS BIGINT) AS n
+       |FROM pairs GROUP BY pair
+       |ORDER BY n DESC, pair
+       |LIMIT 30""".stripMargin
 
   val declared: Seq[Declared] = Seq(
     Declared("x_tfidf", tfidf, Some(tfidfSql)),

@@ -44,6 +44,15 @@ object TextClean {
   def canonicalize(text: Column): Column =
     lower(trim(regexp_replace(text, WsRe, " ")))
 
+  /** The exact-dedup key: md5 of [[canonicalize]]. */
+  def fingerprint(text: Column): Column = md5(canonicalize(text))
+
+  /** DuckDB twins of [[canonicalize]] and [[fingerprint]]. */
+  def canonicalizeSql(text: String): String =
+    s"lower(trim(regexp_replace($text, '$WsRe', ' ', 'g')))"
+
+  def fingerprintSql(text: String): String = s"md5(${canonicalizeSql(text)})"
+
   /** PII redaction: email/IP/card/phone spans replaced by typed tokens.
     * Order matters and is pinned: cards before phones (a separated PAN also
     * matches the phone shape), emails before IPs (domains contain dots).
@@ -77,10 +86,11 @@ object TextClean {
         regexp_count($"text", lit(Ipv4Re)).cast("long").as("n_ips"))
   }
 
-  val textCleanSql: String =
+  val textCleanSql: String = {
+    val stripped = s"regexp_replace(regexp_replace(text, '$TagRe', ' ', 'g'), '$WsRe', ' ', 'g')"
     s"""SELECT doc_id,
-       | lower(trim(regexp_replace(regexp_replace(regexp_replace(text, '$TagRe', ' ', 'g'), '$WsRe', ' ', 'g'), '$WsRe', ' ', 'g'))) AS canon_text,
-       | md5(lower(trim(regexp_replace(regexp_replace(regexp_replace(text, '$TagRe', ' ', 'g'), '$WsRe', ' ', 'g'), '$WsRe', ' ', 'g')))) AS canon_hash,
+       | ${canonicalizeSql(stripped)} AS canon_text,
+       | ${fingerprintSql(stripped)} AS canon_hash,
        | regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
        |   '$EmailRe', '<EMAIL>', 'g'),
        |   '$CardRe', '<CARD>', 'g'),
@@ -90,6 +100,7 @@ object TextClean {
        | CAST(len(regexp_extract_all(text, '$Ipv4Re')) AS BIGINT) AS n_ips
        |FROM documents
        |ORDER BY doc_id""".stripMargin
+  }
 
   val declared: Seq[Declared] = Seq(
     Declared("x_text_clean", textClean, Some(textCleanSql)))

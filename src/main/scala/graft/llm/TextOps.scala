@@ -20,14 +20,14 @@ object TextOps {
 
   // All per-doc queries materialize the token array ONCE (withColumn) before
   // referencing it: an inline split() referenced by several expressions is
-  // re-evaluated per reference (the regex-split trap measured in Dedup —
-  // see shinglesFromToks' scaladoc).
+  // re-evaluated per reference (the regex-split trap — see Tokens.grams'
+  // scaladoc).
 
   /** x_text_stats — per-doc token/char counts. */
   def textStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .withColumn("toks", split($"text", " "))
+      .withColumn("toks", Tokens.tokens($"text"))
       .select(
         $"doc_id", $"lang",
         size($"toks").cast("long").as("n_tokens"),
@@ -37,18 +37,18 @@ object TextOps {
   }
 
   val textStatsSql: String =
-    """SELECT doc_id, lang,
-      | CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-      | CAST(length(text) AS BIGINT) AS n_chars_obs,
-      | CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct_tokens
-      |FROM documents
-      |ORDER BY doc_id""".stripMargin
+    s"""SELECT doc_id, lang,
+       | CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS n_tokens,
+       | CAST(length(text) AS BIGINT) AS n_chars_obs,
+       | CAST(len(list_distinct(${Tokens.tokensSql("text")})) AS BIGINT) AS n_distinct_tokens
+       |FROM documents
+       |ORDER BY doc_id""".stripMargin
 
   /** x_lang_stats — per-language rollup (doc counts, token totals, avg chars). */
   def langStats(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select($"lang", $"n_chars", size(split($"text", " ")).cast("long").as("n_tokens"))
+      .select($"lang", $"n_chars", size(Tokens.tokens($"text")).cast("long").as("n_tokens"))
       .groupBy($"lang")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -59,13 +59,13 @@ object TextOps {
   }
 
   val langStatsSql: String =
-    """SELECT lang, count(*) AS n_docs,
-      | CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-      | CAST(sum(n_chars) AS BIGINT) AS total_chars,
-      | CAST(sum(n_chars) AS DOUBLE) / count(*) AS avg_chars
-      |FROM documents
-      |GROUP BY lang
-      |ORDER BY lang""".stripMargin
+    s"""SELECT lang, count(*) AS n_docs,
+       | CAST(sum(len(${Tokens.tokensSql("text")})) AS BIGINT) AS total_tokens,
+       | CAST(sum(n_chars) AS BIGINT) AS total_chars,
+       | CAST(sum(n_chars) AS DOUBLE) / count(*) AS avg_chars
+       |FROM documents
+       |GROUP BY lang
+       |ORDER BY lang""".stripMargin
 
   /** Fixed stopword list for quality scoring (deterministic, engine-neutral). */
   val Stopwords: Seq[String] = Seq("the", "a", "of", "and", "in")
@@ -83,7 +83,7 @@ object TextOps {
     val nTok = size($"toks").cast("long")
     val nStop = stopwordCount($"toks")
     Tables.documents(spark, dir)
-      .withColumn("toks", split($"text", " "))
+      .withColumn("toks", Tokens.tokens($"text"))
       .select(
         $"doc_id",
         nTok.as("n_tokens"),
@@ -102,11 +102,11 @@ object TextOps {
 
   val qualityScoreSql: String =
     s"""SELECT doc_id,
-       | CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-       | CAST(len(list_filter(string_split(text, ' '), t -> t IN ($stopwordListSql))) AS BIGINT) AS n_stopwords,
-       | CAST(len(list_filter(string_split(text, ' '), t -> t IN ($stopwordListSql))) AS DOUBLE)
-       |   / len(string_split(text, ' ')) AS stopword_ratio,
-       | CAST(length(text) AS DOUBLE) / len(string_split(text, ' ')) AS avg_token_len
+       | CAST(len(${Tokens.tokensSql("text")}) AS BIGINT) AS n_tokens,
+       | CAST(len(list_filter(${Tokens.tokensSql("text")}, t -> t IN ($stopwordListSql))) AS BIGINT) AS n_stopwords,
+       | CAST(len(list_filter(${Tokens.tokensSql("text")}, t -> t IN ($stopwordListSql))) AS DOUBLE)
+       |   / len(${Tokens.tokensSql("text")}) AS stopword_ratio,
+       | CAST(length(text) AS DOUBLE) / len(${Tokens.tokensSql("text")}) AS avg_token_len
        |FROM documents
        |ORDER BY doc_id""".stripMargin
 
@@ -126,14 +126,14 @@ object TextOps {
         $"doc_id",
         size(regexp_extract_all($"lower_text", lit(SubtokenPattern), lit(0)))
           .cast("long").as("n_subtokens"),
-        size(split($"lower_text", " ")).cast("long").as("n_words"))
+        size(Tokens.tokens($"lower_text")).cast("long").as("n_words"))
       .orderBy($"doc_id")
   }
 
   val tokenBpeSql: String =
     s"""SELECT doc_id,
        | CAST(len(regexp_extract_all(lower(text), '$SubtokenPattern')) AS BIGINT) AS n_subtokens,
-       | CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_words
+       | CAST(len(${Tokens.tokensSql("text", lower = true)}) AS BIGINT) AS n_words
        |FROM documents
        |ORDER BY doc_id""".stripMargin
 
@@ -152,7 +152,7 @@ object TextOps {
       .select($"lang",
         size(regexp_extract_all($"lower_text", lit(SubtokenPattern), lit(0)))
           .cast("long").as("n_subtokens"),
-        size(split($"lower_text", " ")).cast("long").as("n_words"))
+        size(Tokens.tokens($"lower_text")).cast("long").as("n_words"))
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_docs"),
         sum($"n_subtokens").as("n_subtokens"),
@@ -166,7 +166,7 @@ object TextOps {
     s"""WITH t AS (
        | SELECT lang,
        |  CAST(len(regexp_extract_all(lower(text), '$SubtokenPattern')) AS BIGINT) AS n_subtokens,
-       |  CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_words
+       |  CAST(len(${Tokens.tokensSql("text", lower = true)}) AS BIGINT) AS n_words
        | FROM documents)
        |SELECT lang, count(*) AS n_docs,
        | CAST(sum(n_subtokens) AS BIGINT) AS n_subtokens,
@@ -184,12 +184,12 @@ object TextOps {
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     Tables.documents(spark, dir)
-      .select($"doc_id", md5(TextClean.canonicalize($"text")).as("fingerprint"))
+      .select($"doc_id", TextClean.fingerprint($"text").as("fingerprint"))
       .orderBy($"doc_id")
   }
 
   val fingerprintSql: String =
-    s"""SELECT doc_id, md5(lower(trim(regexp_replace(text, '${TextClean.WsRe}', ' ', 'g')))) AS fingerprint
+    s"""SELECT doc_id, ${TextClean.fingerprintSql("text")} AS fingerprint
        |FROM documents
        |ORDER BY doc_id""".stripMargin
 

@@ -45,7 +45,7 @@ object WeakLabel {
   /** x_weak_label — per-label doc counts with conflict/clean diagnostics. */
   def weakLabel(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val toks = split($"text", " ")
+    val toks = Tokens.tokens($"text")
     val voted = Tables.documents(spark, dir)
       .select($"doc_id",
         votesFor(toks, "compute").as("vc"),
@@ -84,7 +84,7 @@ object WeakLabel {
        |  ${v("compute")} AS vc,
        |  ${v("query")} AS vq,
        |  ${v("storage")} AS vs
-       | FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)),
+       | FROM (SELECT doc_id, ${Tokens.tokensSql("text")} AS toks FROM documents)),
        |scored AS (
        | SELECT
        |  CASE WHEN vc = 0 AND vq = 0 AND vs = 0 THEN '(abstain)'

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.llm.Dedup
+import graft.llm.{Dedup, Tokens}
 
 /** Streaming near-duplicate suppression — the ingest-time face of the batch
   * MinHash+LSH pipeline (`x_dedup_minhash`): as documents arrive, each is
@@ -18,8 +18,8 @@ import graft.llm.Dedup
   *
   * Batch/stream parity is structural, not aspirational: the signature here
   * is computed per-row with higher-order functions but reuses [[Dedup]]'s
-  * shingle builder, hash design (one md5 per shingle split into eight
-  * 15-bit slices) and band-hash formula verbatim, and LshDedupSpec proves
+  * shingles ([[Tokens.grams]]), hash design (one md5 per shingle split into
+  * eight 15-bit slices) and band-hash formula verbatim, and LshDedupSpec proves
   * the per-row band hashes bit-identical to the batch `Dedup.bandsOver`
   * aggregate on the same corpus. The per-element HOF fold is interpreted
   * (not codegen'd) — acceptable at ingest rates; the batch index build
@@ -50,7 +50,7 @@ object LshDedup {
     */
   def rowSignature(toks: Column): Column =
     aggregate(
-      Dedup.shinglesFromToks(toks),
+      Tokens.grams(toks, Dedup.ShingleK),
       array_repeat(lit(Dedup.SliceMask), Dedup.NumHashes),
       (acc, s) => {
         val m = md5(concat(lit("mh:"), s))
@@ -77,8 +77,8 @@ object LshDedup {
       watermark: String = "10 minutes"): Dataset[BandArrival] = {
     import docs.sparkSession.implicits._
     docs
-      .withColumn("toks", split($"text", " "))
-      .filter(size($"toks") >= 3)
+      .withColumn("toks", Tokens.tokens($"text"))
+      .filter(size($"toks") >= Dedup.ShingleK)
       .withWatermark("ts", watermark)
       .select($"doc_id", $"ts",
         explode(rowBands(rowSignature($"toks"))).as("x"))

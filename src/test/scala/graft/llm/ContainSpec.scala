@@ -29,11 +29,7 @@ class ContainSpec extends SparkSpec {
   }
 
   private def bruteForce = {
-    val docs = corpus
-      .withColumn("toks", split($"text", " "))
-      .filter(size($"toks") >= 3)
-      .select($"doc_id", $"lang",
-        array_distinct(Dedup.shinglesFromToks($"toks")).as("s"))
+    val docs = Dedup.shingleSets(corpus)
     docs.as("a").join(docs.as("b"),
         $"a.lang" === $"b.lang" && $"a.doc_id" =!= $"b.doc_id" &&
           size($"a.s").between(Contain.SnipMin, Contain.SnipMax))
@@ -72,11 +68,7 @@ class ContainSpec extends SparkSpec {
     val docs = graft.io.Tables.documents(spark, "/root/testdata/sf0.001")
     val fast = Contain.containmentJoinOver(docs)
       .select($"doc_a", $"doc_b").as[(Long, Long)].collect().toSet
-    val shing = docs
-      .withColumn("toks", split($"text", " "))
-      .filter(size($"toks") >= 3)
-      .select($"doc_id", $"lang",
-        array_distinct(Dedup.shinglesFromToks($"toks")).as("s"))
+    val shing = Dedup.shingleSets(docs)
     val brute = shing.as("a").join(shing.as("b"),
         $"a.lang" === $"b.lang" && $"a.doc_id" =!= $"b.doc_id" &&
           size($"a.s").between(Contain.SnipMin, Contain.SnipMax))

@@ -7,22 +7,6 @@ import graft.SparkSpec
 class DedupSpec extends SparkSpec {
   import spark.implicits._
 
-  test("shinglesFromToks builds word 3-grams in order") {
-    val got = Seq("a b c d e").toDF("text")
-      .withColumn("toks", split($"text", " "))
-      .select(Dedup.shinglesFromToks($"toks").as("sh"))
-      .as[Seq[String]].head()
-    assert(got == Seq("a b c", "b c d", "c d e"))
-  }
-
-  test("shinglesFromToks on exactly 3 tokens yields one shingle") {
-    val got = Seq("a b c").toDF("text")
-      .withColumn("toks", split($"text", " "))
-      .select(Dedup.shinglesFromToks($"toks").as("sh"))
-      .as[Seq[String]].head()
-    assert(got == Seq("a b c"))
-  }
-
   private def docsDF(rows: (Long, String)*) = rows.toDF("doc_id", "text")
 
   private def writeDocs(rows: (Long, String)*): String = {

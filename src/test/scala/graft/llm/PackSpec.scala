@@ -14,6 +14,12 @@ class PackSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
+  // the eval slice: md5(doc_id) starts with '0'
+  private def isEval(id: Long): Boolean =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(id.toString.getBytes("UTF-8"))
+      .map("%02x".format(_)).mkString.startsWith("0")
+
   test("seqPack offsets tile each source stream with no gaps or overlaps") {
     val rows = Pack.seqPack(spark, dir)
       .select("source", "doc_id", "n_toks", "start_tok", "seq_id",
@@ -119,10 +125,6 @@ class PackSpec extends SparkSpec {
       text.split(" ").sliding(8).filter(_.length == 8).map(_.mkString(" ")).toSet
     val docs = graft.io.Tables.documents(spark, dir)
       .select("doc_id", "text").as[(Long, String)].collect().toMap
-    def isEval(id: Long): Boolean =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.startsWith("0")
     val evalGrams = docs.collect { case (id, t) if isEval(id) => grams(t) }
       .foldLeft(Set.empty[String])(_ ++ _)
     val flagged = Pack.contamination(spark, dir)
@@ -141,12 +143,7 @@ class PackSpec extends SparkSpec {
   }
 
   test("contamination counts distinct grams even when one gram hits two eval docs") {
-    // doc_id 7 and 12 hash to an md5 starting with '0' at these values? No —
-    // plant ids whose md5 prefix we compute driver-side instead.
-    def isEval(id: Long): Boolean =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(id.toString.getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.startsWith("0")
+    // plant ids whose md5 prefix is computed driver-side
     val evalIds = (0L until 200L).filter(isEval).take(2)
     val trainId = (0L until 200L).find(i => !isEval(i)).get
     val shared = "a b c d e f g h" // one 8-gram
@@ -168,6 +165,24 @@ class PackSpec extends SparkSpec {
       .flatMap(_.split(" ").sliding(8).map(_.mkString(" "))).toSet
     assert(row._2 == trainGrams.intersect(evalGrams).size)
     assert(row._3 == 2L)
+  }
+
+  test("contamination skips documents shorter than one 8-gram under ANSI") {
+    // a 5-token doc on each side has no 8-gram: it can match nothing, and
+    // must not fail the query
+    val evalIds = (0L until 200L).filter(isEval).take(2)
+    val trainIds = (0L until 200L).filterNot(isEval).take(2)
+    val shared = "a b c d e f g h"
+    val d = java.nio.file.Files.createTempDirectory("contam").toString
+    Seq(
+      (evalIds(0), shared + " tail"),
+      (evalIds(1), "p q r s t"),
+      (trainIds(0), "x " + shared),
+      (trainIds(1), "a b c d e"))
+      .toDF("doc_id", "text")
+      .write.parquet(s"$d/documents.parquet")
+    val got = Pack.contamination(spark, d).as[(Long, Long, Long)].collect()
+    assert(got.toSeq == Seq((trainIds(0), 1L, 1L)))
   }
 
   test("tokenBudget admits the prefix that fits and skips the straddler") {

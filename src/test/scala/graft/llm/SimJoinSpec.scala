@@ -24,11 +24,7 @@ class SimJoinSpec extends SparkSpec {
   }
 
   private def bruteForce = {
-    val docs = corpus
-      .withColumn("toks", split($"text", " "))
-      .filter(size($"toks") >= 3)
-      .select($"doc_id", $"lang",
-        array_distinct(Dedup.shinglesFromToks($"toks")).as("s"))
+    val docs = Dedup.shingleSets(corpus)
     docs.as("a").join(docs.as("b"),
         $"a.lang" === $"b.lang" && $"a.doc_id" < $"b.doc_id")
       .select($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"),

@@ -73,6 +73,21 @@ class StressSmokeSpec extends SparkSpec {
     assert(Stress.runQuota(spark, 10000L))
   }
 
+  test("dedup scenario: signatures, LSH pairs, Jaccard verify and components " +
+    "recover the planted groups at smoke size") {
+    // every bound is a share of n (≥95% of docs clustered, cluster count
+    // within 10% of the n/4 planted groups, ≥99% of verified pairs
+    // intra-group); 100 docs keep a ±2 band on 25 groups
+    assert(Stress.runDedup(spark, 100L))
+  }
+
+  test("lshstream scenario: streamed band claims find the planted near-dups, " +
+    "the verify rejects all cross-group noise, state is one row per bucket") {
+    // bounds are shares of n and an exact state-row identity; 100 docs
+    // still give six non-empty uneven micro-batches
+    assert(Stress.runLshStream(spark, 100L))
+  }
+
   test("an unknown scenario name is rejected with a usage line naming every scenario") {
     assert(Stress.scenario("skew").isRight)
     assert(Stress.scenario("dedup").isRight)
